@@ -39,7 +39,8 @@ object Par {
     * once inside one application — actions are only sequential because
     * driver code calls them sequentially, and FIFO scheduling back-fills
     * a finishing job's straggler tail with the next job's tasks).
-    * Results return in input order; a failure in any thunk propagates.
+    * Results return in input order; a failure propagates once EVERY thunk
+    * has finished, so no write still runs when the caller sees it.
     * Use ONLY for genuinely independent work (distinct store tables or
     * output paths): concurrent writers to the SAME table would race
     * their commits. */
@@ -50,10 +51,10 @@ object Par {
         math.max(1, math.min(parallelism, thunks.length)))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          thunks.map(t => scala.concurrent.Future(t()))),
-        scala.concurrent.duration.Duration.Inf)
+      try thunks.map(t => scala.concurrent.Future(t()))
+        .map(scala.concurrent.Await.ready(_,
+          scala.concurrent.duration.Duration.Inf))
+        .map(_.value.get.get)
       finally pool.shutdown()
     }
 }

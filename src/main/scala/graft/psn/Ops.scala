@@ -2,7 +2,6 @@ package graft.psn
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.expr.Exprs
 
 /** The reference's relational pipeline as pure `DataFrame => DataFrame`
   * stages (SURVEY §7.1 module 4). Null semantics: semi/anti joins, never
@@ -18,32 +17,17 @@ object Ops {
   def newGames(current: DataFrame, stored: DataFrame): DataFrame =
     current.join(stored.select(col("id")), Seq("id"), "left_anti")
 
-  /** Play-time delta (J1+E1+P3+P1+E9; main.py:193-207): snapshot-vs-current
-    * inner join, arithmetic diffs, keep positive play_count deltas, project,
-    * stamp today-midnight. */
-  def playTimeDeltas(stored: DataFrame, current: DataFrame): DataFrame = {
-    val o = stored.select(col("id"), col("play_count").as("play_count_old"),
-      col("play_duration").as("play_duration_old"))
-    val n = current.select(col("id"), col("play_count").as("play_count_new"),
-      col("play_duration").as("play_duration_new"))
-    n.join(o, Seq("id"), "inner")
-      .withColumn("play_count_diff",
-        col("play_count_new") - col("play_count_old"))
-      .withColumn("play_duration_diff",
-        col("play_duration_new") - col("play_duration_old"))
-      .filter(col("play_count_diff") > 0)
-      .select(col("id"), col("play_count_diff"), col("play_duration_diff"))
-      // Driver-computed literal, as the reference stamps once per run
-      // (main.py:203) — an expression like date_trunc(current_timestamp())
-      // would re-evaluate per action and could diverge between the count
-      // and the append across a midnight boundary or cache eviction.
-      .withColumn("date", lit(java.sql.Timestamp.valueOf(
-        java.time.LocalDate.now().atStartOfDay())))
-  }
-
-  /** Games whose play time changed: left-semi join (J3/P4; main.py:243-246). */
-  def gamesNeedingUpdate(current: DataFrame, deltas: DataFrame): DataFrame =
-    current.join(deltas.select(col("id")), Seq("id"), "left_semi")
+  /** Snapshot classification (J1+J2+E1; main.py:176,193-207): `current`
+    * LEFT JOIN `stored` on id, one row per current game, with `is_new`
+    * (no stored row — the anti-join side) and the play_count/play_duration
+    * diffs against the stored row (null when new). New games, positive
+    * deltas (P3) and the rows to upsert (J3) are filters of this one frame. */
+  def classify(current: DataFrame, stored: DataFrame): DataFrame =
+    current.join(stored.select(col("id"), lit(true).as("known"), col("play_count").as("old_count"),
+      col("play_duration").as("old_duration")), Seq("id"), "left")
+      .select(current.columns.map(col).toSeq ++ Seq(col("known").isNull.as("is_new"),
+        (col("play_count") - col("old_count")).as("play_count_diff"),
+        (col("play_duration") - col("old_duration")).as("play_duration_diff")): _*)
 
   /** Merge-upsert plan (K4; main.py:256-287 UPDATE…FROM): target rows take
     * the update's last_played/play_count/play_duration where ids match —

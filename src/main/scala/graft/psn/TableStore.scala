@@ -269,6 +269,14 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     else schemaMemo.computeIfAbsent((table, v),
       _ => spark.read.parquet(path.toString).schema)
 
+  /** Memoize a version just written FLAT (hive layouts reorder and retype
+    * partition columns on inference): parquet reads every column back
+    * nullable, so that form of the written schema IS the footer schema. */
+  private def seedSchema(table: String, v: Int, written: StructType): Unit =
+    schemaMemo.put((table, v), org.apache.spark.sql.GraftBridge.asNullable(written))
+  private[graft] def memoizedSchema(table: String, v: Int): Option[StructType] =
+    Option(schemaMemo.get((table, v))) // for the specs
+
   /** A dropped or renamed table's name can be reused at the same version
     * numbers with a different schema — forget everything memoized for it. */
   private def forgetSchemas(table: String): Unit =
@@ -1178,6 +1186,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     // declared schema (if the table had evolved) follows the frame: an
     // overwrite IS the explicit schema-replacement path.
     commitClaimed(table, v, tag, written = Some(df.schema))
+    seedSchema(table, v, df.schema)
   }
 
   /** Schema-on-write guard for in-place appends: a frame whose columns or
@@ -1588,6 +1597,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
         // silently project the new files back to the old names,
         // null-filling the renamed column.
         maintainSchema(table, baseV, Some(next.schema))
+        seedSchema(table, v, next.schema)
         committed = true
       } else {
         deleteRecursive(claimed) // lost the race: discard and re-apply

@@ -199,4 +199,50 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       store2.enableFeed("u")
     }.getMessage.contains("declared"))
   }
+
+  test("rewriting commits seed the schema memo with the footer schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val wh = java.nio.file.Files.createTempDirectory("graft_memo")
+    val store = new TableStore(spark, wh.toString)
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("at", TimestampType, nullable = false),
+      StructField("score", DoubleType),
+      StructField("tags", ArrayType(StringType, containsNull = false),
+        nullable = false)))
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, java.sql.Timestamp.valueOf("2024-08-01 12:00:00"), 0.5,
+        Seq("a")),
+      Row(2L, java.sql.Timestamp.valueOf("2024-08-02 12:00:00"), null,
+        Seq.empty[String])), schema)
+    def head = store.versions("t").max
+    def footer = spark.read.parquet(wh.resolve(s"t/v$head").toString).schema
+    def assertSeeded(step: String): Unit = {
+      assert(store.memoizedSchema("t", head).contains(footer), step)
+      // ...so the next read plans from the memo: no footer-inference job
+      val c = SparkCounts.of(spark)(store.read("t"))
+      assert(c.jobs == 0, s"$step: read ran ${c.jobs} job(s)")
+    }
+    store.overwrite("t", df)
+    assertSeeded("overwrite")
+    store.mergeWith("t")(_.withColumn("score", col("score") * 2))
+    assertSeeded("mergeWith")
+    store.renameColumn("t", "score", "points")
+    assertSeeded("renameColumn")
+    assert(store.read("t").columns.toSeq == Seq("id", "at", "points", "tags"))
+    assert(store.read("t").filter(col("id") === 1L).head()
+      .getAs[Double]("points") == 1.0)
+
+    // A declared-schema sidecar still wins over the seeded memo on read:
+    // declare the head version with one more column, as an evolution
+    // commit would, and the read null-fills it.
+    val declared = footer.add(StructField("extra", StringType))
+    java.nio.file.Files.writeString(wh.resolve(s"t/_schema.v$head"),
+      declared.json)
+    val r = store.read("t")
+    assert(r.schema == declared)
+    assert(r.filter(col("extra").isNull).count() == 2)
+  }
 }

@@ -172,7 +172,7 @@ class StreamsSpec extends AnyFunSuite {
     q.processAllAvailable()
     assert(spark.table("psn_deltas").count() == 0)
     // batch 2: Beta Racer played 3 more times (+2h) — exactly one delta,
-    // equal to what the batch pipeline (psn.Ops.playTimeDeltas) computes
+    // equal to what the batch pipeline (psn.Ops.classify) computes
     val day2 = new FakePsnClient(
       TrophySummary(121, 45, 12, 2),
       FakePsnClient.default.titleStats().map {
