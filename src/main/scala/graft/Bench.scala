@@ -27,17 +27,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // rank-filter group limits must cover t59's VerifyCap=4096
-      // sample (default threshold 1000 silently disables the pushdown)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
       // ContextCleaner frees broadcast/shuffle blocks only when the driver
       // GCs; the default periodic-GC interval (30min) outlives the whole
       // suite, and in local mode driver + executor share one heap — stale
@@ -56,7 +47,6 @@ object Bench {
       // cost, the same billing the round-14 per-JVM memo produced.
       .config("spark.graft.indexDir",
         java.nio.file.Files.createTempDirectory("graft_bench_idx").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional comma-separated filter for profiling single queries.
@@ -79,7 +69,7 @@ object Bench {
     // loaded host still shows through (every run competes for the cores).
     def yardstickOnce(): Double = {
       val t0 = System.nanoTime()
-      exec(spark.range(0, 256000000L, 1, cpus.toInt)
+      exec(spark.range(0, 256000000L, 1, cpus)
         .selectExpr("xxhash64(id) AS h").selectExpr("bit_xor(h) AS s"))
       (System.nanoTime() - t0) / 1e9
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Capacity-sizing probe for the sign-LSH bucket knob:
@@ -14,15 +13,7 @@ object BucketProbe {
     val dir = args(0)
     val bits = args(1).toInt
     val k = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.expressions.Window
     val e = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: `runMain graft.Explain <q1[,q2,…]> <sfDir> [outDir]`
   * prints the formatted physical plan and times two executions
@@ -17,20 +16,11 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) Some(args(2)) else None
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // rank-filter group limits must cover t59's VerifyCap=4096
-      // sample (default threshold 1000 silently disables the pushdown)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Sessions.local(Sessions.cpus)
       // fresh artifact root: plan timings must include honest artifact
       // probes, never another run's committed index (the Bench contract)
       .config("spark.graft.indexDir",
         java.nio.file.Files.createTempDirectory("graft_explain_idx").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Job-floor decomposition: `runMain graft.FloorProbe <query> [sfDir]`
   * answers where a small query's fixed per-run cost lives — planning
@@ -14,19 +13,8 @@ object FloorProbe {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = 21
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // rank-filter group limits must cover t59's VerifyCap=4096
-      // sample (default threshold 1000 silently disables the pushdown)
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
 

@@ -72,6 +72,7 @@ final class HttpPsnClient(
   private def get(path: String): JsonNode = {
     val req = HttpRequest.newBuilder(URI.create(baseUri + path))
       .header("Authorization", s"Bearer $token")
+      .timeout(HttpPsnClient.RequestTimeout)
       .GET().build()
     val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
     if (resp.statusCode() != 200)
@@ -132,4 +133,12 @@ final class HttpPsnClient(
     }
     out.result()
   }
+}
+
+object HttpPsnClient {
+  /** Bound on one request, until the response headers arrive: a stalled
+    * upstream fails the fetch with `HttpTimeoutException` instead of
+    * hanging the daily run. A response is one profile or one page of
+    * titles, a few KB. */
+  private val RequestTimeout = java.time.Duration.ofSeconds(10)
 }

@@ -22,61 +22,66 @@ final case class MvAgg(out: String, func: String, in: String)
   * overwrite = K3 (WRITE_TRUNCATE)
   * merge   = K4 (`UPDATE … FROM temp` — the reference runs it inside
   *           BigQuery's transactional DML; here the same semantics come from
-  *           a version-pointer commit protocol, below)
+  *           the commit protocol below)
   * drop    = K5 (`delete_table(not_found_ok=True)`)
   *
-  * == Version-pointer commit protocol ==
+  * == Commit protocol ==
   *
-  * Rewriting writes (overwrite, merge) never touch live data. Each commit:
+  * Every committing verb is one call of ONE primitive, [[transact]]:
   *
-  *   1. claims `<table>/v<X>/` via atomic `createDirectory` (two racing
-  *      writers cannot claim the same version directory),
-  *   2. materializes the full new table into the claimed directory,
-  *   3. commits by COMPARE-AND-SWAP on the commit log: publish
-  *      `<table>/_commit.<S+1>` (content `v<X>`), where S is the log seq
-  *      the transaction read at its start. The publish primitive is
+  *   1. claim `<table>/v<X>/` via atomic `createDirectory` (two racing
+  *      writers cannot claim the same version directory);
+  *   2. run the verb's STAGE function, which fills the claim (a full
+  *      rewrite, hard links to the base's files plus new ones, a deletion
+  *      vector, …) and reports the new version's declared schema;
+  *   3. COMPARE-AND-SWAP on the commit log: publish `<table>/_commit.<S+1>`
+  *      (content `v<X>`, the commit time, an optional transaction tag),
+  *      where S is the seq of the base the stage read. The publish is
   *      `Files.createLink` of a staged content file — POSIX link(2) is
   *      atomic create-if-absent WITH content (rename without
   *      REPLACE_EXISTING is check-then-rename in the JDK, i.e. not a CAS,
-  *      and createFile-then-write has an empty-content crash window).
-  *      Exactly one writer can own seq S+1; a loser sees
-  *      FileAlreadyExists, discards its claim and re-applies on the new
-  *      base. On an object store the same seam maps to put-if-absent /
-  *      conditional-put.
+  *      and createFile-then-write has an empty-content crash window). On
+  *      an object store the same seam maps to put-if-absent;
+  *   4. the post-commit step: refresh the advisory `_current` pointer, GC
+  *      the versions behind the replaced head, carry the declared-schema
+  *      and stats sidecars forward, seed the schema memo.
+  *
+  * Exactly one writer can own seq S+1. A loser follows its verb's
+  * [[LostRace]] policy:
+  *   - REBASE — the content does not depend on the base (overwrite, first
+  *     write, clone, transactions): publish the same claim at the next
+  *     free seq;
+  *   - RE-APPLY — the content was derived from the base (merges, committed
+  *     appends): discard the claim and re-stage on the new head, so no
+  *     update is lost; throw after repeated losses;
+  *   - GIVE UP — a layout or metadata change over a pinned base (compact,
+  *     cluster, evolution, restore, row deletes): discard the claim and
+  *     report the loss; nothing changed, rerun.
   *
   * The marker log is the source of truth: readers resolve the HIGHEST
-  * `_commit.<seq>`'s content at DataFrame creation. `_current` is still
-  * written after every successful commit — as a human-readable hint and
-  * for tables created by older layouts — but it is advisory; correctness
-  * never depends on its timing. Consequences:
-  *   - a reader mid-merge sees exactly the old or the new version, never a
+  * `_commit.<seq>`'s content at DataFrame creation; `_current` is a
+  * human-readable hint only. Consequences:
+  *   - a reader mid-commit sees exactly the old or the new version, never a
   *     mix (the two directories are disjoint);
   *   - a crash anywhere before step 3 leaves the log — and thus the
-  *     table — untouched; the orphaned claim directory is swept by a later
-  *     commit's GC once it falls behind the retention window. There is NO
-  *     wedged state: an unpublished claim blocks nobody (versions are
-  *     sparse), and a published marker is complete by construction;
+  *     table — untouched; the orphaned claim is swept by a later commit's
+  *     GC or by [[vacuum]]. There is NO wedged state: an unpublished claim
+  *     blocks nobody (versions are sparse), and a published marker is
+  *     complete by construction;
   *   - an in-flight reader of the previous version keeps its snapshot: GC
   *     retains one version behind the head (readers are assumed to finish
   *     within one upstream commit — tighten by widening the window).
   *
-  * Writer-writer conflicts: the CAS closes the residual
-  * both-validate-then-both-rename race the pointer-rename protocol had —
-  * two writers from the same base can no longer both commit; the loser
-  * re-reads and re-applies (see [[mergeWith]]), so no update is lost.
-  *
-  * Appends write new part-files into the CURRENT version directory through
-  * Spark's job committer (task output lands in `_temporary` and is moved on
-  * job commit), so a crashed append leaves no visible rows either.
-  *
-  * Tables created before this protocol (bare part-files in `<table>/`) read
-  * as the implicit v0; the first rewriting write upgrades them to v1 and
-  * leaves the v0 files in place as the retained previous snapshot.
+  * Appends to an existing table do not commit: they write new part-files
+  * into the CURRENT version directory through Spark's job committer (task
+  * output lands in `_temporary` and is moved on job commit), so a crashed
+  * append leaves no visible rows either.
   *
   * The empty-append guard the reference needs (main.py:184) is a no-op here:
   * appending an empty DataFrame writes no row files.
   */
 final class TableStore(spark: SparkSession, warehouse: String) {
+  import TableStore._
 
   private def dir(table: String): Path = Paths.get(warehouse, table)
 
@@ -87,24 +92,27 @@ final class TableStore(spark: SparkSession, warehouse: String) {
 
   private val MarkerName = "_commit\\.(\\d+)".r
 
-  /** One commit-log entry. `ts` is the commit wall-clock stamp (epoch
-    * millis, written since the round-12 layout; None on older markers —
-    * readers needing time fall back to the marker file's mtime, which the
-    * atomic link(2) publish fixes at commit time anyway). `tag` is the
-    * optional application transaction tag (see [[txnVersion]]). */
-  private final case class Marker(seq: Int, version: Int,
-      ts: Option[Long], tag: Option[String])
+  /** One commit-log entry: the commit that published `version` at `seq`.
+    * `ts` is the commit wall-clock stamp (epoch millis); `tag` is the
+    * optional application transaction tag (see [[txnVersion]]). A marker
+    * also IDENTIFIES its commit: a dropped and recreated table reuses seqs
+    * and version numbers, never (seq, ts) pairs. */
+  private final case class Marker(seq: Int, version: Int, ts: Long,
+      tag: Option[String])
 
-  /** Marker content: line 1 `v<version>`, then optional `ts=<millis>` and
-    * `tag=<text>` lines — append-only format, so pre-metadata markers
-    * (bare `v<version>`) parse as ts=None/tag=None. */
+  /** The head of a table with no commit (it does not exist). */
+  private val NoCommit = Marker(0, 0, 0L, None)
+
+  /** Marker content: line 1 `v<version>`, then a `ts=<millis>` line and an
+    * optional `tag=<text>` line. */
   private def parseMarker(seq: Int, content: String): Marker = {
     val lines = content.linesIterator.toSeq.map(_.trim).filter(_.nonEmpty)
+    def field(key: String) =
+      lines.collectFirst { case l if l.startsWith(key) => l.stripPrefix(key) }
     Marker(seq, lines.head.stripPrefix("v").toInt,
-      lines.collectFirst { case l if l.startsWith("ts=") =>
-        l.stripPrefix("ts=").toLong },
-      lines.collectFirst { case l if l.startsWith("tag=") =>
-        l.stripPrefix("tag=") })
+      field("ts=").getOrElse(throw new IllegalStateException(
+        s"commit marker $seq has no ts= line")).toLong,
+      field("tag="))
   }
 
   /** The commit log, ascending by seq. Marker files are published
@@ -124,85 +132,69 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       }
     }.sortBy(_.seq)
 
-  /** (seq → committed version) view of the log. */
-  private def markers(table: String): Seq[(Int, Int)] =
-    markerLog(table).map(m => m.seq -> m.version)
+  /** Head of the commit log — the commit readers resolve. */
+  private def head(table: String): Marker =
+    markerLog(table).lastOption.getOrElse(NoCommit)
 
-  /** Head of the commit log: (seq, version). Tables from the pointer-only
-    * layout read their pointer as an implicit seq-0 commit; (0, 0) = no
-    * rewriting commit yet (legacy flat table or none). */
-  private def head(table: String): (Int, Int) =
-    markers(table).lastOption.getOrElse {
-      if (Files.exists(pointer(table)))
-        (0, Files.readString(pointer(table)).trim.stripPrefix("v").toInt)
-      else (0, 0)
-    }
+  /** The marker that published retained version `v` (seq 0 when none did:
+    * an unpublished claim below the head). */
+  private def markerOf(table: String, v: Int): Marker =
+    markerLog(table).findLast(_.version == v).getOrElse(Marker(0, v, 0L, None))
 
-  /** Committed version number; 0 = no versioned commit. */
-  private def currentVersion(table: String): Int = head(table)._2
+  /** Committed version number; 0 = no commit. */
+  private def currentVersion(table: String): Int = head(table).version
 
   /** CAS publish of commit seq (content: version + commit time + optional
-    * transaction tag, see [[parseMarker]]): true iff this writer won the
-    * seq. link(2) atomically creates the marker complete with content or
-    * fails with EEXIST; the staged source is always removed. */
+    * transaction tag, see [[parseMarker]]): the marker iff this writer won
+    * the seq. link(2) atomically creates the marker complete with content
+    * or fails with EEXIST; the staged source is always removed. */
   private def publish(table: String, seq: Int, version: Int,
-      tag: Option[String] = None): Boolean = {
+      tag: Option[String]): Option[Marker] = {
+    val m = Marker(seq, version, System.currentTimeMillis, tag)
     val marker = dir(table).resolve(s"_commit.$seq")
     val staged = dir(table).resolve(
       s"_commit.$seq.staged.${System.nanoTime}.${Thread.currentThread.getId}")
-    val meta = s"ts=${System.currentTimeMillis}" +
-      tag.map(t => s"\ntag=$t").getOrElse("")
-    Files.writeString(staged, s"v$version\n$meta")
-    try { Files.createLink(marker, staged); true }
-    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    Files.writeString(staged,
+      s"v$version\nts=${m.ts}" + tag.map(t => s"\ntag=$t").getOrElse(""))
+    try { Files.createLink(marker, staged); Some(m) }
+    catch { case _: java.nio.file.FileAlreadyExistsException => None }
     finally { Files.deleteIfExists(staged) }
   }
 
-  /** Directory a reader of `table` scans right now. */
-  private def resolve(table: String): Path = {
-    val v = currentVersion(table)
+  /** Directory of committed version `v`; the bare table directory when
+    * there is none, so a read of a missing table fails as path-not-found. */
+  private def snapshotDir(table: String, v: Int): Path =
     if (v > 0) dir(table).resolve(s"v$v") else dir(table)
-  }
 
-  private def listDir(table: String): Seq[Path] =
-    if (!Files.exists(dir(table))) Nil
+  /** Directory a reader of `table` scans right now. */
+  private def resolve(table: String): Path =
+    snapshotDir(table, currentVersion(table))
+
+  /** Entries of directory `p`; none when it does not exist. */
+  private def list(p: Path): List[Path] =
+    if (!Files.isDirectory(p)) Nil
     else {
-      val s = Files.list(dir(table))
+      val s = Files.list(p)
       try s.iterator().asScala.toList finally s.close()
     }
 
-  /** Flat pre-protocol data: any entry that is neither a version dir nor
-    * bookkeeping (covers part-files and hive partition dirs alike). */
-  private def legacyData(table: String): Boolean =
-    listDir(table).exists { p =>
-      val n = p.getFileName.toString
-      !n.matches("v\\d+") && !n.startsWith("_") && !n.startsWith(".")
-    }
+  private def listDir(table: String): Seq[Path] = list(dir(table))
 
-  def exists(table: String): Boolean =
-    currentVersion(table) > 0 || legacyData(table)
+  /** Names of the warehouse's table and view directories. */
+  private def namespace(): Seq[String] =
+    list(Paths.get(warehouse)).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
 
-  /** Names of every table with readable data in this store (committed
-    * versions or legacy flat files) — the namespace listing (the K6
-    * counterpart of BigQuery's dataset.list_tables). Driver-side
-    * directory walk: bounded by the table COUNT, never data-sized. */
-  def tables(): Seq[String] = {
-    val root = Paths.get(warehouse)
-    if (!Files.isDirectory(root)) Seq.empty
-    else {
-      val s = Files.list(root)
-      try s.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .filter(exists)
-        .toSeq.sorted
-      finally s.close()
-    }
-  }
+  def exists(table: String): Boolean = currentVersion(table) > 0
 
-  def read(table: String): DataFrame =
-    readSnapshot(table, currentVersion(table), resolve(table))
+  /** Names of every table with a committed version in this store — the
+    * namespace listing (the K6 counterpart of BigQuery's
+    * dataset.list_tables). Driver-side directory walk: bounded by the
+    * table COUNT, never data-sized. */
+  def tables(): Seq[String] = namespace().filter(exists).sorted
+
+  def read(table: String): DataFrame = readSnapshot(table, head(table))
 
   /** Wildcard table read — BigQuery's `FROM ds.events_*` idiom: the union
     * of every store table whose name extends `prefix`, each branch tagged
@@ -244,43 +236,41 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * dropped one depending on which file it sampled. With an explicit
     * schema, Spark's reader null-fills missing columns and projects away
     * undeclared ones, per-file, deterministically. */
-  private def readSnapshot(table: String, v: Int, path: Path): DataFrame = {
-    val plain = declaredSchemaOf(table, v) match {
-      case Some(st) => spark.read.schema(st).parquet(path.toString)
-      case None =>
-        spark.read.schema(inferredSchema(table, v, path)).parquet(path.toString)
-    }
+  private def readSnapshot(table: String, m: Marker): DataFrame = {
+    val path = snapshotDir(table, m.version)
+    val plain = spark.read.schema(declaredSchemaOf(table, m.version)
+      .getOrElse(inferredSchema(table, m, path))).parquet(path.toString)
     if (!Files.isDirectory(dvDir(path))) plain
     else withRowPos(path, plain).drop(DvRel, DvPos)
   }
 
   /** A committed version's files are immutable and share one schema (the
     * [[assertSchemaMatches]] invariant), so its inferred schema is a pure
-    * function of (table, version) — memoized per store instance. Without
-    * the memo every `read`/probe pays footer inference at PLAN time, a
-    * fixed cost the commit-per-micro-batch loops (s18–s26, t60/t61, the
-    * DDL scripts) pay dozens of times per query. Version 0 (legacy flat
-    * layout, in-place appends) is NOT memoized: its file set mutates
-    * without a version bump, and a plain inference stays the truth. */
+    * function of the commit that published it — memoized per store
+    * instance. Without the memo every `read`/probe pays footer inference
+    * at PLAN time, a fixed cost the commit-per-micro-batch loops (s18–s26,
+    * t60/t61, the DDL scripts) pay dozens of times per query. The key is
+    * the commit — (table, seq, ts) of its marker — not the (table,
+    * version) NAME: another store may drop the table and recreate it at
+    * the same version numbers with other columns. Versions no marker
+    * names are not memoized. */
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), StructType]()
-  private def inferredSchema(table: String, v: Int, path: Path): StructType =
-    if (v <= 0) spark.read.parquet(path.toString).schema
-    else schemaMemo.computeIfAbsent((table, v),
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Long), StructType]()
+  private def inferredSchema(table: String, m: Marker, path: Path): StructType =
+    if (m.seq <= 0) spark.read.parquet(path.toString).schema
+    else schemaMemo.computeIfAbsent((table, m.seq, m.ts),
       _ => spark.read.parquet(path.toString).schema)
 
   /** Memoize a version just written FLAT (hive layouts reorder and retype
     * partition columns on inference): parquet reads every column back
     * nullable, so that form of the written schema IS the footer schema. */
-  private def seedSchema(table: String, v: Int, written: StructType): Unit =
-    schemaMemo.put((table, v), org.apache.spark.sql.GraftBridge.asNullable(written))
-  private[graft] def memoizedSchema(table: String, v: Int): Option[StructType] =
-    Option(schemaMemo.get((table, v))) // for the specs
-
-  /** A dropped or renamed table's name can be reused at the same version
-    * numbers with a different schema — forget everything memoized for it. */
-  private def forgetSchemas(table: String): Unit =
-    schemaMemo.keySet.removeIf(_._1 == table)
+  private def seedSchema(table: String, m: Marker, written: StructType): Unit =
+    schemaMemo.put((table, m.seq, m.ts),
+      org.apache.spark.sql.GraftBridge.asNullable(written))
+  private[graft] def memoizedSchema(table: String, v: Int): Option[StructType] = {
+    val m = markerOf(table, v) // for the specs
+    Option(schemaMemo.get((table, m.seq, m.ts)))
+  }
 
   // ----------------------------------------------- deletion vectors (_dv/)
 
@@ -351,9 +341,9 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     requireNotMv(table, "deleteRows")
     requireNoFeed(table, "deleteRows")
     checkTag(txnTag)
-    val base = resolve(table)
-    val (seq0, v0) = head(table)
-    val plain = declaredSchemaOf(table, v0) match {
+    val pinned = head(table)
+    val base = snapshotDir(table, pinned.version)
+    val plain = declaredSchemaOf(table, pinned.version) match {
       case Some(st) => spark.read.schema(st).parquet(base.toString)
       case None => spark.read.parquet(base.toString)
     }
@@ -376,58 +366,50 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       require(!sample.contains(":") && !sample.startsWith("/"),
         s"deleteRows($table): derived relPath '$sample' is not relative — " +
           "file_path prefix mismatch")
-      val (v, claimed) = claimNext(table)
-      dataFiles(base).foreach { f =>
-        val dst = claimed.resolve(base.relativize(f).toString)
-        Files.createDirectories(dst.getParent)
-        Files.createLink(dst, f)
+      val committed = transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
+        linkSnapshot(base, claimed, withDv = false)
+        val merged =
+          if (Files.isDirectory(dvDir(base)))
+            spark.read.parquet(dvDir(base).toString).toDF("rel", "pos")
+              .union(hits)
+          else hits
+        merged.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
+        Staged(Carried)
       }
-      val merged =
-        if (Files.isDirectory(dvDir(base)))
-          spark.read.parquet(dvDir(base).toString).toDF("rel", "pos")
-            .union(hits)
-        else hits
-      merged.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
-      if (publish(table, seq0 + 1, v, checkTag(txnTag))) {
-        commitPointer(table, v)
-        gc(table, v0)
-        maintainStats(table, v0)
-        maintainSchema(table, v0)
-        n
-      } else {
-        deleteRecursive(claimed)
-        throw new IllegalStateException(
-          s"deleteRows($table): lost the commit race — rerun")
-      }
+      if (committed.isEmpty) throw new IllegalStateException(
+        s"deleteRows($table): lost the commit race — rerun")
+      n
     } finally hits.unpersist()
   }
 
-  /** Hard-link a version's deletion-vector parquet into a claimed dir —
-    * for commits that link every data file unchanged (schema evolution),
-    * where the vector stays valid verbatim. */
-  private def linkDvVerbatim(base: Path, claimed: Path): Unit =
-    if (Files.isDirectory(dvDir(base))) {
+  /** Hard-link every data file of snapshot directory `src` into `claimed`
+    * (hive subdirectories kept) — O(files) link metadata, zero bytes
+    * copied — and, `withDv`, its deletion vector verbatim: linked files
+    * keep their relPaths, so the vector stays valid. */
+  private def linkSnapshot(src: Path, claimed: Path, withDv: Boolean): Unit = {
+    dataFiles(src).foreach { f =>
+      val dst = claimed.resolve(src.relativize(f).toString)
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, f)
+    }
+    if (withDv && Files.isDirectory(dvDir(src))) {
       Files.createDirectories(dvDir(claimed))
-      val s = Files.list(dvDir(base))
-      try s.iterator().asScala.foreach { f =>
+      list(dvDir(src)).foreach { f =>
         val n = f.getFileName.toString
         if (Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith("."))
           Files.createLink(dvDir(claimed).resolve(n), f)
-      } finally s.close()
+      }
     }
+  }
 
   /** DESCRIBE HISTORY: the live commit log as a DataFrame — one row per
     * retained marker with (seq, version, ts_millis, txn_tag), newest
     * last. Driver-side marker reads (bounded by retention, like every
     * log walk here), then a local DataFrame: the audit surface Delta
-    * spells DESCRIBE HISTORY and BigQuery hides in INFORMATION_SCHEMA.
-    * ts falls back to the marker file's mtime for pre-metadata commits
-    * (link(2) publishes atomically at commit time, so mtime IS commit
-    * time there). */
+    * spells DESCRIBE HISTORY and BigQuery hides in INFORMATION_SCHEMA. */
   def history(table: String): DataFrame = {
     require(exists(table), s"history: table '$table' does not exist")
-    val rows = markerLog(table).map(m =>
-      (m.seq, m.version, markerTime(table, m), m.tag.orNull))
+    val rows = markerLog(table).map(m => (m.seq, m.version, m.ts, m.tag.orNull))
     import spark.implicits._
     rows.toDF("seq", "version", "ts_millis", "txn_tag")
   }
@@ -453,30 +435,14 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     require(have.contains(v),
       s"restore($table): version v$v not retained (readable: " +
         s"${have.mkString(",")})")
-    val (seq0, v0) = head(table)
-    if (v == v0) return true
-    val src = if (v == 0) dir(table) else dir(table).resolve(s"v$v")
-    val (nv, claimed) = claimNext(table)
-    dataFiles(src).foreach { f =>
-      val dst = claimed.resolve(src.relativize(f).toString)
-      Files.createDirectories(dst.getParent)
-      Files.createLink(dst, f)
-    }
-    linkDvVerbatim(src, claimed)
-    declaredSchemaOf(table, v).foreach(st =>
-      Files.writeString(schemaPath(table, nv), st.json))
-    if (publish(table, seq0 + 1, nv, checkTag(txnTag))) {
-      commitPointer(table, nv)
-      gc(table, v0)
-      maintainStats(table, v0)
-      // NO maintainSchema: the head's declaration is the SNAPSHOT's (set
-      // above, or absent), never carried forward from the rolled-back v0.
-      true
-    } else {
-      deleteRecursive(claimed)
-      Files.deleteIfExists(schemaPath(table, nv))
-      false
-    }
+    val pinned = head(table)
+    if (v == pinned.version) return true
+    transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
+      linkSnapshot(snapshotDir(table, v), claimed, withDv = true)
+      // the head's declaration is the SNAPSHOT's (or absent), never
+      // carried forward from the rolled-back head
+      Staged(Exactly(declaredSchemaOf(table, v)))
+    }.isDefined
   }
 
   /** Total rows named by the current version's deletion vector —
@@ -495,13 +461,12 @@ final class TableStore(spark: SparkSession, warehouse: String) {
 
   /** Versions currently on disk and readable (committed or retained —
     * ascending; excludes claimed-but-uncommitted directories above the
-    * pointer). Legacy flat data reads as the implicit version 0. */
+    * head). */
   def versions(table: String): Seq[Int] = {
     val committed = currentVersion(table)
-    val onDisk = listDir(table).map(_.getFileName.toString)
+    listDir(table).map(_.getFileName.toString)
       .collect { case s if s.matches("v\\d+") => s.drop(1).toInt }
       .filter(_ <= committed).sorted
-    if (onDisk.isEmpty && legacyData(table)) Seq(0) else onDisk
   }
 
   // ------------------------------------------------------- logical views
@@ -514,16 +479,12 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   def isView(name: String): Boolean = Files.exists(viewDefPath(name))
 
   /** Monotone creation sequence of a view — the registration-order key.
-    * Allocated once at first CREATE and PRESERVED across OR REPLACE, so
-    * replacing a view a later view depends on can never reorder it past
-    * its dependents (sidecar mtime would: the rewrite bumps it). Legacy
-    * views without the sidecar fall back to the def's mtime — a value
-    * always far above any allocated counter, so legacy views sort last
-    * (documented, not load-bearing: warehouses are session-scoped). */
+    * Allocated once at first CREATE (before the def is published) and
+    * PRESERVED across OR REPLACE, so replacing a view a later view depends
+    * on can never reorder it past its dependents (sidecar mtime would: the
+    * rewrite bumps it). */
   private def viewSeq(name: String): Long =
-    if (Files.exists(viewSeqPath(name)))
-      Files.readString(viewSeqPath(name)).trim.toLong
-    else Files.getLastModifiedTime(viewDefPath(name)).toMillis
+    Files.readString(viewSeqPath(name)).trim.toLong
 
   /** Allocate a fresh, never-published `_viewseq` number — safe under
     * CONCURRENT allocators, same-JVM or across processes sharing the
@@ -539,12 +500,8 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   private def claimViewSeq(): Long = viewSeqLock.synchronized {
     val claims = Paths.get(warehouse).resolve("_viewseq_claims")
     Files.createDirectories(claims)
-    val claimed = {
-      val s = Files.list(claims)
-      try s.iterator().asScala.flatMap(p =>
-        scala.util.Try(p.getFileName.toString.toLong).toOption).toSeq
-      finally s.close()
-    }
+    val claimed = list(claims).flatMap(p =>
+      scala.util.Try(p.getFileName.toString.toLong).toOption)
     var next = ((allViewSeqs() ++ claimed) :+ 0L).max + 1L
     var won = false
     while (!won) {
@@ -559,20 +516,10 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   /** Every allocated sequence value on disk — INCLUDING orphans whose
     * `_viewdef` never landed (crash between the sidecar writes): the
     * allocator must never hand out a number an orphan already holds. */
-  private def allViewSeqs(): Seq[Long] = {
-    val root = Paths.get(warehouse)
-    if (!Files.isDirectory(root)) Seq.empty
-    else {
-      val s = Files.list(root)
-      try s.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(d => d.resolve("_viewseq"))
-        .filter(Files.exists(_))
-        .map(p => Files.readString(p).trim.toLong)
-        .toSeq
-      finally s.close()
-    }
-  }
+  private def allViewSeqs(): Seq[Long] =
+    list(Paths.get(warehouse)).map(_.resolve("_viewseq"))
+      .filter(Files.exists(_))
+      .map(p => Files.readString(p).trim.toLong)
 
   /** CREATE VIEW — a LOGICAL view: the stored artifact is the SQL text
     * itself (BigQuery's standard view), re-planned against the CURRENT
@@ -618,21 +565,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * replaced view past its dependents, inverting registration order):
     * registering in this order lets a later view reference an earlier
     * one, and keeps that true across replacement. */
-  def views(): Seq[String] = {
-    val root = Paths.get(warehouse)
-    if (!Files.isDirectory(root)) Seq.empty
-    else {
-      val s = Files.list(root)
-      try s.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .filter(isView)
-        .toSeq
-        .sortBy(viewSeq)
-      finally s.close()
-    }
-  }
+  def views(): Seq[String] = namespace().filter(isView).sortBy(viewSeq)
 
   /** Logical views whose stored SQL references `table` in RELATION
     * position — the name following a FROM or JOIN keyword, or following
@@ -671,12 +604,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * for later CREATEs. A snapshot refuses every write, so its flagged
     * version is its only version for life. */
   def isSnapshot(table: String): Boolean =
-    exists(table) && (Files.exists(resolve(table).resolve("_snapshot")) ||
-      // legacy location (pre-r13 builds flagged the table ROOT): honored
-      // on read so upgraded warehouses keep their read-only protection;
-      // new snapshots write only the in-version flag (crash-safe — an
-      // uncommitted claim can never poison the name)
-      Files.exists(dir(table).resolve("_snapshot")))
+    exists(table) && Files.exists(resolve(table).resolve("_snapshot"))
 
   /** Every mutating path funnels through here (committing rewrites via
     * [[claimNext]]; in-place appends check explicitly): a SNAPSHOT table
@@ -740,24 +668,16 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     require(have.contains(v),
       s"clone($source): version v$v not retained (readable: " +
         s"${have.mkString(",")})")
-    val src = if (v == 0) dir(source) else dir(source).resolve(s"v$v")
-    val (nv, claimed) = claimNext(target)
-    dataFiles(src).foreach { f =>
-      val dst = claimed.resolve(src.relativize(f).toString)
-      Files.createDirectories(dst.getParent)
-      Files.createLink(dst, f)
-    }
-    linkDvVerbatim(src, claimed)
-    declaredSchemaOf(source, v).foreach(st =>
-      Files.writeString(schemaPath(target, nv), st.json))
-    val cs = constraints(source)
-    if (cs.nonEmpty) writeConstraints(target, cs)
-    // The flag rides in the claimed dir and becomes visible WITH the
-    // commit: read-only from the first visible instant, and a crashed or
-    // out-raced clone leaves no stale root flag to poison the name.
-    if (snapshot) Files.writeString(claimed.resolve("_snapshot"), "")
-    commitClaimed(target, nv, checkTag(txnTag))
-    nv
+    transact(target, head(target), txnTag, Rebase) { (_, claimed) =>
+      linkSnapshot(snapshotDir(source, v), claimed, withDv = true)
+      val cs = constraints(source)
+      if (cs.nonEmpty) writeConstraints(target, cs)
+      // The flag rides in the claimed dir and becomes visible WITH the
+      // commit: read-only from the first visible instant, and a crashed
+      // clone leaves no stale root flag to poison the name.
+      if (snapshot) Files.writeString(claimed.resolve("_snapshot"), "")
+      Staged(Exactly(declaredSchemaOf(source, v)))
+    }.get
   }
 
   // ---------------------------------------------------- INFORMATION_SCHEMA
@@ -895,14 +815,14 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   /** Aggregate the base's CURRENT snapshot and record what it covered:
     * (pinned version, covered data-file relPaths, aggregated rows). */
   private def mvSnapshotAgg(d: MvDef): (Int, Set[String], DataFrame) = {
-    val v = currentVersion(d.base)
-    val baseDir = resolve(d.base)
+    val m = head(d.base)
+    val baseDir = snapshotDir(d.base, m.version)
     val files = dataFiles(baseDir)
       .map(f => baseDir.relativize(f).toString).toSet
-    val rows = readSnapshot(d.base, v, baseDir)
+    val rows = readSnapshot(d.base, m)
       .groupBy(d.keys.map(col): _*)
       .agg(mvAggExprs(d.aggs).head, mvAggExprs(d.aggs).tail: _*)
-    (v, files, rows)
+    (m.version, files, rows)
   }
 
   /** CREATE MATERIALIZED VIEW — BigQuery's aggregate MV: a store table
@@ -1018,18 +938,8 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     val have = versions(table)
     require(have.contains(v),
       s"version v$v of $table not available (readable: ${have.mkString(",")})")
-    val p = if (v == 0) dir(table) else dir(table).resolve(s"v$v")
-    readSnapshot(table, v, p)
+    readSnapshot(table, markerOf(table, v))
   }
-
-  /** Commit wall-clock stamp of a marker: the `ts=` line when present
-    * (round-12 layout), else the marker file's mtime — link(2) publishes
-    * the marker atomically at commit time, so mtime IS commit time for
-    * pre-metadata markers. */
-  private def markerTime(table: String, m: Marker): Long =
-    m.ts.getOrElse(
-      Files.getLastModifiedTime(dir(table).resolve(s"_commit.${m.seq}"))
-        .toMillis)
 
   /** Timestamp time travel — BigQuery's `FOR SYSTEM_TIME AS OF`: the
     * table as of wall-clock `tsMillis`, i.e. the newest commit whose
@@ -1049,10 +959,10 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     require(log.nonEmpty,
       s"$table has no commit log — SYSTEM_TIME time travel needs " +
         "versioned commits")
-    val at = log.filter(markerTime(table, _) <= tsMillis)
+    val at = log.filter(_.ts <= tsMillis)
     require(at.nonEmpty,
       s"no commit of $table at or before ts=$tsMillis (oldest retained: " +
-        s"ts=${markerTime(table, log.head)}) — outside the retention window")
+        s"ts=${log.head.ts}) — outside the retention window")
     at.last.version
   }
 
@@ -1099,6 +1009,66 @@ final class TableStore(spark: SparkSession, warehouse: String) {
         col("b_row").as("before"), col("a_row").as("after"))
   }
 
+  // ------------------------------------------------ the commit primitive
+  // (its vocabulary — LostRace, Declared, Staged — is in the companion)
+
+  /** THE commit primitive: claim the next version, let `stage` fill the
+    * claim from `base`, CAS-publish at `base.seq + 1` and run the
+    * post-commit step ([[publishClaim]]); a lost race follows `onLost`.
+    * A stage that throws leaves its claim as an orphan (a crashed
+    * writer's shape), swept by a later GC or [[vacuum]]. Returns the
+    * committed version, None when a [[GiveUp]] commit lost. */
+  private def transact(table: String, base: Marker, tag: Option[String],
+      onLost: LostRace)(stage: (Marker, Path) => Staged): Option[Int] = {
+    @scala.annotation.tailrec
+    def attempt(from: Marker, losses: Int): Option[Int] = {
+      val (v, claimed) = claimNext(table)
+      val staged = stage(from, claimed)
+      staged.declared match {
+        case Exactly(Some(st)) => Files.writeString(schemaPath(table, v), st.json)
+        case _ => ()
+      }
+      if (publishClaim(table, from, v, tag, onLost == Rebase, staged)) Some(v)
+      else {
+        deleteRecursive(claimed)
+        Files.deleteIfExists(schemaPath(table, v))
+        onLost match {
+          case Reapply(max) if losses < max => attempt(head(table), losses + 1)
+          case Reapply(_) => throw new IllegalStateException(
+            s"'$table': lost the commit race ${losses + 1} times")
+          case _ => None
+        }
+      }
+    }
+    attempt(base, 0)
+  }
+
+  /** The publish half of [[transact]], shared with transaction manifests:
+    * publish claim `v` at `base.seq + 1` (when `rebase`, at the next free
+    * seq after each loss), then the post-commit step. The post-commit
+    * step runs against the head the commit replaced — the version
+    * in-flight readers may still be scanning. Returns whether `v` was
+    * published. */
+  private def publishClaim(table: String, base: Marker, v: Int,
+      tag: Option[String], rebase: Boolean, staged: Staged): Boolean = {
+    @scala.annotation.tailrec
+    def cas(prev: Marker): Option[(Marker, Marker)] =
+      publish(table, prev.seq + 1, v, tag) match {
+        case Some(m) => Some(prev -> m)
+        case None if rebase => cas(head(table))
+        case None => None
+      }
+    val won = cas(base)
+    won.foreach { case (prev, m) =>
+      commitPointer(table, v)
+      gc(table, prev.version, v)
+      maintainSchema(table, prev.version, v, staged.declared)
+      maintainStats(table, prev.version, staged.analyze)
+      staged.seed.foreach(seedSchema(table, m, _))
+    }
+    won.isDefined
+  }
+
   /** Atomically claim the next free version directory (≥ committed + 1,
     * skipping orphaned claims from crashed or in-flight writers). */
   private def claimNext(table: String): (Int, Path) = {
@@ -1118,9 +1088,8 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Advisory pointer refresh (staged write + atomic rename). Readers go
-    * through the marker log; this exists as a human-readable head hint
-    * and for compatibility with the pointer-only layout. */
+  /** Advisory pointer refresh (staged write + atomic rename): readers go
+    * through the marker log; `_current` is the human-readable head hint. */
   private def commitPointer(table: String, v: Int): Unit = {
     val staged = dir(table).resolve(s"_current.staged.v$v")
     Files.writeString(staged, s"v$v")
@@ -1128,65 +1097,68 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Commit an already-written claim directory at the NEXT free log seq —
-    * for writes whose content does not depend on the base version
-    * (overwrite, first write): a competing commit just bumps the seq we
-    * publish at; nothing needs re-applying. */
-  private def commitClaimed(table: String, v: Int,
-      tag: Option[String] = None,
-      written: Option[StructType] = None): Unit = {
-    var (seq, prev) = head(table)
-    while (!publish(table, seq + 1, v, tag)) {
-      val h = head(table); seq = h._1; prev = h._2
-    }
-    commitPointer(table, v)
-    gc(table, prev)
-    maintainStats(table, prev)
-    maintainSchema(table, prev, written)
-  }
-
   /** Sweep versions that have left the retention window. `prev` is the
     * version that was committed BEFORE this commit — the one in-flight
     * readers may still be scanning — so retention is anchored to the
-    * pointer history, never to the new version number: claimNext skips
-    * orphaned claims, so `committed - 1` can be far above the live
-    * previous version and keying GC off it would delete what a reader is
-    * scanning while retaining ghosts. Deletes every vN < prev, plus the
-    * pre-protocol flat files once they too are behind the window
-    * (prev ≥ 1 means some vN replaced them as the retained snapshot). */
-  private def gc(table: String, prev: Int): Unit = {
-    val agedMarkers =
-      markers(table).filter(_._2 < prev).map(_._1).toSet
+    * commit log, never to version numbers: claimNext skips orphaned
+    * claims, so `committed - 1` can be far above the live previous
+    * version, and a rebased commit can publish a version numbered below
+    * `prev`. Deletes every vN < prev except the just-published `v`,
+    * with its markers and sidecars. */
+  private def gc(table: String, prev: Int, v: Int): Unit = {
+    def aged(n: Int) = n < prev && n != v
+    val agedMarkers = markerLog(table).filter(m => aged(m.version))
+      .map(_.seq).toSet
     listDir(table).foreach { p =>
       val n = p.getFileName.toString
       n match {
         case MarkerName(s) => // log entries of swept versions age out too
           if (agedMarkers(s.toInt)) Files.deleteIfExists(p)
         case _ if n.matches("v\\d+") =>
-          if (n.drop(1).toInt < prev) deleteRecursive(p)
+          if (aged(n.drop(1).toInt)) deleteRecursive(p)
         case _ if n.matches("_stats\\.v\\d+") => // sidecar ages with its version
-          if (n.stripPrefix("_stats.v").toInt < prev) Files.deleteIfExists(p)
+          if (aged(n.stripPrefix("_stats.v").toInt)) Files.deleteIfExists(p)
         case _ if n.matches("_schema\\.v\\d+") => // declared schema too
-          if (n.stripPrefix("_schema.v").toInt < prev) Files.deleteIfExists(p)
-        case _ if prev >= 1 && !n.startsWith("_") && !n.startsWith(".") =>
-          deleteRecursive(p) // legacy v0 flat data aged out of retention
+          if (aged(n.stripPrefix("_schema.v").toInt)) Files.deleteIfExists(p)
         case _ => ()
       }
     }
   }
 
-  /** Full-table rewrite through the commit protocol (steps 1-3 + GC). */
+  /** Full-table rewrite of `df` — overwrite, first write, truncate,
+    * CREATE TABLE LIKE, materialized-view refresh. The written frame's
+    * schema replaces a declared one: an overwrite IS the explicit
+    * schema-replacement path. */
   private def commitRewrite(table: String, df: DataFrame,
-      tag: Option[String] = None): Unit = {
-    val (v, claimed) = claimNext(table)
-    // Append mode: the claimed directory is empty and MUST survive the
-    // write (Overwrite would delete-and-recreate it, dropping the claim).
-    enforced(table, df).write.mode(SaveMode.Append).parquet(claimed.toString)
-    // A full rewrite's files physically carry the frame's schema, so the
-    // declared schema (if the table had evolved) follows the frame: an
-    // overwrite IS the explicit schema-replacement path.
-    commitClaimed(table, v, tag, written = Some(df.schema))
-    seedSchema(table, v, df.schema)
+      tag: Option[String] = None): Unit =
+    transact(table, head(table), tag, Rebase) { (_, claimed) =>
+      // Append mode: the claimed directory is empty and MUST survive the
+      // write (Overwrite would delete-and-recreate it, dropping the claim).
+      enforced(table, df).write.mode(SaveMode.Append).parquet(claimed.toString)
+      Staged(Replaced(df.schema), seed = Some(df.schema))
+    }
+
+  /** The table's current schema WITHOUT planning a full-table scan: the
+    * declared sidecar when the table has evolved, else ONE data file's
+    * footer (files in a version share a schema — the invariant
+    * [[assertSchemaMatches]] itself maintains), read with `basePath` so
+    * hive partition columns still surface. A full `read(table)` here
+    * costs a leaf-file listing job per append on wide layouts — pure
+    * fixed overhead in commit-per-micro-batch loops. */
+  private def currentSchema(table: String): StructType = {
+    val m = head(table)
+    declaredSchemaOf(table, m.version).getOrElse {
+      val base = snapshotDir(table, m.version)
+      def infer = dataFiles(base).headOption match {
+        case Some(f) => spark.read.option("basePath", base.toString)
+          .parquet(f.toString).schema
+        case None => read(table).schema
+      }
+      // same per-commit memo as [[inferredSchema]] (committed versions
+      // are immutable)
+      if (m.seq <= 0) infer
+      else schemaMemo.computeIfAbsent((table, m.seq, m.ts), _ => infer)
+    }
   }
 
   /** Schema-on-write guard for in-place appends: a frame whose columns or
@@ -1197,29 +1169,6 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * drift; widening is an explicit [[overwrite]]/[[mergeWith]] — a NEW
     * version, so time travel keeps each snapshot's schema intact.
     * Column order and nullability are not drift; names + types are. */
-  /** The table's current schema WITHOUT planning a full-table scan: the
-    * declared sidecar when the table has evolved, else ONE data file's
-    * footer (files in a version share a schema — the invariant
-    * [[assertSchemaMatches]] itself maintains), read with `basePath` so
-    * hive partition columns still surface. A full `read(table)` here
-    * costs a leaf-file listing job per append on wide layouts — pure
-    * fixed overhead in commit-per-micro-batch loops. */
-  private def currentSchema(table: String): StructType = {
-    val v = currentVersion(table)
-    declaredSchemaOf(table, v).getOrElse {
-      val base = resolve(table)
-      def infer = dataFiles(base).headOption match {
-        case Some(f) => spark.read.option("basePath", base.toString)
-          .parquet(f.toString).schema
-        case None => read(table).schema
-      }
-      // same per-version memo as [[inferredSchema]] (committed versions
-      // are immutable); v0 keeps the uncached one-footer read
-      if (v <= 0) infer
-      else schemaMemo.computeIfAbsent((table, v), _ => infer)
-    }
-  }
-
   private def assertSchemaMatches(table: String, df: DataFrame,
       relaxed: Set[String] = Set.empty): Unit = {
     // `relaxed` columns compare by NAME only: hive-style partition values
@@ -1257,10 +1206,11 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       partitionCol: String, txnTag: Option[String] = None): Unit = {
     requireNotMv(table, "appendPartitioned")
     if (!exists(table)) {
-      val (v, claimed) = claimNext(table)
-      enforced(table, df).write.mode(SaveMode.Append)
-        .partitionBy(partitionCol).parquet(claimed.toString)
-      commitClaimed(table, v, checkTag(txnTag))
+      transact(table, head(table), checkTag(txnTag), Rebase) { (_, claimed) =>
+        enforced(table, df).write.mode(SaveMode.Append)
+          .partitionBy(partitionCol).parquet(claimed.toString)
+        Staged(Carried)
+      }
     } else {
       // In-place appends add files to the CURRENT version without a new
       // commit marker, so there is nothing to tag — an idempotent writer
@@ -1294,56 +1244,19 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * a lost race discards the claim and re-links). */
   def appendCommitted(table: String, df: DataFrame,
       partitionCol: Option[String] = None,
-      txnTag: Option[String] = None, maxRetries: Int = 5): Unit = {
+      txnTag: Option[String] = None): Unit = {
     requireNotMv(table, "appendCommitted")
     requireNoFeed(table, "appendCommitted")
     checkTag(txnTag)
-    def write(claimed: Path): Unit = {
-      val w = enforced(table, df).write.mode(SaveMode.Append)
-      partitionCol.fold(w)(w.partitionBy(_)).parquet(claimed.toString)
-    }
-    if (!exists(table)) {
-      val (v, claimed) = claimNext(table)
-      write(claimed)
-      commitClaimed(table, v, txnTag)
-    } else {
-      assertSchemaMatches(table, df, relaxed = partitionCol.toSet)
-      var attempt = 0
-      var committed = false
-      while (!committed) {
-        val (baseSeq, baseV) = head(table)
-        val basePath =
-          if (baseV > 0) dir(table).resolve(s"v$baseV") else dir(table)
-        val (v, claimed) = claimNext(table)
-        dataFiles(basePath).foreach { f =>
-          val dst = claimed.resolve(basePath.relativize(f))
-          Files.createDirectories(dst.getParent)
-          Files.createLink(dst, f)
-        }
-        if (Files.isDirectory(dvDir(basePath))) {
-          val dst = dvDir(claimed)
-          Files.createDirectories(dst)
-          val l = Files.list(dvDir(basePath))
-          try l.iterator().asScala.foreach { f =>
-            if (Files.isRegularFile(f))
-              Files.createLink(dst.resolve(f.getFileName.toString), f)
-          } finally l.close()
-        }
-        write(claimed)
-        if (publish(table, baseSeq + 1, v, txnTag)) {
-          commitPointer(table, v)
-          gc(table, baseV)
-          maintainStats(table, baseV)
-          maintainSchema(table, baseV)
-          committed = true
-        } else {
-          deleteRecursive(claimed)
-          attempt += 1
-          if (attempt > maxRetries)
-            throw new IllegalStateException(
-              s"appendCommitted($table): lost commit race $attempt times")
-        }
-      }
+    val first = !exists(table)
+    if (!first) assertSchemaMatches(table, df, relaxed = partitionCol.toSet)
+    transact(table, head(table), txnTag, if (first) Rebase else Reapply()) {
+      (base, claimed) =>
+        if (!first)
+          linkSnapshot(snapshotDir(table, base.version), claimed, withDv = true)
+        val w = enforced(table, df).write.mode(SaveMode.Append)
+        partitionCol.fold(w)(w.partitionBy(_)).parquet(claimed.toString)
+        Staged(Carried)
     }
   }
 
@@ -1448,8 +1361,8 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     *      durability point: before the manifest, nothing is visible;
     *      after it, the transaction is GUARANTEED to complete.
     *   3. PUBLISH: commit each staged version through the per-table CAS
-    *      log ([[commitClaimed]] — a concurrent writer just bumps the
-    *      seq; the transaction's state wins, the overwrite contract).
+    *      log ([[publishClaim]], rebasing — a concurrent writer just bumps
+    *      the seq; the transaction's state wins, the overwrite contract).
     *   4. Delete the manifest.
     *
     * A crash between 2 and 4 is healed by [[recoverTransactions]]: the
@@ -1491,22 +1404,15 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     // directory (no shared state below the driver), so the staged writes
     // are independent Spark jobs — wall-clock is the largest write, not
     // the sum (the multi-job submission pattern; FIFO interleaves tasks)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, claims.length))
-    val staged = try {
-      claims.map { case (t, v, claimed, df) =>
-        (t, v, pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = enforced(t, df).write
-            .mode(SaveMode.Append).parquet(claimed.toString)
-        }))
-      }.map { case (t, v, f) => f.get(); (t, v) }
-    } finally pool.shutdown()
+    graft.ops.Par.concurrently(4)(claims.map { case (t, _, claimed, df) =>
+      () => enforced(t, df).write.mode(SaveMode.Append).parquet(claimed.toString)
+    })
     val logDir = Paths.get(warehouse, "_txnlog")
     Files.createDirectories(logDir)
     val id = s"txn.${System.nanoTime}"
     val stagedManifest = logDir.resolve(s".staged.$id")
     Files.writeString(stagedManifest,
-      staged.map { case (t, v) => s"$t $v" }.mkString("\n"))
+      claims.map { case (t, v, _, _) => s"$t $v" }.mkString("\n"))
     val manifest = logDir.resolve(id)
     Files.move(stagedManifest, manifest, StandardCopyOption.ATOMIC_MOVE)
     manifest
@@ -1523,9 +1429,10 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       .filter(_.nonEmpty).foreach { line =>
         val Array(t, vs) = line.split(" ", 2)
         val v = vs.trim.toInt
-        val published = markers(t).exists(_._2 == v)
-        if (!published && Files.isDirectory(dir(t).resolve(s"v$v")))
-          commitClaimed(t, v, txnTag, schemas.get(t))
+        val published = markerLog(t).exists(_.version == v)
+        if (!published && Files.isDirectory(snapshotDir(t, v)))
+          publishClaim(t, head(t), v, txnTag, rebase = true,
+            Staged(schemas.get(t).fold[Declared](Carried)(Replaced(_))))
       }
     Files.deleteIfExists(manifest)
   }
@@ -1538,13 +1445,8 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * manifests retired. O(1) when `_txnlog/` is absent or empty. */
   def recoverTransactions(): Int = {
     val logDir = Paths.get(warehouse, "_txnlog")
-    if (!Files.isDirectory(logDir)) return 0
-    val manifests = {
-      val s = Files.list(logDir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("txn.")).toSeq.sorted
-      finally s.close()
-    }
+    val manifests = list(logDir).map(_.getFileName.toString)
+      .filter(_.startsWith("txn.")).sorted
     manifests.foreach(m =>
       publishManifest(logDir.resolve(m), Map.empty, None))
     manifests.length
@@ -1571,41 +1473,22 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     requireNotMv(table, "mergeWith")
     requireNoFeed(table, "mergeWith")
     checkTag(txnTag)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val (baseSeq, baseV) = head(table)
+    transact(table, head(table), txnTag, Reapply(maxRetries)) { (base, claimed) =>
       // Pin the scan to the base version's directory (not resolve(), which
-      // could drift to a concurrent commit mid-transaction): the CAS below
-      // is only meaningful if f consumed exactly the state it names.
-      val basePath =
-        if (baseV > 0) dir(table).resolve(s"v$baseV") else dir(table)
-      val next = f(readSnapshot(table, baseV, basePath))
+      // could drift to a concurrent commit mid-transaction): the CAS is
+      // only meaningful if f consumed exactly the state it names.
+      val next = f(readSnapshot(table, base))
       // Materialize BEFORE committing: f's plan lazily re-reads the table
       // at job time, so commit must not expose a half-new view. The claim
       // directory is the natural materialization target.
-      val (v, claimed) = claimNext(table)
       enforced(table, next).write.mode(SaveMode.Append)
         .parquet(claimed.toString)
-      if (publish(table, baseSeq + 1, v, txnTag)) {
-        commitPointer(table, v)
-        gc(table, baseV)
-        maintainStats(table, baseV)
-        // A full rewrite lands f's OUTPUT schema in every file, so that is
-        // the declaration to carry forward — f may have CHANGED it
-        // (renameColumn routes here); copying baseV's sidecar would
-        // silently project the new files back to the old names,
-        // null-filling the renamed column.
-        maintainSchema(table, baseV, Some(next.schema))
-        seedSchema(table, v, next.schema)
-        committed = true
-      } else {
-        deleteRecursive(claimed) // lost the race: discard and re-apply
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new IllegalStateException(
-            s"mergeWith($table): lost commit race $attempt times")
-      }
+      // A full rewrite lands f's OUTPUT schema in every file, so that is
+      // the declaration to carry forward — f may have CHANGED it
+      // (renameColumn routes here); copying the base's sidecar would
+      // silently project the new files back to the old names,
+      // null-filling the renamed column.
+      Staged(Replaced(next.schema), seed = Some(next.schema))
     }
   }
 
@@ -1630,103 +1513,68 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * `touched` values compare against directory names via
     * `String.valueOf`, so stick to string/integral partition columns. */
   def mergePartitionedWith(table: String, partitionCol: String,
-      touched: Seq[Any], maxRetries: Int = 5,
-      txnTag: Option[String] = None)(
+      touched: Seq[Any], txnTag: Option[String] = None)(
       f: DataFrame => DataFrame): Unit = {
     if (touched.isEmpty) return
     requireNotMv(table, "mergePartitionedWith")
     requireNoFeed(table, "mergePartitionedWith")
     checkTag(txnTag)
     val touchedStr = touched.map(String.valueOf).toSet
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      val (baseSeq, baseV) = head(table)
-      val basePath =
-        if (baseV > 0) dir(table).resolve(s"v$baseV") else dir(table)
+    transact(table, head(table), txnTag, Reapply()) { (base, claimed) =>
+      val basePath = snapshotDir(table, base.version)
       // The isin filter lands in the scan's PartitionFilters: untouched
       // directories are never opened, let alone read.
-      val touchedBase = readSnapshot(table, baseV, basePath)
-        .filter(col(partitionCol).isin(touched: _*))
-      val next = f(touchedBase)
-      val (v, claimed) = claimNext(table)
+      val next = f(readSnapshot(table, base)
+        .filter(col(partitionCol).isin(touched: _*)))
       enforced(table, next).write.mode(SaveMode.Append)
         .partitionBy(partitionCol).parquet(claimed.toString)
-      linkUntouchedPartitions(basePath, claimed, partitionCol, touchedStr)
-      carryDvForUntouched(basePath, claimed, partitionCol, touchedStr)
-      if (publish(table, baseSeq + 1, v, txnTag)) {
-        commitPointer(table, v)
-        gc(table, baseV)
-        maintainStats(table, baseV)
-        maintainSchema(table, baseV)
-        committed = true
-      } else {
-        deleteRecursive(claimed)
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new IllegalStateException(
-            s"mergePartitionedWith($table): lost commit race $attempt times")
-      }
+      // Untouched partitions are hard-linked through (link, not copy:
+      // version dirs share the immutable bytes, and GC merely drops link
+      // counts), so their deletion-vector entries stay valid. Touched ones
+      // were rewritten through the DV-aware read, which applied theirs.
+      val untouched = untouchedPartitions(basePath, partitionCol, touchedStr)
+      untouched.foreach(d =>
+        linkSnapshot(d, claimed.resolve(d.getFileName.toString), withDv = false))
+      carryDv(basePath, claimed, untouched.map(_.getFileName.toString),
+        org.apache.spark.sql.functions.substring_index(col("rel"), "/", 1))
+      Staged(Carried)
     }
   }
 
-  /** Untouched partitions were hard-linked: their relPaths and bytes are
-    * unchanged, so their deletion-vector entries stay valid — carry
-    * exactly those. Touched partitions were rewritten through the
-    * DV-aware read, which materialized their deletes. */
-  private def carryDvForUntouched(base: Path, claimed: Path,
-      partitionCol: String, touched: Set[String]): Unit =
-    if (Files.isDirectory(dvDir(base))) {
-      import spark.implicits._
-      val prefix = partitionCol + "="
-      val untouchedDirs = {
-        val s = Files.list(base)
-        try s.iterator().asScala.flatMap { p =>
-          val n = p.getFileName.toString
-          if (Files.isDirectory(p) && n.startsWith(prefix) &&
-              !touched.contains(java.net.URLDecoder.decode(
-                n.substring(prefix.length), "UTF-8"))) Some(n)
-          else None
-        }.toSeq finally s.close()
-      }
-      if (untouchedDirs.nonEmpty) {
-        val keep = spark.read.parquet(dvDir(base).toString)
-          .toDF("rel", "pos")
-          .withColumn("__dir", org.apache.spark.sql.functions
-            .substring_index(col("rel"), "/", 1))
-          .join(org.apache.spark.sql.functions.broadcast(
-            untouchedDirs.toDF("__dir")), "__dir")
-          .select(col("rel"), col("pos"))
-        if (!keep.isEmpty)
-          keep.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
-      }
-    }
-
-  /** Hard-link every data file of every `partitionCol=` directory whose
-    * value is NOT in `touched` from the base version dir into the claimed
-    * one. Link, not copy: version dirs share the immutable bytes, and
-    * deleting a version dir (GC) merely drops link count. */
-  private def linkUntouchedPartitions(base: Path, claimed: Path,
-      partitionCol: String, touched: Set[String]): Unit = {
+  /** The `partitionCol=` directories of `base` whose value is NOT in
+    * `touched`. */
+  private def untouchedPartitions(base: Path, partitionCol: String,
+      touched: Set[String]): Seq[Path] = {
     val prefix = partitionCol + "="
-    Files.list(base).iterator().asScala.foreach { p =>
+    list(base).filter { p =>
       val n = p.getFileName.toString
-      if (Files.isDirectory(p) && n.startsWith(prefix)) {
-        val value = java.net.URLDecoder.decode(
-          n.substring(prefix.length), "UTF-8")
-        if (!touched.contains(value)) {
-          val dst = claimed.resolve(n)
-          Files.createDirectories(dst)
-          Files.list(p).iterator().asScala.foreach { file =>
-            val fn = file.getFileName.toString
-            if (Files.isRegularFile(file) &&
-                !fn.startsWith("_") && !fn.startsWith("."))
-              Files.createLink(dst.resolve(fn), file)
-          }
-        }
-      }
+      Files.isDirectory(p) && n.startsWith(prefix) && !touched.contains(
+        java.net.URLDecoder.decode(n.substring(prefix.length), "UTF-8"))
     }
   }
+
+  /** Carry into `claimed` the base's deletion-vector entries whose
+    * `key` (over the entry's `rel` path) is in `keys` — the entries of
+    * files linked through unchanged: same relPath, same bytes. */
+  private def carryDv(base: Path, claimed: Path, keys: Seq[String],
+      key: org.apache.spark.sql.Column): Unit =
+    if (keys.nonEmpty && Files.isDirectory(dvDir(base))) {
+      import spark.implicits._
+      val keep = spark.read.parquet(dvDir(base).toString)
+        .toDF("rel", "pos")
+        .withColumn("__key", key)
+        .join(org.apache.spark.sql.functions.broadcast(
+          keys.toDF("__key")), "__key")
+        .select(col("rel"), col("pos"))
+      if (!keep.isEmpty)
+        keep.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
+    }
+
+  /** Peak number of bin-rewrite Spark jobs observed in flight during the
+    * last [[compact]] call — the spec's evidence that bins rewrite
+    * concurrently (a wall-clock assertion would be box-weather flaky). */
+  private val compactPeak = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] def lastCompactConcurrency: Int = compactPeak.get
 
   /** OPTIMIZE (compaction): bin-pack this table's small data files into
     * ~`targetBytes` outputs in a NEW version — the lakehouse maintenance
@@ -1751,18 +1599,20 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * changes nothing logically, so the caller just retries later; a
     * concurrent append into the old version dir is never lost to a
     * half-compacted table. */
-  /** Peak number of bin-rewrite Spark jobs observed in flight during the
-    * last [[compact]] call — the spec's evidence that bins rewrite
-    * concurrently (a wall-clock assertion would be box-weather flaky). */
-  private val compactPeak = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] def lastCompactConcurrency: Int = compactPeak.get
-
   def compact(table: String,
       targetBytes: Long = 128L * 1024 * 1024,
       parallelism: Int = 8): Boolean = {
-    val base = resolve(table)
-    val (seq0, v0) = head(table)
-    val (v, claimed) = claimNext(table)
+    val pinned = head(table)
+    val base = snapshotDir(table, pinned.version)
+    transact(table, pinned, None, GiveUp) { (_, claimed) =>
+      binPack(table, pinned, base, claimed, targetBytes, parallelism)
+      Staged(Carried)
+    }.isDefined
+  }
+
+  /** [[compact]]'s stage: fill `claimed` with `base`'s files bin-packed. */
+  private def binPack(table: String, pinned: Marker, base: Path,
+      claimed: Path, targetBytes: Long, parallelism: Int): Unit = {
     val byDir = dataFiles(base).groupBy(_.getParent)
     // Plan first (driver-side first-fit-decreasing per directory), then
     // execute: single-file bins are hard links (metadata-only, sequential
@@ -1801,80 +1651,46 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     }
     val jobs = rewrites.result()
     compactPeak.set(0)
-    if (jobs.nonEmpty) {
-      val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(parallelism, jobs.length)))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+    pooled(jobs, parallelism) { case (bin, dstDir) =>
+      val depth = inFlight.incrementAndGet()
+      compactPeak.accumulateAndGet(depth, (a: Int, b: Int) => math.max(a, b))
       try {
-        val fs = jobs.map { case (bin, dstDir) =>
-          scala.concurrent.Future {
-            val depth = inFlight.incrementAndGet()
-            compactPeak.accumulateAndGet(depth, (a: Int, b: Int) => math.max(a, b))
-            try {
-              val tmp = Files.createTempDirectory(dir(table), "_compact")
-              try {
-                // An evolved table's bin can mix pre- and post-ADD-COLUMN
-                // files — a plain read samples one footer and would DROP
-                // the evolved column from the rewritten bin. Bin columns
-                // are the declared schema minus hive partition columns
-                // (those live in the directory name, not the file).
-                val binRead = declaredSchemaOf(table, v0) match {
-                  case Some(st) =>
-                    val dirSegs = base.relativize(bin.head.getParent)
-                      .toString.split('/').toSet
-                    val phys = StructType(st.fields.filterNot(f =>
-                      dirSegs.exists(_.startsWith(f.name + "="))))
-                    spark.read.schema(phys)
-                  case None => spark.read
-                }
-                // Rewritten bins materialize row-level deletes: the same
-                // anti-join every read applies, so the deleted rows never
-                // reach the compacted file (their positions would be
-                // meaningless in it anyway).
-                withRowPos(base, binRead.parquet(bin.map(_.toString): _*))
-                  .drop(DvRel, DvPos)
-                  .coalesce(1)
-                  .write.mode(SaveMode.Append).parquet(tmp.toString)
-                Files.list(tmp).iterator().asScala.foreach { f =>
-                  val n = f.getFileName.toString
-                  if (!n.startsWith("_") && !n.startsWith("."))
-                    Files.move(f, dstDir.resolve(n))
-                }
-              } finally deleteRecursive(tmp)
-            } finally inFlight.decrementAndGet()
+        val tmp = Files.createTempDirectory(dir(table), "_compact")
+        try {
+          // An evolved table's bin can mix pre- and post-ADD-COLUMN
+          // files — a plain read samples one footer and would DROP
+          // the evolved column from the rewritten bin. Bin columns
+          // are the declared schema minus hive partition columns
+          // (those live in the directory name, not the file).
+          val binRead = declaredSchemaOf(table, pinned.version) match {
+            case Some(st) =>
+              val dirSegs = base.relativize(bin.head.getParent)
+                .toString.split('/').toSet
+              val phys = StructType(st.fields.filterNot(f =>
+                dirSegs.exists(_.startsWith(f.name + "="))))
+              spark.read.schema(phys)
+            case None => spark.read
           }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(fs),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+          // Rewritten bins materialize row-level deletes: the same
+          // anti-join every read applies, so the deleted rows never
+          // reach the compacted file (their positions would be
+          // meaningless in it anyway).
+          withRowPos(base, binRead.parquet(bin.map(_.toString): _*))
+            .drop(DvRel, DvPos)
+            .coalesce(1)
+            .write.mode(SaveMode.Append).parquet(tmp.toString)
+          list(tmp).foreach { f =>
+            val n = f.getFileName.toString
+            if (!n.startsWith("_") && !n.startsWith("."))
+              Files.move(f, dstDir.resolve(n))
+          }
+        } finally deleteRecursive(tmp)
+      } finally inFlight.decrementAndGet()
     }
     // Hard-linked files keep their relPath AND their bytes, so their DV
     // entries stay valid — carry exactly those into the new version.
-    if (Files.isDirectory(dvDir(base))) {
-      val linked = linkedRels.result()
-      if (linked.nonEmpty) {
-        import spark.implicits._
-        val keep = spark.read.parquet(dvDir(base).toString)
-          .toDF("rel", "pos")
-          .join(org.apache.spark.sql.functions.broadcast(
-            linked.toDF("rel")), "rel")
-        if (!keep.isEmpty)
-          keep.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
-      }
-    }
-    if (publish(table, seq0 + 1, v)) {
-      commitPointer(table, v)
-      gc(table, v0)
-      maintainStats(table, v0)
-      maintainSchema(table, v0)
-      true
-    } else {
-      deleteRecursive(claimed)
-      false
-    }
+    carryDv(base, claimed, linkedRels.result(), col("rel"))
   }
 
   // ------------------------------------------------------ append change feed
@@ -1939,12 +1755,9 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * live table bytes are untouched. */
   def truncateFeed(table: String, olderThanMs: Long): Unit = {
     val now = System.currentTimeMillis()
-    if (feedEnabled(table)) {
-      val s0 = Files.list(feedDir(table))
-      try s0.iterator().asScala.foreach { p =>
-        if (now - Files.getLastModifiedTime(p).toMillis >= olderThanMs)
-          Files.deleteIfExists(p)
-      } finally s0.close()
+    list(feedDir(table)).foreach { p =>
+      if (now - Files.getLastModifiedTime(p).toMillis >= olderThanMs)
+        Files.deleteIfExists(p)
     }
   }
 
@@ -2038,11 +1851,6 @@ final class TableStore(spark: SparkSession, warehouse: String) {
         lit(s"CHECK constraint $n violated: $e"))))
     }
 
-  // ------------------------------------------------- stats + data skipping
-
-  /** The stats sidecar describing version `v` — lives beside the commit
-    * log (never inside the snapshot dir, which stays byte-immutable once
-    * committed) and is GC'd with its version. */
   // ------------------------------------- declared schema (metadata-only DDL)
 
   private def schemaPath(table: String, v: Int): Path =
@@ -2063,21 +1871,20 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   def declaredSchema(table: String): Option[StructType] =
     declaredSchemaOf(table, currentVersion(table))
 
-  /** Carry the declared schema across a commit — the [[maintainStats]]
+  /** Carry the declared schema across commit `v` — the [[maintainStats]]
     * discipline: once a table opts into evolution, every later commit's
     * head gets a sidecar too, or the next read would silently fall back
-    * to one sampled footer. `written` is the schema a full REWRITE
-    * physically landed (overwrite — the explicit schema-replacement
-    * path); rewrites that read through [[read]] preserve the declaration
-    * by construction, so the default carries it forward. Evolution
-    * commits write their own sidecar first and are left alone. */
-  private def maintainSchema(table: String, prevV: Int,
-      written: Option[StructType] = None): Unit = {
-    val cur = currentVersion(table)
-    if (Files.exists(schemaPath(table, cur))) return
-    declaredSchemaOf(table, prevV).foreach { prevSt =>
-      Files.writeString(schemaPath(table, cur),
-        written.getOrElse(prevSt).json)
+    * to one sampled footer. See [[Declared]] for the three cases; an
+    * [[Exactly]] sidecar was written before the publish. */
+  private def maintainSchema(table: String, prevV: Int, v: Int,
+      declared: Declared): Unit = declared match {
+    case Exactly(_) => ()
+    case _ => declaredSchemaOf(table, prevV).foreach { prevSt =>
+      val st = declared match {
+        case Replaced(written) => written
+        case _ => prevSt
+      }
+      Files.writeString(schemaPath(table, v), st.json)
     }
   }
 
@@ -2116,15 +1923,6 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       StructField(column, dt, nullable = true)), txnTag)
   }
 
-  /** ALTER TABLE DROP COLUMN — metadata-only, like [[addColumn]]: the new
-    * version hard-links the same files and declares a schema WITHOUT the
-    * column; readers project it away per-file (an explicit read schema is
-    * a projection, so the bytes are never even decoded). The data stays
-    * in the files until the next full rewrite — which is exactly what
-    * makes the drop O(files) instead of O(table) — and the [[addColumn]]
-    * resurrection guard keeps that residue from ever coming back under a
-    * re-declared name. Refused while a CHECK constraint references the
-    * column (future writes could no longer evaluate it). */
   /** ALTER TABLE … RENAME COLUMN — committed as ONE REWRITE version
     * (`withColumnRenamed` through the merge protocol). BigQuery's rename
     * is metadata-only; here the store's append path writes PHYSICAL
@@ -2174,6 +1972,15 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     commitRewrite(target, empty, None)
   }
 
+  /** ALTER TABLE DROP COLUMN — metadata-only, like [[addColumn]]: the new
+    * version hard-links the same files and declares a schema WITHOUT the
+    * column; readers project it away per-file (an explicit read schema is
+    * a projection, so the bytes are never even decoded). The data stays
+    * in the files until the next full rewrite — which is exactly what
+    * makes the drop O(files) instead of O(table) — and the [[addColumn]]
+    * resurrection guard keeps that residue from ever coming back under a
+    * re-declared name. Refused while a CHECK constraint references the
+    * column (future writes could no longer evaluate it). */
   def dropColumn(table: String, column: String,
       txnTag: Option[String] = None): Boolean = {
     require(exists(table), s"dropColumn: table '$table' does not exist")
@@ -2206,30 +2013,18 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * Returns false on a lost race — nothing changed; rerun. */
   private def evolveTo(table: String, newSchema: StructType,
       txnTag: Option[String]): Boolean = {
-    val base = resolve(table)
-    val (seq0, v0) = head(table)
-    val (v, claimed) = claimNext(table)
-    dataFiles(base).foreach { f =>
-      val dst = claimed.resolve(base.relativize(f).toString)
-      Files.createDirectories(dst.getParent)
-      Files.createLink(dst, f)
-    }
-    linkDvVerbatim(base, claimed) // relPaths unchanged → vector stays valid
-    Files.writeString(schemaPath(table, v), newSchema.json)
-    if (publish(table, seq0 + 1, v, checkTag(txnTag))) {
-      commitPointer(table, v)
-      gc(table, v0)
-      maintainStats(table, v0)
-      true
-    } else {
-      deleteRecursive(claimed)
-      Files.deleteIfExists(schemaPath(table, v))
-      false
-    }
+    val pinned = head(table)
+    transact(table, pinned, checkTag(txnTag), GiveUp) { (_, claimed) =>
+      linkSnapshot(snapshotDir(table, pinned.version), claimed, withDv = true)
+      Staged(Exactly(Some(newSchema)))
+    }.isDefined
   }
 
-  // --------------------------------------------------- file-level statistics
+  // ------------------------------------------------- stats + data skipping
 
+  /** The stats sidecar describing version `v` — lives beside the commit
+    * log (never inside the snapshot dir, which stays byte-immutable once
+    * committed) and is GC'd with its version. */
   private def statsPath(table: String, v: Int): Path =
     dir(table).resolve(s"_stats.v$v")
 
@@ -2252,30 +2047,20 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * discipline: driver-side per-file metadata work parallelizes so wall
     * time tracks pool width, not item count). */
   private def pooled[A, B](items: Seq[A], parallelism: Int)(f: A => B): Seq[B] =
-    if (items.isEmpty) Seq.empty
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(parallelism, items.length)))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          items.map(a => scala.concurrent.Future(f(a)))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    graft.ops.Par.concurrently(parallelism)(items.map(a => () => f(a)))
 
   /** Keep a stats-maintained table maintained: when the version a commit
-    * just replaced carried a sidecar, re-derive one for the new head —
-    * the Delta discipline (stats ride every commit) without imposing the
+    * just replaced carried a sidecar (or the stage asks, `force` — layouts
+    * that exist FOR the stats), re-derive one for the new head — the
+    * Delta discipline (stats ride every commit) without imposing the
     * footer pass on tables that never opted in via [[analyze]]. Called
     * AFTER gc, which sweeps only sidecars of versions strictly below the
     * replaced one, so the opt-in marker is still visible here. Cost is
     * O(files) footer reads per commit — noise next to the commit's own
     * write. In-place appends skip this (no commit): their new files read
     * unpruned until the next analyze/commit, which is conservative. */
-  private def maintainStats(table: String, prevV: Int): Unit =
-    if (prevV > 0 && Files.exists(statsPath(table, prevV))) {
+  private def maintainStats(table: String, prevV: Int, force: Boolean): Unit =
+    if (force || (prevV > 0 && Files.exists(statsPath(table, prevV)))) {
       analyze(table)
       Files.deleteIfExists(statsPath(table, prevV))
     }
@@ -2518,22 +2303,14 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * clustered version — returns false (nothing changed) on a lost race.
     * Runs [[analyze]] on success: clustering exists FOR the stats. */
   def cluster(table: String, column: String, partitions: Int,
-      txnTag: Option[String] = None): Boolean = {
-    val base = resolve(table)
-    val (seq0, v0) = head(table)
-    val (v, claimed) = claimNext(table)
-    readSnapshot(table, v0, base)
-      .repartitionByRange(partitions, col(column))
-      .sortWithinPartitions(col(column))
-      .write.mode(SaveMode.Append).parquet(claimed.toString)
-    if (publish(table, seq0 + 1, v, checkTag(txnTag))) {
-      commitPointer(table, v)
-      gc(table, v0)
-      maintainSchema(table, v0)
-      analyze(table)
-      true
-    } else { deleteRecursive(claimed); false }
-  }
+      txnTag: Option[String] = None): Boolean =
+    transact(table, head(table), checkTag(txnTag), GiveUp) { (base, claimed) =>
+      readSnapshot(table, base)
+        .repartitionByRange(partitions, col(column))
+        .sortWithinPartitions(col(column))
+        .write.mode(SaveMode.Append).parquet(claimed.toString)
+      Staged(Carried, analyze = true)
+    }.isDefined
 
   /** ZORDER (OPTIMIZE … ZORDER BY): transactional rewrite of the table
     * along a Morton curve over SEVERAL columns, so [[readWhere]] prunes
@@ -2565,9 +2342,8 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       shiftright, when}
     import org.apache.spark.sql.types.{DateType, NumericType, TimestampNTZType,
       TimestampType}
-    val base = resolve(table)
-    val (seq0, v0) = head(table)
-    val df = readSnapshot(table, v0, base)
+    val pinned = head(table)
+    val df = readSnapshot(table, pinned)
     val keyed = columns.foldLeft(df) { (d, c) =>
       val key = d.schema(d.schema.fieldIndex(c)).dataType match {
         case _: NumericType => col(c).cast("double")
@@ -2583,7 +2359,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       d.withColumn(s"__zk_$c", key)
     }
     // No persist: the quantile pass and the rewrite each scan the PINNED
-    // snapshot v0 (immutable), so the two passes see identical data. A
+    // snapshot (immutable), so the two passes see identical data. A
     // full-width persist materializes every column into the storage pool
     // just to serve a 2-column quantile aggregation (measured: the fill
     // WAS the quantile phase's cost at sf0.1), and at scale a table
@@ -2620,19 +2396,14 @@ final class TableStore(spark: SparkSession, warehouse: String) {
         (b, j) <- buckets.zipWithIndex
       } yield shiftleft(shiftright(b, i).bitwiseAND(lit(1)),
         i * n + (n - 1 - j))).reduce(_ + _) // disjoint bits: + is OR
-      val (v, claimed) = claimNext(table)
-      keyed.withColumn("__z", z)
-        .repartitionByRange(partitions, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .select(df.columns.map(col).toIndexedSeq: _*)
-        .write.mode(SaveMode.Append).parquet(claimed.toString)
-      if (publish(table, seq0 + 1, v, checkTag(txnTag))) {
-        commitPointer(table, v)
-        gc(table, v0)
-        maintainSchema(table, v0)
-        analyze(table)
-        true
-      } else { deleteRecursive(claimed); false }
+      transact(table, pinned, checkTag(txnTag), GiveUp) { (_, claimed) =>
+        keyed.withColumn("__z", z)
+          .repartitionByRange(partitions, col("__z"))
+          .sortWithinPartitions(col("__z"))
+          .select(df.columns.map(col).toIndexedSeq: _*)
+          .write.mode(SaveMode.Append).parquet(claimed.toString)
+        Staged(Carried, analyze = true)
+      }.isDefined
     }
   }
 
@@ -2660,7 +2431,6 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       s"cannot drop '$table': logical view(s) ${viewDeps.mkString(", ")} " +
         "reference it — drop the view(s) first")
     deleteRecursive(dir(table))
-    forgetSchemas(table) // the name can be recreated at version 1
   }
 
   /** TRUNCATE TABLE — BigQuery's statement spelling of WRITE_TRUNCATE
@@ -2717,32 +2487,26 @@ final class TableStore(spark: SparkSession, warehouse: String) {
         "held (table, view, materialized view, or uncollected debris — " +
         "DROP or VACUUM it first)")
     Files.move(dir(table), dir(to), StandardCopyOption.ATOMIC_MOVE)
-    forgetSchemas(table) // old name freed for re-creation
-    forgetSchemas(to) // versions now resolve to the MOVED table's files
   }
 
   /** Sweep orphaned claim directories left by CRASHED writers — claimed
     * (the `vN` dir exists) but never published (no commit marker names
     * them and they are not the head). A fresh unreferenced claim may
     * belong to an in-flight writer that will still legitimately publish
-    * (commitClaimed re-seqs under contention), so the sweep is
+    * (a rebasing commit re-seqs under contention), so the sweep is
     * age-gated: only claims whose newest file is older than
     * `olderThanMs` go (the lease discipline — a writer that has not
     * touched its claim for the TTL is dead, not slow). Orphans BELOW the
     * head also age out through [[gc]] on later commits; vacuum covers
     * the above-head case and idle tables. Returns the swept versions. */
   def vacuum(table: String, olderThanMs: Long = 3600000L): Seq[Int] = {
-    val referenced = markers(table).map(_._2).toSet + currentVersion(table)
+    val referenced = markerLog(table).map(_.version).toSet
     val now = System.currentTimeMillis()
     listDir(table).flatMap { p =>
       val n = p.getFileName.toString
       if (!n.matches("v\\d+") || referenced(n.drop(1).toInt)) None
       else {
-        val entries = {
-          val s = Files.list(p)
-          try s.iterator().asScala.toList finally s.close()
-        }
-        val lastTouched = (p +: entries)
+        val lastTouched = (p +: list(p))
           .map(f => Files.getLastModifiedTime(f).toMillis).max
         if (now - lastTouched >= olderThanMs) {
           deleteRecursive(p)
@@ -2757,4 +2521,39 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       Files.walk(p).sorted(Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f))
     }
+}
+
+/** The vocabulary of the commit primitive, [[TableStore]]'s `transact`:
+  * lost-race policies and what a stage reports. */
+object TableStore {
+  /** What a commit does when another commit took the seq it read. */
+  private sealed trait LostRace
+  /** The content does not depend on the base: publish the same claim at
+    * the next free seq. */
+  private case object Rebase extends LostRace
+  /** The content was derived from the base: discard the claim and
+    * re-stage on the new head, at most `maxRetries` times. */
+  private final case class Reapply(maxRetries: Int = 5) extends LostRace
+  /** A layout or metadata change over a pinned base: discard the claim;
+    * nothing changed. */
+  private case object GiveUp extends LostRace
+
+  /** The declared schema (`_schema.v<N>` sidecar) of a staged version. */
+  private sealed trait Declared
+  /** The base's declaration, if any, carries over: rewrites that read
+    * through the base's snapshot preserve it by construction. */
+  private case object Carried extends Declared
+  /** A full rewrite physically landed `written`: when the base declared a
+    * schema, `written` is the new declaration (the explicit
+    * schema-replacement path — a rename must not be projected back). */
+  private final case class Replaced(written: StructType) extends Declared
+  /** Exactly this declaration, or none — never the base's (evolution,
+    * restore, clone). Written into place before the publish. */
+  private final case class Exactly(schema: Option[StructType]) extends Declared
+
+  /** What a stage reports about the version it filled: its declared
+    * schema, whether to analyze it even if the base never opted in,
+    * and the flat schema it wrote when that may seed the schema memo. */
+  private final case class Staged(declared: Declared, analyze: Boolean = false,
+      seed: Option[StructType] = None)
 }

@@ -10,7 +10,7 @@ import graft.psn.{FileStats, TableStore}
   * single-column cluster provably prunes only its own), and unsupported
   * shapes are refused loudly.
   */
-class ZorderSpec extends AnyFunSuite {
+class ClusterZSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 

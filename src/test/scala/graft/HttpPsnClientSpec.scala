@@ -116,6 +116,33 @@ class HttpPsnClientSpec extends AnyFunSuite {
     assert(err.getMessage.contains("psn"))
   }
 
+  test("a stalled upstream fails the fetch with a timeout instead of hanging") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    // accepts the request, never answers
+    server.createContext("/profile", (_: HttpExchange) => release.await())
+    server.start()
+    try {
+      val client = new HttpPsnClient(
+        s"http://127.0.0.1:${server.getAddress.getPort}", "tok")
+      val t0 = System.nanoTime
+      val outcome = Future(scala.util.Try(client.profileTrophies()))
+      // well above the client's request timeout: a client without one
+      // fails here instead of hanging the suite
+      val bound = 30.seconds
+      val failure = Await.result(outcome, bound).failed.get
+      assert(failure.isInstanceOf[java.net.http.HttpTimeoutException],
+        failure.toString)
+      assert((System.nanoTime - t0).nanos < bound)
+    } finally {
+      release.countDown()
+      server.stop(0)
+    }
+  }
+
   test("fixture-server JSON through DailyRun matches the FakePsnClient run") {
     val (whHttp, _) = withServer { base =>
       val client = new HttpPsnClient(base, "tok", pageSize = 2)

@@ -200,6 +200,24 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     }.getMessage.contains("declared"))
   }
 
+  test("a table another store drops and recreates reads under its new schema") {
+    import TestSpark.spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_memo_x").toString
+    val a = new TableStore(spark, wh)
+    val b = new TableStore(spark, wh)
+    b.overwrite("t", Seq((1L, "a")).toDF("id", "name"))
+    assert(a.read("t").columns.toSeq == Seq("id", "name")) // a memoizes v1
+    // same name, same version number, other columns
+    b.drop("t")
+    b.overwrite("t", Seq((2L, 0.5)).toDF("key", "score"))
+    val r = a.read("t")
+    assert(r.columns.toSeq == Seq("key", "score"))
+    assert(r.as[(Long, Double)].collect().toSeq == Seq((2L, 0.5)))
+    // appends check drift against the new schema too
+    a.append("t", Seq((3L, 1.5)).toDF("key", "score"))
+    assert(a.read("t").count() == 2)
+  }
+
   test("rewriting commits seed the schema memo with the footer schema") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.col

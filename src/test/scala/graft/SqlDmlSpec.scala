@@ -846,21 +846,6 @@ class SqlDmlSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](store.rename("basey", "basez"))
   }
 
-  test("legacy root-level _snapshot flag still protects upgraded warehouses") {
-    import spark.implicits._
-    val store = freshStore()
-    store.overwrite("oldsnap", Seq((1L, "a")).toDF("k", "v"))
-    // simulate a pre-r13 snapshot: flag at the table ROOT, not in-version
-    val root = java.nio.file.Paths.get(
-      store.read("oldsnap").inputFiles.head.stripPrefix("file:"))
-      .getParent.getParent
-    java.nio.file.Files.writeString(root.resolve("_snapshot"), "")
-    assert(store.isSnapshot("oldsnap"))
-    intercept[IllegalArgumentException] {
-      store.append("oldsnap", Seq((2L, "b")).toDF("k", "v"))
-    }
-  }
-
   test("MERGE refuses a TARGET carrying either reserved presence marker") {
     import spark.implicits._
     val store = freshStore()

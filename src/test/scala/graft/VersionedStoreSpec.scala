@@ -129,35 +129,6 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(store.read("t").collect().map(_.getString(1)).toSeq == Seq("c"))
   }
 
-  test("pre-protocol flat table reads as v0 and upgrades on first rewrite") {
-    val (store, wh) = freshStore()
-    // table written by an external tool: bare part-files, no pointer
-    kv(1 -> "legacy").write.parquet(Paths.get(wh, "t").toString)
-    assert(store.exists("t"))
-    assert(store.read("t").collect().map(_.getString(1)).toSeq ==
-      Seq("legacy"))
-
-    upsert(store, "t", kv(1 -> "upgraded", 2 -> "new"))
-    assert(Files.readString(Paths.get(wh, "t", "_current")).trim == "v1")
-    assert(store.read("t").orderBy("k").collect().map(_.getString(1))
-      .toSeq == Seq("upgraded", "new"))
-    // flat v0 files are the retained previous snapshot for this commit…
-    def flatParts = {
-      val s = Files.list(Paths.get(wh, "t"))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.count(_.getFileName.toString
-          .endsWith(".parquet"))
-      } finally s.close()
-    }
-    assert(flatParts > 0)
-    // …and age out of retention on the NEXT rewrite (no permanent leak)
-    upsert(store, "t", kv(2 -> "newer"))
-    assert(flatParts == 0)
-    assert(store.read("t").orderBy("k").collect().map(_.getString(1))
-      .toSeq == Seq("upgraded", "newer"))
-  }
-
   test("overwrite (K3) goes through the same commit protocol") {
     val (store, wh) = freshStore()
     store.append("t", kv(1 -> "a", 2 -> "b"))
