@@ -111,7 +111,7 @@ private[graft] object Artifacts {
           val store = new TableStore(s, w)
           val fp = fingerprint(dir)
           val isFresh = store.exists(name) && {
-            val head = store.versions(name).max
+            val head = store.headVersion(name)
             val p = fpPath(w, name, head)
             Files.exists(p) && Files.readString(p).trim == fp
           }
@@ -142,7 +142,7 @@ private[graft] object Artifacts {
             // compaction commit), named for the version it describes: a
             // crash in between leaves a committed-but-unstamped head, which
             // reads as stale and rebuilds — safe-degrade, never stale-serve
-            val head = store.versions(name).max
+            val head = store.headVersion(name)
             val staged = Paths.get(w, name,
               s"_corpusfp.staged.${System.nanoTime}")
             Files.writeString(staged, fp)

@@ -95,14 +95,14 @@ object Indexes {
   def indexesOn(store: TableStore, table: String): Seq[String] =
     list(store).filter(i => readDef(store, i).base == table)
 
-  /** The base state an index build/refresh stamps: (committed version,
+  /** The base state an index build/refresh stamps: (head version,
     * data-file count). Rewrites bump the version; in-place appends keep
     * the version but grow the file set — together they cover every
     * write shape the store has. The gate errs toward refusal: an append
     * that lands only zero-row files still reads as stale (a REFRESH
     * no-ops the content), never the reverse. */
   private def baseStamp(store: TableStore, base: String): (Int, Int) =
-    (store.versions(base).max, store.fileCount(base))
+    (store.headVersion(base), store.fileCount(base))
 
   private def buildData(s: SparkSession, store: TableStore,
       d: IndexDef): DataFrame = d.kind match {

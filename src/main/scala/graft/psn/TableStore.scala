@@ -80,7 +80,8 @@ final case class MvAgg(out: String, func: String, in: String)
   * The empty-append guard the reference needs (main.py:184) is a no-op here:
   * appending an empty DataFrame writes no row files.
   */
-final class TableStore(spark: SparkSession, warehouse: String) {
+final class TableStore(private[graft] val spark: SparkSession,
+    warehouse: String) {
   import TableStore._
 
   private def dir(table: String): Path = Paths.get(warehouse, table)
@@ -141,8 +142,10 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   private def markerOf(table: String, v: Int): Marker =
     markerLog(table).findLast(_.version == v).getOrElse(Marker(0, v, 0L, None))
 
-  /** Committed version number; 0 = no commit. */
-  private def currentVersion(table: String): Int = head(table).version
+  /** The head commit's version number (0 = no commit). A rebased commit
+    * can number below the version it replaced, so this is not always the
+    * highest of [[versions]]. */
+  private[graft] def headVersion(table: String): Int = head(table).version
 
   /** CAS publish of commit seq (content: version + commit time + optional
     * transaction tag, see [[parseMarker]]): the marker iff this writer won
@@ -168,7 +171,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
 
   /** Directory a reader of `table` scans right now. */
   private def resolve(table: String): Path =
-    snapshotDir(table, currentVersion(table))
+    snapshotDir(table, headVersion(table))
 
   /** Entries of directory `p`; none when it does not exist. */
   private def list(p: Path): List[Path] =
@@ -186,7 +189,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       .map(_.getFileName.toString)
       .filterNot(n => n.startsWith("_") || n.startsWith("."))
 
-  def exists(table: String): Boolean = currentVersion(table) > 0
+  def exists(table: String): Boolean = headVersion(table) > 0
 
   /** Names of every table with a committed version in this store — the
     * namespace listing (the K6 counterpart of BigQuery's
@@ -459,14 +462,15 @@ final class TableStore(spark: SparkSession, warehouse: String) {
       files.map(FileStats.rowCount(conf, _)).sum
     }
 
-  /** Versions currently on disk and readable (committed or retained —
-    * ascending; excludes claimed-but-uncommitted directories above the
-    * head). */
+  /** Versions currently readable, ascending: every version a commit
+    * marker published whose directory GC has not swept. A claim that is
+    * still staging (or was abandoned) has no marker and stays hidden,
+    * whatever its number; a rebased commit can publish a LOWER number than
+    * the head it replaced, and that retained head stays listed. */
   def versions(table: String): Seq[Int] = {
-    val committed = currentVersion(table)
-    listDir(table).map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d+") => s.drop(1).toInt }
-      .filter(_ <= committed).sorted
+    val onDisk = listDir(table).map(_.getFileName.toString).toSet
+    markerLog(table).map(_.version).distinct
+      .filter(v => onDisk(s"v$v")).sorted
   }
 
   // ------------------------------------------------------- logical views
@@ -663,7 +667,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     require(!exists(target),
       s"clone: target table '$target' already exists in the store")
     checkTag(txnTag)
-    val v = asOfVersion.getOrElse(currentVersion(source))
+    val v = asOfVersion.getOrElse(headVersion(source))
     val have = versions(source)
     require(have.contains(v),
       s"clone($source): version v$v not retained (readable: " +
@@ -697,7 +701,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
         if (isSnapshot(t)) "SNAPSHOT"
         else if (isMaterializedView(t)) "MATERIALIZED VIEW"
         else "BASE TABLE"
-      (t, tpe, currentVersion(t), countRows(t), fileCount(t),
+      (t, tpe, headVersion(t), countRows(t), fileCount(t),
         read(t).schema.fields.length)
     }.toDF("table_name", "table_type", "version", "n_rows", "n_files",
       "n_columns")
@@ -854,7 +858,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * file algebra wholesale — see [[readMaterialized]]). */
   def mvDeltaFiles(mv: String): Int = {
     val d = readMvDef(mv)
-    if (currentVersion(d.base) != d.baseVersion) 0
+    if (headVersion(d.base) != d.baseVersion) 0
     else {
       val baseDir = resolve(d.base)
       dataFiles(baseDir)
@@ -882,7 +886,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   def readMaterialized(mv: String): DataFrame = {
     val d = readMvDef(mv)
     val stored = read(mv)
-    if (currentVersion(d.base) != d.baseVersion) mvConform(mvSnapshotAgg(d)._3, stored)
+    if (headVersion(d.base) != d.baseVersion) mvConform(mvSnapshotAgg(d)._3, stored)
     else {
       val baseDir = resolve(d.base)
       val delta = dataFiles(baseDir)
@@ -914,13 +918,13 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * rewritten. No-op when already fresh. */
   def refreshMaterializedView(mv: String): Unit = {
     val d = readMvDef(mv)
-    if (currentVersion(d.base) == d.baseVersion && mvDeltaFiles(mv) == 0)
+    if (headVersion(d.base) == d.baseVersion && mvDeltaFiles(mv) == 0)
       return
     val next = readMaterialized(mv)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       next.count() // materialize BEFORE the overwrite drops the old rows
-      val v = currentVersion(d.base)
+      val v = headVersion(d.base)
       val baseDir = resolve(d.base)
       val files = dataFiles(baseDir)
         .map(f => baseDir.relativize(f).toString).toSet
@@ -1076,7 +1080,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     Files.createDirectories(dir(table))
     val taken = listDir(table).map(_.getFileName.toString)
       .collect { case s if s.matches("v\\d+") => s.drop(1).toInt }
-    var n = math.max(currentVersion(table),
+    var n = math.max(headVersion(table),
       if (taken.isEmpty) 0 else taken.max) + 1
     while (true) {
       try {
@@ -1869,7 +1873,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   /** Current declared schema, when the table has evolved; None means the
     * physical footer schema is the only truth (the common case). */
   def declaredSchema(table: String): Option[StructType] =
-    declaredSchemaOf(table, currentVersion(table))
+    declaredSchemaOf(table, headVersion(table))
 
   /** Carry the declared schema across commit `v` — the [[maintainStats]]
     * discipline: once a table opts into evolution, every later commit's
@@ -2126,7 +2130,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     * sidecar write. Returns (files covered, files fully bloom-covered). */
   private def publishStats(table: String,
       addSpecs: Seq[FileStats.BloomSpec], parallelism: Int): (Int, Int) = {
-    val v = currentVersion(table)
+    val v = headVersion(table)
     val base = resolve(table)
     val conf = spark.sessionState.newHadoopConf()
     val stats = pooled(dataFiles(base), parallelism)(
@@ -2197,7 +2201,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
   def pruneInfo(table: String, preds: Seq[FileStats.Pred]): (Int, Int) = {
     val base = resolve(table)
     val all = dataFiles(base)
-    val stats = FileStats.load(statsPath(table, currentVersion(table)))
+    val stats = FileStats.load(statsPath(table, headVersion(table)))
     val kept = all.count { p =>
       stats.get(base.relativize(p).toString)
         .forall(fs => preds.forall(FileStats.mightMatch(fs, _)))
@@ -2217,7 +2221,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     val residual = preds.map(FileStats.toColumn)
       .reduceOption(_ && _).getOrElse(org.apache.spark.sql.functions.lit(true))
     val base = resolve(table)
-    val stats = FileStats.load(statsPath(table, currentVersion(table)))
+    val stats = FileStats.load(statsPath(table, headVersion(table)))
     if (stats.isEmpty) return read(table).filter(residual)
     val kept = dataFiles(base).filter { p =>
       stats.get(base.relativize(p).toString)
@@ -2270,7 +2274,7 @@ final class TableStore(spark: SparkSession, warehouse: String) {
     // stats still include it, so a metadata answer would be wrong, not
     // just stale. Fall back to a scan (None).
     if (Files.isDirectory(dvDir(base))) return None
-    val sidecar = FileStats.load(statsPath(table, currentVersion(table)))
+    val sidecar = FileStats.load(statsPath(table, headVersion(table)))
     val conf = spark.sessionState.newHadoopConf()
     val files = dataFiles(base)
     if (files.isEmpty) return None

@@ -309,6 +309,8 @@ class RebasedCommitGcSpec extends AnyFunSuite {
     assert(CommitGates("low-txn").reached.await(120, TimeUnit.SECONDS))
     // …while an overwrite claims v3 and commits it at seq 2
     store.overwrite("t", Seq((50L, 0, 75.0)).toDF("id", "grp", "x"))
+    // the staging claim v2 has no marker yet: time travel does not list it
+    assert(store.versions("t") == Seq(1, 3))
     CommitGates("low-txn").open.countDown()
     txn.join()
     assert(errors.isEmpty, errors.toString)
@@ -318,5 +320,10 @@ class RebasedCommitGcSpec extends AnyFunSuite {
       .collect().map { case (seq, v, _, tag) => (seq, v, tag) }.toSeq
     assert(log.last == ((3, 2, "low:1")), log.toString)
     assert(store.read("t").select("id").as[Long].collect().toSeq == Seq(60L))
+    // the replaced head v3 is retained one commit behind the new head and
+    // stays listed and readable, though its number is above the head's
+    assert(store.versions("t") == Seq(2, 3))
+    assert(store.readVersion("t", 3).select("id").as[Long].collect().toSeq ==
+      Seq(50L))
   }
 }

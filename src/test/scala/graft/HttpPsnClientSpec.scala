@@ -143,6 +143,49 @@ class HttpPsnClientSpec extends AnyFunSuite {
     }
   }
 
+  /** A fixture `/profile` answering `statuses` in turn, then 200 with the
+    * profile; returns the fetch's outcome and how many requests arrived. */
+  private def flaky(statuses: Int*): (scala.util.Try[TrophySummary], Int) = {
+    val hits = new java.util.concurrent.atomic.AtomicInteger()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/profile", (ex: HttpExchange) => {
+      val i = hits.getAndIncrement()
+      val (code, body) =
+        if (i < statuses.length) (statuses(i), "{}") else (200, profileJson)
+      val bytes = body.getBytes("UTF-8")
+      ex.sendResponseHeaders(code, bytes.length)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    server.start()
+    try {
+      val client = new HttpPsnClient(
+        s"http://127.0.0.1:${server.getAddress.getPort}", "tok")
+      (scala.util.Try(client.profileTrophies()), hits.get)
+    } finally server.stop(0)
+  }
+
+  test("transient 503s and 429s are retried with backoff until the fetch succeeds") {
+    val (ok, n) = flaky(503, 503)
+    assert(ok.get == fake.profileTrophies() && n == 3)
+    val (ok2, n2) = flaky(429, 503)
+    assert(ok2.get == fake.profileTrophies() && n2 == 3)
+  }
+
+  test("a persistent 5xx fails after the fixed number of attempts") {
+    val (failed, n) = flaky(Seq.fill(10)(500): _*)
+    assert(failed.failed.get.getMessage.contains("HTTP 500"))
+    assert(n == 3)
+  }
+
+  test("401 and 404 fail on the first attempt") {
+    Seq(401, 404).foreach { code =>
+      val (failed, n) = flaky(code)
+      assert(failed.failed.get.getMessage.contains(s"HTTP $code"))
+      assert(n == 1, s"HTTP $code")
+    }
+  }
+
   test("fixture-server JSON through DailyRun matches the FakePsnClient run") {
     val (whHttp, _) = withServer { base =>
       val client = new HttpPsnClient(base, "tok", pageSize = 2)

@@ -14,6 +14,7 @@ import graft.psn.TableStore
   * statement and route it through TableStore.mergeWith with BigQuery's
   * UPDATE-FROM semantics. */
 class SqlDmlSpec extends AnyFunSuite {
+  import SqlSurfaceSpec.{sameAsSpark, sortedRows}
   import TestSpark._
 
   /** The reference's statement VERBATIM (main.py:274-284), fully-qualified
@@ -30,65 +31,96 @@ class SqlDmlSpec extends AnyFunSuite {
     """
 
   test("parses the reference's literal UPDATE-FROM text") {
-    val u = Sql.parseUpdateFrom(referenceText)
-    assert(u.target == "game" && u.source == "game_temp")
-    assert(u.targetKey == "id" && u.sourceKey == "id")
-    assert(u.sets == Seq(
-      "last_played_date_time" -> Sql.VCol(false, "last_played_date_time"),
-      "play_count" -> Sql.VCol(false, "play_count"),
-      "play_duration" -> Sql.VCol(false, "play_duration")))
+    import spark.implicits._
+    val store = freshStore()
+    val cols = Seq("id", "last_played_date_time", "play_count", "play_duration")
+    store.overwrite("game", Seq((1L, "t1", 10L, "PT1H"),
+      (2L, "t2", 20L, "PT2H")).toDF(cols: _*))
+    store.overwrite("game_temp", Seq((2L, "t2b", 21L, "PT3H")).toDF(cols: _*))
+    Sql.runDml(spark, store, referenceText)
+    // the project.dataset prefix is discarded: the store's own `game`
+    // took every SET column from the matched temp row, `game_temp` is
+    // untouched
+    assert(sortedRows(store.read("game")) == Seq(
+      Seq(1L, "t1", 10L, "PT1H"), Seq(2L, "t2b", 21L, "PT3H")))
+    assert(sortedRows(store.read("game_temp")) ==
+      Seq(Seq(2L, "t2b", 21L, "PT3H")))
   }
 
   test("alias-flipped WHERE and unqualified SET lhs parse; junk is loud") {
-    val u = Sql.parseUpdateFrom(
+    import spark.implicits._
+    val store = freshStore()
+    store.overwrite("t1", Seq((1L, 10L), (2L, 20L)).toDF("k2", "x"))
+    store.overwrite("t2", Seq((1L, 4L)).toDF("k", "y"))
+    Sql.runDml(spark, store,
       "UPDATE t1 a SET x = b.y FROM t2 b WHERE b.k = a.k2")
-    assert(u.targetKey == "k2" && u.sourceKey == "k" &&
-      u.sets == Seq("x" -> Sql.VCol(false, "y")))
-    intercept[IllegalArgumentException] {
-      Sql.parseUpdateFrom("DELETE FROM t WHERE x = 1")
-    }
+    assert(sortedRows(store.read("t1")) == Seq(Seq(1L, 4L), Seq(2L, 20L)))
     // column-column arithmetic is part of the surface (the
     // running-balance shape)
-    val u2 = Sql.parseUpdateFrom(
-      "UPDATE t1 a SET a.x = a.x - b.y FROM t2 b WHERE a.k = b.k")
-    assert(u2.sets == Seq("x" ->
-      Sql.VBin(Sql.VCol(true, "x"), "-", Sql.VCol(false, "y"))))
-    intercept[IllegalArgumentException] { // WHERE names a third alias
-      Sql.parseUpdateFrom(
-        "UPDATE t1 a SET a.x = b.y FROM t2 b WHERE a.k = c.k")
+    Sql.runDml(spark, store,
+      "UPDATE t1 a SET a.x = a.x - b.y FROM t2 b WHERE a.k2 = b.k")
+    assert(sortedRows(store.read("t1")) == Seq(Seq(1L, 0L), Seq(2L, 20L)))
+    intercept[IllegalArgumentException] { // FROM without alias and WHERE
+      Sql.runDml(spark, store, "UPDATE t1 a SET a.x = b.y FROM t2")
     }
+    intercept[IllegalArgumentException] { // WHERE names a third alias
+      Sql.runDml(spark, store,
+        "UPDATE t1 a SET a.x = b.y FROM t2 b WHERE a.k2 = c.k")
+    }
+    assert(sortedRows(store.read("t1")) == Seq(Seq(1L, 0L), Seq(2L, 20L)))
   }
 
   test("multi-predicate WHERE: one join equality plus literal residuals") {
-    val u = Sql.parseUpdateFrom(
+    import spark.implicits._
+    val store = freshStore()
+    def d(iso: String) = java.sql.Date.valueOf(iso)
+    store.overwrite("t1", Seq(
+      (1L, 1L, d("1994-06-01"), d("1994-01-01"), 0L),
+      (2L, 1L, d("1995-06-01"), d("1996-01-01"), 0L),
+      (3L, 2L, d("1996-06-01"), d("1990-01-01"), 0L))
+      .toDF("k", "j", "d", "e", "x"))
+    store.overwrite("t2", Seq((1L, 1L, 60000L, 7L), (2L, 2L, 60000L, 8L),
+      (3L, 2L, 10L, 9L)).toDF("k", "j", "v", "y"))
+    Sql.runDml(spark, store,
       "UPDATE t1 a SET a.x = b.y FROM t2 b " +
         "WHERE a.k = b.k AND a.d >= DATE '1995-01-01' AND b.v > 50000")
-    assert(u.targetKey == "k" && u.sourceKey == "k")
-    assert(u.residuals == Seq(
-      Sql.MergePred(true, "d", ">=", "DATE '1995-01-01'"),
-      Sql.MergePred(false, "v", ">", "50000")))
-    intercept[IllegalArgumentException] { // two join equalities
-      Sql.parseUpdateFrom(
-        "UPDATE t1 a SET a.x = b.y FROM t2 b WHERE a.k = b.k AND a.j = b.j")
-    }
-    intercept[IllegalArgumentException] { // residual vs another column
-      Sql.parseUpdateFrom(
-        "UPDATE t1 a SET a.x = b.y FROM t2 b WHERE a.k = b.k AND a.d >= a.e")
-    }
+    // k=1 fails the target-side date guard, k=3 the source-side value
+    // guard: both stay untouched
+    assert(store.read("t1").select("k", "x").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((1L, 0L), (2L, 8L), (3L, 0L)))
+    // two join equalities and a column-vs-column residual execute, and
+    // equal Spark's own left join over the same inputs
+    val oracle = (on: String) =>
+      "SELECT a.k, a.j, a.d, a.e, CASE WHEN b.k IS NULL THEN a.x " +
+        s"ELSE b.y END FROM t1_in a LEFT JOIN t2_in b ON $on"
+    sameAsSpark(store, "t1",
+      "UPDATE t1 a SET a.x = b.y FROM t2 b WHERE a.k = b.k AND a.j = b.j",
+      oracle("a.k = b.k AND a.j = b.j"), "t1", "t2")
+    sameAsSpark(store, "t1",
+      "UPDATE t1 a SET a.x = b.y FROM t2 b WHERE a.k = b.k AND a.d >= a.e",
+      oracle("a.k = b.k AND a.d >= a.e"), "t1", "t2")
   }
 
-  test("CASE expressions parse in SET; nesting and connectives stay loud") {
-    val u = Sql.parseUpdateFrom(
+  test("CASE expressions execute in SET, connectives in the condition included") {
+    import spark.implicits._
+    val store = freshStore()
+    store.overwrite("t1", Seq((1L, "a", 0L), (2L, "b", 0L), (3L, "c", 0L))
+      .toDF("k", "x", "n"))
+    store.overwrite("t2", Seq((1L, 500L, 5L), (2L, 50L, 20L))
+      .toDF("k", "amt", "v"))
+    Sql.runDml(spark, store,
       "UPDATE t1 a SET a.x = CASE WHEN b.amt > 100 THEN 'H' ELSE a.x END " +
         "FROM t2 b WHERE a.k = b.k")
-    assert(u.sets == Seq("x" -> Sql.VCase(
-      Sql.VCol(false, "amt"), ">", Sql.VNum("100"),
-      Sql.VStr("H"), Sql.VCol(true, "x"))))
-    intercept[IllegalArgumentException] { // AND in the CASE condition
-      Sql.parseUpdateFrom(
-        "UPDATE t1 a SET a.x = CASE WHEN b.v > 1 AND b.v < 9 THEN 1 " +
-          "ELSE 2 END FROM t2 b WHERE a.k = b.k")
-    }
+    assert(sortedRows(store.read("t1")) ==
+      Seq(Seq(1L, "H", 0L), Seq(2L, "b", 0L), Seq(3L, "c", 0L)))
+    // AND in the CASE condition executes and equals Spark's own CASE
+    sameAsSpark(store, "t1",
+      "UPDATE t1 a SET a.n = CASE WHEN b.v > 1 AND b.v < 9 THEN 1 " +
+        "ELSE 2 END FROM t2 b WHERE a.k = b.k",
+      "SELECT a.k, a.x, CASE WHEN b.k IS NULL THEN a.n " +
+        "WHEN b.v > 1 AND b.v < 9 THEN 1 ELSE 2 END " +
+        "FROM t1_in a LEFT JOIN t2_in b ON a.k = b.k", "t1", "t2")
   }
 
   private def freshStore() =
@@ -189,44 +221,49 @@ class SqlDmlSpec extends AnyFunSuite {
     """
 
   test("parses MERGE INTO: DELETE clauses, predicated WHENs, reachability; junk is loud") {
-    val m = Sql.parseMergeInto(mergeText)
-    assert(m.target == "game" && m.source == "game_src")
-    assert(m.targetKey == "id" && m.sourceKey == "id")
-    assert(m.sets == Seq("play_count" -> Sql.VCol(false, "play_count")))
-    assert(m.inserts == Seq("id" -> Sql.VCol(false, "id"),
-      "play_count" -> Sql.VCol(false, "play_count")))
-    // the full clause surface parses: predicated DELETE (target-side
+    import spark.implicits._
+    val store = freshStore()
+    store.overwrite("game", Seq((1L, 10L), (3L, 30L)).toDF("id", "play_count"))
+    store.overwrite("game_src",
+      Seq((1L, 11L), (2L, 22L)).toDF("id", "play_count"))
+    Sql.runMerge(spark, store, mergeText)
+    assert(sortedRows(store.read("game")) ==
+      Seq(Seq(1L, 11L), Seq(2L, 22L), Seq(3L, 30L)))
+    // the full clause surface executes: predicated DELETE (target-side
     // pred), unpredicated UPDATE behind it, predicated INSERT
     // (source-side pred) — in statement order
-    val m2 = Sql.parseMergeInto(
+    store.overwrite("a", Seq((1L, "F", 10L), (2L, "O", 20L), (3L, "O", 30L))
+      .toDF("id", "status", "v"))
+    store.overwrite("b", Seq((1L, 11L), (2L, 22L), (4L, 5L), (5L, 50L))
+      .toDF("id", "v"))
+    Sql.runMerge(spark, store,
       "MERGE INTO a t USING b s ON t.id = s.id " +
         "WHEN MATCHED AND t.status = 'F' THEN DELETE " +
         "WHEN MATCHED THEN UPDATE SET t.v = s.v " +
         "WHEN NOT MATCHED AND s.v > 10 THEN INSERT (id, v) " +
         "VALUES (s.id, s.v)")
-    assert(m2.whens == Seq(
-      Sql.MatchedDelete(Some(Sql.MergePred(true, "status", "=", "'F'"))),
-      Sql.MatchedUpdate(None, Seq("v" -> Sql.VCol(false, "v"))),
-      Sql.NotMatchedInsert(Some(Sql.MergePred(false, "v", ">", "10")),
-        Seq("id" -> Sql.VCol(false, "id"), "v" -> Sql.VCol(false, "v")))))
+    assert(sortedRows(store.read("a")) ==
+      Seq(Seq(2L, "O", 22L), Seq(3L, "O", 30L), Seq(5L, null, 50L)))
     // a bare DELETE-only statement is legal ANSI MERGE
-    assert(Sql.parseMergeInto(
+    Sql.runMerge(spark, store,
       "MERGE INTO a t USING b s ON t.id = s.id WHEN MATCHED THEN DELETE")
-      .whens == Seq(Sql.MatchedDelete(None)))
+    assert(sortedRows(store.read("a")) == Seq(Seq(3L, "O", 30L)))
     // reachability rule: a non-final unpredicated clause in a match
     // group makes later clauses dead code — loud, not silent
     intercept[IllegalArgumentException] {
-      Sql.parseMergeInto("MERGE INTO a t USING b s ON t.id = s.id " +
+      Sql.runMerge(spark, store, "MERGE INTO a t USING b s ON t.id = s.id " +
         "WHEN MATCHED THEN DELETE " +
         "WHEN MATCHED THEN UPDATE SET t.v = s.v")
     }
     intercept[IllegalArgumentException] { // pred on a third alias
-      Sql.parseMergeInto("MERGE INTO a t USING b s ON t.id = s.id " +
+      Sql.runMerge(spark, store, "MERGE INTO a t USING b s ON t.id = s.id " +
         "WHEN MATCHED AND x.v = 1 THEN DELETE")
     }
     intercept[IllegalArgumentException] { // misaligned INSERT list
-      Sql.parseMergeInto(mergeText.replace("(id, play_count)", "(id)"))
+      Sql.runMerge(spark, store,
+        mergeText.replace("(id, play_count)", "(id)"))
     }
+    assert(sortedRows(store.read("a")) == Seq(Seq(3L, "O", 30L)))
   }
 
   test("runMerge executes DELETE + predicated clauses, first-match-wins in statement order") {
@@ -313,26 +350,39 @@ class SqlDmlSpec extends AnyFunSuite {
     WHERE t.id IN (SELECT id FROM `my-project.playstation.game_gone`)
     """
 
-  test("parses DELETE … IN (subquery); other predicate shapes are loud") {
-    val d = Sql.parseDeleteIn(deleteText)
-    assert(d.target == "game" && d.source == "game_gone")
-    assert(d.targetKey == "id" && d.sourceKey == "id")
-    // alias-free target and bare WHERE column also parse
-    val d2 = Sql.parseDeleteIn(
+  test("DELETE … IN (subquery) rewrites; other predicates take the deletion vector") {
+    import spark.implicits._
+    val store = freshStore()
+    store.overwrite("game",
+      Seq((1L, "t1"), (2L, "t2"), (3L, "t3")).toDF("id", "title"))
+    store.overwrite("game_gone", Seq(2L).toDF("id"))
+    Sql.runDelete(spark, store, deleteText)
+    assert(sortedRows(store.read("game")) ==
+      Seq(Seq(1L, "t1"), Seq(3L, "t3")))
+    // alias-free target and bare WHERE column
+    store.overwrite("t1", Seq(1L, 2L, 3L).toDF("k"))
+    store.overwrite("t2", Seq(3L).toDF("k2"))
+    Sql.runDelete(spark, store,
       "DELETE FROM t1 WHERE k IN (SELECT k2 FROM t2)")
-    assert(d2.target == "t1" && d2.targetKey == "k" &&
-      d2.source == "t2" && d2.sourceKey == "k2")
-    intercept[IllegalArgumentException] { // literal predicate
-      Sql.parseDeleteIn("DELETE FROM t WHERE x = 1")
-    }
-    intercept[IllegalArgumentException] { // correlated subquery filter
-      Sql.parseDeleteIn(
-        "DELETE FROM t a WHERE a.k IN (SELECT k FROM s WHERE s.v > 1)")
-    }
+    assert(sortedRows(store.read("t1")) == Seq(Seq(1L), Seq(2L)))
+    // a literal predicate takes the deletion-vector route: no data file
+    // is rewritten
+    val files = store.fileCount("t1")
+    assert(Sql.runDeleteWhere(spark, store, "DELETE FROM t1 WHERE k = 1") == 1L)
+    assert(store.fileCount("t1") == files)
+    assert(sortedRows(store.read("t1")) == Seq(Seq(2L)))
+    // a filtered tombstone subquery executes and equals Spark's anti join
+    store.overwrite("t", Seq((1L, 0L), (2L, 0L), (3L, 0L)).toDF("k", "v"))
+    store.overwrite("s", Seq((1L, 1L), (2L, 5L), (3L, 9L)).toDF("k", "v"))
+    sameAsSpark(store, "t",
+      "DELETE FROM t a WHERE a.k IN (SELECT k FROM s WHERE s.v > 1)",
+      "SELECT a.* FROM t_in a LEFT ANTI JOIN " +
+        "(SELECT k FROM s_in WHERE v > 1) b ON a.k = b.k", "t", "s")
     intercept[IllegalArgumentException] { // WHERE names a third alias
-      Sql.parseDeleteIn(
+      Sql.runDelete(spark, store,
         "DELETE FROM t a WHERE b.k IN (SELECT k FROM s)")
     }
+    assert(sortedRows(store.read("t")) == Seq(Seq(1L, 0L)))
   }
 
   test("runDelete: tombstoned rows gone, others untouched, commit versioned; null/duplicate tombstones are no-ops") {
@@ -389,21 +439,26 @@ class SqlDmlSpec extends AnyFunSuite {
   }
 
   test("parses INSERT INTO … SELECT; junk column lists are loud") {
-    val i = Sql.parseInsertInto(
-      "INSERT INTO `p.d.game` (id, v) SELECT k, n FROM src")
-    assert(i.target == "game" && i.cols.contains(Seq("id", "v")))
-    assert(i.select.startsWith("SELECT"))
-    val bare = Sql.parseInsertInto("INSERT INTO game SELECT * FROM src")
-    assert(bare.target == "game" && bare.cols.isEmpty)
-    intercept[IllegalArgumentException] { // VALUES is not the surface
-      Sql.parseInsertInto("INSERT INTO game VALUES (1, 2)")
-    }
+    import spark.implicits._
+    val store = freshStore()
+    store.overwrite("game", Seq((1L, 10L)).toDF("id", "v"))
+    store.overwrite("src", Seq((2L, 20L)).toDF("id", "v"))
+    Sql.runInsert(spark, store, sf,
+      "INSERT INTO `p.d.game` (v, id) SELECT v, id FROM src")
+    Sql.runInsert(spark, store, sf, "INSERT INTO game SELECT * FROM src")
+    // VALUES rows are in the surface too
+    Sql.runInsert(spark, store, sf, "INSERT INTO game (id, v) VALUES (3L, 30L)")
+    assert(sortedRows(store.read("game")) == Seq(Seq(1L, 10L), Seq(2L, 20L),
+      Seq(2L, 20L), Seq(3L, 30L)))
     intercept[IllegalArgumentException] { // expression in the column list
-      Sql.parseInsertInto("INSERT INTO game (id + 1) SELECT k FROM src")
+      Sql.runInsert(spark, store, sf,
+        "INSERT INTO game (id + 1) SELECT id FROM src")
     }
     intercept[IllegalArgumentException] { // duplicate column
-      Sql.parseInsertInto("INSERT INTO game (id, id) SELECT k, n FROM src")
+      Sql.runInsert(spark, store, sf,
+        "INSERT INTO game (id, id) SELECT id, v FROM src")
     }
+    assert(store.read("game").count() == 4)
   }
 
   test("runInsert appends through the store; absent listed columns ride as typed NULLs") {
@@ -509,64 +564,75 @@ class SqlDmlSpec extends AnyFunSuite {
   }
 
   test("SET and INSERT VALUES accept one-literal arithmetic; junk stays loud") {
-    val u = Sql.parseUpdateFrom(
-      """UPDATE t a SET a.p = b.p * 1.05, a.q = b.q FROM s b
-        |WHERE a.k = b.k""".stripMargin)
-    assert(u.sets == Seq(
-      "p" -> Sql.VBin(Sql.VCol(false, "p"), "*", Sql.VNum("1.05")),
-      "q" -> Sql.VCol(false, "q")))
-    val m = Sql.parseMergeInto(
+    import spark.implicits._
+    val store = freshStore()
+    store.overwrite("t", Seq((1L, 100.0, 2L), (2L, 200.0, 3L))
+      .toDF("k", "p", "q"))
+    store.overwrite("s", Seq((1L, 10.0, 5L), (3L, 30.0, 7L))
+      .toDF("k", "p", "q"))
+    sameAsSpark(store, "t",
+      "UPDATE t a SET a.p = b.p * 1.05, a.q = b.q FROM s b WHERE a.k = b.k",
+      "SELECT a.k, CASE WHEN b.k IS NULL THEN a.p ELSE b.p * 1.05 END, " +
+        "CASE WHEN b.k IS NULL THEN a.q ELSE b.q END " +
+        "FROM t_in a LEFT JOIN s_in b ON a.k = b.k", "t", "s")
+    sameAsSpark(store, "t",
       """MERGE INTO t a USING s b ON a.k = b.k
         |WHEN MATCHED THEN UPDATE SET a.p = b.p + 7
         |WHEN NOT MATCHED THEN INSERT (k, p) VALUES (b.k, b.p / 2)
-        |""".stripMargin)
-    assert(m.sets == Seq("p" ->
-      Sql.VBin(Sql.VCol(false, "p"), "+", Sql.VNum("7"))))
-    assert(m.inserts == Seq("k" -> Sql.VCol(false, "k"),
-      "p" -> Sql.VBin(Sql.VCol(false, "p"), "/", Sql.VNum("2"))))
-    // column-column products and precedence chains are now in-surface
-    val u2 = Sql.parseUpdateFrom(
-      "UPDATE t a SET a.p = b.p * b.q FROM s b WHERE a.k = b.k")
-    assert(u2.sets == Seq("p" ->
-      Sql.VBin(Sql.VCol(false, "p"), "*", Sql.VCol(false, "q"))))
-    val m2 = Sql.parseMergeInto(
-      """MERGE INTO t a USING s b ON a.k = b.k
-        |WHEN NOT MATCHED THEN INSERT (k) VALUES (b.k * 2 + 1)""".stripMargin)
-    assert(m2.inserts == Seq("k" -> Sql.VBin(
-      Sql.VBin(Sql.VCol(false, "k"), "*", Sql.VNum("2")), "+",
-      Sql.VNum("1"))))
-    // function calls: still loud
-    intercept[IllegalArgumentException] {
-      Sql.parseUpdateFrom(
-        "UPDATE t a SET a.p = round(b.p) FROM s b WHERE a.k = b.k")
-    }
+        |""".stripMargin,
+      "SELECT coalesce(a.k, b.k), CASE WHEN a.k IS NULL THEN b.p / 2 " +
+        "WHEN b.k IS NULL THEN a.p ELSE b.p + 7 END, a.q " +
+        "FROM t_in a FULL JOIN s_in b ON a.k = b.k", "t", "s")
+    // column-column products and precedence chains
+    sameAsSpark(store, "t",
+      "UPDATE t a SET a.p = b.p * b.q FROM s b WHERE a.k = b.k",
+      "SELECT a.k, CASE WHEN b.k IS NULL THEN a.p ELSE b.p * b.q END, a.q " +
+        "FROM t_in a LEFT JOIN s_in b ON a.k = b.k", "t", "s")
+    store.overwrite("s2", Seq(5L).toDF("k"))
+    sameAsSpark(store, "t",
+      """MERGE INTO t a USING s2 b ON a.k = b.k
+        |WHEN NOT MATCHED THEN INSERT (k) VALUES (b.k * 2 + 1)""".stripMargin,
+      "SELECT k, p, q FROM t_in UNION ALL SELECT 11L, NULL, NULL", "t")
+    // function calls execute
+    sameAsSpark(store, "t",
+      "UPDATE t a SET a.p = round(b.p) FROM s b WHERE a.k = b.k",
+      "SELECT a.k, CASE WHEN b.k IS NULL THEN a.p ELSE round(b.p) END, a.q " +
+        "FROM t_in a LEFT JOIN s_in b ON a.k = b.k", "t", "s")
     // INSERT VALUES reading the target: loud (no target row exists)
     intercept[IllegalArgumentException] {
-      Sql.parseMergeInto(
+      Sql.runMerge(spark, store,
         """MERGE INTO t a USING s b ON a.k = b.k
           |WHEN NOT MATCHED THEN INSERT (k) VALUES (a.k + 1)""".stripMargin)
     }
   }
 
   test("NOT MATCHED BY SOURCE DELETE parses; source-side pred is loud") {
-    val m = Sql.parseMergeInto(
+    import spark.implicits._
+    val store = freshStore()
+    store.overwrite("t", Seq((1L, 10L, "O"), (2L, 20L, "F"), (3L, 30L, "O"))
+      .toDF("k", "v", "status"))
+    store.overwrite("s", Seq((1L, 11L), (4L, 44L)).toDF("k", "v"))
+    Sql.runMerge(spark, store,
       """MERGE INTO t a USING s b ON a.k = b.k
         |WHEN MATCHED THEN UPDATE SET a.v = b.v
         |WHEN NOT MATCHED BY TARGET THEN INSERT (k, v) VALUES (b.k, b.v)
         |WHEN NOT MATCHED BY SOURCE AND a.status <> 'F' THEN DELETE
         |""".stripMargin)
-    assert(m.whens.last == Sql.NotMatchedBySourceDelete(
-      Some(Sql.MergePred(true, "status", "<>", "'F'"))))
+    // 1 updates, 4 inserts, 3 vanished from the source and is deleted,
+    // 2 vanished too but its guard keeps it
+    assert(sortedRows(store.read("t")) == Seq(Seq(1L, 11L, "O"),
+      Seq(2L, 20L, "F"), Seq(4L, 44L, null)))
     intercept[IllegalArgumentException] { // pred reads the source side
-      Sql.parseMergeInto(
+      Sql.runMerge(spark, store,
         """MERGE INTO t a USING s b ON a.k = b.k
           |WHEN NOT MATCHED BY SOURCE AND b.v > 1 THEN DELETE""".stripMargin)
     }
     intercept[IllegalArgumentException] { // UPDATE on the BY SOURCE arm
-      Sql.parseMergeInto(
+      Sql.runMerge(spark, store,
         """MERGE INTO t a USING s b ON a.k = b.k
           |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET a.v = 0""".stripMargin)
     }
+    assert(store.read("t").count() == 3)
   }
 
   test("DROP TABLE: drops committed tables; missing is loud unless IF EXISTS") {
