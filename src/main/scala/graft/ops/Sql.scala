@@ -1,22 +1,24 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
-  UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable,
-  UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
+  UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation,
+  UnresolvedTable, UnresolvedTableOrView, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression,
-  InSubquery}
+  InSubquery, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint,
-  AddColumns, Assignment, CreateTableAsSelect, CreateView, DeleteAction,
-  DeleteFromTable, DropColumns, DropConstraint, DropTable, DropView,
-  InsertAction, InsertIntoStatement, Join, JoinHint, LogicalPlan,
-  MergeAction, MergeIntoTable, RenameColumn, RenameTable,
-  ReplaceTableAsSelect, SubqueryAlias, TruncateTable, UpdateAction,
-  UpdateStarAction, UpdateTable}
+  AddColumns, Assignment, Command, CreateTableAsSelect, CreateView,
+  DeleteAction, DeleteFromTable, DropColumns, DropConstraint, DropTable,
+  DropView, InsertAction, InsertIntoStatement, Join, JoinHint, LogicalPlan,
+  MergeAction, MergeIntoTable, ParsedStatement, RenameColumn, RenameTable,
+  ReplaceTableAsSelect, SubqueryAlias, TruncateTable, UnresolvedWith,
+  UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.execution.command.CreateTableLikeCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  TimestampType}
 
 import graft.psn.TableStore
 import graft.tables.Tables
@@ -28,16 +30,19 @@ import graft.tables.Tables
   *
   * Spark parses; Graft-only verbs keep anchored regexes. Every statement
   * Spark's grammar covers (MERGE, UPDATE, DELETE, INSERT, CREATE TABLE AS
-  * SELECT / VIEW / LIKE, DROP, TRUNCATE, ALTER TABLE) goes through
-  * `sessionState.sqlParser.parsePlan` and one match on the logical plan
-  * ([[execute]]); expressions bind as Catalyst expressions, so the surface
-  * is Spark's. BigQuery's UPDATE … FROM is Spark's UPDATE with the FROM
-  * clause lifted out, executed by the same row-level executor as MERGE.
-  * The verbs Spark has no grammar for — CLONE/COPY, materialized views,
-  * indexes, OPTIMIZE, VACUUM, RESTORE, ANALYZE, EXPORT, LOAD, and
-  * BEGIN/COMMIT/ROLLBACK in scripts — match their anchored regexes first,
-  * as do the SELECT-side rewrites (time travel, wildcard tables,
-  * TABLE_CHANGES). Anything outside the surface is loud: an
+  * SELECT / VIEW / LIKE, DROP, TRUNCATE, ALTER TABLE, and SELECT) goes
+  * through `sessionState.sqlParser.parsePlan` and one match on the logical
+  * plan ([[execute]]); expressions bind as Catalyst expressions, so the
+  * surface is Spark's. BigQuery's UPDATE … FROM is Spark's UPDATE with the
+  * FROM clause lifted out, executed by the same row-level executor as
+  * MERGE. Every query a statement runs binds its tables through one
+  * resolver over the parsed plan ([[Ctx.query]]): store tables and logical
+  * views, time-travel pins, wildcard tables and TABLE_CHANGES are plan
+  * nodes Spark's parser already produces, so no SELECT text is rewritten
+  * and no session view is registered. The verbs Spark has no grammar for
+  * — CLONE/COPY, materialized views, indexes, OPTIMIZE, VACUUM, RESTORE,
+  * ANALYZE, EXPORT, LOAD, and BEGIN/COMMIT/ROLLBACK in scripts — match
+  * their anchored regexes first. Anything outside the surface is loud: an
   * IllegalArgumentException carrying Spark's message or the verb's own.
   */
 object Sql {
@@ -121,8 +126,8 @@ object Sql {
 
   /** The statement-level append (the reference appends on every run,
     * main.py:62,185's `to_gbq(..., if_exists='append')`): `INSERT INTO <t>
-    * [(c1, …)] SELECT … | VALUES …`. The query runs over corpus views +
-    * statement-scoped store views; the rows land through
+    * [(c1, …)] SELECT … | VALUES …`. The query binds corpus and store
+    * tables through [[Ctx.query]]; the rows land through
     * [[TableStore.append]], which asserts schema identity LOUDLY. With a
     * column list the query binds positionally to the named columns and
     * every other column rides as a typed NULL. The target must already
@@ -343,57 +348,18 @@ object Sql {
       |FROM orders WHERE o_orderkey % 7 <> 0
       |ORDER BY o_orderkey""".stripMargin
 
-  /** Run `body` over the statement-scoped catalog: corpus views (when the
-    * statement has a corpus directory), the store's tables, its logical
-    * views and — inside a transaction — the overlay's uncommitted states,
-    * which register LAST and shadow the committed tables (the
-    * read-your-own-writes contract); then drop the scoped views. A store
-    * table whose name collides with a corpus view is a LOUD error before
-    * anything executes: registering it would shadow the corpus view, and
-    * dropping it afterwards would remove the name entirely, leaving later
-    * `spark.sql` users with neither. `body` must ANALYZE its statement
-    * (a DataFrame is analyzed on creation) before the views drop. */
-  private def withStatementViews[T](s: SparkSession, store: TableStore,
-      dir: Option[String],
-      overlay: scala.collection.Map[String, DataFrame] = Map.empty)(
-      body: => T): T = {
-    dir.foreach(registerViews(s, _))
-    val storeViews = store.tables()
-    // logical views register AFTER tables, in CREATION order, so a view
-    // can reference tables and earlier views (its stored SQL re-plans
-    // against their current state — the standard-view contract)
-    val logical = store.views()
-    val clash = (storeViews ++ logical ++ overlay.keys).toSet
-      .intersect(Tables.corpus.toSet)
-    require(clash.isEmpty,
-      s"store table(s)/view(s) ${clash.mkString(", ")} shadow corpus " +
-        "views of the same name — rename them")
-    storeViews.foreach(t => store.read(t).createOrReplaceTempView(t))
-    overlay.foreach { case (t, df) => df.createOrReplaceTempView(t) }
-    // A view whose definition no longer analyzes (its base lost a column
-    // it projects, say) must not poison UNRELATED statements: BigQuery's
-    // standard views error when the broken view itself is queried, not
-    // at catalog load. Registration therefore TOLERATES analysis
-    // failure — the view is skipped, and a statement that references it
-    // fails at its own resolution (unresolved relation naming the view).
-    // Only ANALYSIS failures are tolerated (the broken-definition case);
-    // infrastructure faults — an unreadable sidecar, a runtime error —
-    // stay loud at their cause instead of surfacing later as a
-    // misleading "view not found".
-    val registered = logical.filter { v =>
-      try { s.sql(store.viewSql(v)).createOrReplaceTempView(v); true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    }
-    try body
-    finally (storeViews ++ overlay.keys ++ registered).distinct
-      .foreach(t => s.catalog.dropTempView(t))
-  }
-
   private val CloneStmt = (
     """(?is)\s*CREATE\s+(SNAPSHOT\s+)?TABLE\s+`?([\w.-]+)`?\s+(CLONE|COPY)\s+""" +
     """`?([\w.-]+)`?(?:\s+FOR\s+VERSION\s+AS\s+OF\s+(\d+)""" +
     """|\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+(?:TIMESTAMP\s+'([^']+)'""" +
     """|(\d{10,})))?\s*;?\s*""").r
+
+  /** `TIMESTAMP '<yyyy-MM-dd HH:mm:ss[.SSS]>'` (UTC — the store's commit
+    * stamps are wall-clock UTC millis) or a bare epoch-millis literal. */
+  private def parseTsMillis(tsLit: String, epoch: String): Long =
+    if (epoch != null) epoch.toLong
+    else java.time.LocalDateTime.parse(tsLit.trim.replace(' ', 'T'))
+      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
 
   /** Execute `CREATE [SNAPSHOT] TABLE <t> CLONE <src> [FOR VERSION AS OF
     * <v> | FOR SYSTEM_TIME AS OF …]` and `CREATE TABLE <t> COPY <src>` —
@@ -579,19 +545,6 @@ object Sql {
       |FROM orders WHERE o_orderstatus = 'F'
       |ORDER BY o_orderkey, note""".stripMargin
 
-  private val VersionRef =
-    """(?i)`?([\w.-]+)`?\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-  private val SystemTimeRef = (
-    """(?i)`?([\w.-]+)`?\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+""" +
-    """(?:TIMESTAMP\s+'([^']+)'|(\d{10,}))""").r
-
-  /** `TIMESTAMP '<yyyy-MM-dd HH:mm:ss[.SSS]>'` (UTC — the store's commit
-    * stamps are wall-clock UTC millis) or a bare epoch-millis literal. */
-  private def parseTsMillis(tsLit: String, epoch: String): Long =
-    if (epoch != null) epoch.toLong
-    else java.time.LocalDateTime.parse(tsLit.trim.replace(' ', 'T'))
-      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-
   /** Execute a SELECT whose FROM/JOIN items pin store tables to a point
     * in history, in either syntax:
     *   - `<table> VERSION AS OF <v>` (Delta's spelling) — resolves
@@ -602,47 +555,21 @@ object Sql {
     *     resolves through [[TableStore.readAsOf]]: the newest commit at
     *     or before the timestamp, from the commit-marker stamps.
     * Each reference is loud if the version/time was never committed or
-    * has aged out of retention, and registers as a statement-scoped
-    * view, so one statement can join a table's history against itself
-    * (the audit/debug shape: "what changed since 9am"). The rest of the
-    * SELECT is arbitrary Catalyst SQL over corpus views + pinned
-    * versions. `spark.sql` analyzes eagerly, so the scoped views drop
-    * before the DataFrame is returned.
+    * has aged out of retention, and binds on its own, so one statement
+    * can join a table's history against itself (the audit/debug shape:
+    * "what changed since 9am"). The rest of the SELECT is arbitrary
+    * Catalyst SQL ([[select]]).
     *
     * Scale shape: a pinned version is just another parquet directory —
     * scans prune and push down exactly like the head version; nothing
     * is copied to pin, and timestamp resolution is a marker-log walk
     * (bounded by retention), no data I/O. */
   def runTimeTravel(s: SparkSession, store: TableStore, dir: String,
-      sql: String): DataFrame = {
-    require(sql.trim.toUpperCase.startsWith("SELECT"),
-      "time-travel statements are SELECT-only (DML always runs at head)")
-    registerViews(s, dir)
-    val views = scala.collection.mutable.LinkedHashSet[String]()
-    def scoped(name: String, df: => DataFrame): String = {
-      if (!views.contains(name)) {
-        df.createOrReplaceTempView(name)
-        views += name
-      }
-      name
+      sql: String): DataFrame =
+    select(s, store, dir, sql, "time-travel",
+      "`<table> VERSION AS OF <v>` or `<table> FOR SYSTEM_TIME AS OF <ts>`") {
+      case _: RelationTimeTravel =>
     }
-    // SYSTEM_TIME first: its table-name prefix can never match
-    // VersionRef (different keywords), so the rewrites compose.
-    val byTime = SystemTimeRef.replaceAllIn(sql, m => {
-      val t = baseName(m.group(1))
-      val ms = parseTsMillis(m.group(2), m.group(3))
-      scoped(s"${t}__ts$ms", store.readAsOf(t, ms))
-    })
-    val rewritten = VersionRef.replaceAllIn(byTime, m => {
-      val (t, v) = (baseName(m.group(1)), m.group(2).toInt)
-      scoped(s"${t}__v$v", store.readVersion(t, v))
-    })
-    require(views.nonEmpty,
-      "no `<table> VERSION AS OF <v>` or `<table> FOR SYSTEM_TIME AS OF " +
-        "<ts>` reference in the statement")
-    try s.sql(rewritten)
-    finally views.foreach(s.catalog.dropTempView(_))
-  }
 
   /** q64: the time-travel SQL front-end end-to-end — commit v1 (the raw
     * orders), commit v2 through the transactional merge (open orders
@@ -1154,8 +1081,25 @@ object Sql {
 
   private def table(p: LogicalPlan): String = named(p)._1
 
-  /** Where a data statement reads: the store plus — inside BEGIN … COMMIT
-    * — the transaction's uncommitted overlay, which shadows it. */
+  /** Where a statement reads. Every query a statement runs — INSERT …
+    * SELECT, CTAS, CREATE VIEW, EXPORT, MERGE/UPDATE sources, DELETE
+    * subqueries, the SELECT entry points — binds its relations in
+    * [[query]], one walk of Spark's parse ([[mapRelations]]). A name binds
+    * to the first of:
+    *   - the transaction's uncommitted overlay (inside BEGIN … COMMIT),
+    *     which shadows the store — read-your-own-writes;
+    *   - a store table; a trailing `*` is the wildcard union
+    *     ([[TableStore.readWildcard]]);
+    *   - a store logical view: its stored SQL, parsed and bound by this
+    *     same resolver, only when a statement references it — so a broken
+    *     view fails where it is used, and a view cycle is loud;
+    *   - a corpus table, when the statement has a corpus directory;
+    *   - otherwise Catalyst, by the name's last segment (session views).
+    * A name an enclosing WITH defines is always Catalyst's CTE.
+    * `<t> VERSION AS OF <v>` and `<t> FOR SYSTEM_TIME AS OF <ts>` bind to
+    * [[TableStore.readVersion]] / [[TableStore.readAsOf]], and
+    * `table_changes(<t>, <from>, <to>, '<key>')` to
+    * [[TableStore.diffVersions]]. */
   private final class Ctx(s: SparkSession, val store: TableStore,
       dir: Option[String],
       val overlay: scala.collection.mutable.LinkedHashMap[String, DataFrame] =
@@ -1168,20 +1112,137 @@ object Sql {
       store.read(t)
     })
 
-    /** A statement's source relation or subquery: store and overlay
-      * tables bind by name, every other name resolves in Catalyst
-      * (session views, CTEs). */
-    def source(p: LogicalPlan): DataFrame =
-      GraftBridge.ofRows(s, p.transformDownWithSubqueries {
+    /** A statement's query with every relation bound, analyzed. */
+    def query(p: LogicalPlan): DataFrame = GraftBridge.ofRows(s, bind(p, Nil))
+
+    /** A predicate with each subquery's relations bound as in [[query]]. */
+    def bound(e: Expression): Expression = e.transform {
+      case q: SubqueryExpression => q.withNewPlan(bind(q.plan, Nil))
+    }
+
+    /** `views`: the logical views being expanded, innermost first. */
+    private def bind(p: LogicalPlan, views: List[String]): LogicalPlan =
+      mapRelations(p) {
+        case RelationTimeTravel(r: UnresolvedRelation, ts, v) =>
+          val t = nameOf(r.multipartIdentifier)
+          // an integral SYSTEM_TIME literal is epoch millis; a TIMESTAMP
+          // literal is the instant Spark parsed (micros) in the session
+          // zone, UTC in every [[graft.Sessions.local]] session
+          aliased(t, (ts, v) match {
+            case (None, Some(n)) if n.toIntOption.nonEmpty =>
+              store.readVersion(t, n.toInt)
+            case (Some(Literal(ms: Number, IntegerType | LongType)), None) =>
+              store.readAsOf(t, ms.longValue)
+            case (Some(Literal(us: Long, TimestampType)), None) =>
+              store.readAsOf(t, Math.floorDiv(us, 1000L))
+            case _ => throw new IllegalArgumentException(
+              s"time travel on $t: expected VERSION AS OF <integer> or " +
+                "FOR SYSTEM_TIME AS OF TIMESTAMP '<ts>' | <epochMillis>")
+          })
+        case TableChanges(t, from, to, key) =>
+          store.diffVersions(t, from, to, key).queryExecution.analyzed
         case r: UnresolvedRelation =>
           val t = nameOf(r.multipartIdentifier)
-          if (exists(t)) SubqueryAlias(t, read(t).queryExecution.analyzed)
-          else r.copy(multipartIdentifier = Seq(t))
-      })
+          relation(t, views).fold[LogicalPlan](
+            r.copy(multipartIdentifier = Seq(t)))(aliased(t, _))
+      }
 
-    /** A statement's SELECT body, over the statement-scoped views. */
-    def query(p: LogicalPlan): DataFrame =
-      withStatementViews(s, store, dir, overlay)(GraftBridge.ofRows(s, p))
+    private def relation(t: String, views: List[String]): Option[DataFrame] =
+      overlay.get(t)
+        .orElse(Option.when(t.endsWith("*"))(store.readWildcard(t.init)))
+        .orElse(Option.when(store.exists(t))(store.read(t)))
+        .orElse(Option.when(store.isView(t)) {
+          require(!views.contains(t),
+            s"logical view cycle: ${(t :: views).reverse.mkString(" → ")}")
+          GraftBridge.ofRows(s, bind(parse(s, store.viewSql(t)), t :: views))
+        })
+        .orElse(dir.filter(_ => Tables.corpus.contains(t))
+          .map(Tables.load(s, _, t)))
+
+    private def aliased(t: String, df: DataFrame): LogicalPlan =
+      SubqueryAlias(t, df.queryExecution.analyzed)
+  }
+
+  /** `p` with `bind` applied to each relation leaf it reads — in subqueries
+    * and WITH bodies too — except a name an enclosing WITH defines, which
+    * Catalyst binds to its CTE. A leaf `bind` does not match stays as
+    * parsed. */
+  private def mapRelations(p: LogicalPlan)(
+      bind: PartialFunction[LogicalPlan, LogicalPlan]): LogicalPlan = {
+    def walk(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
+      case w: UnresolvedWith =>
+        // each definition sees the names before it (and, under WITH
+        // RECURSIVE, its own); the body sees them all
+        val (defs, scope) = w.cteRelations.foldLeft(
+            (Vector.empty[(String, SubqueryAlias, Option[Int])], ctes)) {
+          case ((done, in), (n, d, depth)) =>
+            val own = if (w.allowRecursion) in + n.toLowerCase else in
+            (done :+ ((n, d.copy(child = walk(d.child, own)), depth)),
+              in + n.toLowerCase)
+        }
+        w.copy(child = walk(w.child, scope), cteRelations = defs)
+      case r: UnresolvedRelation if r.multipartIdentifier.length == 1 &&
+          ctes(r.multipartIdentifier.head.toLowerCase) => r
+      case leaf if bind.isDefinedAt(leaf) => bind(leaf)
+      case other => other.mapChildren(walk(_, ctes)).transformExpressions {
+        case e: SubqueryExpression => e.withNewPlan(walk(e.plan, ctes))
+      }
+    }
+    walk(p, Set.empty)
+  }
+
+  /** The relation leaves a parsed query reads, in walk order. */
+  private def relationLeaves(p: LogicalPlan): Seq[LogicalPlan] = {
+    val out = Seq.newBuilder[LogicalPlan]
+    mapRelations(p) {
+      case l @ (_: UnresolvedRelation | _: RelationTimeTravel |
+          _: UnresolvedTableValuedFunction) => out += l; l
+    }
+    out.result()
+  }
+
+  /** The store names a query's SQL reads — tables, views, time-travel
+    * pins and TABLE_CHANGES bases, never a WITH name: what a logical view
+    * pins ([[TableStore.viewsReferencing]]). */
+  private[graft] def relationsIn(s: SparkSession, sql: String): Set[String] =
+    relationLeaves(parse(s, sql)).collect {
+      case r: UnresolvedRelation => nameOf(r.multipartIdentifier)
+      case RelationTimeTravel(r: UnresolvedRelation, _, _) =>
+        nameOf(r.multipartIdentifier)
+      case TableChanges(t, _, _, _) => t
+    }.toSet
+
+  /** `table_changes(<t>, <from>, <to>, '<key>')`, its arguments literals
+    * (loud otherwise). */
+  private object TableChanges {
+    def unapply(p: LogicalPlan): Option[(String, Int, Int, String)] = p match {
+      case f: UnresolvedTableValuedFunction
+          if f.name.last.equalsIgnoreCase("table_changes") =>
+        f.functionArgs match {
+          case Seq(t: UnresolvedAttribute, Literal(from: Int, IntegerType),
+              Literal(to: Int, IntegerType), Literal(key, StringType)) =>
+            Some((nameOf(t.nameParts), from, to, key.toString))
+          case args => throw new IllegalArgumentException(
+            s"TABLE_CHANGES(${args.map(_.sql).mkString(", ")}): expected " +
+              "(<table>, <from version>, <to version>, '<key>') as literals")
+        }
+      case _ => None
+    }
+  }
+
+  /** The SELECT entry points: one SELECT over the corpus and the store,
+    * bound by [[Ctx.query]]. `kind` names the caller's verb, which must be
+    * a query (never DML or DDL) holding at least one reference `ref`
+    * matches. */
+  private def select(s: SparkSession, store: TableStore, dir: String,
+      sql: String, kind: String, refName: String)(
+      ref: PartialFunction[LogicalPlan, Unit]): DataFrame = {
+    val plan = parse(s, sql)
+    require(!plan.isInstanceOf[Command] && !plan.isInstanceOf[ParsedStatement],
+      s"$kind statements are SELECT-only")
+    require(relationLeaves(plan).exists(ref.isDefinedAt),
+      s"no $refName reference in the statement")
+    new Ctx(s, store, Some(dir)).query(plan)
   }
 
   /** What a data statement does to its target: committed as one store
@@ -1310,7 +1371,7 @@ object Sql {
         "WHEN NOT MATCHED BY SOURCE supports THEN DELETE only")
     }
     val c = GraftBridge.column _
-    val src = ctx.source(srcPlan)
+    val src = ctx.query(srcPlan)
     // marker names live outside any real column namespace; a column that
     // matches a marker is refused loudly rather than clobbered
     val (tMark, sMark) = ("__graft_pres_t", "__graft_pres_s")
@@ -1417,7 +1478,7 @@ object Sql {
             k.nameParts.head.equalsIgnoreCase(alias),
           s"WHERE column '${k.name}' must belong to target alias '$alias'")
         val key = unqualified(k.nameParts).mkString(".")
-        val tomb = ctx.source(q.plan)
+        val tomb = ctx.query(q.plan)
         require(tomb.columns.length == 1,
           s"DELETE … IN: the subquery must select one column, got " +
             tomb.columns.mkString(", "))
@@ -1428,7 +1489,7 @@ object Sql {
         Rewrite(t, cur =>
           cur.join(broadcast(keys), cur(key) === col("__d_key"), "left_anti"))
       case _ =>
-        DeleteWhere(t, GraftBridge.column(cond.transform {
+        DeleteWhere(t, GraftBridge.column(ctx.bound(cond).transform {
           case a: UnresolvedAttribute => UnresolvedAttribute(unqualified(a.nameParts))
         }))
     }
@@ -1531,8 +1592,8 @@ object Sql {
       case v: CreateView
           if v.userSpecifiedColumns.isEmpty && v.originalText.nonEmpty =>
         val name = table(v.child)
-        // analyzed now, under the statement-scoped catalog, so a broken
-        // view fails its CREATE, not some later reader
+        // bound and analyzed now, so a broken view fails its CREATE, not
+        // some later reader
         ctx.query(v.query).schema
         store.createView(name, v.originalText.get, orReplace = v.replace)
         Done(name)
@@ -1690,44 +1751,26 @@ object Sql {
       |FROM orders WHERE o_orderstatus <> 'O' AND o_orderkey % 7 = 0
       |ORDER BY o_orderkey, status""".stripMargin
 
-  /** A wildcard table reference — BigQuery requires the backticks:
-    * `` `proj.ds.orders_*` ``. The captured group excludes the `*`. */
-  private val WildcardRef = """`([\w.-]+)\*`""".r
-
-  /** Execute a SELECT whose FROM items use BigQuery wildcard tables:
-    * every `` `prefix*` `` reference becomes a statement-scoped view over
-    * [[TableStore.readWildcard]] — the union of all matching store
-    * tables, each branch carrying its `_TABLE_SUFFIX` literal. The rest
-    * of the statement is arbitrary Catalyst SQL over corpus views + the
-    * wildcard views; `_TABLE_SUFFIX` predicates in the WHERE clause
-    * constant-fold per branch, so non-matching shards' scans are PRUNED
-    * from the plan by the optimizer (see readWildcard's contract — q84
-    * asserts it on the optimized plan).
+  /** Execute a SELECT whose FROM items use BigQuery wildcard tables
+    * (BigQuery requires the backticks: `` `proj.ds.orders_*` ``): every
+    * `` `prefix*` `` reference binds to [[TableStore.readWildcard]] — the
+    * union of all matching store tables, each branch carrying its
+    * `_TABLE_SUFFIX` literal. The rest of the statement is arbitrary
+    * Catalyst SQL ([[select]]); `_TABLE_SUFFIX` predicates in the WHERE
+    * clause constant-fold per branch, so non-matching shards' scans are
+    * PRUNED from the plan by the optimizer (see readWildcard's contract —
+    * q84 asserts it on the optimized plan).
     *
     * Scale shape: shard elimination happens at plan time; the surviving
     * branches scan like any parquet table (pushdown, pruning intact).
     * The union is by name with null-fill, so a schema-drifted shard
     * cannot silently misalign columns. */
   def runWildcard(s: SparkSession, store: TableStore, dir: String,
-      sql: String): DataFrame = {
-    require(sql.trim.toUpperCase.startsWith("SELECT"),
-      "wildcard-table statements are SELECT-only")
-    registerViews(s, dir)
-    val views = scala.collection.mutable.LinkedHashSet[String]()
-    val rewritten = WildcardRef.replaceAllIn(sql, m => {
-      val prefix = baseName(m.group(1))
-      val v = s"${prefix}_wild_"
-      if (!views.contains(v)) {
-        store.readWildcard(prefix).createOrReplaceTempView(v)
-        views += v
-      }
-      v
-    })
-    require(views.nonEmpty,
-      "no wildcard `<prefix>*` table reference in the statement")
-    try s.sql(rewritten)
-    finally views.foreach(s.catalog.dropTempView(_))
-  }
+      sql: String): DataFrame =
+    select(s, store, dir, sql, "wildcard-table",
+      "wildcard `<prefix>*` table") {
+      case r: UnresolvedRelation if r.multipartIdentifier.last.endsWith("*") =>
+    }
 
   /** q84: wildcard tables end-to-end — the orders table sharded by year
     * into `orders_<yyyy>` store tables (the BigQuery date-shard layout
@@ -1797,8 +1840,8 @@ object Sql {
     """\s*format\s*=\s*'(\w+)'\s*\)\s*AS\s*(SELECT\b.+?)\s*;?\s*""").r
 
   /** Execute `EXPORT DATA OPTIONS(uri='…', format='PARQUET'|'CSV'|'JSON')
-    * AS SELECT …` — BigQuery's bulk-export statement: the SELECT runs
-    * over corpus views + statement-scoped store views and its result
+    * AS SELECT …` — BigQuery's bulk-export statement: the SELECT binds
+    * corpus and store tables through [[Ctx.query]] and its result
     * lands as files at the uri (a BigQuery-style wildcard tail — slash,
     * star, extension — names the directory). The write is the plan's LAST stage — one
     * distributed pass, files written per partition in parallel, no
@@ -1810,15 +1853,14 @@ object Sql {
     case ExportStmt(uri, fmt, select) =>
       val path = uri.replaceFirst("/\\*[^/]*$", "")
       val f = fmt.toUpperCase
-      withStatementViews(s, store, Option(dir)) {
-        val w = s.sql(select).write.mode("overwrite")
-        f match {
-          case "PARQUET" => w.parquet(path)
-          case "CSV" => w.option("header", "true").csv(path)
-          case "JSON" => w.json(path)
-          case other => throw new IllegalArgumentException(
-            s"EXPORT DATA format '$other' unsupported: PARQUET, CSV, JSON")
-        }
+      val w = new Ctx(s, store, Option(dir)).query(parse(s, select))
+        .write.mode("overwrite")
+      f match {
+        case "PARQUET" => w.parquet(path)
+        case "CSV" => w.option("header", "true").csv(path)
+        case "JSON" => w.json(path)
+        case other => throw new IllegalArgumentException(
+          s"EXPORT DATA format '$other' unsupported: PARQUET, CSV, JSON")
       }
       path
     case _ => throw new IllegalArgumentException(
@@ -1950,46 +1992,25 @@ object Sql {
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(30,2))) AS DOUBLE) AS total
       |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
-  private val TableChangesRef = (
-    """(?i)TABLE_CHANGES\s*\(\s*`?([\w.-]+)`?\s*,\s*(\d+)\s*,\s*(\d+)""" +
-    """\s*,\s*'(\w+)'\s*\)""").r
-
   /** Execute a SELECT over `TABLE_CHANGES(<t>, <fromV>, <toV>, '<key>')`
     * references — the change-data-feed table function (Delta's
     * table_changes, keyed like [[TableStore.diffVersions]] because the
     * store's row identity is the caller's key, not a hidden rowid). Each
-    * reference becomes a statement-scoped view of the version diff:
-    * (key, change ∈ added|removed|changed, before, after) with the
-    * non-key columns packed as two structs, so `before.col` / `after.col`
-    * work in the surrounding SQL. Audit queries compose from there —
+    * reference binds to the version diff: (key, change ∈
+    * added|removed|changed, before, after) with the non-key columns
+    * packed as two structs, so `before.col` / `after.col` work in the
+    * surrounding SQL ([[select]]). Audit queries compose from there —
     * "what did the nightly commit actually do", grouped, joined, summed.
     *
     * Scale shape: the diff is ONE full-outer join on the key between two
     * retained snapshots (null-safe struct compare drops unchanged rows);
     * both sides scan like any parquet version directory. */
   def runTableChanges(s: SparkSession, store: TableStore, dir: String,
-      sql: String): DataFrame = {
-    require(sql.trim.toUpperCase.startsWith("SELECT"),
-      "TABLE_CHANGES statements are SELECT-only")
-    registerViews(s, dir)
-    val views = scala.collection.mutable.LinkedHashSet[String]()
-    val rewritten = TableChangesRef.replaceAllIn(sql, m => {
-      val (t, from, to, key) =
-        (baseName(m.group(1)), m.group(2).toInt, m.group(3).toInt,
-          m.group(4))
-      val v = s"${t}__chg${from}_$to"
-      if (!views.contains(v)) {
-        store.diffVersions(t, from, to, key).createOrReplaceTempView(v)
-        views += v
-      }
-      v
-    })
-    require(views.nonEmpty,
-      "no TABLE_CHANGES(<t>, <from>, <to>, '<key>') reference in the " +
-        "statement")
-    try s.sql(rewritten)
-    finally views.foreach(s.catalog.dropTempView(_))
-  }
+      sql: String): DataFrame =
+    select(s, store, dir, sql, "TABLE_CHANGES",
+      "TABLE_CHANGES(<t>, <from>, <to>, '<key>')") {
+      case TableChanges(_, _, _, _) =>
+    }
 
   /** q89: the change data feed end-to-end — commit v1 (raw orders), then
     * ONE transactional rewrite that updates (doubles open orders'
@@ -2224,8 +2245,8 @@ object Sql {
     * the view is created, and a rollup built through the view must see
     * the inserted rows — the stored definition re-planned against
     * current state, not a snapshot. Parse → validate-at-create →
-    * statement-scoped resolution (corpus views, store tables, then
-    * logical views in creation order) → read-back, all hash-gated.
+    * resolution of the view's stored SQL where a statement references it
+    * → read-back, all hash-gated.
     *
     * Scale shape: a view is one sidecar file and zero storage; the read
     * pays the full underlying plan — the explicitly-priced trade against

@@ -159,7 +159,7 @@ object HttpPsnClient {
     * 0.75 s of backoff in all, longer than the single 10 s attempt it
     * replaced; the trade is that an endpoint slower than 5 s on every
     * attempt now fails. The real endpoints' latency is not measured here
-    * (ROADMAP item 2). */
+    * (ROADMAP item 3). */
   private val RequestTimeout = java.time.Duration.ofSeconds(5)
 
   /** Attempts per request, and the first retry's wait (doubling after). */

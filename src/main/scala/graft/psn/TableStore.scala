@@ -477,61 +477,16 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   private def viewDefPath(name: String): Path =
     dir(name).resolve("_viewdef")
-  private def viewSeqPath(name: String): Path =
-    dir(name).resolve("_viewseq")
 
   def isView(name: String): Boolean = Files.exists(viewDefPath(name))
-
-  /** Monotone creation sequence of a view — the registration-order key.
-    * Allocated once at first CREATE (before the def is published) and
-    * PRESERVED across OR REPLACE, so replacing a view a later view depends
-    * on can never reorder it past its dependents (sidecar mtime would: the
-    * rewrite bumps it). */
-  private def viewSeq(name: String): Long =
-    Files.readString(viewSeqPath(name)).trim.toLong
-
-  /** Allocate a fresh, never-published `_viewseq` number — safe under
-    * CONCURRENT allocators, same-JVM or across processes sharing the
-    * warehouse. Each candidate is claimed by atomically creating a
-    * sentinel named for it under `_viewseq_claims/`; `Files.createFile`
-    * fails if any other allocator already owns the number, and the
-    * loser retries with the next. Claim files are permanent allocation
-    * records (one empty file per view ever created), so a crash between
-    * claim and sidecar publish can never lead to a reused value — the
-    * read-max-then-write race the bare scan had is closed by the claim,
-    * the JVM lock just keeps same-process allocators from spinning. */
-  private val viewSeqLock = new Object
-  private def claimViewSeq(): Long = viewSeqLock.synchronized {
-    val claims = Paths.get(warehouse).resolve("_viewseq_claims")
-    Files.createDirectories(claims)
-    val claimed = list(claims).flatMap(p =>
-      scala.util.Try(p.getFileName.toString.toLong).toOption)
-    var next = ((allViewSeqs() ++ claimed) :+ 0L).max + 1L
-    var won = false
-    while (!won) {
-      try { Files.createFile(claims.resolve(next.toString)); won = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => next += 1L
-      }
-    }
-    next
-  }
-
-  /** Every allocated sequence value on disk — INCLUDING orphans whose
-    * `_viewdef` never landed (crash between the sidecar writes): the
-    * allocator must never hand out a number an orphan already holds. */
-  private def allViewSeqs(): Seq[Long] =
-    list(Paths.get(warehouse)).map(_.resolve("_viewseq"))
-      .filter(Files.exists(_))
-      .map(p => Files.readString(p).trim.toLong)
 
   /** CREATE VIEW — a LOGICAL view: the stored artifact is the SQL text
     * itself (BigQuery's standard view), re-planned against the CURRENT
     * state of whatever it references at every query. No rows are
     * materialized — freshness is free and storage is one sidecar file;
     * the trade against [[createMaterializedView]] is paying the full
-    * plan per read. The definition is validated by the CALLER (planning
-    * needs the statement-scoped catalog); this just claims the name. */
+    * plan per read. The definition is validated by the CALLER (binding
+    * needs [[graft.ops.Sql]]'s resolver); this just claims the name. */
   def createView(name: String, sql: String, orReplace: Boolean = false): Unit = {
     require(sql.trim.nonEmpty, "CREATE VIEW: empty definition")
     require(!exists(name) && !isMaterializedView(name),
@@ -540,19 +495,6 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(orReplace || !isView(name),
       s"CREATE VIEW $name: view exists (use CREATE OR REPLACE VIEW)")
     Files.createDirectories(dir(name))
-    // allocate the creation-order sequence BEFORE publishing the def (a
-    // view must never be visible without its order key); OR REPLACE
-    // keeps the original — replacement must not reorder registration.
-    // The max scans EVERY _viewseq sidecar, including orphans from a
-    // crash between the two writes — otherwise the next allocation
-    // would reuse the orphan's number and two views could share one.
-    if (!Files.exists(viewSeqPath(name))) {
-      val next = claimViewSeq()
-      val seqStaged = dir(name).resolve(s"_viewseq.staged.${System.nanoTime}")
-      Files.writeString(seqStaged, next.toString)
-      Files.move(seqStaged, viewSeqPath(name), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
     val staged = dir(name).resolve(s"_viewdef.staged.${System.nanoTime}")
     Files.writeString(staged, sql)
     Files.move(staged, viewDefPath(name), StandardCopyOption.ATOMIC_MOVE,
@@ -564,34 +506,19 @@ final class TableStore(private[graft] val spark: SparkSession,
     Files.readString(viewDefPath(name))
   }
 
-  /** View names in CREATION order ([[viewSeq]] — a persisted counter,
-    * NOT sidecar mtime: OR REPLACE rewrites the def and would bump a
-    * replaced view past its dependents, inverting registration order):
-    * registering in this order lets a later view reference an earlier
-    * one, and keeps that true across replacement. */
-  def views(): Seq[String] = namespace().filter(isView).sortBy(viewSeq)
+  /** View names, sorted. A view binds its references when a statement
+    * reads it ([[graft.ops.Sql]]), so no registration order exists to
+    * keep. */
+  def views(): Seq[String] = namespace().filter(isView).sorted
 
-  /** Logical views whose stored SQL references `table` in RELATION
-    * position — the name following a FROM or JOIN keyword, or following
-    * a top-level comma INSIDE a FROM list (`FROM a, b` — the second
-    * relation of a comma join). The comma branch is tempered: it only
-    * fires when an unparenthesized FROM precedes the comma with no
-    * clause keyword (WHERE/GROUP/ORDER/…) in between, so a column named
-    * like the table in a SELECT or ORDER BY list never blocks a
-    * DROP/RENAME. A reference this regex misses (an exotic clause
-    * shape) degrades safely: the view breaks at its next USE — loudly,
-    * via the tolerant-registration contract — never silently. Bounded
-    * by view COUNT — one sidecar read per view. */
-  def viewsReferencing(table: String): Seq[String] = {
-    val q = java.util.regex.Pattern.quote(table)
-    val pat = java.util.regex.Pattern.compile(
-      "\\b(?:FROM|JOIN)\\s+`?" + q + "\\b" +
-        // comma join: FROM <stuff without ; ( ) or a clause keyword> , name
-        "|\\bFROM\\b(?:(?!\\b(?:WHERE|GROUP|ORDER|HAVING|LIMIT|WINDOW|" +
-        "SELECT|UNION|INTERSECT|EXCEPT)\\b)[^;()])*,\\s*`?" + q + "\\b",
-      java.util.regex.Pattern.CASE_INSENSITIVE)
-    views().filter(v => v != table && pat.matcher(viewSql(v)).find())
-  }
+  /** Logical views whose stored SQL reads `table`: the relations in the
+    * parsed definition — FROM and JOIN items, comma joins, subqueries,
+    * time-travel pins and TABLE_CHANGES bases, never a WITH name or a
+    * column. Bounded by view COUNT — one sidecar read and parse per
+    * view. */
+  def viewsReferencing(table: String): Seq[String] =
+    views().filter(v => v != table &&
+      graft.ops.Sql.relationsIn(spark, viewSql(v)).contains(table))
 
   def dropView(name: String): Unit = {
     require(isView(name), s"DROP VIEW $name: no such view")

@@ -62,7 +62,7 @@ class ViewsAndPartitionsSpec extends AnyFunSuite {
     store.createView("v", "SELECT k, x * 2 AS d FROM base")
     assert(store.isView("v") && store.views() == Seq("v"))
     assert(!store.exists("v")) // a view is not a table
-    // views register in creation order: a later view may stack on "v"
+    // a later view may stack on "v"
     store.createView("vv", "SELECT SUM(d) AS s FROM v")
     assert(store.views() == Seq("v", "vv"))
     // CREATE over an existing view needs OR REPLACE; tables refuse the name

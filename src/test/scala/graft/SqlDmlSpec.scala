@@ -508,6 +508,9 @@ class SqlDmlSpec extends AnyFunSuite {
     store.overwrite("tt", Seq((1L, 10L), (2L, 20L)).toDF("k", "v")) // v1
     store.mergeWith("tt")(cur =>
       cur.select(col("k"), (col("v") * 100).as("v"))) // v2
+    def tempViews() = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews()
     val got = Sql.runTimeTravel(spark, store, sf,
       """SELECT cur.k, old.v AS v1, cur.v AS v2
         |FROM tt VERSION AS OF 2 cur
@@ -515,9 +518,8 @@ class SqlDmlSpec extends AnyFunSuite {
       .orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq((1L, 10L, 1000L), (2L, 20L, 2000L)))
-    // the scoped views are gone after the statement
-    assert(!spark.catalog.tableExists("tt__v1") &&
-      !spark.catalog.tableExists("tt__v2"))
+    // no temp view was registered
+    assert(tempViews() == before)
     intercept[IllegalArgumentException] { // never-committed version
       Sql.runTimeTravel(spark, store, sf,
         "SELECT * FROM tt VERSION AS OF 9")
@@ -842,13 +844,10 @@ class SqlDmlSpec extends AnyFunSuite {
       """CREATE VIEW v_lo AS SELECT k, v FROM t0 WHERE v < 100;
         |CREATE VIEW v_lo2 AS SELECT k FROM v_lo;
         |""".stripMargin) == 2)
-    // replacing the BASE view rewrites its sidecar; mtime ordering would
-    // now register v_lo AFTER its dependent v_lo2 and every later
-    // statement would die at registration — the persisted creation
-    // sequence must keep v_lo first
+    // replacing the BASE view rewrites its sidecar; its dependent v_lo2
+    // must still resolve, through the replaced definition
     Sql.runCtas(spark, store, sf,
       "CREATE OR REPLACE VIEW v_lo AS SELECT k, v FROM t0 WHERE v < 1000")
-    assert(store.views() == Seq("v_lo", "v_lo2"))
     val name = Sql.runCtas(spark, store, sf,
       "CREATE TABLE out AS SELECT COUNT(*) AS n FROM v_lo2")
     assert(store.read(name).collect().head.getLong(0) == 2L)
@@ -976,25 +975,5 @@ class SqlDmlSpec extends AnyFunSuite {
     assert(store.read("rc").count() == 3)
     intercept[IllegalArgumentException](
       store.append("rc", Seq((4L, 9L)).toDF("k", "v")))
-  }
-
-  test("concurrent CREATE VIEW allocates distinct _viewseq values (createFile claims)") {
-    import spark.implicits._
-    val store = freshStore()
-    store.overwrite("seqbase", Seq((1L, 2L)).toDF("k", "v"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val futs = (0 until 16).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit =
-            store.createView(s"cv_$i", "SELECT k FROM seqbase")
-        })
-      }
-      futs.foreach(_.get())
-    } finally pool.shutdown()
-    // registration order must be a strict total order: 16 distinct views
-    // in a deterministic sequence, no duplicate keys
-    val ordered = store.views().filter(_.startsWith("cv_"))
-    assert(ordered.length == 16 && ordered.distinct.length == 16)
   }
 }
