@@ -8,8 +8,10 @@ import org.apache.spark.sql.functions._
   * IN/NOT IN, matching pandas isin behavior on null keys (SURVEY §7.4).
   *
   * Scale notes: all three stages key on `id` — at 100 TB the stored game
-  * table is bucketed on id so these joins co-locate without a shuffle; the
-  * current-ingest side is small (one API page per user) and broadcasts.
+  * table is bucketed on id so these joins co-locate without a shuffle. At
+  * one user's scale [[classify]] executes as `BroadcastHashJoin LeftOuter
+  * BuildRight`: a left outer join can only build its right side, so the
+  * broadcast is the stored table, not the (smaller) current ingest.
   */
 object Ops {
 

@@ -1397,14 +1397,29 @@ final class TableStore(private[graft] val spark: SparkSession,
     * claim and re-applies `f` on the new contents (up to `maxRetries`),
     * so a racing writer's merge is never silently overwritten — no
     * lost-update anomaly, no residual both-validate-then-both-rename
-    * window. */
+    * window.
+    *
+    * `publishGate` is work that must finish before this commit becomes
+    * visible — DailyRun's fact append, which precedes its `game` commit.
+    * It starts on its own thread once the base is pinned, runs beside the
+    * first staging write (which stays on the caller's thread), and is
+    * awaited before the CAS. It runs exactly once: a lost race re-stages
+    * but does not re-run it. When it throws, nothing is published, its
+    * exception propagates, and the staged claim is an orphan for a later
+    * GC; a staging failure propagates only after the gate has finished. */
   def mergeWith(table: String, maxRetries: Int = 5,
-      txnTag: Option[String] = None)(
+      txnTag: Option[String] = None, publishGate: Option[() => Unit] = None)(
       f: DataFrame => DataFrame): Unit = {
     requireNotMv(table, "mergeWith")
     requireNoFeed(table, "mergeWith")
     checkTag(txnTag)
-    transact(table, head(table), txnTag, Reapply(maxRetries)) { (base, claimed) =>
+    var gate = Option.empty[java.util.concurrent.FutureTask[Unit]]
+    try transact(table, head(table), txnTag, Reapply(maxRetries)) { (base, claimed) =>
+      if (gate.isEmpty) gate = publishGate.map { g =>
+        val task = new java.util.concurrent.FutureTask[Unit](() => g())
+        new Thread(task, s"publish-gate-$table").start()
+        task
+      }
       // Pin the scan to the base version's directory (not resolve(), which
       // could drift to a concurrent commit mid-transaction): the CAS is
       // only meaningful if f consumed exactly the state it names.
@@ -1414,13 +1429,17 @@ final class TableStore(private[graft] val spark: SparkSession,
       // directory is the natural materialization target.
       enforced(table, next).write.mode(SaveMode.Append)
         .parquet(claimed.toString)
+      gate.foreach { t =>
+        try t.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
       // A full rewrite lands f's OUTPUT schema in every file, so that is
       // the declaration to carry forward — f may have CHANGED it
       // (renameColumn routes here); copying the base's sidecar would
       // silently project the new files back to the old names,
       // null-filling the renamed column.
       Staged(Replaced(next.schema), seed = Some(next.schema))
-    }
+    } finally gate.foreach(t => scala.util.Try(t.get()))
   }
 
   /** Partition-pruned transactional rewrite — K4 at fact-table scale. A

@@ -242,6 +242,46 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(lastTag(store, "t") == Some("race:1"))
   }
 
+  test("mergeWith's publish gate runs beside staging; when it throws, nothing publishes") {
+    val wh = Files.createTempDirectory("graft_commit_gate")
+    val store = new TableStore(spark, wh.toString)
+    store.overwrite("t", rows(1, 2))
+    val (head0, seqs0) = (store.versions("t").max, markerSeqs(wh, "t"))
+    val staging = CommitGates("cp-gate-stage")
+    val e = intercept[IllegalStateException] {
+      store.mergeWith("t", publishGate = Some { () =>
+        // the staging write is mid-flight while the gate runs
+        if (!staging.reached.await(120, TimeUnit.SECONDS))
+          throw new AssertionError("the gate did not overlap the staging write")
+        staging.open.countDown()
+        throw new IllegalStateException("fact append failed")
+      })(_.unionByName(CommitGates.frame(100, "cp-gate-stage")))
+    }
+    assert(e.getMessage == "fact append failed")
+    assert(store.versions("t").max == head0 && markerSeqs(wh, "t") == seqs0)
+    assert(ids(store, "t") == Set(1L, 2L))
+  }
+
+  test("a publish gate that commits to the same table forces one lost race; " +
+    "the re-stage does not re-run the gate") {
+    val wh = Files.createTempDirectory("graft_commit_gate_race")
+    val store = new TableStore(spark, wh.toString)
+    store.overwrite("t", rows(1, 2))
+    val gateRuns = new AtomicInteger(0)
+    var calls = 0
+    store.mergeWith("t", publishGate = Some { () =>
+      gateRuns.incrementAndGet()
+      store.mergeWith("t")(_.unionByName(rows(100)))
+    }) { cur =>
+      calls += 1
+      cur.unionByName(rows(200))
+    }
+    assert(calls == 2, "exactly one lost race: the transform re-applies once")
+    assert(gateRuns.get == 1, "the gate runs once")
+    assert(ids(store, "t") == Set(1L, 2L, 100L, 200L))
+    assert(markerSeqs(wh, "t").max == 3)
+  }
+
   test("mergePartitionedWith re-applies its transform on the head that beat it") {
     val wh = Files.createTempDirectory("graft_commit_prace")
     val store = new TableStore(spark, wh.toString)

@@ -126,11 +126,14 @@ class HttpPsnClientSpec extends AnyFunSuite {
     server.createContext("/profile", (_: HttpExchange) => release.await())
     server.start()
     try {
+      // a short per-attempt bound: 3 attempts and their backoff take ~1 s
       val client = new HttpPsnClient(
-        s"http://127.0.0.1:${server.getAddress.getPort}", "tok")
+        s"http://127.0.0.1:${server.getAddress.getPort}", "tok",
+        java.net.http.HttpClient.newHttpClient(), 50,
+        java.time.Duration.ofMillis(100))
       val t0 = System.nanoTime
       val outcome = Future(scala.util.Try(client.profileTrophies()))
-      // well above the client's request timeout: a client without one
+      // well above the client's total wait: a client without a timeout
       // fails here instead of hanging the suite
       val bound = 30.seconds
       val failure = Await.result(outcome, bound).failed.get

@@ -150,12 +150,14 @@ class PsnPipelineSpec extends AnyFunSuite {
     assert(listing(wh, "game") == g && listing(wh, "time_play") == tp)
 
     // a steady-state changed day: trophy append, the classification
-    // count, the fact append and the game commit — at most 4 actions
+    // collect, the fact append and the game commit — at most 4 actions
+    // and 6 jobs
     val day4 = next(day3, Map("CUSA_00001" -> 50L))
     var got = (0L, 0L)
     val c = SparkCounts.of(spark) { got = DailyRun.run(spark, day4, store) }
     assert(got == ((0L, 1L)))
     assert(c.executions <= 4, s"steady-state day ran ${c.executions} actions")
+    assert(c.jobs <= 6, s"steady-state day ran ${c.jobs} jobs")
     assert(store.read("game").filter(col("title_id") === "CUSA00001")
       .head.getAs[Long]("play_count") == 50)
   }
