@@ -343,7 +343,7 @@ object SimilarityOps {
     // aggregates run in place — zero exchanges where the uncached chain
     // paid one per pass. Lazy persist: the first round's single
     // broadcast (c0) materializes it, no concurrent-consumer race.
-    val trained = localizedCached(s, "ivf", dir, {
+    val trained = Artifacts.model(s, "ivf", dir) {
       val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))
         .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
         .persist()
@@ -355,7 +355,7 @@ object SimilarityOps {
       // so consumers plan against literal rows, not the Lloyd lineage.
       cents = recompute(assignOver(e, cents)).persist()
       recompute(assignOver(e, cents))
-    })
+    }
     // The assignment is recomputed per query — a production index PROBE:
     // one broadcast of the codebook against the partitioned vector scan,
     // argmin aggregating in place. Only the training rounds are shared.
@@ -821,7 +821,7 @@ object SimilarityOps {
   }
 
   /** The trained codebook alone (memoized LocalRelation — K×M rows,
-    * [[localizedCached]]): the once-per-corpus artifact (M×K rows of K
+    * [[Artifacts.model]]): the once-per-corpus artifact (M×K rows of K
     * floats on the driver — the Spark ML KMeansModel shape,
     * driver-resident by design at any corpus size). Training runs one
     * scan+explode cached PRE-PARTITIONED on vec_id so every assign
@@ -833,7 +833,7 @@ object SimilarityOps {
     * re-planning the Lloyd lineage (JobProbe showed the lineage-walking
     * AQE stage-jobs, not compute, dominate). */
   private[ext] def pqCodebook(s: SparkSession, dir: String): DataFrame =
-    localizedCached(s, "pq", dir, {
+    Artifacts.model(s, "pq", dir) {
       val subs = pqSubvectors(s, dir)
         .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
         .persist()
@@ -842,13 +842,13 @@ object SimilarityOps {
         .withColumn("cn", norm2(col("cvec")))
       cents = pqRecompute(pqAssignOver(subs, cents)).persist()
       pqRecompute(pqAssignOver(subs, cents))
-    })
+    }
 
   /** Encode-pass plan counter — the PqArtifactSpec witness that the
     * stored-code consumers (e12/e13/e14/e33) never re-derive the
     * assignment stream once the artifact exists. Counts PLANS of the
     * full-corpus encode (the expensive pass); training Lloyd rounds are
-    * already behind the [[localizedCached]] memo. */
+    * already behind the [[Artifacts.model]] memo. */
   private[graft] val pqEncodePlans =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -865,54 +865,12 @@ object SimilarityOps {
     Artifacts.materialized(s, "pq_codes", dir)(
       pqModel(s, dir)._1.select(col("vec_id"), col("m"), col("cid")))
 
-  /** Materialize a small model DataFrame to the driver and return it as a
-    * LocalRelation with the same schema and rows — consumers' plans stop
-    * at literal data instead of the training lineage. Only for
-    * codebook-sized results (K×M rows). */
-  private def localized(s: SparkSession, model: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(model.collect().toSeq.asJava, model.schema)
-  }
-
-  /** Driver-side memo behind [[localizedCached]]: keyed by
-    * (artifact, source dir), holding collected rows + schema. Bounded by
-    * construction — only codebook/fixture-sized results go through it
-    * (16×64 floats, 8×16×8 floats, 50 id pairs). */
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType)]()
-
-  /** Drop the driver-side model memo — with [[Artifacts.dropMemoForTest]]
-    * this simulates a COLD JVM against a warm artifact store. */
-  private[graft] def dropModelMemoForTest(): Unit = modelCache.clear()
-
-  /** [[localized]] with a per-(artifact, source dir) memo, DURABLY
-    * backed by the artifact store. A trained codebook or eval fixture is
-    * an ARTIFACT: built once per corpus, probed by every query —
-    * recomputing it inside each query billed the index BUILD to every
-    * SEARCH (e07 re-trained e06's IVF; e13/e14 re-trained PQ and re-ran
-    * e02's brute force). The driver memo survives the catalog cache
-    * clears Bench isolates queries with; the store commit behind it
-    * ([[Artifacts.materialized]], round 15) makes the model survive the
-    * JVM — a cold process loads K×M committed rows instead of re-running
-    * Lloyd rounds over the corpus. */
-  private def localizedCached(
-      s: SparkSession, name: String, dir: String,
-      build: => DataFrame): DataFrame = {
-    val (rows, schema) = modelCache.computeIfAbsent(s"$name:$dir", _ => {
-      val df = Artifacts.materialized(s, s"model_$name", dir)(build)
-      (df.collect(), df.schema)
-    })
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.toSeq.asJava, schema)
-  }
-
   /** Exact-top-k eval fixture (the e02 answer, ids only), computed once
     * per corpus and shared by every recall gate (e07/e13/e14). At scale
     * ground truth IS a precomputed eval table — an inline brute-force
     * pass per ANN query would dwarf the query being evaluated. */
   private[ext] def groundTruthTopK(s: SparkSession, dir: String): DataFrame =
-    localizedCached(s, "gt", dir,
+    Artifacts.model(s, "gt", dir)(
       e02CosineTopK(s, dir).select(col("qid"), col("cid")))
 
   /** The shared CTE chain for the PQ oracle (subspace split → seeds → two
@@ -1623,7 +1581,7 @@ object SimilarityOps {
     * projection of the artifact, never a re-assignment of the base. */
   def e37IvfIncremental(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.Out._
-    val frozen = localizedCached(s, "ivf_base2", dir, {
+    val frozen = Artifacts.model(s, "ivf_base2", dir) {
       val base = embeddings(s, dir)
         .select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 5 =!= 0)
@@ -1642,7 +1600,7 @@ object SimilarityOps {
       fin.join(occ, Seq("cid"), "left")
         .select(col("cid"), col("cvec"), col("cn"),
           coalesce(col("n_base"), lit(0L)).as("n_base"))
-    })
+    }
     val cents = frozen.select(col("cid"), col("cvec"), col("cn"))
     val baseCounts = frozen.select(col("cid"), col("n_base"))
     val e = embeddings(s, dir).select(col("vec_id"), col("embedding"))

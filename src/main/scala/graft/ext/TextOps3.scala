@@ -816,16 +816,6 @@ object TextOps3 {
 
   private val VocabK = 10
 
-  /** Per-corpus (vocabulary, round-bound) driver memo for t45. Keyed by
-    * corpus dir under the same identical-rebuild assumption as
-    * [[graft.ext.Artifacts.materialized]]: a path names one immutable
-    * corpus for the life of the JVM, so regenerating different data at
-    * the same path within one process would silently reuse a stale
-    * vocabulary — rebuild into a fresh dir (as the replica tooling does)
-    * or restart the JVM. */
-  private val wpModel =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[String], Int)]()
-
   /** t45: greedy longest-prefix tokenization — the WordPiece/BPE-apply
     * decomposition, DataFrame-native: a corpus-derived vocabulary (top-K
     * words by frequency, deterministic tiebreak) tokenizes every word by
@@ -857,18 +847,16 @@ object TextOps3 {
     // fuses into one narrow map over distinct words, no joins, no
     // per-round actions (measured: 5.6 s as a join-per-round loop with
     // fixpoint counts → the fused form below).
-    // Trained once per corpus (driver memo — the localizedCached
-    // discipline of the ANN codebooks): the top-K vocabulary and the
-    // round bound are pure corpus functions, KB-sized on the driver.
-    val (vocabWords, maxLen) = wpModel.computeIfAbsent(dir, _ => {
-      val v = inst.groupBy(col("word")).agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("word")).limit(VocabK)
-        .select(col("word")).collect().map(_.getString(0))
-      // Each round consumes >= 1 char, so max word length bounds the loop.
-      val m = inst.select(col("word")).distinct()
-        .agg(max(length(col("word"))).as("m")).first().getInt(0)
-      (v, m)
-    })
+    // Trained once per corpus: the top-K vocabulary is a pure corpus
+    // function, KB-sized on the driver, committed as a model artifact
+    // (rank, word) and decoded in rank order.
+    val vocabWords = Artifacts.modelRows(s, "wp_vocab", dir) {
+      val byFreq = Seq(col("c").desc, col("word"))
+      inst.groupBy(col("word")).agg(count(lit(1)).as("c"))
+        .orderBy(byFreq: _*).limit(VocabK)
+        .select(row_number().over(Window.orderBy(byFreq: _*)).as("rank"),
+          col("word"))
+    }._1.sortBy(_.getInt(0)).map(_.getString(1))
     // APPLY is one narrow projection (round 14): the vocabulary rides as
     // a plan literal into the WpTokenStats kernel — same greedy trie as
     // tokenizeTrie (parity-spec'd), but per DOCUMENT, with a per-task
@@ -876,8 +864,7 @@ object TextOps3 {
     // shipped the corpus token stream through three shuffles to compute
     // per-document facts; this pays zero exchanges before the sort.
     // tokenizePieces stays the seam for vocabulary-scale tokenization
-    // (t46/t47 trainers, the trie/fused equality specs); maxLen only
-    // bounds that fused form.
+    // (t46/t47 trainers, the trie/fused equality specs).
     val st = graft.functions.WpTokenStats
       .wp_token_stats(col("text"), vocabWords.toSeq)
     fanOut(documents(s, dir))
@@ -1166,19 +1153,21 @@ object TextOps3 {
     merges.result()
   }
 
-  /** Per-corpus driver memo of the trained merge list for the APPLY side
-    * (t54) — the wpModel discipline: keyed by corpus dir under the
-    * identical-rebuild assumption documented on [[wpModel]]. t47 itself
-    * always trains live (training is its subject; the apply queries'
-    * subject is the corpus-wide tokenization, so they load the model
-    * once per JVM like any deployed tokenizer). */
-  private val bpeModel = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, String)]]()
-
+  /** The trained merge list for the APPLY side (t54), in training order:
+    * a committed model artifact ([[Artifacts.modelRows]]) of (round,
+    * left, right), decoded by round. t47 itself always trains live
+    * (training is its subject; the apply queries' subject is the
+    * corpus-wide tokenization, so they load the model like any deployed
+    * tokenizer). */
   private[ext] def bpeMerges(
-      s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeModel.computeIfAbsent(dir,
-      _ => trainBpeMerges(s, dir).map(m => (m._2, m._3)))
+      s: SparkSession, dir: String): Seq[(String, String)] = {
+    import s.implicits._
+    Artifacts.modelRows(s, "bpe_merges", dir) {
+      trainBpeMerges(s, dir).map(m => (m._1, m._2, m._3))
+        .toDF("merge_round", "left_sym", "right_sym")
+    }._1.sortBy(_.getLong(0)).map(r => (r.getString(1), r.getString(2)))
+      .toSeq
+  }
 
   /** N chained (non-recursive) CTE stages replaying the exact loop —
     * each stage re-pairs, argmaxes with the same (total DESC, a, b)

@@ -289,9 +289,10 @@ object TextOps4 {
     * `replace` calls stay inside whole-stage codegen — and word
     * instances join the per-word token count back by word (equi-shuffle
     * on the word key), then roll up per language map-side. The model
-    * itself is a driver memo ([[graft.ext.TextOps3.bpeMerges]] — KB-sized
-    * like any deployed tokenizer's merge file). At 100 TB the distinct
-    * vocabulary is millions of rows against trillions of instances: the
+    * itself is a committed model artifact read once per JVM
+    * ([[graft.ext.TextOps3.bpeMerges]] — KB-sized like any deployed
+    * tokenizer's merge file). At 100 TB the distinct vocabulary is
+    * millions of rows against trillions of instances: the
     * corpus pays one scan for (lang, word) counts and one vocabulary-
     * sized tokenization, never a per-instance merge replay. */
   def t54BpeApply(s: SparkSession, dir: String): DataFrame = {
@@ -382,13 +383,6 @@ object TextOps4 {
     conv(substring(graft_md5(concat(lit("dsir:"), tok)), 1, 8), 16, 10)
       .cast("long") % DsirDim
 
-  /** Per-corpus driver memo of the trained DSIR model: the 128 bucket
-    * weights plus the corpus target-share threshold — KB-sized by
-    * construction (the wpModel/codebook discipline; same identical-
-    * rebuild assumption, documented there). */
-  private val dsirModel = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Long], Long)]()
-
   /** t55: importance-resampling data selection in the style of DSIR (Xie
     * et al. 2023, "Data Selection for Language Models via Importance
     * Resampling"): estimate target-domain and raw-corpus unigram
@@ -401,35 +395,32 @@ object TextOps4 {
     *
     * Plan shape: training is ONE corpus scan (explode → 128-row
     * conditional aggregate — map-side combinable into a bounded result),
-    * memoized per corpus as a driver artifact like every other KB-sized
-    * model; the apply is ONE narrow projection — the bucket weights ride
-    * into the plan as a literal array and `aggregate` folds the token
-    * array per document (the t50 shape: no explode, no shuffle before
-    * the output sort). At 100 TB both passes are pure scans. */
+    * committed per corpus as a model artifact like every other KB-sized
+    * model ([[Artifacts.modelRows]]); the apply is ONE narrow projection
+    * — the bucket weights ride into the plan as a literal array and
+    * `aggregate` folds the token array per document (the t50 shape: no
+    * explode, no shuffle before the output sort). At 100 TB both passes
+    * are pure scans. */
   def t55DsirSelect(s: SparkSession, dir: String): DataFrame = {
-    val (weights, sharePpm) = dsirModel.computeIfAbsent(dir, _ => {
-      val counts = documents(s, dir)
+    // The trained model is the 128 (bucket, raw, target) counts, a
+    // committed model artifact; the weights and the share are worked out
+    // here on the driver, bucket by bucket.
+    val counts = Artifacts.modelRows(s, "dsir_counts", dir) {
+      documents(s, dir)
         .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
         .select(dsirBucket(col("tok")).as("b"),
           (col("lang") === "en").cast("long").as("is_t"))
         .groupBy(col("b"))
         .agg(count(lit(1)).as("r"), sum(col("is_t")).as("t"))
-        .collect()
-      val w = new Array[Long](DsirDim)
-      var rTot = 0L
-      var tTot = 0L
-      counts.foreach { row =>
-        val b = row.getLong(0).toInt
-        val r = row.getLong(1)
-        val t = row.getLong(2)
-        w(b) = 1000000L * (t + 1L) / (r + 1L)
-        rTot += r
-        tTot += t
-      }
-      // Empty buckets score the smoothed prior, same as the oracle.
-      (0 until DsirDim).foreach { b => if (w(b) == 0L) w(b) = 1000000L }
-      (w, 1000000L * tTot / rTot)
-    })
+    }._1
+    // Empty buckets score the smoothed prior, same as the oracle.
+    val weights = Array.fill(DsirDim)(1000000L)
+    counts.foreach { row =>
+      weights(row.getLong(0).toInt) =
+        1000000L * (row.getLong(2) + 1L) / (row.getLong(1) + 1L)
+    }
+    val sharePpm =
+      1000000L * counts.map(_.getLong(2)).sum / counts.map(_.getLong(1)).sum
     val toks = split(col("text"), " ")
     documents(s, dir)
       .select(col("doc_id"), col("lang"),

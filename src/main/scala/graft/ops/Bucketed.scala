@@ -1,11 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.expr.Exprs._
 import graft.tables.Tables._
 import graft.ops.Out._
+import graft.psn.TableStore
 
 /** Bucketed co-located join (q50) — the storage-layout half of the shuffle
   * story. Every other join in the registry earns its locality at runtime
@@ -142,50 +143,32 @@ object Bucketed {
 
   // --- q53: z-order layout, multi-dimensional row-group skipping --------
 
-  /** 16-bit Morton interleave of two long columns' low 16 bits — the
-    * space-filling curve behind multi-dimensional clustering (Delta/
-    * Iceberg OPTIMIZE ZORDER). Sorting by z makes every size-2^k-aligned
-    * square of (x, y) space a CONTIGUOUS z range, so a file holding a z
-    * slab has tight min/max statistics on BOTH columns at once — a
-    * single-column sort can only ever serve one predicate dimension.
-    * Pure shift/and/or Column arithmetic: whole-stage-codegen'd, no UDF. */
-  private[graft] def morton16(x: Column, y: Column): Column =
-    (0 until 16).map { i =>
-      shiftleft(shiftright(x, i).bitwiseAND(lit(1L)), 2 * i)
-        .bitwiseOR(
-          shiftleft(shiftright(y, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
-
-  /** Events rewritten z-ordered on (user_id, hour) — range-partitioned
-    * and sorted by the Morton value, then the curve column dropped: the
-    * layout IS the index. Memoized per source dir (pay-at-ingest, the
-    * q50/q51 discipline). At 100 TB this is how a point-ish query on a
-    * fact table touches kilobytes: every file covers a z slab ≈ a small
+  /** Events rewritten along the Z-address of (user_id, ts) — the one
+    * Z-address OPTIMIZE … ZORDER lays tables out with
+    * ([[graft.psn.TableStore.zOrdered]]: equi-depth 4-bit buckets per
+    * column, bit-interleaved, range-partitioned and sorted): the layout
+    * IS the index. Memoized per source dir (pay-at-ingest, the q50/q51
+    * discipline); the first write pays one approx-quantile pass over the
+    * two key columns. At 100 TB this is how a point-ish query on a fact
+    * table touches kilobytes: every file covers a z slab ≈ a small
     * (user, time) rectangle, and parquet row-group stats exclude all
     * others before any IO. */
   private def zEventsPath(s: SparkSession, dir: String): String =
     lockFor("events_zorder").synchronized {
       val path = scratchPath("zorder", "events_zorder", dir)
       if (dir != written.get("events_zorder")) {
-        events(s, dir)
-          .withColumn("z", morton16(
-            col("user_id").bitwiseAND(lit(0xFFFFL)),
-            expr("ts div 3600000000000").bitwiseAND(lit(0xFFFFL))))
-          .repartitionByRange(32, col("z"))
-          .sortWithinPartitions(col("z"))
-          .drop("z")
+        TableStore.zOrdered(events(s, dir), Seq("user_id", "ts"), 32)
           .write.mode("overwrite").parquet(path)
         written.put("events_zorder", dir)
       }
       path
     }
 
-  /** The 2-d box scan off the z layout, pre-aggregation — exposed so
-    * ZOrderSpec can compare scan-level rows-read against a time-sorted
-    * layout for the same box. The answer is layout-independent (the
-    * oracle reads the flat corpus); the layout only changes how little
-    * gets read. */
-  private[graft] def zScan(s: SparkSession, dir: String): DataFrame = {
+  /** The 2-d box scan off the z layout, pre-aggregation. The answer is
+    * layout-independent (the oracle reads the flat corpus); the layout
+    * only changes how little gets read — ClusterZSpec measures that
+    * rows-read gap for the same Z-address against a time-sorted layout. */
+  private def zScan(s: SparkSession, dir: String): DataFrame = {
     def nanos(d: java.time.LocalDate): Long =
       d.toEpochDay * 86400L * 1000000000L
     s.read.parquet(zEventsPath(s, dir))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -53,12 +53,9 @@ object Indexes {
   private def writeDef(store: TableStore, d: IndexDef): Unit = {
     val p = defPath(store, d.name)
     Files.createDirectories(p.getParent)
-    val staged = p.getParent.resolve(s"_idxdef.staged.${System.nanoTime}")
-    Files.writeString(staged,
+    TableStore.writeAtomically(p,
       s"base=${d.base}\nkind=${d.kind}\nkey=${d.key}\n" +
         s"col=${d.column}\nbasev=${d.baseVersion}\nnfiles=${d.baseFiles}\n")
-    Files.move(staged, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   def exists(store: TableStore, iname: String): Boolean =

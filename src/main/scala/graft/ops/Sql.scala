@@ -25,7 +25,7 @@ import graft.tables.Tables
 
 /** SQL entry point. The reference ships SQL text to BigQuery (main.py:153-157
   * reads `game` with a SELECT, main.py:274-284 upserts with UPDATE … FROM);
-  * here SELECTs are `spark.sql` over registered corpus views, and the
+  * here SELECTs bind the corpus tables in Spark's parse ([[run]]), and the
   * statement surface runs against the versioned [[TableStore]].
   *
   * Spark parses; Graft-only verbs keep anchored regexes. Every statement
@@ -46,16 +46,17 @@ import graft.tables.Tables
   * IllegalArgumentException carrying Spark's message or the verb's own.
   */
 object Sql {
-  /** Register every corpus table as a temp view named after the table. */
-  def registerViews(s: SparkSession, dir: String): Unit =
-    Tables.corpus.foreach { n =>
-      Tables.load(s, dir, n).createOrReplaceTempView(n)
-    }
-
-  def run(s: SparkSession, dir: String, query: String): DataFrame = {
-    registerViews(s, dir)
-    s.sql(query)
-  }
+  /** A query over the corpus tables of `dir`: each corpus name it reads
+    * binds to that table's scan in the one walk [[Ctx.query]] uses
+    * ([[mapRelations]]); every other name is Catalyst's. No session view
+    * is registered. */
+  def run(s: SparkSession, dir: String, query: String): DataFrame =
+    GraftBridge.ofRows(s, mapRelations(parse(s, query)) {
+      case r: UnresolvedRelation
+          if Tables.corpus.contains(nameOf(r.multipartIdentifier)) =>
+        val t = nameOf(r.multipartIdentifier)
+        aliased(t, Tables.load(s, dir, t))
+    })
 
   /** The reference's upsert statement (main.py:274-284), BigQuery's
     * UPDATE-FROM:
@@ -1158,10 +1159,10 @@ object Sql {
         })
         .orElse(dir.filter(_ => Tables.corpus.contains(t))
           .map(Tables.load(s, _, t)))
-
-    private def aliased(t: String, df: DataFrame): LogicalPlan =
-      SubqueryAlias(t, df.queryExecution.analyzed)
   }
+
+  private def aliased(t: String, df: DataFrame): LogicalPlan =
+    SubqueryAlias(t, df.queryExecution.analyzed)
 
   /** `p` with `bind` applied to each relation leaf it reads — in subqueries
     * and WITH bodies too — except a name an enclosing WITH defines, which

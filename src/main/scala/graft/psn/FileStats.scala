@@ -425,14 +425,8 @@ object FileStats {
     }.toSeq.sortBy(_.column)
 
   def write(path: Path, stats: Seq[FileStat],
-      bloomSpecs: Seq[BloomSpec] = Nil): Unit = {
-    val staged = path.resolveSibling(
-      path.getFileName.toString + s".staged.${System.nanoTime}")
-    Files.writeString(staged, render(stats, bloomSpecs))
-    Files.move(staged, path,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+      bloomSpecs: Seq[BloomSpec] = Nil): Unit =
+    TableStore.writeAtomically(path, render(stats, bloomSpecs))
 
   def load(path: Path): Map[String, FileStat] =
     if (!Files.exists(path)) Map.empty

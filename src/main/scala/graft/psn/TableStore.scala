@@ -495,10 +495,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(orReplace || !isView(name),
       s"CREATE VIEW $name: view exists (use CREATE OR REPLACE VIEW)")
     Files.createDirectories(dir(name))
-    val staged = dir(name).resolve(s"_viewdef.staged.${System.nanoTime}")
-    Files.writeString(staged, sql)
-    Files.move(staged, viewDefPath(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    writeAtomically(viewDefPath(name), sql)
   }
 
   def viewSql(name: String): String = {
@@ -702,16 +699,12 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** Sidecar format (line-oriented like the marker log): base, keys,
     * aggs (`out:func:in`), pinned base version, then one covered relPath
     * per line. Rewritten atomically on refresh. */
-  private def writeMvDef(mv: String, d: MvDef): Unit = {
-    val staged = dir(mv).resolve(s"_mvdef.staged.${System.nanoTime}")
-    Files.writeString(staged,
+  private def writeMvDef(mv: String, d: MvDef): Unit =
+    writeAtomically(mvDefPath(mv),
       (Seq(d.base, d.keys.mkString("\t"),
         d.aggs.map(a => s"${a.out}:${a.func}:${a.in}").mkString("\t"),
         d.baseVersion.toString) ++ d.covered.toSeq.sorted)
         .mkString("", "\n", "\n"))
-    Files.move(staged, mvDefPath(mv), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
 
   private def readMvDef(mv: String): MvDef = {
     require(isMaterializedView(mv),
@@ -956,7 +949,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       val (v, claimed) = claimNext(table)
       val staged = stage(from, claimed)
       staged.declared match {
-        case Exactly(Some(st)) => Files.writeString(schemaPath(table, v), st.json)
+        case Exactly(Some(st)) => writeAtomically(schemaPath(table, v), st.json)
         case _ => ()
       }
       if (publishClaim(table, from, v, tag, onLost == Rebase, staged)) Some(v)
@@ -1021,12 +1014,8 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** Advisory pointer refresh (staged write + atomic rename): readers go
     * through the marker log; `_current` is the human-readable head hint. */
-  private def commitPointer(table: String, v: Int): Unit = {
-    val staged = dir(table).resolve(s"_current.staged.v$v")
-    Files.writeString(staged, s"v$v")
-    Files.move(staged, pointer(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def commitPointer(table: String, v: Int): Unit =
+    writeAtomically(pointer(table), s"v$v")
 
   /** Sweep versions that have left the retention window. `prev` is the
     * version that was committed BEFORE this commit — the one in-flight
@@ -1747,13 +1736,9 @@ final class TableStore(private[graft] val spark: SparkSession,
       }.toSeq
 
   private def writeConstraints(table: String,
-      cs: Seq[(String, String)]): Unit = {
-    val staged = dir(table).resolve(s"_constraints.staged.${System.nanoTime}")
-    Files.writeString(staged,
+      cs: Seq[(String, String)]): Unit =
+    writeAtomically(constraintsPath(table),
       cs.map { case (n, e) => s"$n\t$e" }.mkString("", "\n", "\n"))
-    Files.move(staged, constraintsPath(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** ADD CONSTRAINT … CHECK: declare a row invariant every future write
     * must satisfy (ANSI semantics: a row violates only when the
@@ -1834,7 +1819,7 @@ final class TableStore(private[graft] val spark: SparkSession,
         case Replaced(written) => written
         case _ => prevSt
       }
-      Files.writeString(schemaPath(table, v), st.json)
+      writeAtomically(schemaPath(table, v), st.json)
     }
   }
 
@@ -2263,51 +2248,21 @@ final class TableStore(private[graft] val spark: SparkSession,
     }.isDefined
 
   /** ZORDER (OPTIMIZE … ZORDER BY): transactional rewrite of the table
-    * along a Morton curve over SEVERAL columns, so [[readWhere]] prunes
-    * files on a predicate over ANY of them — the multi-dimensional
-    * counterpart of [[cluster]], whose single-column range layout makes
-    * every other column's file ranges near-useless. Each column maps to a
-    * 4-bit bucket via its own approx-quantile boundaries (equi-DEPTH, so
-    * skewed distributions still spread across buckets; NULLs land in
-    * bucket 0), the bucket bits interleave into the Z-address, and the
-    * table range-partitions + sorts on it: files cover small hyper-
-    * rectangles of the key space, i.e. TIGHT footer min/max on every
-    * participating column at once.
+    * along the Z-address of SEVERAL columns ([[TableStore.zOrdered]]), so
+    * [[readWhere]] prunes files on a predicate over ANY of them — the
+    * multi-dimensional counterpart of [[cluster]], whose single-column
+    * range layout makes every other column's file ranges near-useless.
+    * Files cover small hyper-rectangles of the key space, i.e. TIGHT
+    * footer min/max on every participating column at once.
     *
-    * Cost: one approxQuantile pass per column (sampled, driver gets ~15
-    * doubles) + one full rewrite — the same budget as [[cluster]]; the
-    * Z-address itself is pure codegen'd arithmetic (no UDF, no shuffle
-    * beyond the range partitioning). Numeric, date, and timestamp
-    * columns only; strings have no quantile→locality mapping here and
-    * are refused loudly (hash-bucketing a string column would shred the
-    * very min/max locality the layout exists to create). Commit is
-    * strictly optimistic at seq+1, content-identical by construction;
-    * [[analyze]] runs on success — like [[cluster]], the layout exists
-    * FOR the stats. */
+    * Cost: one approxQuantile pass over the pinned snapshot (before the
+    * claim, so a refused column type claims nothing) + one full rewrite
+    * — the same budget as [[cluster]]. Commit is strictly optimistic at
+    * seq+1, content-identical by construction; [[analyze]] runs on
+    * success — like [[cluster]], the layout exists FOR the stats. */
   def clusterZ(table: String, columns: Seq[String], partitions: Int,
       txnTag: Option[String] = None): Boolean = {
-    require(columns.length >= 2,
-      s"ZORDER needs at least 2 columns (single-column layout is cluster)")
-    import org.apache.spark.sql.functions.{datediff, lit, shiftleft,
-      shiftright, when}
-    import org.apache.spark.sql.types.{DateType, NumericType, TimestampNTZType,
-      TimestampType}
     val pinned = head(table)
-    val df = readSnapshot(table, pinned)
-    val keyed = columns.foldLeft(df) { (d, c) =>
-      val key = d.schema(d.schema.fieldIndex(c)).dataType match {
-        case _: NumericType => col(c).cast("double")
-        case DateType => datediff(col(c),
-          lit(java.sql.Date.valueOf("1970-01-01"))).cast("double")
-        case TimestampType | TimestampNTZType =>
-          col(c).cast("long").cast("double")
-        case dt => throw new IllegalArgumentException(
-          s"clusterZ($table): column '$c' has type ${dt.sql} — ZORDER " +
-            "supports numeric/date/timestamp (strings have no " +
-            "quantile-to-range locality)")
-      }
-      d.withColumn(s"__zk_$c", key)
-    }
     // No persist: the quantile pass and the rewrite each scan the PINNED
     // snapshot (immutable), so the two passes see identical data. A
     // full-width persist materializes every column into the storage pool
@@ -2316,45 +2271,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     // cannot be cached to serve its own rewrite. Unpersisted, Catalyst
     // prunes the quantile scan to the key columns and the rewrite
     // streams the full rows exactly once.
-    locally {
-      val bits = 4
-      val probs = (1 to (1 << bits) - 1)
-        .map(_.toDouble / (1 << bits)).toArray
-      // one sampling pass covers every column's boundaries. 0.01 relative
-      // error is an order of magnitude tighter than the 1/16 bucket width
-      // it feeds; the round-15 0.001 setting made this pass the second
-      // largest cost of the whole rewrite (measured 0.90 s vs 0.29 s at
-      // sf0.1) for boundaries the 4-bit bucketing cannot distinguish.
-      val bounds = keyed.stat.approxQuantile(
-        columns.map(c => s"__zk_$c").toArray, probs, 0.01).toSeq
-      val buckets = columns.zip(bounds).map { case (c, bs) =>
-        val k = col(s"__zk_$c")
-        // count of boundaries ≤ v — a 15-term when-sum. NOT an
-        // aggregate() fold over a literal array: ArrayAggregate is a
-        // HigherOrderFunction with no codegen, and the Z-address below
-        // inlines each bucket expression `bits` times, so the fold was
-        // interpreted 8×/row (measured: the rewrite stage spent 2.1 s at
-        // sf0.1, 1.0 s of it in NamedLambdaVariable eval; the when-sum
-        // form codegens and dedupes via subexpression elimination).
-        when(k.isNull, lit(0)).otherwise(
-          bs.map(b => when(k >= b, lit(1)).otherwise(lit(0)))
-            .reduce(_ + _))
-      }
-      val n = columns.length
-      val z = (for {
-        i <- 0 until bits
-        (b, j) <- buckets.zipWithIndex
-      } yield shiftleft(shiftright(b, i).bitwiseAND(lit(1)),
-        i * n + (n - 1 - j))).reduce(_ + _) // disjoint bits: + is OR
-      transact(table, pinned, checkTag(txnTag), GiveUp) { (_, claimed) =>
-        keyed.withColumn("__z", z)
-          .repartitionByRange(partitions, col("__z"))
-          .sortWithinPartitions(col("__z"))
-          .select(df.columns.map(col).toIndexedSeq: _*)
-          .write.mode(SaveMode.Append).parquet(claimed.toString)
-        Staged(Carried, analyze = true)
-      }.isDefined
-    }
+    val laid = zOrdered(readSnapshot(table, pinned), columns, partitions)
+    transact(table, pinned, checkTag(txnTag), GiveUp) { (_, claimed) =>
+      laid.write.mode(SaveMode.Append).parquet(claimed.toString)
+      Staged(Carried, analyze = true)
+    }.isDefined
   }
 
   def drop(table: String): Unit = { // K5
@@ -2476,6 +2397,95 @@ final class TableStore(private[graft] val spark: SparkSession,
 /** The vocabulary of the commit primitive, [[TableStore]]'s `transact`:
   * lost-race policies and what a stage reports. */
 object TableStore {
+  /** Replace the small text file `target` atomically: the content is
+    * staged beside it under a unique name and renamed over it, so a
+    * reader sees the old file or the whole new one, never a torn write
+    * (a crash leaves only an orphaned staged file). Every sidecar a
+    * reader parses goes through here; the commit marker (link-based
+    * CAS) and the transaction manifest (a move that must not replace)
+    * keep their own protocols. */
+  private[graft] def writeAtomically(target: Path, content: String): Unit = {
+    val staged = target.resolveSibling(s"${target.getFileName}.staged." +
+      s"${System.nanoTime}.${Thread.currentThread.getId}")
+    Files.writeString(staged, content)
+    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** `df` laid out along the Z-address of `columns` — the one
+    * multi-dimensional layout, behind both OPTIMIZE … ZORDER
+    * ([[TableStore.clusterZ]]) and q53's events copy
+    * ([[graft.ops.Bucketed]]). Each column maps to a 4-bit bucket via its
+    * own approx-quantile boundaries (equi-DEPTH, so skewed distributions
+    * still spread across buckets; NULLs land in bucket 0), the bucket
+    * bits interleave into the Z-address, and the rows range-partition
+    * into `partitions` and sort on it: each output file covers a small
+    * hyper-rectangle of the key space. Sorting by the Z-address makes
+    * every aligned box of buckets a CONTIGUOUS range, so a file holding a
+    * slab has tight min/max statistics on all columns at once — a
+    * single-column sort can only ever serve one predicate dimension.
+    *
+    * Cost: one sampled approxQuantile pass over the key columns, run
+    * eagerly here (the driver gets ~15 doubles per column); the rest is a
+    * lazy plan, pure codegen'd arithmetic plus the range exchange.
+    * Numeric, date, and timestamp columns only; strings have no
+    * quantile→locality mapping here and are refused loudly (hash-
+    * bucketing a string column would shred the very min/max locality the
+    * layout exists to create). The result has `df`'s columns. */
+  private[graft] def zOrdered(df: DataFrame, columns: Seq[String],
+      partitions: Int): DataFrame = {
+    require(columns.length >= 2,
+      s"ZORDER needs at least 2 columns (single-column layout is cluster)")
+    import org.apache.spark.sql.functions.{datediff, shiftleft, shiftright}
+    import org.apache.spark.sql.types.{DateType, NumericType,
+      TimestampNTZType, TimestampType}
+    val keyed = columns.foldLeft(df) { (d, c) =>
+      val key = d.schema(d.schema.fieldIndex(c)).dataType match {
+        case _: NumericType => col(c).cast("double")
+        case DateType => datediff(col(c),
+          lit(java.sql.Date.valueOf("1970-01-01"))).cast("double")
+        case TimestampType | TimestampNTZType =>
+          col(c).cast("long").cast("double")
+        case dt => throw new IllegalArgumentException(
+          s"ZORDER column '$c' has type ${dt.sql} — ZORDER supports " +
+            "numeric/date/timestamp (strings have no quantile-to-range " +
+            "locality)")
+      }
+      d.withColumn(s"__zk_$c", key)
+    }
+    val bits = 4
+    val probs = (1 to (1 << bits) - 1).map(_.toDouble / (1 << bits)).toArray
+    // one sampling pass covers every column's boundaries. 0.01 relative
+    // error is an order of magnitude tighter than the 1/16 bucket width
+    // it feeds; the round-15 0.001 setting made this pass the second
+    // largest cost of the whole rewrite (measured 0.90 s vs 0.29 s at
+    // sf0.1) for boundaries the 4-bit bucketing cannot distinguish.
+    val bounds = keyed.stat.approxQuantile(
+      columns.map(c => s"__zk_$c").toArray, probs, 0.01).toSeq
+    val buckets = columns.zip(bounds).map { case (c, bs) =>
+      val k = col(s"__zk_$c")
+      // count of boundaries ≤ v — a 15-term when-sum. NOT an aggregate()
+      // fold over a literal array: ArrayAggregate is a HigherOrderFunction
+      // with no codegen, and the Z-address below inlines each bucket
+      // expression `bits` times, so the fold was interpreted 8×/row
+      // (measured: the rewrite stage spent 2.1 s at sf0.1, 1.0 s of it in
+      // NamedLambdaVariable eval; the when-sum form codegens and dedupes
+      // via subexpression elimination).
+      when(k.isNull, lit(0)).otherwise(
+        bs.map(b => when(k >= b, lit(1)).otherwise(lit(0))).reduce(_ + _))
+    }
+    val n = columns.length
+    val z = (for {
+      i <- 0 until bits
+      (b, j) <- buckets.zipWithIndex
+    } yield shiftleft(shiftright(b, i).bitwiseAND(lit(1)),
+      i * n + (n - 1 - j))).reduce(_ + _) // disjoint bits: + is OR
+    keyed.withColumn("__z", z)
+      .repartitionByRange(partitions, col("__z"))
+      .sortWithinPartitions(col("__z"))
+      .select(df.columns.map(col).toIndexedSeq: _*)
+  }
+
   /** What a commit does when another commit took the seq it read. */
   private sealed trait LostRace
   /** The content does not depend on the base: publish the same claim at

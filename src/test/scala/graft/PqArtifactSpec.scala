@@ -54,14 +54,12 @@ class PqArtifactSpec extends AnyFunSuite {
       .createTempDirectory("graft_idx_root").toString
     spark.conf.set("spark.graft.indexDir", root)
     Artifacts.dropMemoForTest()
-    SimilarityOps.dropModelMemoForTest()
     try {
       val r1 = SimilarityOps.e13PqSearch(spark, dir).collect()
       assert(r1.nonEmpty)
       // simulate process death: every in-JVM memo dropped; only the
       // store's committed tables survive
       Artifacts.dropMemoForTest()
-      SimilarityOps.dropModelMemoForTest()
       val builds = Artifacts.buildCount.get()
       val plans = SimilarityOps.pqEncodePlans.get()
       val r2 = SimilarityOps.e13PqSearch(spark, dir).collect()
@@ -74,7 +72,6 @@ class PqArtifactSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.graft.indexDir")
       Artifacts.dropMemoForTest()
-      SimilarityOps.dropModelMemoForTest()
     }
   }
 

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL front-end parity: the same logical queries through spark.sql over
-  * registered views must equal the DataFrame formulations (one Catalyst
-  * engine, two front-ends — mirroring the reference's shipped-SQL surface). */
+/** SQL front-end parity: the same logical queries through `Sql.run`
+  * (corpus tables bound in Spark's parse) must equal the DataFrame
+  * formulations (one Catalyst engine, two front-ends — mirroring the
+  * reference's shipped-SQL surface). */
 class SqlSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -45,8 +46,7 @@ class SqlSpec extends AnyFunSuite {
       "SELECT graft_md5('hello') AS g, md5('hello') AS b").head
     assert(m.getString(0) == m.getString(1))
     // vec kernels over a real embedding, vs the HOF formulation
-    graft.ops.Sql.registerViews(spark, sf)
-    val v = spark.sql(
+    val v = graft.ops.Sql.run(spark, sf,
       """SELECT graft_vec_dot(embedding, embedding) AS d,
         |  graft_vec_norm(embedding) AS n,
         |  aggregate(zip_with(embedding, embedding,
