@@ -39,9 +39,11 @@ import graft.psn.TableStore
   * defaulting to tmpdir.
   *
   * Staleness contract (the dir-corpus side of REFRESH INDEX semantics):
-  * each committed artifact carries a `_corpusfp.<version>` sidecar
-  * fingerprinting the corpus files (relpath, size, mtime). A reader
-  * that finds a fingerprint mismatch — the corpus was regenerated —
+  * each committed artifact carries a `_corpusfp.v<version>` sidecar
+  * fingerprinting the corpus files (relpath, size, mtime). It is named
+  * like the store's own version-keyed sidecars, so the store's GC ages
+  * it out with its version. A reader that finds a fingerprint mismatch
+  * — the corpus was regenerated — or no fingerprint for the head
   * REBUILDS rather than serving stale candidates; an auto-refresh,
   * because a parquet corpus dir has no committed version to refuse
   * against. (Store TABLES get the refuse-loudly variant through
@@ -111,7 +113,7 @@ private[graft] object Artifacts {
   }
 
   private def fpPath(wh: String, table: String, v: Int) =
-    Paths.get(wh, table, s"_corpusfp.$v")
+    Paths.get(wh, table, s"_corpusfp.v$v")
 
   /** Return a scan of the `name` artifact for corpus `dir`, building and
     * COMMITTING it to the artifact store only when no fresh committed

@@ -80,13 +80,14 @@ final class HttpPsnClient private[graft] (
       .timeout(requestTimeout)
       .GET().build()
     // Every request is an idempotent GET, so a throttled (429), failing
-    // (5xx) or timed-out attempt is retried, up to MaxAttempts with a
-    // doubling backoff; any other status fails at once.
+    // (5xx) or failed-in-transport attempt (timed out, refused, reset:
+    // any IOException) is retried, up to MaxAttempts with a doubling
+    // backoff; any other status fails at once.
     @annotation.tailrec
     def attempt(n: Int): HttpResponse[String] = {
       val resp =
         try Right(http.send(req, HttpResponse.BodyHandlers.ofString()))
-        catch { case e: java.net.http.HttpTimeoutException => Left(e) }
+        catch { case e: java.io.IOException => Left(e) }
       val transient = resp.fold(_ => true,
         r => r.statusCode() == 429 || r.statusCode() >= 500)
       if (transient && n < HttpPsnClient.MaxAttempts) {
@@ -147,9 +148,13 @@ final class HttpPsnClient private[graft] (
           play_count = t.path("playCount").asLong(),
           play_duration = t.path("playDuration").asText())
       }
+      // a nextOffset that does not advance would page forever
       val next = page.path("nextOffset")
       offset = if (next.isNull || next.isMissingNode) None
-               else Some(next.asLong())
+               else if (next.asLong() > offset.get) Some(next.asLong())
+               else throw new IllegalStateException(
+                 s"PSN API /titles: nextOffset ${next.asLong()} does not " +
+                   s"advance past offset ${offset.get}")
     }
     out.result()
   }

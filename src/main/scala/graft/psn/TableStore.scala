@@ -72,6 +72,17 @@ final case class MvAgg(out: String, func: String, in: String)
   *     retains one version behind the head (readers are assumed to finish
   *     within one upstream commit — tighten by widening the window).
   *
+  * == Reads ==
+  *
+  * Every read-side verb pins ONE marker — `head(table)` once, or the
+  * marker of a retained version — and takes everything it reads from it:
+  * the version directory, its data files, its schema (the `_schema.v<N>`
+  * sidecar, else the commit's memoized footer schema), its deletion
+  * vector and its stats sidecar. Every row it reads goes through one
+  * scan of that marker ([[scan]]), whole-version or restricted to some
+  * of its files, so a verb never mixes two versions and every reader
+  * subtracts deletes and null-fills evolved columns the same way.
+  *
   * Appends to an existing table do not commit: they write new part-files
   * into the CURRENT version directory through Spark's job committer (task
   * output lands in `_temporary` and is moved on job commit), so a crashed
@@ -92,6 +103,8 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def pointer(table: String): Path = dir(table).resolve("_current")
 
   private val MarkerName = "_commit\\.(\\d+)".r
+  /** A sidecar keyed to version N, beside the log: `_<name>.v<N>`. */
+  private val VersionSidecar = "_\\w+\\.v(\\d+)".r
 
   /** One commit-log entry: the commit that published `version` at `seq`.
     * `ts` is the commit wall-clock stamp (epoch millis); `tag` is the
@@ -169,10 +182,6 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def snapshotDir(table: String, v: Int): Path =
     if (v > 0) dir(table).resolve(s"v$v") else dir(table)
 
-  /** Directory a reader of `table` scans right now. */
-  private def resolve(table: String): Path =
-    snapshotDir(table, headVersion(table))
-
   /** Entries of directory `p`; none when it does not exist. */
   private def list(p: Path): List[Path] =
     if (!Files.isDirectory(p)) Nil
@@ -197,7 +206,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * table COUNT, never data-sized. */
   def tables(): Seq[String] = namespace().filter(exists).sorted
 
-  def read(table: String): DataFrame = readSnapshot(table, head(table))
+  def read(table: String): DataFrame = scan(table, head(table))
 
   /** Wildcard table read — BigQuery's `FROM ds.events_*` idiom: the union
     * of every store table whose name extends `prefix`, each branch tagged
@@ -227,42 +236,84 @@ final class TableStore(private[graft] val spark: SparkSession,
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Read one snapshot directory under its version's DECLARED schema when
-    * a `_schema.v<N>` sidecar exists ([[addColumn]]/[[dropColumn]]), else
-    * under the physical footer schema — then subtract the version's
-    * DELETION VECTOR when one exists ([[deleteRows]]). The schema
-    * injection is what makes metadata-only evolution sound: after an ADD
-    * COLUMN, one version directory legitimately holds files WITH and
+  /** THE scan of pinned marker `m`: `paths` (files or directories of its
+    * version; the whole version when empty) under the version's schema
+    * ([[schemaOf]]), with the version directory as `basePath` so hive
+    * partition columns surface on every read, minus the version's
+    * DELETION VECTOR when one exists ([[deleteRows]]). The explicit
+    * schema is what makes metadata-only evolution sound: after an ADD
+    * COLUMN one version directory legitimately holds files WITH and
     * WITHOUT the new column (evolution hard-links old files; later
-    * appends write the full schema), and a plain parquet read samples
-    * ONE footer — it would silently drop the column or resurrect a
-    * dropped one depending on which file it sampled. With an explicit
-    * schema, Spark's reader null-fills missing columns and projects away
-    * undeclared ones, per-file, deterministically. */
-  private def readSnapshot(table: String, m: Marker): DataFrame = {
-    val path = snapshotDir(table, m.version)
-    val plain = spark.read.schema(declaredSchemaOf(table, m.version)
-      .getOrElse(inferredSchema(table, m, path))).parquet(path.toString)
-    if (!Files.isDirectory(dvDir(path))) plain
-    else withRowPos(path, plain).drop(DvRel, DvPos)
+    * appends write the full schema), and Spark's reader null-fills
+    * missing columns and projects away undeclared ones, per file.
+    *
+    * `positions` keeps the file-relative path and in-file row index
+    * ([[DvRel]], [[DvPos]]) — [[deleteRows]] records them,
+    * [[attachBlooms]] groups by the path. `_metadata.row_index` is stable
+    * for immutable files, and relPath (not the absolute URI) is the key
+    * because hard-link commits move the same bytes between version
+    * directories. `live = false` skips the DV subtraction: a bloom built
+    * over a file describes its bytes, which outlive any one version's
+    * vector (a RESTORE can bring deleted rows back). */
+  private def scan(table: String, m: Marker, paths: Seq[Path] = Nil,
+      positions: Boolean = false, live: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.functions.expr
+    val base = snapshotDir(table, m.version)
+    val files = spark.read.schema(schemaOf(table, m))
+      .option("basePath", base.toString)
+      .parquet((if (paths.isEmpty) Seq(base) else paths).map(_.toString): _*)
+    val dv = if (live) dvOf(base) else None
+    if (!positions && dv.isEmpty) files
+    else {
+      // Hadoop's Path rendering ("file:/tmp/…"), because that is the
+      // format `_metadata.file_path` carries — java.nio's toUri
+      // ("file:///tmp/…") would silently mangle every stored relPath.
+      val prefix = new org.apache.hadoop.fs.Path(base.toUri).toString
+        .stripSuffix("/") + "/"
+      val pos = files
+        .withColumn(DvRel,
+          expr(s"substring(_metadata.file_path, ${prefix.length + 1})"))
+        .withColumn(DvPos, expr("_metadata.row_index"))
+      val kept = dv.fold(pos) { d =>
+        val del = d.toDF("__del_rel", "__del_pos")
+        pos.join(del, pos(DvRel) === col("__del_rel") &&
+          pos(DvPos) === col("__del_pos"), "left_anti")
+      }
+      if (positions) kept else kept.drop(DvRel, DvPos)
+    }
   }
 
   /** A committed version's files are immutable and share one schema (the
-    * [[assertSchemaMatches]] invariant), so its inferred schema is a pure
-    * function of the commit that published it — memoized per store
-    * instance. Without the memo every `read`/probe pays footer inference
-    * at PLAN time, a fixed cost the commit-per-micro-batch loops (s18–s26,
-    * t60/t61, the DDL scripts) pay dozens of times per query. The key is
-    * the commit — (table, seq, ts) of its marker — not the (table,
-    * version) NAME: another store may drop the table and recreate it at
-    * the same version numbers with other columns. Versions no marker
-    * names are not memoized. */
+    * [[assertSchemaMatches]] invariant), so the schema of a version with
+    * no declared sidecar is a pure function of the commit that published
+    * it — memoized per store instance. Without the memo every `read` or
+    * probe pays footer inference at PLAN time, a fixed cost the
+    * commit-per-micro-batch loops (s18–s26, t60/t61, the DDL scripts) pay
+    * dozens of times per query. The key is the commit — (table, seq, ts)
+    * of its marker — not the (table, version) NAME: another store may
+    * drop the table and recreate it at the same version numbers with
+    * other columns. Versions no marker names are not memoized. */
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Int, Long), StructType]()
-  private def inferredSchema(table: String, m: Marker, path: Path): StructType =
-    if (m.seq <= 0) spark.read.parquet(path.toString).schema
-    else schemaMemo.computeIfAbsent((table, m.seq, m.ts),
-      _ => spark.read.parquet(path.toString).schema)
+
+  /** The schema of pinned marker `m`'s version WITHOUT planning a scan:
+    * the declared `_schema.v<N>` sidecar when the table has evolved
+    * ([[addColumn]]/[[dropColumn]]), else ONE data file's footer, read
+    * with the version directory as `basePath` so hive partition columns
+    * still surface. A whole-directory inference costs a leaf-listing job
+    * per commit on wide layouts — pure fixed overhead in
+    * commit-per-micro-batch loops. */
+  private def schemaOf(table: String, m: Marker): StructType =
+    declaredSchemaOf(table, m.version).getOrElse {
+      val base = snapshotDir(table, m.version)
+      // no data file (or no table): the directory, so a missing table
+      // fails as path-not-found and an empty one as Spark's own error
+      def infer = spark.read.option("basePath", base.toString).parquet(
+        (if (Files.isDirectory(base)) dataFiles(base).headOption else None)
+          .getOrElse(base).toString).schema
+      if (m.seq <= 0) infer
+      else schemaMemo.computeIfAbsent((table, m.seq, m.ts), _ => infer)
+    }
 
   /** Memoize a version just written FLAT (hive layouts reorder and retype
     * partition columns on inference): parquet reads every column back
@@ -284,37 +335,11 @@ final class TableStore(private[graft] val spark: SparkSession,
   private val DvRel = "__dv_rel"
   private val DvPos = "__dv_pos"
 
-  private def uriPrefix(versionDir: Path): String = {
-    // Hadoop's Path rendering ("file:/tmp/…"), because that is the format
-    // `_metadata.file_path` carries — java.nio's toUri ("file:///tmp/…")
-    // would silently mangle every stored relPath.
-    val u = new org.apache.hadoop.fs.Path(versionDir.toUri).toString
-    if (u.endsWith("/")) u else u + "/"
-  }
-
-  /** Attach the file-relative path + in-file row position to every row of
-    * a scan over `versionDir`, then anti-join the deletion vector (when
-    * present), KEEPING the position columns — [[deleteRows]] needs them;
-    * [[readSnapshot]] drops them. `_metadata.row_index` is stable for
-    * immutable files, and relPath (not the absolute URI) is the join key
-    * because hard-link commits move the same bytes between version
-    * directories. */
-  private def withRowPos(versionDir: Path, scan: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.expr
-    val p = uriPrefix(versionDir)
-    val pos = scan
-      .withColumn(DvRel,
-        expr(s"substring(_metadata.file_path, ${p.length + 1})"))
-      .withColumn(DvPos, expr("_metadata.row_index"))
-    if (!Files.isDirectory(dvDir(versionDir))) pos
-    else {
-      val dv = spark.read.parquet(dvDir(versionDir).toString)
-        .toDF("__del_rel", "__del_pos")
-      pos.join(dv,
-        pos(DvRel) === col("__del_rel") && pos(DvPos) === col("__del_pos"),
-        "left_anti")
-    }
-  }
+  /** The deletion vector of the version in `versionDir` as (rel, pos)
+    * rows; None when the version has none. */
+  private def dvOf(versionDir: Path): Option[DataFrame] =
+    if (!Files.isDirectory(dvDir(versionDir))) None
+    else Some(spark.read.parquet(dvDir(versionDir).toString).toDF("rel", "pos"))
 
   /** Row-level DELETE WITHOUT rewriting data — deletion vectors, the
     * lakehouse answer to "a DELETE on a 100 TB table must not rewrite the
@@ -339,18 +364,14 @@ final class TableStore(private[graft] val spark: SparkSession,
     * Returns the number of rows deleted. */
   def deleteRows(table: String, condition: org.apache.spark.sql.Column,
       txnTag: Option[String] = None): Long = {
-    require(exists(table), s"deleteRows: table '$table' does not exist")
-    requireWritable(table) // loud before the scan, not after it
+    val pinned = head(table)
+    require(pinned.version > 0, s"deleteRows: table '$table' does not exist")
+    requireWritable(table, pinned) // loud before the scan, not after it
     requireNotMv(table, "deleteRows")
     requireNoFeed(table, "deleteRows")
     checkTag(txnTag)
-    val pinned = head(table)
     val base = snapshotDir(table, pinned.version)
-    val plain = declaredSchemaOf(table, pinned.version) match {
-      case Some(st) => spark.read.schema(st).parquet(base.toString)
-      case None => spark.read.parquet(base.toString)
-    }
-    val hits = withRowPos(base, plain).filter(condition)
+    val hits = scan(table, pinned, positions = true).filter(condition)
       .select(col(DvRel).as("rel"), col(DvPos).as("pos"))
       .persist()
     try {
@@ -371,11 +392,7 @@ final class TableStore(private[graft] val spark: SparkSession,
           "file_path prefix mismatch")
       val committed = transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
         linkSnapshot(base, claimed, withDv = false)
-        val merged =
-          if (Files.isDirectory(dvDir(base)))
-            spark.read.parquet(dvDir(base).toString).toDF("rel", "pos")
-              .union(hits)
-          else hits
+        val merged = dvOf(base).fold(hits)(_.union(hits))
         merged.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
         Staged(Carried)
       }
@@ -431,14 +448,14 @@ final class TableStore(private[graft] val spark: SparkSession,
     * Refused on change-feed tables: the feed streams appends and its
     * consumers could not observe the rollback. */
   def restore(table: String, v: Int, txnTag: Option[String] = None): Boolean = {
-    requireWritable(table) // loud before the no-op short circuit
+    val pinned = head(table)
+    requireWritable(table, pinned) // loud before the no-op short circuit
     requireNoFeed(table, "restore")
     checkTag(txnTag)
     val have = versions(table)
     require(have.contains(v),
       s"restore($table): version v$v not retained (readable: " +
         s"${have.mkString(",")})")
-    val pinned = head(table)
     if (v == pinned.version) return true
     transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
       linkSnapshot(snapshotDir(table, v), claimed, withDv = true)
@@ -447,20 +464,6 @@ final class TableStore(private[graft] val spark: SparkSession,
       Staged(Exactly(declaredSchemaOf(table, v)))
     }.isDefined
   }
-
-  /** Total rows named by the current version's deletion vector —
-    * metadata-only (DV parquet footers). */
-  private def dvRowCount(base: Path): Long =
-    if (!Files.isDirectory(dvDir(base))) 0L
-    else {
-      val conf = spark.sessionState.newHadoopConf()
-      val s = Files.walk(dvDir(base))
-      val files = try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-      }.toSeq finally s.close()
-      files.map(FileStats.rowCount(conf, _)).sum
-    }
 
   /** Versions currently readable, ascending: every version a commit
     * marker published whose directory GC has not swept. A claim that is
@@ -531,16 +534,20 @@ final class TableStore(private[graft] val spark: SparkSession,
     * failed snapshot-clone can never permanently poison the target name
     * for later CREATEs. A snapshot refuses every write, so its flagged
     * version is its only version for life. */
-  def isSnapshot(table: String): Boolean =
-    exists(table) && Files.exists(resolve(table).resolve("_snapshot"))
+  def isSnapshot(table: String): Boolean = isSnapshotAt(table, head(table))
+
+  private def isSnapshotAt(table: String, m: Marker): Boolean =
+    m.version > 0 &&
+      Files.exists(snapshotDir(table, m.version).resolve("_snapshot"))
 
   /** Every mutating path funnels through here (committing rewrites via
     * [[claimNext]]; in-place appends check explicitly): a SNAPSHOT table
     * refuses all writes for its whole life — the read-only half of the
     * BigQuery snapshot contract. DROP stays allowed (deleting a snapshot
     * is how BigQuery retires one; the data it shares with the source
-    * lives on through the hard-link counts). */
-  private def requireWritable(table: String): Unit = {
+    * lives on through the hard-link counts). `m` is the head the caller
+    * pinned. */
+  private def requireWritable(table: String, m: Marker): Unit = {
     // the table/view namespace is mutually exclusive: a committing write
     // under a logical view's name would nest version dirs beside the
     // stored definition and every later statement would resolve the name
@@ -548,7 +555,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(!isView(table),
       s"'$table' is a logical view — tables cannot be written under a " +
         "view's name (DROP VIEW first, or pick another name)")
-    require(!isSnapshot(table),
+    require(!isSnapshotAt(table, m),
       s"'$table' is a read-only snapshot table (CREATE SNAPSHOT TABLE) — " +
         "writes are refused; clone it writable (CREATE TABLE … CLONE) or " +
         "drop it")
@@ -621,12 +628,14 @@ final class TableStore(private[graft] val spark: SparkSession,
   def informationSchemaTables(): DataFrame = {
     import spark.implicits._
     tables().map { t =>
+      val m = head(t)
+      val base = snapshotDir(t, m.version)
       val tpe =
-        if (isSnapshot(t)) "SNAPSHOT"
+        if (isSnapshotAt(t, m)) "SNAPSHOT"
         else if (isMaterializedView(t)) "MATERIALIZED VIEW"
         else "BASE TABLE"
-      (t, tpe, headVersion(t), countRows(t), fileCount(t),
-        read(t).schema.fields.length)
+      (t, tpe, m.version, rowCount(base), dataFiles(base).length,
+        schemaOf(t, m).fields.length)
     }.toDF("table_name", "table_type", "version", "n_rows", "n_files",
       "n_columns")
   }
@@ -656,19 +665,17 @@ final class TableStore(private[graft] val spark: SparkSession,
   def informationSchemaPartitions(table: String,
       parallelism: Int = 8): DataFrame = {
     import spark.implicits._
-    val base = resolve(table)
+    val base = snapshotDir(table, headVersion(table))
     val conf = spark.sessionState.newHadoopConf()
     // deletion-vector entries per first-level directory (relPath's head
     // segment), so partition counts subtract exactly their own deletes
-    val dvByDir: Map[String, Long] =
-      if (!Files.isDirectory(dvDir(base))) Map.empty
-      else spark.read.parquet(dvDir(base).toString).toDF("rel", "pos")
-        .select(when(col("rel").contains("/"),
+    val dvByDir: Map[String, Long] = dvOf(base).fold(Map.empty[String, Long])(
+      _.select(when(col("rel").contains("/"),
           org.apache.spark.sql.functions
             .substring_index(col("rel"), "/", 1))
           .otherwise("__NULL__").as("d"))
         .groupBy(col("d")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     val byPart = dataFiles(base).groupBy { f =>
       val rel = base.relativize(f)
       if (rel.getNameCount > 1 && rel.getName(0).toString.contains("="))
@@ -736,17 +743,19 @@ final class TableStore(private[graft] val spark: SparkSession,
       s"materialized views support COUNT(*)/SUM/MIN/MAX, got $f")
   }
 
-  /** Aggregate the base's CURRENT snapshot and record what it covered:
-    * (pinned version, covered data-file relPaths, aggregated rows). */
-  private def mvSnapshotAgg(d: MvDef): (Int, Set[String], DataFrame) = {
-    val m = head(d.base)
+  /** `d`'s GROUP BY over exactly the data files `rels` (relPaths) of
+    * base marker `m`. */
+  private def mvAggOver(d: MvDef, m: Marker, rels: Set[String]): DataFrame = {
     val baseDir = snapshotDir(d.base, m.version)
-    val files = dataFiles(baseDir)
-      .map(f => baseDir.relativize(f).toString).toSet
-    val rows = readSnapshot(d.base, m)
+    scan(d.base, m, rels.toSeq.map(baseDir.resolve))
       .groupBy(d.keys.map(col): _*)
       .agg(mvAggExprs(d.aggs).head, mvAggExprs(d.aggs).tail: _*)
-    (m.version, files, rows)
+  }
+
+  /** relPaths of pinned marker `m`'s data files. */
+  private def relPaths(table: String, m: Marker): Set[String] = {
+    val base = snapshotDir(table, m.version)
+    dataFiles(base).map(f => base.relativize(f).toString).toSet
   }
 
   /** CREATE MATERIALIZED VIEW — BigQuery's aggregate MV: a store table
@@ -766,9 +775,10 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(keys.nonEmpty && aggs.nonEmpty,
       "a materialized view needs >= 1 GROUP BY key and >= 1 aggregate")
     val d = MvDef(base, keys, aggs, 0, Set.empty)
-    val (v, files, rows) = mvSnapshotAgg(d)
-    overwrite(mv, rows)
-    writeMvDef(mv, d.copy(baseVersion = v, covered = files))
+    val m = head(base)
+    val files = relPaths(base, m)
+    overwrite(mv, mvAggOver(d, m, files))
+    writeMvDef(mv, d.copy(baseVersion = m.version, covered = files))
   }
 
   /** Data files of the MV's base that the stored rows do NOT cover —
@@ -778,12 +788,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * file algebra wholesale — see [[readMaterialized]]). */
   def mvDeltaFiles(mv: String): Int = {
     val d = readMvDef(mv)
-    if (headVersion(d.base) != d.baseVersion) 0
-    else {
-      val baseDir = resolve(d.base)
-      dataFiles(baseDir)
-        .count(f => !d.covered(baseDir.relativize(f).toString))
-    }
+    val m = head(d.base)
+    if (m.version != d.baseVersion) 0
+    else (relPaths(d.base, m) -- d.covered).size
   }
 
   /** Read the view AT FULL FRESHNESS without rewriting it — the
@@ -798,33 +805,34 @@ final class TableStore(private[graft] val spark: SparkSession,
     *     the base: append-only file algebra no longer applies, and a
     *     wrong-but-fast answer is worse than a slow-but-right one.
     *     REFRESH re-pins the view and restores the cheap path.
-    * Delta files read with the base directory as `basePath`, so
+    * Both paths read the base through [[scan]] of one pinned marker, so
     * hive-partitioned bases keep their partition columns. Aggregate
     * columns are cast back to the STORED schema — combining widens
     * sums (decimal precision growth) and the view's schema must not
     * drift with freshness. */
   def readMaterialized(mv: String): DataFrame = {
     val d = readMvDef(mv)
-    val stored = read(mv)
-    if (headVersion(d.base) != d.baseVersion) mvConform(mvSnapshotAgg(d)._3, stored)
+    val m = head(d.base)
+    mvAnswer(d, m, relPaths(d.base, m), read(mv))
+  }
+
+  /** [[readMaterialized]]'s answer over base marker `m`, whose data files
+    * are `files`: it reads exactly those files, so a refresh that records
+    * them as covered records what it aggregated. */
+  private def mvAnswer(d: MvDef, m: Marker, files: Set[String],
+      stored: DataFrame): DataFrame =
+    if (m.version != d.baseVersion) mvConform(mvAggOver(d, m, files), stored)
     else {
-      val baseDir = resolve(d.base)
-      val delta = dataFiles(baseDir)
-        .filter(f => !d.covered(baseDir.relativize(f).toString))
+      val delta = files -- d.covered
       if (delta.isEmpty) stored
       else {
-        val fresh = spark.read
-          .option("basePath", baseDir.toString)
-          .parquet(delta.map(_.toString): _*)
-          .groupBy(d.keys.map(col): _*)
-          .agg(mvAggExprs(d.aggs).head, mvAggExprs(d.aggs).tail: _*)
-        val merged = stored.unionByName(mvConform(fresh, stored))
+        val merged = stored
+          .unionByName(mvConform(mvAggOver(d, m, delta), stored))
           .groupBy(d.keys.map(col): _*)
           .agg(mvCombineExprs(d.aggs).head, mvCombineExprs(d.aggs).tail: _*)
         mvConform(merged, stored)
       }
     }
-  }
 
   /** Cast a combined/recomputed frame to the stored MV schema (column
     * order and types), so freshness never changes the view's shape. */
@@ -835,22 +843,24 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** REFRESH MATERIALIZED VIEW — materialize [[readMaterialized]]'s
     * answer and re-pin the sidecar: incremental (stored + delta merge)
     * when the base only grew in place, full recompute when it was
-    * rewritten. No-op when already fresh. */
+    * rewritten. No-op when already fresh. The base is pinned ONCE, before
+    * the answer is planned: the version and covered files the sidecar
+    * records are exactly what the answer aggregated, so an append that
+    * lands during the refresh stays uncovered (the next read's delta) and
+    * a rewrite that lands then leaves the view pinned to the version it
+    * read (the next read recomputes). */
   def refreshMaterializedView(mv: String): Unit = {
     val d = readMvDef(mv)
-    if (headVersion(d.base) == d.baseVersion && mvDeltaFiles(mv) == 0)
-      return
-    val next = readMaterialized(mv)
+    val m = head(d.base)
+    val files = relPaths(d.base, m)
+    if (m.version == d.baseVersion && files.subsetOf(d.covered)) return
+    val next = mvAnswer(d, m, files, read(mv))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       next.count() // materialize BEFORE the overwrite drops the old rows
-      val v = headVersion(d.base)
-      val baseDir = resolve(d.base)
-      val files = dataFiles(baseDir)
-        .map(f => baseDir.relativize(f).toString).toSet
       // internal commit path: `overwrite` (the user verb) refuses MVs
       commitRewrite(mv, next)
-      writeMvDef(mv, d.copy(baseVersion = v, covered = files))
+      writeMvDef(mv, d.copy(baseVersion = m.version, covered = files))
     } finally next.unpersist()
   }
 
@@ -862,7 +872,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     val have = versions(table)
     require(have.contains(v),
       s"version v$v of $table not available (readable: ${have.mkString(",")})")
-    readSnapshot(table, markerOf(table, v))
+    scan(table, markerOf(table, v))
   }
 
   /** Timestamp time travel — BigQuery's `FOR SYSTEM_TIME AS OF`: the
@@ -996,11 +1006,12 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** Atomically claim the next free version directory (≥ committed + 1,
     * skipping orphaned claims from crashed or in-flight writers). */
   private def claimNext(table: String): (Int, Path) = {
-    requireWritable(table) // every committing rewrite claims first
+    val m = head(table)
+    requireWritable(table, m) // every committing rewrite claims first
     Files.createDirectories(dir(table))
     val taken = listDir(table).map(_.getFileName.toString)
       .collect { case s if s.matches("v\\d+") => s.drop(1).toInt }
-    var n = math.max(headVersion(table),
+    var n = math.max(m.version,
       if (taken.isEmpty) 0 else taken.max) + 1
     while (true) {
       try {
@@ -1024,7 +1035,10 @@ final class TableStore(private[graft] val spark: SparkSession,
     * claims, so `committed - 1` can be far above the live previous
     * version, and a rebased commit can publish a version numbered below
     * `prev`. Deletes every vN < prev except the just-published `v`,
-    * with its markers and sidecars. */
+    * with its markers and its version-keyed sidecars: every
+    * `_<name>.v<N>` file beside the log (`_stats`, `_schema`, and those
+    * other components keep there, like [[graft.ext.Artifacts]]'
+    * `_corpusfp`). A staged sidecar (`….staged.…`) never matches. */
   private def gc(table: String, prev: Int, v: Int): Unit = {
     def aged(n: Int) = n < prev && n != v
     val agedMarkers = markerLog(table).filter(m => aged(m.version))
@@ -1036,10 +1050,7 @@ final class TableStore(private[graft] val spark: SparkSession,
           if (agedMarkers(s.toInt)) Files.deleteIfExists(p)
         case _ if n.matches("v\\d+") =>
           if (aged(n.drop(1).toInt)) deleteRecursive(p)
-        case _ if n.matches("_stats\\.v\\d+") => // sidecar ages with its version
-          if (aged(n.stripPrefix("_stats.v").toInt)) Files.deleteIfExists(p)
-        case _ if n.matches("_schema\\.v\\d+") => // declared schema too
-          if (aged(n.stripPrefix("_schema.v").toInt)) Files.deleteIfExists(p)
+        case VersionSidecar(s) => if (aged(s.toInt)) Files.deleteIfExists(p)
         case _ => ()
       }
     }
@@ -1058,29 +1069,6 @@ final class TableStore(private[graft] val spark: SparkSession,
       Staged(Replaced(df.schema), seed = Some(df.schema))
     }
 
-  /** The table's current schema WITHOUT planning a full-table scan: the
-    * declared sidecar when the table has evolved, else ONE data file's
-    * footer (files in a version share a schema — the invariant
-    * [[assertSchemaMatches]] itself maintains), read with `basePath` so
-    * hive partition columns still surface. A full `read(table)` here
-    * costs a leaf-file listing job per append on wide layouts — pure
-    * fixed overhead in commit-per-micro-batch loops. */
-  private def currentSchema(table: String): StructType = {
-    val m = head(table)
-    declaredSchemaOf(table, m.version).getOrElse {
-      val base = snapshotDir(table, m.version)
-      def infer = dataFiles(base).headOption match {
-        case Some(f) => spark.read.option("basePath", base.toString)
-          .parquet(f.toString).schema
-        case None => read(table).schema
-      }
-      // same per-commit memo as [[inferredSchema]] (committed versions
-      // are immutable)
-      if (m.seq <= 0) infer
-      else schemaMemo.computeIfAbsent((table, m.seq, m.ts), _ => infer)
-    }
-  }
-
   /** Schema-on-write guard for in-place appends: a frame whose columns or
     * types differ from the table's would land as mixed-schema files in
     * the SAME version directory, and a plain parquet read samples one
@@ -1088,8 +1076,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * from the write that caused it. Appends therefore fail loudly on
     * drift; widening is an explicit [[overwrite]]/[[mergeWith]] — a NEW
     * version, so time travel keeps each snapshot's schema intact.
-    * Column order and nullability are not drift; names + types are. */
-  private def assertSchemaMatches(table: String, df: DataFrame,
+    * Column order and nullability are not drift; names + types are. `m`
+    * is the head the append pinned. */
+  private def assertSchemaMatches(table: String, m: Marker, df: DataFrame,
       relaxed: Set[String] = Set.empty): Unit = {
     // `relaxed` columns compare by NAME only: hive-style partition values
     // are type-inferred on read, so the partition column's physical type
@@ -1097,7 +1086,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     def shape(fs: Array[org.apache.spark.sql.types.StructField]) = fs
       .map(f => (f.name, if (relaxed(f.name)) "*" else f.dataType.sql))
       .sortBy(_._1).toSeq
-    val cur = shape(currentSchema(table).fields)
+    val cur = shape(schemaOf(table, m).fields)
     val in = shape(df.schema.fields)
     require(cur == in,
       s"schema drift on append to '$table': table has " +
@@ -1107,17 +1096,19 @@ final class TableStore(private[graft] val spark: SparkSession,
         "file schemas in place.")
   }
 
-  def append(table: String, df: DataFrame): Unit =
-    if (exists(table)) {
-      requireWritable(table) // in-place: no claim, so check here
+  def append(table: String, df: DataFrame): Unit = {
+    val m = head(table)
+    if (m.version > 0) {
+      requireWritable(table, m) // in-place: no claim, so check here
       requireNotMv(table, "append")
-      assertSchemaMatches(table, df)
-      val base = resolve(table)
+      assertSchemaMatches(table, m, df)
+      val base = snapshotDir(table, m.version)
       val before = dataFiles(base).map(_.getFileName.toString).toSet
       enforced(table, df).write.mode(SaveMode.Append)
         .parquet(base.toString)
       feedNewFiles(table, base, before)
     } else commitRewrite(table, df) // first write creates + commits v1
+  }
 
   /** Append with hive-style partitioning — the 100 TB layout for fact
     * tables (time_play partitioned by day): date-filtered scans prune whole
@@ -1125,8 +1116,9 @@ final class TableStore(private[graft] val spark: SparkSession,
   def appendPartitioned(table: String, df: DataFrame,
       partitionCol: String, txnTag: Option[String] = None): Unit = {
     requireNotMv(table, "appendPartitioned")
-    if (!exists(table)) {
-      transact(table, head(table), checkTag(txnTag), Rebase) { (_, claimed) =>
+    val m = head(table)
+    if (m.version == 0) {
+      transact(table, m, checkTag(txnTag), Rebase) { (_, claimed) =>
         enforced(table, df).write.mode(SaveMode.Append)
           .partitionBy(partitionCol).parquet(claimed.toString)
         Staged(Carried)
@@ -1140,10 +1132,11 @@ final class TableStore(private[graft] val spark: SparkSession,
       require(!feedEnabled(table),
         s"'$table' has the change feed enabled; hive-partitioned appends " +
           "cannot feed (files lack the partition column)")
-      requireWritable(table) // in-place: no claim, so check here
-      assertSchemaMatches(table, df, relaxed = Set(partitionCol))
+      requireWritable(table, m) // in-place: no claim, so check here
+      assertSchemaMatches(table, m, df, relaxed = Set(partitionCol))
       enforced(table, df).write.mode(SaveMode.Append)
-        .partitionBy(partitionCol).parquet(resolve(table).toString)
+        .partitionBy(partitionCol)
+        .parquet(snapshotDir(table, m.version).toString)
     }
   }
 
@@ -1168,9 +1161,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     requireNotMv(table, "appendCommitted")
     requireNoFeed(table, "appendCommitted")
     checkTag(txnTag)
-    val first = !exists(table)
-    if (!first) assertSchemaMatches(table, df, relaxed = partitionCol.toSet)
-    transact(table, head(table), txnTag, if (first) Rebase else Reapply()) {
+    val pinned = head(table)
+    val first = pinned.version == 0
+    if (!first)
+      assertSchemaMatches(table, pinned, df, relaxed = partitionCol.toSet)
+    transact(table, pinned, txnTag, if (first) Rebase else Reapply()) {
       (base, claimed) =>
         if (!first)
           linkSnapshot(snapshotDir(table, base.version), claimed, withDv = true)
@@ -1187,18 +1182,20 @@ final class TableStore(private[graft] val spark: SparkSession,
     new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
   private[graft] def lastPartitionProbe: (Int, Int) = probePeek.get
 
-  /** Partition-pruned point read: ONLY the files under `partitionCol=v`
-    * hive directories for the requested values are listed into the scan
-    * — directories outside the value set are never opened, so a probe
-    * against an N-bucket table costs O(files in touched buckets), not
-    * O(table). The caller owns completeness: pass every bucket value the
-    * probe keys can hash into (the [[appendCommitted]] bucketing
-    * discipline makes that a bounded, collect-free derivation). Results
-    * equal `read(table).filter(col in values)` by construction — hive
-    * partition values are exact, not statistics. */
+  /** Partition-pruned point read: ONLY the `partitionCol=v` hive
+    * directories for the requested values go into the scan — directories
+    * outside the value set are never opened, so a probe against an
+    * N-bucket table costs O(files in touched buckets), not O(table). The
+    * caller owns completeness: pass every bucket value the probe keys can
+    * hash into (the [[appendCommitted]] bucketing discipline makes that a
+    * bounded, collect-free derivation). It is [[scan]] of the head it
+    * pins, restricted to those directories — same schema, same deletion
+    * vector — so results equal `read(table).filter(col in values)` by
+    * construction: hive partition values are exact, not statistics. */
   def readPartitions(table: String, partitionCol: String,
       values: Seq[Any]): DataFrame = {
-    val base = resolve(table)
+    val m = head(table)
+    val base = snapshotDir(table, m.version)
     val wanted = values.map(String.valueOf).toSet
     val prefix = partitionCol + "="
     val all = dataFiles(base)
@@ -1215,21 +1212,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     // value set), not the file list: a per-file path list above the
     // parallel-discovery threshold spends a whole listing JOB per probe
     // — fixed overhead that dwarfs a micro-batch's real work.
-    val keptDirs = kept.map(p => base.relativize(p).getName(0).toString)
-      .distinct.map(d => base.resolve(d).toString)
-    if (kept.isEmpty)
-      read(table).filter(org.apache.spark.sql.functions.lit(false))
-    else {
-      // explicit schema (sidecar or one footer): per-probe schema
-      // inference over every surviving file is plan-time overhead a
-      // per-micro-batch probe pays hundreds of times
-      val scan = spark.read.schema(currentSchema(table))
-        .option("basePath", base.toString)
-        .parquet(keptDirs: _*)
-      if (Files.isDirectory(dvDir(base)))
-        withRowPos(base, scan).drop(DvRel, DvPos)
-      else scan
-    }
+    if (kept.isEmpty) scan(table, m).filter(lit(false))
+    else scan(table, m,
+      kept.map(p => base.resolve(base.relativize(p).getName(0))).distinct)
   }
 
   def overwrite(table: String, df: DataFrame, // K3
@@ -1249,13 +1234,14 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** Parquet data-file count of the table's current version — the
     * read-amplification metric [[compact]] manages. Driver-side
     * directory listing, bounded by the file count itself. */
-  def fileCount(table: String): Int = dataFiles(resolve(table)).length
+  def fileCount(table: String): Int =
+    dataFiles(snapshotDir(table, headVersion(table))).length
 
   /** Total parquet data bytes of the table's current version — the input
     * [[compact]] callers size their `targetBytes` from. Same bounded
     * driver-side listing as [[fileCount]]. */
   def tableBytes(table: String): Long =
-    dataFiles(resolve(table)).map(Files.size).sum
+    dataFiles(snapshotDir(table, headVersion(table))).map(Files.size).sum
 
   /** Upsert (K4): materialize `Ops.mergeUpdates(target, updates)` into a
     * claimed version directory, then commit the pointer. The source scan
@@ -1409,10 +1395,10 @@ final class TableStore(private[graft] val spark: SparkSession,
         new Thread(task, s"publish-gate-$table").start()
         task
       }
-      // Pin the scan to the base version's directory (not resolve(), which
-      // could drift to a concurrent commit mid-transaction): the CAS is
-      // only meaningful if f consumed exactly the state it names.
-      val next = f(readSnapshot(table, base))
+      // Pin the scan to the base marker (not the head, which could drift
+      // to a concurrent commit mid-transaction): the CAS is only
+      // meaningful if f consumed exactly the state it names.
+      val next = f(scan(table, base))
       // Materialize BEFORE committing: f's plan lazily re-reads the table
       // at job time, so commit must not expose a half-new view. The claim
       // directory is the natural materialization target.
@@ -1463,7 +1449,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       val basePath = snapshotDir(table, base.version)
       // The isin filter lands in the scan's PartitionFilters: untouched
       // directories are never opened, let alone read.
-      val next = f(readSnapshot(table, base)
+      val next = f(scan(table, base)
         .filter(col(partitionCol).isin(touched: _*)))
       enforced(table, next).write.mode(SaveMode.Append)
         .partitionBy(partitionCol).parquet(claimed.toString)
@@ -1497,11 +1483,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * files linked through unchanged: same relPath, same bytes. */
   private def carryDv(base: Path, claimed: Path, keys: Seq[String],
       key: org.apache.spark.sql.Column): Unit =
-    if (keys.nonEmpty && Files.isDirectory(dvDir(base))) {
+    if (keys.nonEmpty) dvOf(base).foreach { dv =>
       import spark.implicits._
-      val keep = spark.read.parquet(dvDir(base).toString)
-        .toDF("rel", "pos")
-        .withColumn("__key", key)
+      val keep = dv.withColumn("__key", key)
         .join(org.apache.spark.sql.functions.broadcast(
           keys.toDF("__key")), "__key")
         .select(col("rel"), col("pos"))
@@ -1597,26 +1581,16 @@ final class TableStore(private[graft] val spark: SparkSession,
       try {
         val tmp = Files.createTempDirectory(dir(table), "_compact")
         try {
-          // An evolved table's bin can mix pre- and post-ADD-COLUMN
-          // files — a plain read samples one footer and would DROP
-          // the evolved column from the rewritten bin. Bin columns
-          // are the declared schema minus hive partition columns
-          // (those live in the directory name, not the file).
-          val binRead = declaredSchemaOf(table, pinned.version) match {
-            case Some(st) =>
-              val dirSegs = base.relativize(bin.head.getParent)
-                .toString.split('/').toSet
-              val phys = StructType(st.fields.filterNot(f =>
-                dirSegs.exists(_.startsWith(f.name + "="))))
-              spark.read.schema(phys)
-            case None => spark.read
-          }
-          // Rewritten bins materialize row-level deletes: the same
-          // anti-join every read applies, so the deleted rows never
-          // reach the compacted file (their positions would be
-          // meaningless in it anyway).
-          withRowPos(base, binRead.parquet(bin.map(_.toString): _*))
-            .drop(DvRel, DvPos)
+          // The one scan: an evolved table's bin can mix pre- and
+          // post-ADD-COLUMN files, and the version's schema null-fills
+          // them alike; rewritten bins materialize row-level deletes
+          // (their positions would be meaningless in the new file). The
+          // bin directory's hive partition columns live in its name, not
+          // in the file.
+          val partCols = base.relativize(bin.head.getParent).iterator
+            .asScala.map(_.toString).filter(_.contains("="))
+            .map(_.takeWhile(_ != '=')).toSeq
+          scan(table, pinned, bin).drop(partCols: _*)
             .coalesce(1)
             .write.mode(SaveMode.Append).parquet(tmp.toString)
           list(tmp).foreach { f =>
@@ -1673,14 +1647,15 @@ final class TableStore(private[graft] val spark: SparkSession,
     * — no bytes copied, no extra write amplification; feed backlog is
     * reclaimed by [[truncateFeed]] once consumers have caught up. */
   def enableFeed(table: String): Unit = {
-    require(exists(table), s"enableFeed on missing table '$table'")
-    require(declaredSchema(table).isEmpty,
+    val v = headVersion(table)
+    require(v > 0, s"enableFeed on missing table '$table'")
+    require(declaredSchemaOf(table, v).isEmpty,
       s"'$table' has a declared (evolved) schema — feed readers scan raw " +
         "files and would mis-read mixed physical schemas")
-    require(!Files.isDirectory(dvDir(resolve(table))),
+    val base = snapshotDir(table, v)
+    require(!Files.isDirectory(dvDir(base)),
       s"'$table' carries a deletion vector — feed consumers read raw " +
         "files and cannot observe row-level deletes")
-    val base = resolve(table)
     val files = dataFiles(base)
     require(files.forall(_.getParent == base),
       s"'$table' is hive-partitioned — the feed cannot carry partition " +
@@ -1750,8 +1725,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(name.matches("\\w+"), s"constraint name must be \\w+, got '$name'")
     require(!checkSql.exists(c => c == '\t' || c == '\n' || c == '\r'),
       "constraint expression must be single-line")
-    require(exists(table), s"ADD CONSTRAINT on missing table '$table'")
-    val bad = read(table)
+    val m = head(table)
+    require(m.version > 0, s"ADD CONSTRAINT on missing table '$table'")
+    val bad = scan(table, m)
       .filter(!coalesce(org.apache.spark.sql.functions.expr(checkSql),
         org.apache.spark.sql.functions.lit(true)))
       .limit(1).count()
@@ -1829,33 +1805,35 @@ final class TableStore(private[graft] val spark: SparkSession,
     * ops, zero bytes of data moved — the [[compact]] single-file-bin
     * path) and publishes the widened schema as the version's sidecar;
     * readers null-fill the column for pre-evolution files (see
-    * [[readSnapshot]]). The new column is nullable by construction —
-    * existing rows have no value for it.
+    * [[scan]]). The new column is nullable by construction — existing
+    * rows have no value for it. The widened schema is the schema of the
+    * marker the commit publishes over ([[evolveTo]]): a concurrent
+    * evolution that lands first makes this one lose its CAS, never
+    * silently drops that evolution's column.
     *
-    * Resurrection guard: if some CURRENT file still physically carries
-    * `column` (it was dropped earlier and never rewritten away), re-adding
-    * the name would surface the old bytes as if they were new data — that
-    * is refused loudly; OPTIMIZE or overwrite first. Footer-name check,
-    * O(files) metadata reads, pooled. */
+    * Resurrection guard: if some file of that version still physically
+    * carries `column` (it was dropped earlier and never rewritten away),
+    * re-adding the name would surface the old bytes as if they were new
+    * data — that is refused loudly; OPTIMIZE or overwrite first.
+    * Footer-name check, O(files) metadata reads, pooled. */
   def addColumn(table: String, column: String, typeDdl: String,
       txnTag: Option[String] = None): Boolean = {
     require(exists(table), s"addColumn: table '$table' does not exist")
     requireNoFeed(table, "ALTER TABLE ADD COLUMN")
-    val cur = read(table).schema
-    require(!cur.fieldNames.exists(_.equalsIgnoreCase(column)),
-      s"column '$column' already exists on '$table'")
     val dt = DataType.fromDDL(typeDdl)
-    val base = resolve(table)
-    val conf = spark.sessionState.newHadoopConf()
-    val lingering = pooled(dataFiles(base), 8)(f =>
-      FileStats.physicalColumns(conf, f).exists(_.equalsIgnoreCase(column)))
-      .exists(identity)
-    require(!lingering,
-      s"addColumn($table, $column): a current data file still physically " +
-        "carries that column (dropped earlier, never rewritten) — " +
-        "OPTIMIZE or overwrite the table to purge it before re-adding")
-    evolveTo(table, StructType(cur.fields :+
-      StructField(column, dt, nullable = true)), txnTag)
+    evolveTo(table, txnTag) { (base, cur) =>
+      require(!cur.fieldNames.exists(_.equalsIgnoreCase(column)),
+        s"column '$column' already exists on '$table'")
+      val conf = spark.sessionState.newHadoopConf()
+      val lingering = pooled(dataFiles(base), 8)(f =>
+        FileStats.physicalColumns(conf, f).exists(_.equalsIgnoreCase(column)))
+        .exists(identity)
+      require(!lingering,
+        s"addColumn($table, $column): a current data file still physically " +
+          "carries that column (dropped earlier, never rewritten) — " +
+          "OPTIMIZE or overwrite the table to purge it before re-adding")
+      StructType(cur.fields :+ StructField(column, dt, nullable = true))
+    }
   }
 
   /** ALTER TABLE … RENAME COLUMN — committed as ONE REWRITE version
@@ -1877,7 +1855,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(exists(table), s"renameColumn: table '$table' does not exist")
     requireNotMv(table, "ALTER TABLE RENAME COLUMN")
     requireNoFeed(table, "ALTER TABLE RENAME COLUMN")
-    val cur = currentSchema(table)
+    val cur = schemaOf(table, head(table))
     require(cur.fieldNames.exists(_.equalsIgnoreCase(from)),
       s"renameColumn($table): no column '$from' " +
         s"(have ${cur.fieldNames.mkString(", ")})")
@@ -1903,7 +1881,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       s"CREATE TABLE $target LIKE: the target name is already held")
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      currentSchema(source))
+      schemaOf(source, head(source)))
     commitRewrite(target, empty, None)
   }
 
@@ -1920,12 +1898,6 @@ final class TableStore(private[graft] val spark: SparkSession,
       txnTag: Option[String] = None): Boolean = {
     require(exists(table), s"dropColumn: table '$table' does not exist")
     requireNoFeed(table, "ALTER TABLE DROP COLUMN")
-    val cur = read(table).schema
-    require(cur.fieldNames.exists(_.equalsIgnoreCase(column)),
-      s"dropColumn($table): no column '$column' " +
-        s"(have ${cur.fieldNames.mkString(", ")})")
-    require(cur.fields.length > 1,
-      s"dropColumn($table): cannot drop the last column")
     constraints(table).foreach { case (name, check) =>
       val refs = spark.sessionState.sqlParser.parseExpression(check)
         .collect {
@@ -1936,21 +1908,36 @@ final class TableStore(private[graft] val spark: SparkSession,
         s"dropColumn($table, $column): CHECK constraint '$name' ($check) " +
           "references it — drop the constraint first")
     }
-    evolveTo(table, StructType(
-      cur.fields.filterNot(_.name.equalsIgnoreCase(column))), txnTag)
+    evolveTo(table, txnTag) { (_, cur) =>
+      require(cur.fieldNames.exists(_.equalsIgnoreCase(column)),
+        s"dropColumn($table): no column '$column' " +
+          s"(have ${cur.fieldNames.mkString(", ")})")
+      require(cur.fields.length > 1,
+        s"dropColumn($table): cannot drop the last column")
+      StructType(cur.fields.filterNot(_.name.equalsIgnoreCase(column)))
+    }
   }
 
-  /** Commit a schema evolution: hard-link every current data file into a
-    * claimed version directory (subdirectories — hive layouts — kept),
-    * stage the `_schema.v<N>` sidecar, and publish strictly optimistically
-    * at seq+1 over the evolved version (the [[compact]] discipline: a
-    * layout/metadata change must never clobber a concurrent data commit).
-    * Returns false on a lost race — nothing changed; rerun. */
-  private def evolveTo(table: String, newSchema: StructType,
-      txnTag: Option[String]): Boolean = {
+  /** Commit a schema evolution: pin the head, derive the new schema from
+    * THAT marker's version directory and schema (`evolve` may refuse by
+    * throwing, before anything is claimed), hard-link every data file of
+    * the version into a claimed directory (subdirectories — hive layouts
+    * — kept), stage the `_schema.v<N>` sidecar, and publish strictly
+    * optimistically at seq+1 over the pinned marker (the [[compact]]
+    * discipline: a layout/metadata change must never clobber a concurrent
+    * data commit). Deriving the schema from the head the CAS commits over
+    * is what keeps a concurrent ADD COLUMN from being lost and a
+    * concurrent DROP COLUMN from being resurrected. Returns false on a
+    * lost race — nothing changed; rerun. */
+  private def evolveTo(table: String, txnTag: Option[String])(
+      evolve: (Path, StructType) => StructType): Boolean = {
     val pinned = head(table)
+    val base = snapshotDir(table, pinned.version)
+    // the form a read of the version reports: every column nullable
+    val newSchema = evolve(base,
+      org.apache.spark.sql.GraftBridge.asNullable(schemaOf(table, pinned)))
     transact(table, pinned, checkTag(txnTag), GiveUp) { (_, claimed) =>
-      linkSnapshot(snapshotDir(table, pinned.version), claimed, withDv = true)
+      linkSnapshot(base, claimed, withDv = true)
       Staged(Exactly(Some(newSchema)))
     }.isDefined
   }
@@ -2012,7 +1999,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     * rebuilt in one grouped job for the rest. Returns the number of
     * files covered. */
   def analyze(table: String, parallelism: Int = 8): Int =
-    publishStats(table, Nil, parallelism)._1
+    publishStats(table, head(table), Nil, parallelism)._1
 
   /** Opt `columns` into per-file BLOOM FILTERS for equality skipping —
     * the point-lookup complement of footer min/max, which is near-useless
@@ -2037,7 +2024,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(columns.nonEmpty, s"analyzeBloom($table): no columns")
     require(columns.distinct.length == columns.length,
       s"analyzeBloom($table): duplicate columns in ${columns.mkString(",")}")
-    val schema = read(table).schema
+    val m = head(table)
+    val schema = schemaOf(table, m)
     columns.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"analyzeBloom($table): no column '$c'")
@@ -2049,7 +2037,7 @@ final class TableStore(private[graft] val spark: SparkSession,
           "blooms cover integral and string columns (their cast-to-string " +
           "form is canonical across physical widths)")
     }
-    publishStats(table,
+    publishStats(table, m,
       columns.map(FileStats.BloomSpec(_, expectedItemsPerFile, fpp)),
       parallelism)._2
   }
@@ -2058,11 +2046,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     * blooms donated by relPath (immutable bytes — hard-linked and
     * untouched files keep their filters for free), missing ones rebuilt
     * per the union of recorded + newly added specs, then one atomic
-    * sidecar write. Returns (files covered, files fully bloom-covered). */
-  private def publishStats(table: String,
+    * sidecar write for pinned marker `m`. Returns (files covered, files
+    * fully bloom-covered). */
+  private def publishStats(table: String, m: Marker,
       addSpecs: Seq[FileStats.BloomSpec], parallelism: Int): (Int, Int) = {
-    val v = headVersion(table)
-    val base = resolve(table)
+    val base = snapshotDir(table, m.version)
     val conf = spark.sessionState.newHadoopConf()
     val stats = pooled(dataFiles(base), parallelism)(
       FileStats.ofFile(conf, base, _))
@@ -2078,8 +2066,8 @@ final class TableStore(private[graft] val spark: SparkSession,
         .getOrElse(Map.empty)))
     val done =
       if (specs.isEmpty) carried
-      else attachBlooms(table, v, base, carried, specs)
-    FileStats.write(statsPath(table, v), done, specs)
+      else attachBlooms(table, m, carried, specs)
+    FileStats.write(statsPath(table, m.version), done, specs)
     (done.length,
       done.count(fs => specs.forall(s => fs.blooms.contains(s.column))))
   }
@@ -2091,32 +2079,29 @@ final class TableStore(private[graft] val spark: SparkSession,
       .lastOption
 
   /** Build missing per-file blooms in ONE job: group the files' rows by
-    * `input_file_name()` and aggregate every configured column's filter
-    * at once ([[graft.functions.BloomOps.bloom_build_agg]]). An empty
-    * file yields no group → no filter → kept conservatively. */
-  private def attachBlooms(table: String, v: Int, base: Path,
+    * their relPath and aggregate every configured column's filter at once
+    * ([[graft.functions.BloomOps.bloom_build_agg]]). The scan keeps
+    * deleted rows: a filter describes its file's bytes, which later
+    * versions share by relPath. An empty file yields no group → no filter
+    * → kept conservatively. */
+  private def attachBlooms(table: String, m: Marker,
       stats: Seq[FileStats.FileStat],
       specs: Seq[FileStats.BloomSpec]): Seq[FileStats.FileStat] = {
-    import org.apache.spark.sql.functions.{input_file_name, xxhash64}
+    import org.apache.spark.sql.functions.xxhash64
     val missing = stats.filter(fs =>
       specs.exists(s => !fs.blooms.contains(s.column)))
     if (missing.isEmpty) return stats
-    val rd = declaredSchemaOf(table, v) match {
-      case Some(st) => spark.read.schema(st)
-      case None => spark.read
-    }
-    val df = rd.option("basePath", base.toString)
-      .parquet(missing.map(fs => base.resolve(fs.relPath).toString): _*)
+    val base = snapshotDir(table, m.version)
+    val df = scan(table, m, missing.map(fs => base.resolve(fs.relPath)),
+      positions = true, live = false)
     val aggs = specs.map(s => graft.functions.BloomOps.bloom_build_agg(
       xxhash64(col(s.column).cast("string")), s.items, s.fpp)
       .as(s"__b_${s.column}"))
-    val built = df.groupBy(input_file_name().as("__f"))
+    val built = df.groupBy(col(DvRel))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map { r =>
-        val rel = base.relativize(
-          Paths.get(new java.net.URI(r.getString(0)).getPath)).toString
-        rel -> specs.zipWithIndex.flatMap { case (s, i) =>
+        r.getString(0) -> specs.zipWithIndex.flatMap { case (s, i) =>
           Option(r.get(i + 1))
             .map(b => s.column -> b.asInstanceOf[Array[Byte]])
         }.toMap
@@ -2127,67 +2112,59 @@ final class TableStore(private[graft] val spark: SparkSession,
     })
   }
 
+  /** Pinned marker `m`'s data files, and those of them whose stats
+    * sidecar entry can match every pred — every file when the version
+    * has no sidecar or a file has no entry (post-analyze appends). */
+  private def skipping(table: String, m: Marker,
+      preds: Seq[FileStats.Pred]): (Seq[Path], Seq[Path]) = {
+    val base = snapshotDir(table, m.version)
+    val stats = FileStats.load(statsPath(table, m.version))
+    val all = dataFiles(base)
+    (all.filter(p => stats.get(base.relativize(p).toString)
+      .forall(fs => preds.forall(FileStats.mightMatch(fs, _)))), all)
+  }
+
   /** (files kept, files total) under `preds` for the current version —
     * the spec- and plan-level evidence that skipping engages. */
   def pruneInfo(table: String, preds: Seq[FileStats.Pred]): (Int, Int) = {
-    val base = resolve(table)
-    val all = dataFiles(base)
-    val stats = FileStats.load(statsPath(table, headVersion(table)))
-    val kept = all.count { p =>
-      stats.get(base.relativize(p).toString)
-        .forall(fs => preds.forall(FileStats.mightMatch(fs, _)))
-    }
-    (kept, all.length)
+    val (kept, all) = skipping(table, head(table), preds)
+    (kept.length, all.length)
   }
 
   /** Data-skipping read: `read(table).filter(preds)` with file-level
-    * pruning — only files whose footer ranges can match the conjunction
-    * are opened; the full predicate is ALWAYS re-applied as a residual
-    * filter, so results are identical to the unpruned scan by
-    * construction. Files without sidecar coverage (post-analyze appends,
-    * unsupported column types) are kept conservatively. At 100 TB this —
-    * with [[cluster]] laying files out disjointly — is what turns a
-    * selective query from a table scan into a handful of file reads. */
+    * pruning — [[scan]] of the head it pins, restricted to the files
+    * [[pruneInfo]] counts as kept (footer ranges and blooms that can
+    * match the conjunction). The full predicate is ALWAYS re-applied as a
+    * residual filter, so results are identical to the unpruned scan by
+    * construction; when nothing is pruned the scan is the whole version,
+    * exactly as `read` plans it. At 100 TB this — with [[cluster]] laying
+    * files out disjointly — is what turns a selective query from a table
+    * scan into a handful of file reads. */
   def readWhere(table: String, preds: Seq[FileStats.Pred]): DataFrame = {
-    val residual = preds.map(FileStats.toColumn)
-      .reduceOption(_ && _).getOrElse(org.apache.spark.sql.functions.lit(true))
-    val base = resolve(table)
-    val stats = FileStats.load(statsPath(table, headVersion(table)))
-    if (stats.isEmpty) return read(table).filter(residual)
-    val kept = dataFiles(base).filter { p =>
-      stats.get(base.relativize(p).toString)
-        .forall(fs => preds.forall(FileStats.mightMatch(fs, _)))
-    }
-    if (kept.isEmpty)
-      read(table).filter(org.apache.spark.sql.functions.lit(false))
-    else {
-      // basePath keeps hive partition-column derivation intact when the
-      // surviving files sit under key=value directories. The declared
-      // schema (when the table has evolved) rides along so pruned reads
-      // see the same columns as read(table).
-      val rd = declaredSchema(table) match {
-        case Some(st) => spark.read.schema(st)
-        case None => spark.read
-      }
-      val scan = rd.option("basePath", base.toString)
-        .parquet(kept.map(_.toString): _*)
-      val live = // pruned reads subtract the deletion vector too
-        if (Files.isDirectory(dvDir(base)))
-          withRowPos(base, scan).drop(DvRel, DvPos)
-        else scan
-      live.filter(residual)
-    }
+    val residual = preds.map(FileStats.toColumn).reduceOption(_ && _)
+      .getOrElse(lit(true))
+    val m = head(table)
+    val (kept, all) = skipping(table, m, preds)
+    if (kept.length == all.length) scan(table, m).filter(residual)
+    else if (kept.isEmpty) scan(table, m).filter(lit(false))
+    else scan(table, m, kept).filter(residual)
   }
 
   /** Metadata-only COUNT(*): sum of footer row counts over the current
     * version's files — O(files), no Spark job, no data read. The
     * versioned layout makes this sound: a snapshot's files are immutable,
     * so footer counts ARE the row count. */
-  def countRows(table: String, parallelism: Int = 8): Long = {
-    val base = resolve(table)
+  def countRows(table: String, parallelism: Int = 8): Long =
+    rowCount(snapshotDir(table, headVersion(table)), parallelism)
+
+  /** [[countRows]] of the version in `base`: footer row counts minus the
+    * rows its deletion vector names (DV footers). */
+  private def rowCount(base: Path, parallelism: Int = 8): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    pooled(dataFiles(base), parallelism)(
-      FileStats.rowCount(conf, _)).sum - dvRowCount(base)
+    def rows(files: Seq[Path]) =
+      pooled(files, parallelism)(FileStats.rowCount(conf, _)).sum
+    rows(dataFiles(base)) -
+      (if (Files.isDirectory(dvDir(base))) rows(dataFiles(dvDir(base))) else 0L)
   }
 
   /** Metadata-only MIN/MAX of one column over the current version:
@@ -2200,12 +2177,13 @@ final class TableStore(private[graft] val spark: SparkSession,
     * Returns (kind, min, max) in [[FileStats]] canonical string form. */
   def minMax(table: String, column: String,
       parallelism: Int = 8): Option[(FileStats.Kind, String, String)] = {
-    val base = resolve(table)
+    val v = headVersion(table)
+    val base = snapshotDir(table, v)
     // A deletion vector may have deleted the extreme row itself — footer
     // stats still include it, so a metadata answer would be wrong, not
     // just stale. Fall back to a scan (None).
     if (Files.isDirectory(dvDir(base))) return None
-    val sidecar = FileStats.load(statsPath(table, headVersion(table)))
+    val sidecar = FileStats.load(statsPath(table, v))
     val conf = spark.sessionState.newHadoopConf()
     val files = dataFiles(base)
     if (files.isEmpty) return None
@@ -2240,7 +2218,7 @@ final class TableStore(private[graft] val spark: SparkSession,
   def cluster(table: String, column: String, partitions: Int,
       txnTag: Option[String] = None): Boolean =
     transact(table, head(table), checkTag(txnTag), GiveUp) { (base, claimed) =>
-      readSnapshot(table, base)
+      scan(table, base)
         .repartitionByRange(partitions, col(column))
         .sortWithinPartitions(col(column))
         .write.mode(SaveMode.Append).parquet(claimed.toString)
@@ -2271,7 +2249,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     // cannot be cached to serve its own rewrite. Unpersisted, Catalyst
     // prunes the quantile scan to the key columns and the rewrite
     // streams the full rows exactly once.
-    val laid = zOrdered(readSnapshot(table, pinned), columns, partitions)
+    val laid = zOrdered(scan(table, pinned), columns, partitions)
     transact(table, pinned, checkTag(txnTag), GiveUp) { (_, claimed) =>
       laid.write.mode(SaveMode.Append).parquet(claimed.toString)
       Staged(Carried, analyze = true)
@@ -2286,7 +2264,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(!isView(table),
       s"cannot DROP TABLE '$table': it is a logical view — use DROP VIEW")
     // A base with dependent MVs cannot silently vanish: every later
-    // readMaterialized would throw deep in resolve, far from this DROP.
+    // readMaterialized would throw deep in its base scan, far from this DROP.
     // BigQuery errors the same way; drop (or re-pin) the views first.
     val dependents = tables().filter(t => t != table &&
       isMaterializedView(t) && readMvDef(t).base == table)
@@ -2319,7 +2297,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     require(exists(table), s"TRUNCATE TABLE $table: table does not exist")
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      currentSchema(table))
+      schemaOf(table, head(table)))
     commitRewrite(table, empty, None)
   }
 
@@ -2337,9 +2315,10 @@ final class TableStore(private[graft] val spark: SparkSession,
     // would otherwise shadow this message with "table does not exist"
     require(!isView(table),
       s"cannot RENAME '$table': it is a logical view")
-    require(exists(table), s"RENAME $table: table does not exist")
+    val m = head(table)
+    require(m.version > 0, s"RENAME $table: table does not exist")
     requireNotMv(table, "RENAME")
-    requireWritable(table) // snapshots refuse namespace writes too
+    requireWritable(table, m) // snapshots refuse namespace writes too
     // a live change-feed consumer holds the ABSOLUTE _feed path; the
     // atomic directory move would strand it mid-stream (the same reason
     // truncate/restore/deleteRows refuse feed-enabled tables)

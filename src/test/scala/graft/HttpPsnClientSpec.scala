@@ -147,7 +147,9 @@ class HttpPsnClientSpec extends AnyFunSuite {
   }
 
   /** A fixture `/profile` answering `statuses` in turn, then 200 with the
-    * profile; returns the fetch's outcome and how many requests arrived. */
+    * profile; returns the fetch's outcome and how many requests arrived.
+    * Status 0 closes the exchange before any response: the client sees
+    * the connection drop, an IOException. */
   private def flaky(statuses: Int*): (scala.util.Try[TrophySummary], Int) = {
     val hits = new java.util.concurrent.atomic.AtomicInteger()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
@@ -155,9 +157,11 @@ class HttpPsnClientSpec extends AnyFunSuite {
       val i = hits.getAndIncrement()
       val (code, body) =
         if (i < statuses.length) (statuses(i), "{}") else (200, profileJson)
-      val bytes = body.getBytes("UTF-8")
-      ex.sendResponseHeaders(code, bytes.length)
-      ex.getResponseBody.write(bytes)
+      if (code != 0) {
+        val bytes = body.getBytes("UTF-8")
+        ex.sendResponseHeaders(code, bytes.length)
+        ex.getResponseBody.write(bytes)
+      }
       ex.close()
     })
     server.start()
@@ -173,6 +177,41 @@ class HttpPsnClientSpec extends AnyFunSuite {
     assert(ok.get == fake.profileTrophies() && n == 3)
     val (ok2, n2) = flaky(429, 503)
     assert(ok2.get == fake.profileTrophies() && n2 == 3)
+  }
+
+  test("a connection dropped before any response is retried until the fetch succeeds") {
+    // java.net.http re-sends an idempotent request once by itself when the
+    // connection closes before the status line, so one attempt of the
+    // client is two dropped exchanges
+    val (ok, n) = flaky(0, 0)
+    assert(ok.get == fake.profileTrophies() && n == 3)
+  }
+
+  test("a page that repeats its own nextOffset fails the fetch instead of paging forever") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    // offset 0 pages on to 2; the page at 2 names 2 again
+    server.createContext("/titles", (ex: HttpExchange) => {
+      val offset = ex.getRequestURI.getQuery.split("&")
+        .collectFirst { case p if p.startsWith("offset=") => p.drop(7).toInt }.get
+      val body = titlesPage(offset, 2)
+        .replace("\"nextOffset\":null", s"\"nextOffset\":$offset")
+        .getBytes("UTF-8")
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    server.start()
+    try {
+      val client = new HttpPsnClient(
+        s"http://127.0.0.1:${server.getAddress.getPort}", "tok", pageSize = 2)
+      val err = TimeLimits.failAfter(10.seconds) {
+        intercept[IllegalStateException](client.titleStats())
+      }
+      assert(err.getMessage.contains("nextOffset 2"), err.getMessage)
+    } finally server.stop(0)
   }
 
   test("a persistent 5xx fails after the fixed number of attempts") {

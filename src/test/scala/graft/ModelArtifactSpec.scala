@@ -105,6 +105,29 @@ class ModelArtifactSpec extends AnyFunSuite {
         case (q, (got, want)) =>
           assert(got == want, s"$q served a model of the old corpus")
       }
+      // the rebuilds' GC aged the first build's versions out, and every
+      // version-keyed sidecar with them: beside the commit log, a table
+      // root holds only version directories and `_<name>.v<N>` sidecars
+      // of versions still on disk
+      def entries(p: Path): Seq[Path] = {
+        val s = Files.list(p)
+        try s.iterator().asScala.toSeq finally s.close()
+      }
+      val VersionDir = "v(\\d+)".r
+      val Sidecar = "_\\w+\\.v(\\d+)".r
+      val tables = entries(Paths.get(root)).flatMap(entries)
+      assert(tables.nonEmpty)
+      tables.foreach { t =>
+        val names = entries(t).map(_.getFileName.toString)
+        val onDisk = names.collect { case VersionDir(v) => v }.toSet
+        names.filterNot(n => n == "_current" || n.matches("_commit\\.\\d+"))
+          .foreach {
+            case VersionDir(_) => ()
+            case n @ Sidecar(v) =>
+              assert(onDisk(v), s"$t: sidecar $n outlived its version")
+            case n => fail(s"$t: $n is neither a version nor a version-keyed sidecar")
+          }
+      }
     }
   }
 }
