@@ -1349,7 +1349,7 @@ object TextOps {
     * composes with partition pruning, not just with full scans.
     *
     * Scale shape: retirement is the 100 TB takedown path (GDPR erasure,
-    * licence recall) — O(deleted) vector bytes + O(files) links; the
+    * licence recall) — O(deleted) vector bytes + one manifest; the
     * probe stays O(increment + touched buckets) with the vector
     * anti-join folded into the pruned scan. */
   def t61IngestTombstones(s: SparkSession, dir: String): DataFrame = {

@@ -694,8 +694,8 @@ object Relational2 {
   /** q65: compaction (OPTIMIZE) end-to-end — seed + three appends
     * fragment the table (each write lands one file per task), the
     * store's bin-packing compactor ([[graft.psn.TableStore.compact]]:
-    * first-fit-decreasing by on-disk size, hard-links already-big
-    * files, CAS-commits a new version) consolidates it, and the gate
+    * first-fit-decreasing by on-disk size, inherits already-big files
+    * by name, CAS-commits a new version) consolidates it, and the gate
     * reads the compacted table back: the hash proves compaction changes
     * LAYOUT and never content — the property CompactSpec asserts on
     * synthetic data, here gated against the oracle on the real corpus.

@@ -116,9 +116,9 @@ object Sql {
 
   /** DELETE FROM <t> WHERE <any other predicate> as a DELETION-VECTOR
     * commit ([[graft.psn.TableStore.deleteRows]]): one scan finds the
-    * condemned rows' (file, position) pairs, the commit hard-links every
-    * data file — zero data rewritten, which is what a row-level DELETE
-    * must cost on a 100 TB table. Returns the deleted-row count; the
+    * condemned rows' (file, position) pairs, the commit inherits every
+    * data file by name — zero data rewritten, which is what a row-level
+    * DELETE must cost on a 100 TB table. Returns the deleted-row count; the
     * count covers only this deletion-vector route, so a `k IN (SELECT …)`
     * condition, which takes [[runDelete]]'s tombstone rewrite, reports 0
     * whatever it removed. */

@@ -262,16 +262,16 @@ object Storage {
 
   /** q74: metadata-only ADD COLUMN end-to-end — CTAS seeds a two-column
     * table, the ALTER TABLE script verb widens it WITHOUT rewriting a
-    * byte ([[TableStore.addColumn]] hard-links the files and publishes a
-    * declared-schema sidecar), and a post-evolution INSERT writes the
-    * full three-column shape into the SAME version directory. The
+    * byte ([[TableStore.addColumn]] inherits the files by name and
+    * publishes a declared-schema sidecar), and a post-evolution INSERT
+    * writes the full three-column shape into the new version's directory. The
     * read-back therefore crosses files with two different physical
     * schemas, and the oracle's UNION (old rows with a NULL channel, new
     * rows with 'replay') hash-gates exactly the null-backfill semantics
     * the declared schema promises.
     *
-    * Scale shape: the ALTER costs O(files) link(2) calls + one tiny
-    * sidecar — at 100 TB that is the difference between a DDL statement
+    * Scale shape: the ALTER costs one manifest naming the files + one
+    * tiny sidecar — at 100 TB that is the difference between a DDL statement
     * and a day-long table rewrite. The in-query require pins the claim
     * that no data file was rewritten by the evolution commit itself. */
   def q74AddColumn(s: SparkSession, dir: String): DataFrame = {
@@ -315,7 +315,7 @@ object Storage {
     * recomputes the same report over the raw table + the appended rows —
     * hash equality proves the dropped column influences nothing.
     *
-    * Scale shape: same O(files) link commit as q74; the residue purges
+    * Scale shape: same inheriting commit as q74; the residue purges
     * on the next natural rewrite (OPTIMIZE/merge), not on the DDL. */
   def q75DropColumn(s: SparkSession, dir: String): DataFrame = {
     val wh = java.nio.file.Files
@@ -447,16 +447,15 @@ object Storage {
       |ORDER BY doc_id""".stripMargin
 
   /** q78: row-level DELETE via DELETION VECTORS — the statement rewrites
-    * NOTHING: the commit hard-links every data file (the in-query require
-    * pins identical file counts and byte-identity via the store's link
-    * discipline) and publishes a (file, row-position) vector every read
-    * subtracts. Two successive DELETEs prove vector MERGING; the
+    * NOTHING: the commit inherits every data file by name (the in-query
+    * require pins identical file counts) and publishes a (file,
+    * row-position) vector every read subtracts. Two successive DELETEs prove vector MERGING; the
     * metadata-only COUNT is checked against the live read inside the
     * query (footer rows minus vector rows); the oracle recomputes the
     * survivor aggregate declaratively.
     *
     * Scale shape: DELETE on 100 TB costs one scan (to find positions) +
-    * O(files) links + O(deleted) vector bytes — not a table rewrite; the
+    * O(1) file operations + O(deleted) vector bytes — not a table rewrite; the
     * deletes materialize for free on the next natural rewrite (OPTIMIZE /
     * merge), which also purges the vector. */
   def q78DvDelete(s: SparkSession, dir: String): DataFrame = {
@@ -474,7 +473,7 @@ object Storage {
         |DELETE FROM `graft-project.store.order_state`
         |  WHERE o_orderkey % 10 = 0;""".stripMargin)
     require(store.fileCount("order_state") == filesBefore,
-      "DV delete rewrote data files — it must be link + vector only")
+      "DV delete rewrote data files — it must inherit them by name")
     val live = store.read("order_state")
     require(store.countRows("order_state") == live.count(),
       "metadata COUNT must subtract the deletion vector")
@@ -596,8 +595,8 @@ object Storage {
     * proves the rollback erased the delete's effect exactly, while the
     * bad commit stays a retained, inspectable version.
     *
-    * Scale shape: rollback on 100 TB is O(files) link(2) + sidecar
-    * copies, never a data rewrite; BigQuery spells the same recovery
+    * Scale shape: rollback on 100 TB is one manifest naming the
+    * snapshot's files + a sidecar copy, never a data rewrite; BigQuery spells the same recovery
     * CREATE TABLE AS SELECT … FOR SYSTEM_TIME AS OF (which re-writes),
     * Delta spells it RESTORE — the store gives Delta's cost. */
   def q81Restore(s: SparkSession, dir: String): DataFrame = {
@@ -615,7 +614,7 @@ object Storage {
       s"RESTORE TABLE `graft-project.store.order_state` " +
         s"TO VERSION AS OF $v1;")
     require(store.fileCount("order_state") == filesBefore,
-      "RESTORE rewrote data files — it must be link + sidecar only")
+      "RESTORE rewrote data files — it must inherit them by name")
     require(store.countRows("order_state") ==
       store.read("order_state").count(),
       "restored head's metadata COUNT must match the live read")
@@ -683,9 +682,9 @@ object Storage {
     *
     * Scale shape: the clone is O(files) hard links — on a 100 TB table
     * an instant metadata commit where a copy would be a cluster-day;
-    * independent evolution afterwards is free because committed version
-    * directories are immutable and GC is per-table (shared inodes live
-    * until the LAST referrer ages out). */
+    * independent evolution afterwards is free because committed files are
+    * immutable and GC is per-table (shared inodes live until the LAST
+    * referrer ages out). */
   def q83SnapshotClone(s: SparkSession, dir: String): DataFrame = {
     val wh = java.nio.file.Files
       .createTempDirectory("graft_clone_wh").toString

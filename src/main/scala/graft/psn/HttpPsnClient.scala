@@ -82,7 +82,10 @@ final class HttpPsnClient private[graft] (
     // Every request is an idempotent GET, so a throttled (429), failing
     // (5xx) or failed-in-transport attempt (timed out, refused, reset:
     // any IOException) is retried, up to MaxAttempts with a doubling
-    // backoff; any other status fails at once.
+    // backoff; any other status fails at once. java.net.http itself
+    // re-sends an idempotent GET once when the connection closes before
+    // the status line, so one request reaches the upstream in at most
+    // 2 × MaxAttempts exchanges.
     @annotation.tailrec
     def attempt(n: Int): HttpResponse[String] = {
       val resp =
@@ -171,7 +174,10 @@ object HttpPsnClient {
     * `graft`-private constructor. */
   private val RequestTimeout = java.time.Duration.ofSeconds(10)
 
-  /** Attempts per request, and the first retry's wait (doubling after). */
+  /** Attempts per request, and the first retry's wait (doubling after).
+    * An attempt is one `HttpClient.send`, which re-sends a GET once by
+    * itself when the connection drops before the status line: at most
+    * 2 × `MaxAttempts` exchanges per request. */
   private val MaxAttempts = 3
   private val BackoffMillis = 250L
 }

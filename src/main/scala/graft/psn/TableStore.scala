@@ -16,14 +16,24 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * stale-rows + delta combine in [[TableStore.readMaterialized]] sound. */
 final case class MvAgg(out: String, func: String, in: String)
 
-/** Sink abstraction (SURVEY §2.2 K1-K6) over a parquet warehouse directory.
+/** Sink abstraction (SURVEY §2.2 K1-K6) over a parquet warehouse directory:
+  * append = K1/K2 (`insert_rows_from_dataframe` / WRITE_APPEND loads),
+  * overwrite = K3 (WRITE_TRUNCATE), merge = K4 (`UPDATE … FROM temp`, which
+  * the reference runs inside BigQuery's transactional DML; here the commit
+  * protocol below gives the same semantics), drop = K5.
   *
-  * append  = K1/K2 (`insert_rows_from_dataframe` / WRITE_APPEND loads)
-  * overwrite = K3 (WRITE_TRUNCATE)
-  * merge   = K4 (`UPDATE … FROM temp` — the reference runs it inside
-  *           BigQuery's transactional DML; here the same semantics come from
-  *           the commit protocol below)
-  * drop    = K5 (`delete_table(not_found_ok=True)`)
+  * == Versions ==
+  *
+  * Version N is a list of immutable files ([[filesOf]]): those under its
+  * own `v<N>/` directory — where its writer put them, and where later
+  * in-place appends add theirs — plus those its commit INHERITS, named in
+  * the claim's `_inherited` manifest by their path relative to the table
+  * root (the Delta Lake design: a version names files, it never copies or
+  * links them). A commit that keeps its base's files therefore costs O(1)
+  * file operations whatever the table's size. Everything that names a
+  * file — deletion-vector entries, stats and Bloom sidecar entries, a
+  * materialized view's covered set — uses that same root-relative path,
+  * valid in every version that inherits the file.
   *
   * == Commit protocol ==
   *
@@ -31,9 +41,10 @@ final case class MvAgg(out: String, func: String, in: String)
   *
   *   1. claim `<table>/v<X>/` via atomic `createDirectory` (two racing
   *      writers cannot claim the same version directory);
-  *   2. run the verb's STAGE function, which fills the claim (a full
-  *      rewrite, hard links to the base's files plus new ones, a deletion
-  *      vector, …) and reports the new version's declared schema;
+  *   2. run the verb's STAGE function, which fills the claim (new files,
+  *      base files inherited by name, a deletion vector, …) and reports
+  *      the declared schema and the inherited files, which the claim's
+  *      manifest names before the publish (empty when it inherits none);
   *   3. COMPARE-AND-SWAP on the commit log: publish `<table>/_commit.<S+1>`
   *      (content `v<X>`, the commit time, an optional transaction tag),
   *      where S is the seq of the base the stage read. The publish is
@@ -47,49 +58,41 @@ final case class MvAgg(out: String, func: String, in: String)
   *      and stats sidecars forward, seed the schema memo.
   *
   * Exactly one writer can own seq S+1. A loser follows its verb's
-  * [[LostRace]] policy:
-  *   - REBASE — the content does not depend on the base (overwrite, first
-  *     write, clone, transactions): publish the same claim at the next
-  *     free seq;
-  *   - RE-APPLY — the content was derived from the base (merges, committed
-  *     appends): discard the claim and re-stage on the new head, so no
-  *     update is lost; throw after repeated losses;
-  *   - GIVE UP — a layout or metadata change over a pinned base (compact,
-  *     cluster, evolution, restore, row deletes): discard the claim and
-  *     report the loss; nothing changed, rerun.
+  * [[LostRace]] policy: REBASE (overwrite, first write, clone,
+  * transactions) publishes the same claim at the next free seq; RE-APPLY
+  * (merges, committed appends) re-stages on the new head, so no update is
+  * lost, and throws after repeated losses; GIVE UP (compact, cluster,
+  * evolution, restore, row deletes) discards the claim — nothing changed.
   *
   * The marker log is the source of truth: readers resolve the HIGHEST
   * `_commit.<seq>`'s content at DataFrame creation; `_current` is a
   * human-readable hint only. Consequences:
   *   - a reader mid-commit sees exactly the old or the new version, never a
-  *     mix (the two directories are disjoint);
-  *   - a crash anywhere before step 3 leaves the log — and thus the
-  *     table — untouched; the orphaned claim is swept by a later commit's
-  *     GC or by [[vacuum]]. There is NO wedged state: an unpublished claim
-  *     blocks nobody (versions are sparse), and a published marker is
-  *     complete by construction;
+  *     mix: committed files are immutable, and a commit names the old
+  *     files it keeps instead of touching them;
+  *   - a crash anywhere before step 3 leaves the table untouched; the
+  *     orphaned claim is swept by a later commit's GC or by [[vacuum]].
+  *     There is NO wedged state: an unpublished claim blocks nobody
+  *     (versions are sparse), and a published marker is complete;
   *   - an in-flight reader of the previous version keeps its snapshot: GC
   *     retains one version behind the head (readers are assumed to finish
-  *     within one upstream commit — tighten by widening the window).
+  *     within one upstream commit) and deletes a file only once no
+  *     retained version names it.
   *
   * == Reads ==
   *
   * Every read-side verb pins ONE marker — `head(table)` once, or the
   * marker of a retained version — and takes everything it reads from it:
-  * the version directory, its data files, its schema (the `_schema.v<N>`
-  * sidecar, else the commit's memoized footer schema), its deletion
-  * vector and its stats sidecar. Every row it reads goes through one
-  * scan of that marker ([[scan]]), whole-version or restricted to some
-  * of its files, so a verb never mixes two versions and every reader
+  * the version's files, its schema (the `_schema.v<N>` sidecar, else the
+  * commit's memoized footer schema), its deletion vector and its stats
+  * sidecar. Every row it reads goes through one scan of that marker
+  * ([[scan]]), so a verb never mixes two versions and every reader
   * subtracts deletes and null-fills evolved columns the same way.
   *
   * Appends to an existing table do not commit: they write new part-files
-  * into the CURRENT version directory through Spark's job committer (task
-  * output lands in `_temporary` and is moved on job commit), so a crashed
-  * append leaves no visible rows either.
-  *
-  * The empty-append guard the reference needs (main.py:184) is a no-op here:
-  * appending an empty DataFrame writes no row files.
+  * into the CURRENT version directory through Spark's job committer, so a
+  * crashed append leaves no visible rows either; an empty append writes no
+  * row files (the reference's guard, main.py:184, is a no-op here).
   */
 final class TableStore(private[graft] val spark: SparkSession,
     warehouse: String) {
@@ -103,6 +106,7 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def pointer(table: String): Path = dir(table).resolve("_current")
 
   private val MarkerName = "_commit\\.(\\d+)".r
+  private val VersionDir = "v(\\d+)".r
   /** A sidecar keyed to version N, beside the log: `_<name>.v<N>`. */
   private val VersionSidecar = "_\\w+\\.v(\\d+)".r
 
@@ -236,39 +240,29 @@ final class TableStore(private[graft] val spark: SparkSession,
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** THE scan of pinned marker `m`: `paths` (files or directories of its
-    * version; the whole version when empty) under the version's schema
-    * ([[schemaOf]]), with the version directory as `basePath` so hive
-    * partition columns surface on every read, minus the version's
-    * DELETION VECTOR when one exists ([[deleteRows]]). The explicit
-    * schema is what makes metadata-only evolution sound: after an ADD
-    * COLUMN one version directory legitimately holds files WITH and
-    * WITHOUT the new column (evolution hard-links old files; later
-    * appends write the full schema), and Spark's reader null-fills
-    * missing columns and projects away undeclared ones, per file.
-    *
-    * `positions` keeps the file-relative path and in-file row index
-    * ([[DvRel]], [[DvPos]]) — [[deleteRows]] records them,
-    * [[attachBlooms]] groups by the path. `_metadata.row_index` is stable
-    * for immutable files, and relPath (not the absolute URI) is the key
-    * because hard-link commits move the same bytes between version
-    * directories. `live = false` skips the DV subtraction: a bloom built
-    * over a file describes its bytes, which outlive any one version's
-    * vector (a RESTORE can bring deleted rows back). */
+  /** THE scan of pinned marker `m`: `paths` (some of its data files; all
+    * of them when empty) under the version's schema ([[schemaOf]]) —
+    * which makes metadata-only evolution sound: Spark null-fills missing
+    * columns and projects away undeclared ones per file — minus its
+    * DELETION VECTOR when it has one ([[deleteRows]]). `positions` keeps
+    * each row's file path relative to the table root and in-file row
+    * index ([[DvRel]], [[DvPos]]): stable for immutable files, and the
+    * same in every version that inherits the file. `live = false` skips
+    * the DV subtraction: a bloom built over a file describes its bytes,
+    * which outlive any one version's vector. */
   private def scan(table: String, m: Marker, paths: Seq[Path] = Nil,
       positions: Boolean = false, live: Boolean = true): DataFrame = {
     import org.apache.spark.sql.functions.expr
-    val base = snapshotDir(table, m.version)
-    val files = spark.read.schema(schemaOf(table, m))
-      .option("basePath", base.toString)
-      .parquet((if (paths.isEmpty) Seq(base) else paths).map(_.toString): _*)
-    val dv = if (live) dvOf(base) else None
+    val schema = schemaOf(table, m) // a missing table fails here
+    val vf = filesOf(table, m)
+    val files = parquetOf(table, schema, if (paths.isEmpty) vf.data else paths)
+    val dv = if (live) dvOf(table, vf) else None
     if (!positions && dv.isEmpty) files
     else {
       // Hadoop's Path rendering ("file:/tmp/…"), because that is the
       // format `_metadata.file_path` carries — java.nio's toUri
       // ("file:///tmp/…") would silently mangle every stored relPath.
-      val prefix = new org.apache.hadoop.fs.Path(base.toUri).toString
+      val prefix = new org.apache.hadoop.fs.Path(dir(table).toUri).toString
         .stripSuffix("/") + "/"
       val pos = files
         .withColumn(DvRel,
@@ -281,6 +275,23 @@ final class TableStore(private[graft] val spark: SparkSession,
       }
       if (positions) kept else kept.drop(DvRel, DvPos)
     }
+  }
+
+  /** `files` of `table` as one parquet relation under `schema`, a hive
+    * partition value being the `k=v` segment below a file's version
+    * directory. Spark gets the store's own listing, so planning launches
+    * no listing job however many directories a version's files span. */
+  private def parquetOf(table: String, schema: StructType,
+      files: Seq[Path]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val byVersion = files.groupBy(f => dir(table).relativize(f).getName(0))
+    org.apache.spark.sql.GraftBridge.parquetFiles(spark, schema,
+      files.map(f => dir(table).relativize(f).getName(0)).distinct.map { v =>
+        dir(table).resolve(v).toString -> byVersion(v).map { f =>
+          val p = new org.apache.hadoop.fs.Path(f.toUri)
+          p.getFileSystem(conf).getFileStatus(p)
+        }
+      })
   }
 
   /** A committed version's files are immutable and share one schema (the
@@ -298,19 +309,18 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** The schema of pinned marker `m`'s version WITHOUT planning a scan:
     * the declared `_schema.v<N>` sidecar when the table has evolved
-    * ([[addColumn]]/[[dropColumn]]), else ONE data file's footer, read
-    * with the version directory as `basePath` so hive partition columns
+    * ([[addColumn]]/[[dropColumn]]), else its FIRST data file's footer,
+    * read with the table root as `basePath` so hive partition columns
     * still surface. A whole-directory inference costs a leaf-listing job
     * per commit on wide layouts — pure fixed overhead in
     * commit-per-micro-batch loops. */
   private def schemaOf(table: String, m: Marker): StructType =
     declaredSchemaOf(table, m.version).getOrElse {
-      val base = snapshotDir(table, m.version)
-      // no data file (or no table): the directory, so a missing table
-      // fails as path-not-found and an empty one as Spark's own error
-      def infer = spark.read.option("basePath", base.toString).parquet(
-        (if (Files.isDirectory(base)) dataFiles(base).headOption else None)
-          .getOrElse(base).toString).schema
+      // no data file (or no table): the version directory, so a missing
+      // table fails as path-not-found and an empty one as Spark's own error
+      def infer = spark.read.option("basePath", dir(table).toString).parquet(
+        filesOf(table, m).data.headOption
+          .getOrElse(snapshotDir(table, m.version)).toString).schema
       if (m.seq <= 0) infer
       else schemaMemo.computeIfAbsent((table, m.seq, m.ts), _ => infer)
     }
@@ -326,42 +336,103 @@ final class TableStore(private[graft] val spark: SparkSession,
     Option(schemaMemo.get((table, m.seq, m.ts)))
   }
 
+  // ------------------------------------------- version files (_inherited)
+
+  /** A version's files, absolute: data files and deletion-vector files. */
+  private final case class VersionFiles(data: Seq[Path], dv: Seq[Path])
+
+  /** Stage claim `claimed`'s manifest: `rels`, relative to the table root. */
+  private def writeManifest(claimed: Path, rels: Seq[String]): Unit =
+    writeAtomically(claimed.resolve("_inherited"), rels.map(_ + "\n").mkString)
+
+  /** The paths version `v`'s manifest names; None when it cannot be read. */
+  private def inheritedOf(table: String, v: Int): Option[Seq[String]] =
+    try Some(Files.readString(snapshotDir(table, v).resolve("_inherited"))
+      .linesIterator.filter(_.nonEmpty).toSeq)
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** THE file set of pinned marker `m`'s version — every reader of a
+    * version's files goes through here. */
+  private def filesOf(table: String, m: Marker): VersionFiles =
+    if (m.version <= 0) VersionFiles(Nil, Nil)
+    else filesIn(table, m.version, inheritedOf(table, m.version).getOrElse(Nil))
+
+  /** Version `v`'s files when its manifest names `inherited`: those first,
+    * then the files under its own directory. */
+  private def filesIn(table: String, v: Int,
+      inherited: Seq[String]): VersionFiles = {
+    val (dv, data) = inherited.partition(_.split('/')(1) == "_dv")
+    VersionFiles(data.map(dir(table).resolve) ++ dataFiles(snapshotDir(table, v)),
+      dv.map(dir(table).resolve) ++ dataFiles(dvDir(snapshotDir(table, v))))
+  }
+
+  /** (data files, deletion-vector files) retained version `v` names. */
+  private[graft] def namedFiles(table: String, v: Int): (Seq[Path], Seq[Path]) = {
+    val vf = filesOf(table, markerOf(table, v))
+    (vf.data, vf.dv)
+  }
+
+  /** `f`'s directory below its version directory: "" for a flat file,
+    * the `k=v` segments for a hive partition. */
+  private def partitionPath(table: String, f: Path): String = {
+    val rel = dir(table).relativize(f)
+    if (rel.getNameCount <= 2) "" else rel.subpath(1, rel.getNameCount - 1).toString
+  }
+
+  /** THE inherit step: keep, by name, those of base marker `m`'s data
+    * files that `keep` selects, with the base's deletion-vector entries
+    * for exactly those — its vector files when every file is kept, else
+    * the kept files' entries written into the claim's `_dv/` — and, when
+    * the first file stays first, the base's memoized schema. */
+  private def inherit(table: String, m: Marker, claimed: Path,
+      keep: Path => Boolean = _ => true): Staged = {
+    val base = filesOf(table, m)
+    val kept = base.data.filter(keep)
+    val rel = (f: Path) => dir(table).relativize(f).toString
+    val dv =
+      if (kept.length == base.data.length) base.dv.map(rel)
+      else {
+        if (kept.nonEmpty) dvOf(table, base).foreach { d =>
+          import spark.implicits._
+          val carried = d.join(org.apache.spark.sql.functions.broadcast(
+            kept.map(rel).toDF("rel")), "rel").select(col("rel"), col("pos"))
+          if (!carried.isEmpty)
+            carried.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
+        }
+        Nil
+      }
+    val seed = if (kept.nonEmpty && kept.head == base.data.head)
+      Option(schemaMemo.get((table, m.seq, m.ts))) else None
+    Staged(Carried, inherited = kept.map(rel) ++ dv, seed = seed)
+  }
+
   // ----------------------------------------------- deletion vectors (_dv/)
 
-  /** The version-local deletion vector: a parquet dataset of (relPath,
-    * row_index) pairs naming rows every read of this snapshot must
-    * subtract. Bookkeeping (underscore), so [[dataFiles]] never sees it. */
+  /** A version's own deletion vector: parquet (rel, pos) pairs — a data
+    * file's path relative to the table root, a row index — naming rows
+    * every read subtracts. Bookkeeping, so [[dataFiles]] never sees it. */
   private def dvDir(versionDir: Path): Path = versionDir.resolve("_dv")
   private val DvRel = "__dv_rel"
   private val DvPos = "__dv_pos"
+  private val DvSchema = StructType(Seq(
+    StructField("rel", org.apache.spark.sql.types.StringType),
+    StructField("pos", org.apache.spark.sql.types.LongType)))
 
-  /** The deletion vector of the version in `versionDir` as (rel, pos)
-    * rows; None when the version has none. */
-  private def dvOf(versionDir: Path): Option[DataFrame] =
-    if (!Files.isDirectory(dvDir(versionDir))) None
-    else Some(spark.read.parquet(dvDir(versionDir).toString).toDF("rel", "pos"))
+  /** The deletion vector of files `vf` as (rel, pos) rows, if any. */
+  private def dvOf(table: String, vf: VersionFiles): Option[DataFrame] =
+    if (vf.dv.isEmpty) None else Some(parquetOf(table, DvSchema, vf.dv))
 
-  /** Row-level DELETE WITHOUT rewriting data — deletion vectors, the
-    * lakehouse answer to "a DELETE on a 100 TB table must not rewrite the
-    * table". One scan finds the matching rows' (file, position) pairs;
-    * the commit hard-links every data file unchanged and writes the
-    * merged vector as `_dv/` parquet in the new version — O(files) link
-    * metadata + O(deleted) vector bytes, zero data rewritten. Every read
-    * path subtracts the vector (an anti-join on (relPath, row_index) —
-    * positions are stable because files are immutable); rewriting
-    * commits (merge, overwrite, cluster) read through the same paths, so
-    * they materialize the deletes physically and the new version carries
-    * no vector — the natural purge. Time travel keeps each snapshot's own
-    * vector: the pre-delete version still shows the rows, and
-    * [[diffVersions]] reports them as removed.
-    *
-    * Successive deletes union (the new scan runs on the already-filtered
-    * logical table, so entries never duplicate). A delete matching
-    * nothing commits nothing and returns 0. Refused on change-feed
-    * tables: the feed streams raw appended files and its consumers could
-    * not observe the subtraction.
-    *
-    * Returns the number of rows deleted. */
+  /** Row-level DELETE WITHOUT rewriting data — deletion vectors. One scan
+    * finds the matching rows' (file, position) pairs; the commit inherits
+    * every data file and the base's vector, and writes the new pairs as
+    * one `_dv/` file: O(1) file operations + O(deleted) vector bytes.
+    * Every read subtracts the vector; rewriting commits (merge,
+    * overwrite, cluster) read through it, so they materialize the deletes
+    * and carry no vector — the natural purge. Time travel keeps each
+    * snapshot's own vector. Successive deletes union (the new scan runs
+    * on the already-filtered table, so entries never duplicate). A delete
+    * matching nothing commits nothing. Refused on change-feed tables: the
+    * feed streams raw appended files. Returns the number of rows deleted. */
   def deleteRows(table: String, condition: org.apache.spark.sql.Column,
       txnTag: Option[String] = None): Long = {
     val pinned = head(table)
@@ -370,7 +441,6 @@ final class TableStore(private[graft] val spark: SparkSession,
     requireNotMv(table, "deleteRows")
     requireNoFeed(table, "deleteRows")
     checkTag(txnTag)
-    val base = snapshotDir(table, pinned.version)
     val hits = scan(table, pinned, positions = true).filter(condition)
       .select(col(DvRel).as("rel"), col(DvPos).as("pos"))
       .persist()
@@ -383,43 +453,23 @@ final class TableStore(private[graft] val spark: SparkSession,
         org.apache.spark.sql.functions.min(col("rel"))).first
       val n = probe.getLong(0)
       if (n == 0) return 0L
-      // relPaths are join keys across commits (compact carry, reads after
-      // link commits) — a scheme-mangled prefix would be consistent within
-      // one version but break every cross-commit consumer. Fail loudly.
+      // relPaths are join keys across every version that inherits the
+      // file: a scheme-mangled prefix must fail loudly
       val sample = probe.getString(1)
       require(!sample.contains(":") && !sample.startsWith("/"),
         s"deleteRows($table): derived relPath '$sample' is not relative — " +
           "file_path prefix mismatch")
       val committed = transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
-        linkSnapshot(base, claimed, withDv = false)
-        val merged = dvOf(base).fold(hits)(_.union(hits))
-        merged.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
-        Staged(Carried)
+        val staged = inherit(table, pinned, claimed)
+        // one file, however many partitions the scan had
+        hits.coalesce(1).write.mode(SaveMode.Append)
+          .parquet(dvDir(claimed).toString)
+        staged
       }
       if (committed.isEmpty) throw new IllegalStateException(
         s"deleteRows($table): lost the commit race — rerun")
       n
     } finally hits.unpersist()
-  }
-
-  /** Hard-link every data file of snapshot directory `src` into `claimed`
-    * (hive subdirectories kept) — O(files) link metadata, zero bytes
-    * copied — and, `withDv`, its deletion vector verbatim: linked files
-    * keep their relPaths, so the vector stays valid. */
-  private def linkSnapshot(src: Path, claimed: Path, withDv: Boolean): Unit = {
-    dataFiles(src).foreach { f =>
-      val dst = claimed.resolve(src.relativize(f).toString)
-      Files.createDirectories(dst.getParent)
-      Files.createLink(dst, f)
-    }
-    if (withDv && Files.isDirectory(dvDir(src))) {
-      Files.createDirectories(dvDir(claimed))
-      list(dvDir(src)).foreach { f =>
-        val n = f.getFileName.toString
-        if (Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith("."))
-          Files.createLink(dvDir(claimed).resolve(n), f)
-      }
-    }
   }
 
   /** DESCRIBE HISTORY: the live commit log as a DataFrame — one row per
@@ -434,18 +484,13 @@ final class TableStore(private[graft] val spark: SparkSession,
     rows.toDF("seq", "version", "ts_millis", "txn_tag")
   }
 
-  /** RESTORE (rollback): republish a RETAINED snapshot as the new head —
-    * the recover-from-a-bad-write verb (Delta's RESTORE TABLE). The
-    * commit hard-links the snapshot's data files and carries ITS
-    * sidecars (declared schema, deletion vector) verbatim, so the head
-    * becomes byte- and semantics-identical to the snapshot — including
-    * UNDOING later schema evolution (a restore to a pre-ADD-COLUMN
-    * snapshot has no declared schema again) and later deletes. O(files)
-    * link metadata, zero data moved; history is append-only (the
-    * restore is a NEW version — the bad commits stay inspectable until
-    * GC ages them). Bounded by the retention window like every
-    * time-travel read; restoring the current head is a no-op (true).
-    * Refused on change-feed tables: the feed streams appends and its
+  /** RESTORE (rollback): republish a RETAINED snapshot as the new head
+    * (Delta's RESTORE TABLE). The commit inherits the snapshot's files and
+    * deletion vector and carries ITS declared schema, so the head becomes
+    * identical to the snapshot — later deletes and schema evolution
+    * undone. O(1) file operations; history is append-only (the restore is
+    * a NEW version). Bounded by the retention window; restoring the head
+    * is a no-op (true). Refused on change-feed tables: the feed's
     * consumers could not observe the rollback. */
   def restore(table: String, v: Int, txnTag: Option[String] = None): Boolean = {
     val pinned = head(table)
@@ -458,15 +503,15 @@ final class TableStore(private[graft] val spark: SparkSession,
         s"${have.mkString(",")})")
     if (v == pinned.version) return true
     transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
-      linkSnapshot(snapshotDir(table, v), claimed, withDv = true)
       // the head's declaration is the SNAPSHOT's (or absent), never
       // carried forward from the rolled-back head
-      Staged(Exactly(declaredSchemaOf(table, v)))
+      inherit(table, markerOf(table, v), claimed)
+        .copy(declared = Exactly(declaredSchemaOf(table, v)))
     }.isDefined
   }
 
-  /** Versions currently readable, ascending: every version a commit
-    * marker published whose directory GC has not swept. A claim that is
+  /** Versions currently readable, ascending: every version whose commit
+    * marker GC has not aged out. A claim that is
     * still staging (or was abandoned) has no marker and stays hidden,
     * whatever its number; a rebased commit can publish a LOWER number than
     * the head it replaced, and that retained head stays listed. */
@@ -573,24 +618,17 @@ final class TableStore(private[graft] val spark: SparkSession,
         "combine; REFRESH MATERIALIZED VIEW maintains it, DROP retires it")
 
   /** Zero-copy table clone — BigQuery's `CREATE TABLE … CLONE` (Delta's
-    * SHALLOW CLONE): materialize a retained snapshot of `source` (the
-    * head, or a pinned earlier version) as a NEW table whose v1
-    * hard-links the snapshot's data files and carries its sidecars —
-    * declared schema, deletion vector, CHECK constraints — verbatim.
-    * O(files) link metadata, zero bytes of data copied; from then on the
-    * two tables evolve independently, because committed version
-    * directories are immutable by protocol and every rewrite allocates
-    * new files — hard links share BYTES, never mutable state. The GC of
-    * either table unlinks only its own directory entries; the shared
-    * inodes survive until the last referrer ages out.
-    *
-    * `snapshot = true` additionally marks the clone read-only for life
-    * (BigQuery's CREATE SNAPSHOT TABLE — the cheap audit/backup verb):
-    * every later write, including RESTORE and OPTIMIZE, is refused loudly.
-    *
-    * At 100 TB this is the difference between an instant metadata
-    * operation and a cluster-day of copying — the reason warehouses grew
-    * a CLONE verb at all. Returns the clone's version number (1). */
+    * SHALLOW CLONE): a retained snapshot of `source` (the head, or a pinned
+    * earlier version) becomes a NEW table whose v1 hard-links the
+    * snapshot's data files into its own directory and carries its
+    * sidecars — declared schema, deletion vector (keys rebased onto the
+    * clone's paths), CHECK constraints. The one cross-table way to keep
+    * files: a clone must outlive its source's GC, so it links where a
+    * commit inherits by name. O(files) link(2) calls, zero bytes copied;
+    * the tables then evolve independently (committed files are
+    * immutable), and the shared inodes live until the last referrer goes.
+    * `snapshot = true` marks the clone read-only for life (BigQuery's
+    * CREATE SNAPSHOT TABLE). Returns the clone's version number (1). */
   def cloneTable(source: String, target: String,
       asOfVersion: Option[Int] = None, snapshot: Boolean = false,
       txnTag: Option[String] = None): Int = {
@@ -604,7 +642,18 @@ final class TableStore(private[graft] val spark: SparkSession,
       s"clone($source): version v$v not retained (readable: " +
         s"${have.mkString(",")})")
     transact(target, head(target), txnTag, Rebase) { (_, claimed) =>
-      linkSnapshot(snapshotDir(source, v), claimed, withDv = true)
+      val vf = filesOf(source, markerOf(source, v))
+      vf.data.foreach { f =>
+        val p = partitionPath(source, f)
+        val dst = claimed.resolve(p).resolve(f.getFileName.toString)
+        Files.createDirectories(dst.getParent)
+        Files.createLink(dst, f)
+      }
+      // the entries name the source's paths: rebase each onto the claim
+      dvOf(source, vf).foreach(_.select(
+        org.apache.spark.sql.functions.regexp_replace(col("rel"), "^[^/]+",
+          claimed.getFileName.toString).as("rel"), col("pos"))
+        .write.mode(SaveMode.Append).parquet(dvDir(claimed).toString))
       val cs = constraints(source)
       if (cs.nonEmpty) writeConstraints(target, cs)
       // The flag rides in the claimed dir and becomes visible WITH the
@@ -629,12 +678,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     import spark.implicits._
     tables().map { t =>
       val m = head(t)
-      val base = snapshotDir(t, m.version)
       val tpe =
         if (isSnapshotAt(t, m)) "SNAPSHOT"
         else if (isMaterializedView(t)) "MATERIALIZED VIEW"
         else "BASE TABLE"
-      (t, tpe, m.version, rowCount(base), dataFiles(base).length,
+      (t, tpe, m.version, rowCount(t, m), filesOf(t, m).data.length,
         schemaOf(t, m).fields.length)
     }.toDF("table_name", "table_type", "version", "n_rows", "n_files",
       "n_columns")
@@ -665,23 +713,20 @@ final class TableStore(private[graft] val spark: SparkSession,
   def informationSchemaPartitions(table: String,
       parallelism: Int = 8): DataFrame = {
     import spark.implicits._
-    val base = snapshotDir(table, headVersion(table))
+    val vf = filesOf(table, head(table))
     val conf = spark.sessionState.newHadoopConf()
-    // deletion-vector entries per first-level directory (relPath's head
-    // segment), so partition counts subtract exactly their own deletes
-    val dvByDir: Map[String, Long] = dvOf(base).fold(Map.empty[String, Long])(
-      _.select(when(col("rel").contains("/"),
-          org.apache.spark.sql.functions
-            .substring_index(col("rel"), "/", 1))
-          .otherwise("__NULL__").as("d"))
-        .groupBy(col("d")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-    val byPart = dataFiles(base).groupBy { f =>
-      val rel = base.relativize(f)
-      if (rel.getNameCount > 1 && rel.getName(0).toString.contains("="))
-        rel.getName(0).toString
-      else "__NULL__"
+    // a file's partition: the first directory below its version directory
+    def partOf(f: Path) = partitionPath(table, f).split('/').head match {
+      case d if d.contains("=") => d
+      case _ => "__NULL__"
     }
+    // deletion-vector entries per partition, so partition counts subtract
+    // exactly their own deletes
+    val dvByDir: Map[String, Long] = dvOf(table, vf).fold(Map.empty[String, Long])(
+      _.groupBy(col("rel")).count().collect().toSeq
+        .groupMapReduce(r => partOf(dir(table).resolve(r.getString(0))))(
+          _.getLong(1))(_ + _))
+    val byPart = vf.data.groupBy(partOf)
     byPart.toSeq.map { case (part, files) =>
       val rows = pooled(files, parallelism)(
         FileStats.rowCount(conf, _)).sum - dvByDir.getOrElse(part, 0L)
@@ -746,22 +791,20 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** `d`'s GROUP BY over exactly the data files `rels` (relPaths) of
     * base marker `m`. */
   private def mvAggOver(d: MvDef, m: Marker, rels: Set[String]): DataFrame = {
-    val baseDir = snapshotDir(d.base, m.version)
-    scan(d.base, m, rels.toSeq.map(baseDir.resolve))
+    scan(d.base, m, rels.toSeq.map(dir(d.base).resolve))
       .groupBy(d.keys.map(col): _*)
       .agg(mvAggExprs(d.aggs).head, mvAggExprs(d.aggs).tail: _*)
   }
 
-  /** relPaths of pinned marker `m`'s data files. */
-  private def relPaths(table: String, m: Marker): Set[String] = {
-    val base = snapshotDir(table, m.version)
-    dataFiles(base).map(f => base.relativize(f).toString).toSet
-  }
+  /** Pinned marker `m`'s data files, relative to the table root. */
+  private def relPaths(table: String, m: Marker): Set[String] =
+    filesOf(table, m).data.map(dir(table).relativize(_).toString).toSet
 
   /** CREATE MATERIALIZED VIEW — BigQuery's aggregate MV: a store table
     * holding `SELECT keys, aggs FROM base GROUP BY keys`, plus a sidecar
-    * pinning WHAT it covered (base version + data-file relPaths). The
-    * restriction to COUNT/SUM/MIN/MAX is the point, not a shortcut: it
+    * pinning WHAT it covered (base version + data files, relative to the
+    * base's table root). The restriction to COUNT/SUM/MIN/MAX is the
+    * point, not a shortcut: it
     * is the class whose partials merge associatively, so a read can
     * combine the stored rows with a partial aggregate over just the
     * files appended since — BigQuery's "smart tuning" freshness — and a
@@ -801,8 +844,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     *     key (counts/sums add, min/max fold) — cost scales with the
     *     APPEND, not the base;
     *   - base version changed (merge / delete / overwrite / compact
-    *     rewrote or relinked files) → transparent full recompute from
-    *     the base: append-only file algebra no longer applies, and a
+    *     rewrote files or changed the vector) → transparent full
+    *     recompute from the base: append-only file algebra no longer
+    *     applies, and a
     *     wrong-but-fast answer is worse than a slow-but-right one.
     *     REFRESH re-pins the view and restores the cheap path.
     * Both paths read the base through [[scan]] of one pinned marker, so
@@ -867,7 +911,8 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** Time-travel read of a retained snapshot: the table exactly as some
     * earlier commit left it. Bounded by the GC retention window (one
     * version behind the pointer by default) — the versioned layout makes
-    * this free: a snapshot IS a directory, immutable once committed. */
+    * this free: a snapshot IS the list of immutable files its commit
+    * names, and GC deletes none of them while it is retained. */
   def readVersion(table: String, v: Int): DataFrame = {
     val have = versions(table)
     require(have.contains(v),
@@ -958,6 +1003,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     def attempt(from: Marker, losses: Int): Option[Int] = {
       val (v, claimed) = claimNext(table)
       val staged = stage(from, claimed)
+      writeManifest(claimed, staged.inherited)
       staged.declared match {
         case Exactly(Some(st)) => writeAtomically(schemaPath(table, v), st.json)
         case _ => ()
@@ -1028,31 +1074,49 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def commitPointer(table: String, v: Int): Unit =
     writeAtomically(pointer(table), s"v$v")
 
-  /** Sweep versions that have left the retention window. `prev` is the
-    * version that was committed BEFORE this commit — the one in-flight
-    * readers may still be scanning — so retention is anchored to the
-    * commit log, never to version numbers: claimNext skips orphaned
-    * claims, so `committed - 1` can be far above the live previous
-    * version, and a rebased commit can publish a version numbered below
-    * `prev`. Deletes every vN < prev except the just-published `v`,
-    * with its markers and its version-keyed sidecars: every
-    * `_<name>.v<N>` file beside the log (`_stats`, `_schema`, and those
-    * other components keep there, like [[graft.ext.Artifacts]]'
-    * `_corpusfp`). A staged sidecar (`….staged.…`) never matches. */
+  /** Age out the versions behind the retention window: every vN < `prev`
+    * (the head this commit replaced, which in-flight readers may still
+    * scan) except the just-published `v` — anchored to the log, as claims
+    * skip orphans and a rebased commit can publish a lower number. Their
+    * markers and `_<name>.v<N>` sidecars go (a staged sidecar never
+    * matches), and their directories lose every file no retained version
+    * names ([[sweep]]); an unpublished claim there goes whole. Nothing is
+    * deleted while a retained version's manifest cannot be read. */
   private def gc(table: String, prev: Int, v: Int): Unit = {
     def aged(n: Int) = n < prev && n != v
-    val agedMarkers = markerLog(table).filter(m => aged(m.version))
-      .map(_.seq).toSet
-    listDir(table).foreach { p =>
-      val n = p.getFileName.toString
-      n match {
-        case MarkerName(s) => // log entries of swept versions age out too
-          if (agedMarkers(s.toInt)) Files.deleteIfExists(p)
-        case _ if n.matches("v\\d+") =>
-          if (aged(n.drop(1).toInt)) deleteRecursive(p)
-        case VersionSidecar(s) => if (aged(s.toInt)) Files.deleteIfExists(p)
-        case _ => ()
+    val log = markerLog(table)
+    namedBy(table, log.filterNot(m => aged(m.version))).foreach { named =>
+      val agedMarkers = log.filter(m => aged(m.version)).map(_.seq).toSet
+      listDir(table).foreach { p =>
+        p.getFileName.toString match {
+          case MarkerName(s) => // log entries of swept versions age out too
+            if (agedMarkers(s.toInt)) Files.deleteIfExists(p)
+          case VersionDir(n) => if (aged(n.toInt)) sweep(p, named)
+          case VersionSidecar(s) => if (aged(s.toInt)) Files.deleteIfExists(p)
+          case _ => ()
+        }
       }
+    }
+  }
+
+  /** Every file the versions of `markers` name; None when the manifest of
+    * one of them cannot be read — never read as "names nothing". */
+  private def namedBy(table: String, markers: Seq[Marker]): Option[Set[Path]] = {
+    val named = markers.map(m => inheritedOf(table, m.version)
+      .map(filesIn(table, m.version, _)))
+    if (named.exists(_.isEmpty)) None
+    else Some(named.flatten.flatMap(vf => vf.data ++ vf.dv).toSet)
+  }
+
+  /** Delete the files under `p` that `named` lacks, then the directories
+    * left empty, `p` included; true when anything went. */
+  private def sweep(p: Path, named: Set[Path]): Boolean = {
+    val s = Files.walk(p)
+    val entries = try s.iterator().asScala.toList finally s.close()
+    entries.sortWith(_.compareTo(_) > 0).foldLeft(false) { (swept, f) =>
+      val gone = if (Files.isDirectory(f)) list(f).isEmpty else !named(f)
+      if (gone) Files.delete(f)
+      swept || gone
     }
   }
 
@@ -1140,21 +1204,15 @@ final class TableStore(private[graft] val spark: SparkSession,
     }
   }
 
-  /** Commit-protocol APPEND: a new version whose content is the current
-    * version's files HARD-LINKED (O(files) metadata, zero data copied or
-    * rewritten) plus the frame's files written alongside. Unlike the
-    * in-place [[append]], this is a real commit, so it carries a
-    * transaction tag — the exactly-once discipline streaming sinks need
-    * ([[txnVersion]] watermark: a replayed micro-batch whose commit
-    * marker survived the crash is SKIPPED, never double-appended) —
-    * while still costing O(increment) data I/O, NOT the O(touched
-    * partitions) rewrite of [[mergePartitionedWith]]. With
-    * `partitionCol` the new files land hive-style, so
-    * [[readPartitions]] probes stay pruned as the table grows — the
-    * append-only-index layout (s24's ingest loop). The deletion-vector
-    * sidecar carries verbatim: linked files keep their relPaths.
-    * CAS-committed at baseSeq+1 (content depends on the base version —
-    * a lost race discards the claim and re-links). */
+  /** Commit-protocol APPEND: a new version that inherits the current
+    * version's files and deletion vector (O(1) file operations) plus the
+    * frame's files written into its claim. Unlike the in-place [[append]]
+    * it carries a transaction tag — the exactly-once discipline streaming
+    * sinks need: a replayed micro-batch whose marker survived the crash is
+    * skipped through [[txnVersion]] — at O(increment) data I/O. With
+    * `partitionCol` the new files land hive-style, so [[readPartitions]]
+    * probes stay pruned as the table grows (s24's ingest loop). A lost
+    * race re-stages on the new head. */
   def appendCommitted(table: String, df: DataFrame,
       partitionCol: Option[String] = None,
       txnTag: Option[String] = None): Unit = {
@@ -1167,11 +1225,10 @@ final class TableStore(private[graft] val spark: SparkSession,
       assertSchemaMatches(table, pinned, df, relaxed = partitionCol.toSet)
     transact(table, pinned, txnTag, if (first) Rebase else Reapply()) {
       (base, claimed) =>
-        if (!first)
-          linkSnapshot(snapshotDir(table, base.version), claimed, withDv = true)
+        val staged = if (first) Staged(Carried) else inherit(table, base, claimed)
         val w = enforced(table, df).write.mode(SaveMode.Append)
         partitionCol.fold(w)(w.partitionBy(_)).parquet(claimed.toString)
-        Staged(Carried)
+        staged
     }
   }
 
@@ -1182,39 +1239,32 @@ final class TableStore(private[graft] val spark: SparkSession,
     new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
   private[graft] def lastPartitionProbe: (Int, Int) = probePeek.get
 
-  /** Partition-pruned point read: ONLY the `partitionCol=v` hive
-    * directories for the requested values go into the scan — directories
-    * outside the value set are never opened, so a probe against an
-    * N-bucket table costs O(files in touched buckets), not O(table). The
-    * caller owns completeness: pass every bucket value the probe keys can
-    * hash into (the [[appendCommitted]] bucketing discipline makes that a
-    * bounded, collect-free derivation). It is [[scan]] of the head it
-    * pins, restricted to those directories — same schema, same deletion
-    * vector — so results equal `read(table).filter(col in values)` by
-    * construction: hive partition values are exact, not statistics. */
+  /** Partition-pruned point read: [[scan]] of the head restricted to the
+    * files in the `partitionCol=v` hive directories of `values`, so a
+    * probe reads O(files in touched buckets), not O(table), and equals
+    * `read(table).filter(col in values)` by construction. The caller
+    * passes every bucket value the probe keys can hash into. */
   def readPartitions(table: String, partitionCol: String,
       values: Seq[Any]): DataFrame = {
     val m = head(table)
-    val base = snapshotDir(table, m.version)
     val wanted = values.map(String.valueOf).toSet
-    val prefix = partitionCol + "="
-    val all = dataFiles(base)
-    val kept = all.filter { p =>
-      val rel = base.relativize(p)
-      rel.getNameCount > 1 && {
-        val n = rel.getName(0).toString
-        n.startsWith(prefix) && wanted.contains(java.net.URLDecoder
-          .decode(n.substring(prefix.length), "UTF-8"))
-      }
-    }
+    val all = filesOf(table, m).data
+    val kept = all.filter(f =>
+      partitionValue(table, f, partitionCol).exists(wanted))
     probePeek.set((kept.length, all.length))
-    // The scan takes the surviving bucket DIRECTORIES (bounded by the
-    // value set), not the file list: a per-file path list above the
-    // parallel-discovery threshold spends a whole listing JOB per probe
-    // — fixed overhead that dwarfs a micro-batch's real work.
     if (kept.isEmpty) scan(table, m).filter(lit(false))
-    else scan(table, m,
-      kept.map(p => base.resolve(base.relativize(p).getName(0))).distinct)
+    else scan(table, m, kept)
+  }
+
+  /** The value of hive partition column `partitionCol` in data file `f`'s
+    * first directory below its version directory; None when that is not
+    * a `partitionCol=` directory. */
+  private def partitionValue(table: String, f: Path,
+      partitionCol: String): Option[String] = {
+    val d = partitionPath(table, f).split('/').head
+    val prefix = partitionCol + "="
+    if (!d.startsWith(prefix)) None
+    else Some(java.net.URLDecoder.decode(d.substring(prefix.length), "UTF-8"))
   }
 
   def overwrite(table: String, df: DataFrame, // K3
@@ -1233,15 +1283,14 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** Parquet data-file count of the table's current version — the
     * read-amplification metric [[compact]] manages. Driver-side
-    * directory listing, bounded by the file count itself. */
-  def fileCount(table: String): Int =
-    dataFiles(snapshotDir(table, headVersion(table))).length
+    * manifest read and directory listing, bounded by the file count. */
+  def fileCount(table: String): Int = filesOf(table, head(table)).data.length
 
   /** Total parquet data bytes of the table's current version — the input
     * [[compact]] callers size their `targetBytes` from. Same bounded
-    * driver-side listing as [[fileCount]]. */
+    * driver-side walk as [[fileCount]]. */
   def tableBytes(table: String): Long =
-    dataFiles(snapshotDir(table, headVersion(table))).map(Files.size).sum
+    filesOf(table, head(table)).data.map(Files.size).sum
 
   /** Upsert (K4): materialize `Ops.mergeUpdates(target, updates)` into a
     * claimed version directory, then commit the pointer. The source scan
@@ -1313,6 +1362,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     graft.ops.Par.concurrently(4)(claims.map { case (t, _, claimed, df) =>
       () => enforced(t, df).write.mode(SaveMode.Append).parquet(claimed.toString)
     })
+    claims.foreach { case (_, _, claimed, _) => writeManifest(claimed, Nil) }
     val logDir = Paths.get(warehouse, "_txnlog")
     Files.createDirectories(logDir)
     val id = s"txn.${System.nanoTime}"
@@ -1417,23 +1467,16 @@ final class TableStore(private[graft] val spark: SparkSession,
     } finally gate.foreach(t => scala.util.Try(t.get()))
   }
 
-  /** Partition-pruned transactional rewrite — K4 at fact-table scale. A
-    * daily upsert touches O(changed) rows, but [[mergeWith]] rewrites the
-    * whole table per commit; at 100 TB that is the one scale-killer left
-    * in the sink layer. This variant rewrites ONLY the hive partitions in
-    * `touched` (the scan is partition-pruned to them, `f` transforms just
-    * that subset) and HARD-LINKS every file of every untouched partition
-    * into the new version directory: O(touched partitions) I/O and an
-    * O(files) metadata pass, same CAS commit, same snapshot isolation —
-    * links alias immutable files, and GC unlinks old version dirs without
-    * ever truncating shared content. (On an object store the link step
-    * maps to server-side copy or, better, a manifest that references the
-    * unchanged objects.)
+  /** Partition-pruned transactional rewrite — K4 at fact-table scale,
+    * where [[mergeWith]] rewrites the whole table per commit. This variant
+    * rewrites ONLY the hive partitions in `touched` (the scan is pruned to
+    * them, `f` transforms just that subset) and inherits every file of
+    * every untouched partition: O(touched partitions) I/O, same CAS
+    * commit, same snapshot isolation.
     *
-    * CONTRACT: the table must carry a hive layout on `partitionCol`
-    * (written via [[appendPartitioned]]), and the merge key must
-    * determine its partition (the date-partitioned-fact shape): a key
-    * whose update names a different partition value than its existing row
+    * CONTRACT: the table has a hive layout on `partitionCol` (written via
+    * [[appendPartitioned]]), and the merge key determines its partition: a
+    * key whose update names another partition value than its existing row
     * would leave the old row in place — that shape needs [[mergeWith]].
     * `touched` values compare against directory names via
     * `String.valueOf`, so stick to string/integral partition columns. */
@@ -1446,52 +1489,19 @@ final class TableStore(private[graft] val spark: SparkSession,
     checkTag(txnTag)
     val touchedStr = touched.map(String.valueOf).toSet
     transact(table, head(table), txnTag, Reapply()) { (base, claimed) =>
-      val basePath = snapshotDir(table, base.version)
       // The isin filter lands in the scan's PartitionFilters: untouched
-      // directories are never opened, let alone read.
+      // partitions' files are never opened, let alone read.
       val next = f(scan(table, base)
         .filter(col(partitionCol).isin(touched: _*)))
       enforced(table, next).write.mode(SaveMode.Append)
         .partitionBy(partitionCol).parquet(claimed.toString)
-      // Untouched partitions are hard-linked through (link, not copy:
-      // version dirs share the immutable bytes, and GC merely drops link
-      // counts), so their deletion-vector entries stay valid. Touched ones
-      // were rewritten through the DV-aware read, which applied theirs.
-      val untouched = untouchedPartitions(basePath, partitionCol, touchedStr)
-      untouched.foreach(d =>
-        linkSnapshot(d, claimed.resolve(d.getFileName.toString), withDv = false))
-      carryDv(basePath, claimed, untouched.map(_.getFileName.toString),
-        org.apache.spark.sql.functions.substring_index(col("rel"), "/", 1))
-      Staged(Carried)
+      // Untouched partitions are inherited with their deletion-vector
+      // entries; touched ones were rewritten through the DV-aware read,
+      // which applied theirs.
+      inherit(table, base, claimed, f =>
+        partitionValue(table, f, partitionCol).exists(!touchedStr(_)))
     }
   }
-
-  /** The `partitionCol=` directories of `base` whose value is NOT in
-    * `touched`. */
-  private def untouchedPartitions(base: Path, partitionCol: String,
-      touched: Set[String]): Seq[Path] = {
-    val prefix = partitionCol + "="
-    list(base).filter { p =>
-      val n = p.getFileName.toString
-      Files.isDirectory(p) && n.startsWith(prefix) && !touched.contains(
-        java.net.URLDecoder.decode(n.substring(prefix.length), "UTF-8"))
-    }
-  }
-
-  /** Carry into `claimed` the base's deletion-vector entries whose
-    * `key` (over the entry's `rel` path) is in `keys` — the entries of
-    * files linked through unchanged: same relPath, same bytes. */
-  private def carryDv(base: Path, claimed: Path, keys: Seq[String],
-      key: org.apache.spark.sql.Column): Unit =
-    if (keys.nonEmpty) dvOf(base).foreach { dv =>
-      import spark.implicits._
-      val keep = dv.withColumn("__key", key)
-        .join(org.apache.spark.sql.functions.broadcast(
-          keys.toDF("__key")), "__key")
-        .select(col("rel"), col("pos"))
-      if (!keep.isEmpty)
-        keep.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
-    }
 
   /** Peak number of bin-rewrite Spark jobs observed in flight during the
     * last [[compact]] call — the spec's evidence that bins rewrite
@@ -1500,110 +1510,57 @@ final class TableStore(private[graft] val spark: SparkSession,
   private[graft] def lastCompactConcurrency: Int = compactPeak.get
 
   /** OPTIMIZE (compaction): bin-pack this table's small data files into
-    * ~`targetBytes` outputs in a NEW version — the lakehouse maintenance
-    * op that keeps an append-heavy table scannable at scale. Every small
-    * append (the reference's daily loads, main.py:184-236) adds files;
-    * scan cost and task count follow FILE count, not bytes, so a 100 TB
-    * fact table drifts toward millions of tiny files without this.
+    * ~`targetBytes` outputs in a NEW version — what keeps an append-heavy
+    * table scannable, since scan cost follows FILE count, not bytes.
+    * I/O is O(small files), never O(table): files are packed
+    * first-fit-decreasing by size per hive partition (across the version
+    * directories they live in), a single-file bin (already at or above
+    * target) is inherited unchanged, and each other bin is rewritten to
+    * one file in the same partition directory of the claim.
     *
-    * I/O is O(small files), never O(table): files are first-fit-decreasing
-    * packed by on-disk size, and any single-file bin (= already at or
-    * above target) is HARD-LINKED into the new version unchanged (the
-    * partition-pruned-merge machinery) — only genuinely small files are
-    * read and rewritten, each bin coalescing to one output file. Hive
-    * partition directories compact independently and keep their layout
-    * (data files in a partition dir carry no partition column; the
-    * compacted file lands back in the same directory, so read-side
-    * derivation is untouched).
-    *
-    * Commit is strictly optimistic: the new version publishes at exactly
-    * seq+1 over the version that was compacted. If ANY other commit lands
-    * first, the claim is discarded and `false` returns — compaction
-    * changes nothing logically, so the caller just retries later; a
-    * concurrent append into the old version dir is never lost to a
-    * half-compacted table. */
+    * Commit is strictly optimistic at seq+1 over the compacted version: if
+    * ANY other commit lands first, the claim is discarded and `false`
+    * returns — compaction changes nothing logically, so the caller just
+    * retries later. */
   def compact(table: String,
       targetBytes: Long = 128L * 1024 * 1024,
       parallelism: Int = 8): Boolean = {
     val pinned = head(table)
-    val base = snapshotDir(table, pinned.version)
     transact(table, pinned, None, GiveUp) { (_, claimed) =>
-      binPack(table, pinned, base, claimed, targetBytes, parallelism)
-      Staged(Carried)
-    }.isDefined
-  }
-
-  /** [[compact]]'s stage: fill `claimed` with `base`'s files bin-packed. */
-  private def binPack(table: String, pinned: Marker, base: Path,
-      claimed: Path, targetBytes: Long, parallelism: Int): Unit = {
-    val byDir = dataFiles(base).groupBy(_.getParent)
-    // Plan first (driver-side first-fit-decreasing per directory), then
-    // execute: single-file bins are hard links (metadata-only, sequential
-    // is fine); multi-file bins each need a Spark read+rewrite JOB, and a
-    // 100×-small-files table has thousands of them — running the driver
-    // loop sequentially would serialize per-job scheduling latency into
-    // the wall clock. Spark schedules jobs submitted from multiple
-    // threads concurrently, so the rewrites go through a bounded pool:
-    // wall time tracks the LARGEST bin plus pool-width batches, not bin
-    // COUNT. Each job is one bin → at most `targetBytes` of input — tiny
-    // next to executor memory, so width 8 cannot oversubscribe.
-    val rewrites = Seq.newBuilder[(Seq[Path], Path)]
-    val linkedRels = Seq.newBuilder[String] // keep their DV entries (below)
-    byDir.foreach { case (srcDir, files) =>
-      val dstDir = claimed.resolve(base.relativize(srcDir).toString)
-      Files.createDirectories(dstDir)
-      val binFiles =
-        scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Path]]()
-      val binSize = scala.collection.mutable.ArrayBuffer[Long]()
-      files.map(f => f -> Files.size(f)).sortBy(-_._2).foreach {
-        case (f, sz) =>
-          val i = binSize.indexWhere(_ + sz <= targetBytes)
-          if (i >= 0) { binFiles(i) += f; binSize(i) += sz }
-          else {
-            binFiles += scala.collection.mutable.ArrayBuffer(f)
-            binSize += sz
-          }
-      }
-      binFiles.foreach { bin =>
-        if (bin.length == 1) {
-          Files.createLink(
-            dstDir.resolve(bin.head.getFileName.toString), bin.head)
-          linkedRels += base.relativize(bin.head).toString
-        } else rewrites += ((bin.toSeq, dstDir))
-      }
-    }
-    val jobs = rewrites.result()
-    compactPeak.set(0)
-    val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
-    pooled(jobs, parallelism) { case (bin, dstDir) =>
-      val depth = inFlight.incrementAndGet()
-      compactPeak.accumulateAndGet(depth, (a: Int, b: Int) => math.max(a, b))
-      try {
+      // Plan first (driver-side), then rewrite the multi-file bins through
+      // a bounded pool: Spark schedules jobs from several threads
+      // concurrently, so wall time tracks the LARGEST bin, not bin COUNT,
+      // and one bin is at most `targetBytes` of input.
+      val bins = filesOf(table, pinned).data.groupBy(partitionPath(table, _))
+        .toSeq.flatMap { case (part, files) =>
+          files.map(f => f -> Files.size(f)).sortBy(-_._2)
+            .foldLeft(Vector.empty[(Vector[Path], Long)]) { case (bs, (f, sz)) =>
+              bs.indexWhere(_._2 + sz <= targetBytes) match {
+                case -1 => bs :+ (Vector(f) -> sz)
+                case i => bs.updated(i, (bs(i)._1 :+ f) -> (bs(i)._2 + sz))
+              }
+            }.map(b => b._1 -> part)
+        }
+      val (singles, rewrites) = bins.partition(_._1.length == 1)
+      compactPeak.set(0)
+      val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+      pooled(rewrites, parallelism) { case (bin, part) =>
+        val depth = inFlight.incrementAndGet()
+        compactPeak.accumulateAndGet(depth, (a: Int, b: Int) => math.max(a, b))
         val tmp = Files.createTempDirectory(dir(table), "_compact")
         try {
-          // The one scan: an evolved table's bin can mix pre- and
-          // post-ADD-COLUMN files, and the version's schema null-fills
-          // them alike; rewritten bins materialize row-level deletes
-          // (their positions would be meaningless in the new file). The
-          // bin directory's hive partition columns live in its name, not
-          // in the file.
-          val partCols = base.relativize(bin.head.getParent).iterator
-            .asScala.map(_.toString).filter(_.contains("="))
-            .map(_.takeWhile(_ != '=')).toSeq
-          scan(table, pinned, bin).drop(partCols: _*)
-            .coalesce(1)
-            .write.mode(SaveMode.Append).parquet(tmp.toString)
-          list(tmp).foreach { f =>
-            val n = f.getFileName.toString
-            if (!n.startsWith("_") && !n.startsWith("."))
-              Files.move(f, dstDir.resolve(n))
-          }
-        } finally deleteRecursive(tmp)
-      } finally inFlight.decrementAndGet()
-    }
-    // Hard-linked files keep their relPath AND their bytes, so their DV
-    // entries stay valid — carry exactly those into the new version.
-    carryDv(base, claimed, linkedRels.result(), col("rel"))
+          // The one scan: it null-fills an evolved table's older files
+          // and materializes row-level deletes. The bin's hive partition
+          // columns live in its directory names, not in the file.
+          scan(table, pinned, bin)
+            .drop(part.split('/').filter(_.contains("=")).map(_.takeWhile(_ != '=')).toSeq: _*)
+            .coalesce(1).write.mode(SaveMode.Append).parquet(tmp.toString)
+          val dstDir = Files.createDirectories(claimed.resolve(part))
+          dataFiles(tmp).foreach(f => Files.move(f, dstDir.resolve(f.getFileName)))
+        } finally { deleteRecursive(tmp); inFlight.decrementAndGet() }
+      }
+      inherit(table, pinned, claimed, singles.flatMap(_._1).toSet)
+    }.isDefined
   }
 
   // ------------------------------------------------------ append change feed
@@ -1624,44 +1581,35 @@ final class TableStore(private[graft] val spark: SparkSession,
   }
 
   /** Turn on the APPEND CHANGE FEED: from now on, every appended data
-    * file is HARD-LINKED into `<table>/_feed/` — an append-only
-    * directory a Structured Streaming file source consumes (the
-    * Delta-streaming-source shape: "subscribe to a table's appends").
-    * Enabling bootstraps the feed with the table's current content (the
-    * initial snapshot), so a new consumer sees the full table then the
-    * appends.
+    * file is HARD-LINKED into `<table>/_feed/`, an append-only directory a
+    * Structured Streaming file source consumes ("subscribe to a table's
+    * appends"). Enabling bootstraps the feed with every file the head
+    * names, so a new consumer sees the full table, then the appends.
     *
-    * The contract is APPEND-ONLY tables (the fact-table shape):
-    * rewriting commits (overwrite/merge) are LOUD on a feed-enabled
-    * table — their row changes are not expressible as appends (Delta's
-    * ignoreChanges problem, refused here instead of silently
-    * mis-streamed). Layout-only commits (compact/cluster) are allowed
-    * and do NOT feed: consumers already saw those rows; the feed's hard
-    * links keep the original bytes alive even after GC unlinks the old
-    * version dirs, so a slow consumer never loses data to compaction
-    * (the link count IS the retention). Hive-partitioned tables are
-    * refused: their data files don't carry the partition column, so a
-    * feed reader would silently lose it.
-    *
-    * Scale shape: feeding is O(appended files) link(2) calls per append
-    * — no bytes copied, no extra write amplification; feed backlog is
-    * reclaimed by [[truncateFeed]] once consumers have caught up. */
+    * The contract is APPEND-ONLY tables: rewriting commits are LOUD on a
+    * feed-enabled table — their row changes are not expressible as
+    * appends (Delta's ignoreChanges problem). Layout-only commits
+    * (compact/cluster) are allowed and do NOT feed; the feed's links keep
+    * fed bytes alive after GC deletes the files, so a slow consumer loses
+    * nothing to compaction (the link count IS the retention).
+    * Hive-partitioned tables are refused: their files lack the partition
+    * column. Feeding costs O(appended files) link(2) calls; backlog is
+    * reclaimed by [[truncateFeed]]. */
   def enableFeed(table: String): Unit = {
-    val v = headVersion(table)
-    require(v > 0, s"enableFeed on missing table '$table'")
-    require(declaredSchemaOf(table, v).isEmpty,
+    val m = head(table)
+    require(m.version > 0, s"enableFeed on missing table '$table'")
+    require(declaredSchemaOf(table, m.version).isEmpty,
       s"'$table' has a declared (evolved) schema — feed readers scan raw " +
         "files and would mis-read mixed physical schemas")
-    val base = snapshotDir(table, v)
-    require(!Files.isDirectory(dvDir(base)),
+    val vf = filesOf(table, m)
+    require(vf.dv.isEmpty,
       s"'$table' carries a deletion vector — feed consumers read raw " +
         "files and cannot observe row-level deletes")
-    val files = dataFiles(base)
-    require(files.forall(_.getParent == base),
+    require(vf.data.forall(partitionPath(table, _).isEmpty),
       s"'$table' is hive-partitioned — the feed cannot carry partition " +
         "columns (data files don't contain them)")
     Files.createDirectories(feedDir(table))
-    files.foreach(linkIntoFeed(table, _))
+    vf.data.foreach(linkIntoFeed(table, _))
   }
 
   /** Reclaim feed backlog `olderThanMs` old — run once consumers'
@@ -1799,23 +1747,18 @@ final class TableStore(private[graft] val spark: SparkSession,
     }
   }
 
-  /** ALTER TABLE ADD COLUMN — METADATA-ONLY schema evolution. At 100 TB
-    * "add a column" must not rewrite the table: the commit hard-links
-    * every current data file into the new version (O(files) metadata
-    * ops, zero bytes of data moved — the [[compact]] single-file-bin
-    * path) and publishes the widened schema as the version's sidecar;
-    * readers null-fill the column for pre-evolution files (see
-    * [[scan]]). The new column is nullable by construction — existing
-    * rows have no value for it. The widened schema is the schema of the
-    * marker the commit publishes over ([[evolveTo]]): a concurrent
-    * evolution that lands first makes this one lose its CAS, never
-    * silently drops that evolution's column.
+  /** ALTER TABLE ADD COLUMN — METADATA-ONLY schema evolution: the commit
+    * inherits every data file and the deletion vector (O(1) file
+    * operations, zero bytes moved) and publishes the widened schema as
+    * the version's sidecar; readers null-fill the new, nullable column for
+    * older files ([[scan]]). The schema widened is that of the marker the
+    * commit publishes over ([[evolveTo]]), so a concurrent evolution that
+    * lands first makes this one lose its CAS, never drops its column.
     *
-    * Resurrection guard: if some file of that version still physically
-    * carries `column` (it was dropped earlier and never rewritten away),
-    * re-adding the name would surface the old bytes as if they were new
-    * data — that is refused loudly; OPTIMIZE or overwrite first.
-    * Footer-name check, O(files) metadata reads, pooled. */
+    * Resurrection guard: if a file of that version still physically
+    * carries `column` (dropped earlier, never rewritten away), re-adding
+    * the name would surface the old bytes as new data — refused loudly;
+    * OPTIMIZE or overwrite first. O(files) footer reads, pooled. */
   def addColumn(table: String, column: String, typeDdl: String,
       txnTag: Option[String] = None): Boolean = {
     require(exists(table), s"addColumn: table '$table' does not exist")
@@ -1825,7 +1768,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(column)),
         s"column '$column' already exists on '$table'")
       val conf = spark.sessionState.newHadoopConf()
-      val lingering = pooled(dataFiles(base), 8)(f =>
+      val lingering = pooled(filesOf(table, base).data, 8)(f =>
         FileStats.physicalColumns(conf, f).exists(_.equalsIgnoreCase(column)))
         .exists(identity)
       require(!lingering,
@@ -1886,11 +1829,11 @@ final class TableStore(private[graft] val spark: SparkSession,
   }
 
   /** ALTER TABLE DROP COLUMN — metadata-only, like [[addColumn]]: the new
-    * version hard-links the same files and declares a schema WITHOUT the
+    * version inherits the same files and declares a schema WITHOUT the
     * column; readers project it away per-file (an explicit read schema is
     * a projection, so the bytes are never even decoded). The data stays
     * in the files until the next full rewrite — which is exactly what
-    * makes the drop O(files) instead of O(table) — and the [[addColumn]]
+    * makes the drop O(1) instead of O(table) — and the [[addColumn]]
     * resurrection guard keeps that residue from ever coming back under a
     * re-declared name. Refused while a CHECK constraint references the
     * column (future writes could no longer evaluate it). */
@@ -1919,26 +1862,19 @@ final class TableStore(private[graft] val spark: SparkSession,
   }
 
   /** Commit a schema evolution: pin the head, derive the new schema from
-    * THAT marker's version directory and schema (`evolve` may refuse by
-    * throwing, before anything is claimed), hard-link every data file of
-    * the version into a claimed directory (subdirectories — hive layouts
-    * — kept), stage the `_schema.v<N>` sidecar, and publish strictly
-    * optimistically at seq+1 over the pinned marker (the [[compact]]
-    * discipline: a layout/metadata change must never clobber a concurrent
-    * data commit). Deriving the schema from the head the CAS commits over
-    * is what keeps a concurrent ADD COLUMN from being lost and a
-    * concurrent DROP COLUMN from being resurrected. Returns false on a
-    * lost race — nothing changed; rerun. */
+    * THAT marker (`evolve` may refuse by throwing, before anything is
+    * claimed), inherit every file, stage the `_schema.v<N>` sidecar and
+    * publish strictly at seq+1 over the pinned marker, so a concurrent ADD
+    * COLUMN is never lost nor a concurrent DROP COLUMN resurrected.
+    * Returns false on a lost race — nothing changed; rerun. */
   private def evolveTo(table: String, txnTag: Option[String])(
-      evolve: (Path, StructType) => StructType): Boolean = {
+      evolve: (Marker, StructType) => StructType): Boolean = {
     val pinned = head(table)
-    val base = snapshotDir(table, pinned.version)
     // the form a read of the version reports: every column nullable
-    val newSchema = evolve(base,
+    val newSchema = evolve(pinned,
       org.apache.spark.sql.GraftBridge.asNullable(schemaOf(table, pinned)))
     transact(table, pinned, checkTag(txnTag), GiveUp) { (_, claimed) =>
-      linkSnapshot(base, claimed, withDv = true)
-      Staged(Exactly(Some(newSchema)))
+      inherit(table, pinned, claimed).copy(declared = Exactly(Some(newSchema)))
     }.isDefined
   }
 
@@ -1950,20 +1886,23 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def statsPath(table: String, v: Int): Path =
     dir(table).resolve(s"_stats.v$v")
 
-  /** Current version's data files (relative order stable). EVERY path
-    * segment under `base` must be non-bookkeeping: a name-only check
-    * would descend into `_feed/` (whose entries are plain part-files)
-    * on legacy flat tables, or into a concurrent writer's `_temporary`. */
-  private def dataFiles(base: Path): Seq[Path] = {
-    val s = Files.walk(base)
-    try s.iterator().asScala.filter { p =>
-      Files.isRegularFile(p) &&
-        base.relativize(p).iterator.asScala.forall { seg =>
-          val n = seg.toString
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-    }.toSeq finally s.close()
-  }
+  /** The data files under directory `base` — a version's own directory,
+    * or its own `_dv/` (relative order stable; none when it does not
+    * exist). EVERY path segment under `base` must be non-bookkeeping: a
+    * name-only check would descend into `_dv/`, or into a concurrent
+    * writer's `_temporary`. */
+  private def dataFiles(base: Path): Seq[Path] =
+    if (!Files.isDirectory(base)) Nil
+    else {
+      val s = Files.walk(base)
+      try s.iterator().asScala.filter { p =>
+        Files.isRegularFile(p) &&
+          base.relativize(p).iterator.asScala.forall { seg =>
+            val n = seg.toString
+            !n.startsWith("_") && !n.startsWith(".")
+          }
+      }.toSeq finally s.close()
+    }
 
   /** Run `f` over `items` through a bounded pool (the [[compact]]
     * discipline: driver-side per-file metadata work parallelizes so wall
@@ -1995,7 +1934,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * files are always kept, so a stale sidecar costs speed, never
     * correctness. Once [[analyzeBloom]] opted columns in, every analyze
     * also maintains their per-file Bloom filters: carried forward by
-    * relPath for files whose bytes survived the commit (links, appends),
+    * relPath for files whose bytes survived the commit (inherited,
+    * appended),
     * rebuilt in one grouped job for the rest. Returns the number of
     * files covered. */
   def analyze(table: String, parallelism: Int = 8): Int =
@@ -2043,17 +1983,16 @@ final class TableStore(private[graft] val spark: SparkSession,
   }
 
   /** Shared sidecar publisher: footer stats for every current file, prior
-    * blooms donated by relPath (immutable bytes — hard-linked and
+    * blooms donated by relPath (immutable bytes — inherited and
     * untouched files keep their filters for free), missing ones rebuilt
     * per the union of recorded + newly added specs, then one atomic
     * sidecar write for pinned marker `m`. Returns (files covered, files
     * fully bloom-covered). */
   private def publishStats(table: String, m: Marker,
       addSpecs: Seq[FileStats.BloomSpec], parallelism: Int): (Int, Int) = {
-    val base = snapshotDir(table, m.version)
     val conf = spark.sessionState.newHadoopConf()
-    val stats = pooled(dataFiles(base), parallelism)(
-      FileStats.ofFile(conf, base, _))
+    val stats = pooled(filesOf(table, m).data, parallelism)(
+      FileStats.ofFile(conf, dir(table), _))
     val prior = newestSidecar(table)
     val priorSpecs = prior.map(FileStats.loadBloomSpecs).getOrElse(Nil)
     val specs = (priorSpecs.filterNot(p =>
@@ -2091,8 +2030,7 @@ final class TableStore(private[graft] val spark: SparkSession,
     val missing = stats.filter(fs =>
       specs.exists(s => !fs.blooms.contains(s.column)))
     if (missing.isEmpty) return stats
-    val base = snapshotDir(table, m.version)
-    val df = scan(table, m, missing.map(fs => base.resolve(fs.relPath)),
+    val df = scan(table, m, missing.map(fs => dir(table).resolve(fs.relPath)),
       positions = true, live = false)
     val aggs = specs.map(s => graft.functions.BloomOps.bloom_build_agg(
       xxhash64(col(s.column).cast("string")), s.items, s.fpp)
@@ -2117,10 +2055,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     * has no sidecar or a file has no entry (post-analyze appends). */
   private def skipping(table: String, m: Marker,
       preds: Seq[FileStats.Pred]): (Seq[Path], Seq[Path]) = {
-    val base = snapshotDir(table, m.version)
     val stats = FileStats.load(statsPath(table, m.version))
-    val all = dataFiles(base)
-    (all.filter(p => stats.get(base.relativize(p).toString)
+    val all = filesOf(table, m).data
+    (all.filter(p => stats.get(dir(table).relativize(p).toString)
       .forall(fs => preds.forall(FileStats.mightMatch(fs, _)))), all)
   }
 
@@ -2155,16 +2092,16 @@ final class TableStore(private[graft] val spark: SparkSession,
     * versioned layout makes this sound: a snapshot's files are immutable,
     * so footer counts ARE the row count. */
   def countRows(table: String, parallelism: Int = 8): Long =
-    rowCount(snapshotDir(table, headVersion(table)), parallelism)
+    rowCount(table, head(table), parallelism)
 
-  /** [[countRows]] of the version in `base`: footer row counts minus the
-    * rows its deletion vector names (DV footers). */
-  private def rowCount(base: Path, parallelism: Int = 8): Long = {
+  /** [[countRows]] of pinned marker `m`'s version: footer row counts minus
+    * the rows its deletion vector names (DV footers). */
+  private def rowCount(table: String, m: Marker, parallelism: Int = 8): Long = {
     val conf = spark.sessionState.newHadoopConf()
     def rows(files: Seq[Path]) =
       pooled(files, parallelism)(FileStats.rowCount(conf, _)).sum
-    rows(dataFiles(base)) -
-      (if (Files.isDirectory(dvDir(base))) rows(dataFiles(dvDir(base))) else 0L)
+    val vf = filesOf(table, m)
+    rows(vf.data) - rows(vf.dv)
   }
 
   /** Metadata-only MIN/MAX of one column over the current version:
@@ -2177,23 +2114,23 @@ final class TableStore(private[graft] val spark: SparkSession,
     * Returns (kind, min, max) in [[FileStats]] canonical string form. */
   def minMax(table: String, column: String,
       parallelism: Int = 8): Option[(FileStats.Kind, String, String)] = {
-    val v = headVersion(table)
-    val base = snapshotDir(table, v)
+    val m = head(table)
+    val vf = filesOf(table, m)
     // A deletion vector may have deleted the extreme row itself — footer
     // stats still include it, so a metadata answer would be wrong, not
     // just stale. Fall back to a scan (None).
-    if (Files.isDirectory(dvDir(base))) return None
-    val sidecar = FileStats.load(statsPath(table, v))
+    if (vf.dv.nonEmpty) return None
+    val sidecar = FileStats.load(statsPath(table, m.version))
     val conf = spark.sessionState.newHadoopConf()
-    val files = dataFiles(base)
+    val files = vf.data
     if (files.isEmpty) return None
     // A ZERO-ROW file (Spark writes one for an empty partition) carries no
     // chunk stats for any column, but it also provably contributes nothing
     // to MIN/MAX — skip it instead of letting it poison the
     // complete-or-None contract.
     val per = pooled(files, parallelism) { p =>
-      sidecar.getOrElse(base.relativize(p).toString,
-        FileStats.ofFile(conf, base, p))
+      sidecar.getOrElse(dir(table).relativize(p).toString,
+        FileStats.ofFile(conf, dir(table), p))
     }.filter(_.rows > 0).map(_.cols.get(column))
     if (per.isEmpty || per.exists(_.isEmpty)) None
     else {
@@ -2339,31 +2276,33 @@ final class TableStore(private[graft] val spark: SparkSession,
     Files.move(dir(table), dir(to), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Sweep orphaned claim directories left by CRASHED writers — claimed
-    * (the `vN` dir exists) but never published (no commit marker names
-    * them and they are not the head). A fresh unreferenced claim may
-    * belong to an in-flight writer that will still legitimately publish
-    * (a rebasing commit re-seqs under contention), so the sweep is
-    * age-gated: only claims whose newest file is older than
-    * `olderThanMs` go (the lease discipline — a writer that has not
-    * touched its claim for the TTL is dead, not slow). Orphans BELOW the
-    * head also age out through [[gc]] on later commits; vacuum covers
-    * the above-head case and idle tables. Returns the swept versions. */
+  /** Sweep the claims CRASHED writers left — `vN` directories no commit
+    * marker names — deleting, like [[gc]], only files no retained version
+    * names (an aged-out version's directory keeps the files a retained
+    * one inherits), and nothing while a retained version's manifest
+    * cannot be read. Age-gated, since a fresh claim may belong to an
+    * in-flight writer that will still publish: only directories whose
+    * newest entry is older than `olderThanMs` are swept (the lease
+    * discipline). Orphans below the head also age out through [[gc]];
+    * vacuum covers the above-head case and idle tables. Returns the
+    * versions whose directories lost files. */
   def vacuum(table: String, olderThanMs: Long = 3600000L): Seq[Int] = {
-    val referenced = markerLog(table).map(_.version).toSet
+    val log = markerLog(table)
+    val referenced = log.map(_.version).toSet
     val now = System.currentTimeMillis()
-    listDir(table).flatMap { p =>
-      val n = p.getFileName.toString
-      if (!n.matches("v\\d+") || referenced(n.drop(1).toInt)) None
-      else {
-        val lastTouched = (p +: list(p))
-          .map(f => Files.getLastModifiedTime(f).toMillis).max
-        if (now - lastTouched >= olderThanMs) {
-          deleteRecursive(p)
-          Some(n.drop(1).toInt)
-        } else None
-      }
-    }.sorted
+    namedBy(table, log).fold(Seq.empty[Int]) { named =>
+      listDir(table).flatMap { p =>
+        p.getFileName.toString match {
+          case VersionDir(n) if !referenced(n.toInt) =>
+            val lastTouched = (p +: list(p))
+              .map(f => Files.getLastModifiedTime(f).toMillis).max
+            if (now - lastTouched >= olderThanMs && sweep(p, named))
+              Some(n.toInt)
+            else None
+          case _ => None
+        }
+      }.sorted
+    }
   }
 
   private def deleteRecursive(p: Path): Unit =
@@ -2491,8 +2430,9 @@ object TableStore {
   private final case class Exactly(schema: Option[StructType]) extends Declared
 
   /** What a stage reports about the version it filled: its declared
-    * schema, whether to analyze it even if the base never opted in,
-    * and the flat schema it wrote when that may seed the schema memo. */
+    * schema, whether to analyze it even if the base never opted in, the
+    * footer schema of its first file when that may seed the schema memo,
+    * and the files it inherits, relative to the table root. */
   private final case class Staged(declared: Declared, analyze: Boolean = false,
-      seed: Option[StructType] = None)
+      seed: Option[StructType] = None, inherited: Seq[String] = Nil)
 }

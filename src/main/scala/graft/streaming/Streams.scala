@@ -350,7 +350,7 @@ object Streams {
   /** Hash-bucket count for the streaming totals table: user_totals is
     * hive-partitioned on `bucket = pmod(hash(user_id), N)` so a
     * micro-batch's merge rewrites ONLY the buckets its users hash into —
-    * untouched buckets ride into the new version as hard links
+    * untouched buckets' files ride into the new version by name
     * ([[graft.psn.TableStore.mergePartitionedWith]]). 8 here (the gate
     * corpus is small); production sizes N so one bucket ≈ one rewrite
     * task's worth of users. */
@@ -371,7 +371,7 @@ object Streams {
     * Scale shape: one bounded collect of ≤ [[TotalsBuckets]] touched
     * bucket ids, then a full-outer merge over ONLY those buckets'
     * partition directories; a single-user batch rewrites one bucket and
-    * hard-links the rest. */
+    * inherits the rest. */
   private[graft] def applyTotalsBatch(store: graft.psn.TableStore,
       table: String, appId: String, batchAgg: DataFrame,
       batchId: Long): Unit = {
@@ -474,7 +474,7 @@ object Streams {
     *
     * Scale shape: per batch, one user-keyed partial aggregation (map-side
     * combine) + one full-outer merge over ONLY the touched hash buckets
-    * of the bounded user dimension (untouched buckets hard-link through);
+    * of the bounded user dimension (untouched buckets are inherited);
     * state lives in the versioned table, not executor memory, so a year
     * of replays holds |users| rows, not |events|, and a quiet batch
     * rewrites almost nothing. */
@@ -586,9 +586,9 @@ object Streams {
     * hash-matching the oracle proves the two feed contracts at once:
     * compaction re-feeds NOTHING (totals would inflate or the dedup-free
     * sink would double-count), and the feed's hard links keep already-
-    * fed bytes readable even after GC unlinks the compacted version
-    * dirs (a slow consumer loses nothing to OPTIMIZE — the link count
-    * is the retention).
+    * fed bytes readable even after GC deletes the compacted files (a
+    * slow consumer loses nothing to OPTIMIZE — the link count is the
+    * retention).
     *
     * Scale shape: feeding is O(appended files) link(2) calls, zero bytes
     * copied; consumption is the file source's incremental listing; the
@@ -982,8 +982,8 @@ object Streams {
         lit(null).cast("int").as("band"), lit(null).cast("string").as("bkt"),
         col("decision"), lit(DecPart).as("sbkt"))
     // Seed: the corpus index in both probe layouts, one commit. One file
-    // per bucket (repartition ON the bucket column): the hard-link
-    // commits and probe listings are O(buckets + appends), never
+    // per bucket (repartition ON the bucket column): the inheriting
+    // commits and probe file lists are O(buckets + appends), never
     // O(shuffle-partitions × buckets) small-file spray. Each layout
     // seeds from ONLY its own pass — md5 for the exact probe, the
     // shingle/minhash signature for the band probe — so the corpus pays

@@ -79,6 +79,12 @@ class CommitProtocolSpec extends AnyFunSuite {
     names(wh.resolve(t)).collect {
       case n if n.matches("v\\d+") => n.drop(1).toInt
     }.sorted
+  /** Every regular file under version directory `v` of `t`. */
+  private def filesUnder(wh: Path, t: String, v: Int): Seq[Path] = {
+    val s = Files.walk(wh.resolve(s"$t/v$v"))
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).toList
+    finally s.close()
+  }
   private def lastTag(store: TableStore, t: String): Option[String] =
     Option(store.history(t).orderBy(col("seq").desc).head()
       .getAs[String]("txn_tag"))
@@ -212,11 +218,20 @@ class CommitProtocolSpec extends AnyFunSuite {
       if (verb.layout == Fresh) {
         assert(seqsAfter == Set(1) && versionDirs(wh, t) == Seq(head))
       } else {
-        // GC: the head plus the version it replaced, nothing older
+        // GC: the head plus the version it replaced, nothing older — an
+        // older version directory keeps only files those two name
         assert(seqsAfter == Set(last - 1, last), s"markers $seqsAfter")
-        assert(store.versions(t) == Seq(headBefore, head) &&
-          versionDirs(wh, t) == Seq(headBefore, head),
-          s"versions ${versionDirs(wh, t)}")
+        assert(store.versions(t) == Seq(headBefore, head),
+          s"versions ${store.versions(t)}")
+        val named = Seq(headBefore, head).flatMap { v =>
+          val (data, dv) = store.namedFiles(t, v)
+          data ++ dv
+        }.toSet
+        versionDirs(wh, t).filterNot(Set(headBefore, head)).foreach { v =>
+          assert(v < headBefore, s"v$v survived GC above the window")
+          val stray = filesUnder(wh, t, v).filterNot(named)
+          assert(stray.isEmpty, s"v$v keeps files no retained version names: $stray")
+        }
         assert(Files.exists(wh.resolve(s"$t/_stats.v$head")),
           "an analyzed table keeps a stats sidecar on the new head")
       }

@@ -1,19 +1,18 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.psn.TableStore
 
-/** Deletion vectors: row-level DELETE as a hard-link commit plus a
-  * (file, row-position) vector every read subtracts. Asserts the
-  * contract: zero data files rewritten (inode identity), successive
-  * deletes merge, time travel keeps pre-delete snapshots (diffVersions
-  * reports the rows as removed), rewriting commits materialize and PURGE
-  * the vector, compaction carries linked files' entries while rewritten
+/** Deletion vectors: row-level DELETE as a commit that inherits every
+  * data file plus a (file, row-position) vector every read subtracts.
+  * Asserts the contract: zero data files written (the head names the
+  * same files, and no data file appears on disk), successive deletes
+  * merge, time travel keeps pre-delete snapshots (diffVersions reports
+  * the rows as removed), rewriting commits materialize and PURGE the
+  * vector, compaction carries inherited files' entries while rewritten
   * bins materialize theirs, and the metadata COUNT subtracts the vector.
   */
 class DvDeleteSpec extends AnyFunSuite {
@@ -21,37 +20,20 @@ class DvDeleteSpec extends AnyFunSuite {
   import spark.implicits._
   import org.apache.spark.sql.functions.col
 
-  private def dataFilesOf(wh: String, table: String): Seq[Path] = {
-    val d = Paths.get(wh, table)
-    val v = Files.readString(d.resolve("_current")).trim
-    Files.walk(d.resolve(v)).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .filter { f =>
-        val rel = d.resolve(v).relativize(f)
-        rel.iterator().asScala.forall { seg =>
-          val n = seg.toString
-          !n.startsWith("_") && !n.startsWith(".")
-        }
-      }.toSeq
-  }
-
-  private def ino(p: Path): Any = Files.getAttribute(p, "unix:ino")
-
-  private def dvExists(wh: String, table: String): Boolean = {
-    val d = Paths.get(wh, table)
-    val v = Files.readString(d.resolve("_current")).trim
-    Files.isDirectory(d.resolve(v).resolve("_dv"))
-  }
+  private def dvExists(store: TableStore, table: String): Boolean =
+    StoreFiles.headDv(store, table).nonEmpty
 
   test("delete links files, subtracts rows; successive deletes merge") {
     val wh = Files.createTempDirectory("graft_dv").toString
     val store = new TableStore(spark, wh)
     store.overwrite("t",
       (1L to 1000L).map(k => (k, k % 4)).toDF("k", "grp").repartition(4))
-    val before = dataFilesOf(wh, "t").map(ino).toSet
+    val named = StoreFiles.head(store, "t")
+    val onDisk = StoreFiles.onDisk(wh, "t")
     assert(store.deleteRows("t", col("grp") === 0) == 250L)
-    assert(dataFilesOf(wh, "t").map(ino).toSet == before,
-      "DV delete must hard-link, not rewrite")
+    assert(StoreFiles.head(store, "t") == named &&
+      StoreFiles.onDisk(wh, "t") == onDisk,
+      "DV delete must name the same data files and write none")
     assert(store.read("t").count() == 750)
     assert(store.read("t").filter("grp = 0").count() == 0)
     // second delete merges into the vector
@@ -84,9 +66,9 @@ class DvDeleteSpec extends AnyFunSuite {
     val store = new TableStore(spark, wh)
     store.overwrite("t", (1L to 500L).map(k => (k, k % 5)).toDF("k", "grp"))
     store.deleteRows("t", col("grp") === 1)
-    assert(dvExists(wh, "t"))
+    assert(dvExists(store, "t"))
     store.mergeWith("t")(df => df.filter("k <= 400"))
-    assert(!dvExists(wh, "t"), "a full rewrite must purge the vector")
+    assert(!dvExists(store, "t"), "a full rewrite must purge the vector")
     assert(store.read("t").count() == 320) // 400 minus the 80 grp=1 rows
     assert(store.read("t").filter("grp = 1").count() == 0)
   }
@@ -102,19 +84,19 @@ class DvDeleteSpec extends AnyFunSuite {
     store.deleteRows("t", col("k") % 2 === 0)
     assert(store.read("t").count() == 200)
     assert(store.compact("t"))
-    assert(!dvExists(wh, "t"),
+    assert(!dvExists(store, "t"),
       "all-small bins rewrite: vector should be fully materialized")
     assert(store.read("t").count() == 200)
     assert(store.read("t").filter("k % 2 = 0").count() == 0)
 
-    // large single-file bins hard-link → entries must carry
+    // large single-file bins are inherited → entries must carry
     val store2 = new TableStore(spark, wh)
     store2.overwrite("u",
       (1L to 1000L).map(k => (k, s"payload_$k")).toDF("k", "v")
         .repartition(3))
     store2.deleteRows("u", col("k") <= 100)
     assert(store2.compact("u", targetBytes = 1L)) // every bin is one file
-    assert(dvExists(wh, "u"), "linked bins must carry their DV entries")
+    assert(dvExists(store2, "u"), "inherited bins must carry their DV entries")
     assert(store2.read("u").count() == 900)
     assert(store2.read("u").filter("k <= 100").count() == 0)
   }

@@ -214,6 +214,14 @@ class HttpPsnClientSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("an upstream that drops every exchange sees 2 × MaxAttempts exchanges, then the fetch fails") {
+    // each of the 3 attempts is two exchanges: java.net.http re-sends the
+    // GET once when the connection closes before the status line
+    val (failed, n) = flaky(Seq.fill(10)(0): _*)
+    assert(failed.failed.get.isInstanceOf[java.io.IOException], failed.toString)
+    assert(n == 6)
+  }
+
   test("a persistent 5xx fails after the fixed number of attempts") {
     val (failed, n) = flaky(Seq.fill(10)(500): _*)
     assert(failed.failed.get.getMessage.contains("HTTP 500"))

@@ -1,48 +1,34 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.psn.TableStore
 
-/** TableStore.restore: rollback as a link-only commit that makes the head
-  * identical to a retained snapshot — data files, declared schema, and
-  * deletion vector included.
+/** TableStore.restore: rollback as a commit that inherits a retained
+  * snapshot's files and makes the head identical to it — data files,
+  * declared schema, and deletion vector included.
   */
 class RestoreSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
   import org.apache.spark.sql.functions.col
 
-  private def dataFilesOf(wh: String, table: String): Seq[Path] = {
-    val d = Paths.get(wh, table)
-    val v = Files.readString(d.resolve("_current")).trim
-    Files.walk(d.resolve(v)).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .filter { f =>
-        d.resolve(v).relativize(f).iterator.asScala.forall { seg =>
-          !seg.toString.startsWith("_") && !seg.toString.startsWith(".")
-        }
-      }.toSeq
-  }
-
-  private def ino(p: Path): Any = Files.getAttribute(p, "unix:ino")
-
   test("restore links the snapshot's files and undoes later commits") {
     val wh = Files.createTempDirectory("graft_rst").toString
     val store = new TableStore(spark, wh)
     store.overwrite("t", (1L to 100L).map(k => (k, k % 3)).toDF("k", "m"))
     val v1 = store.versions("t").max
-    val v1Inodes = dataFilesOf(wh, "t").map(ino).toSet
+    val v1Files = StoreFiles.head(store, "t")
     store.mergeWith("t")(df => df.filter("k <= 10")) // the "bad" commit
     assert(store.read("t").count() == 10)
+    val onDisk = StoreFiles.onDisk(wh, "t")
     assert(store.restore("t", v1))
     assert(store.read("t").count() == 100)
-    assert(dataFilesOf(wh, "t").map(ino).toSet == v1Inodes,
-      "restore must link the snapshot's bytes, not rewrite them")
+    assert(StoreFiles.head(store, "t") == v1Files &&
+      StoreFiles.onDisk(wh, "t") == onDisk,
+      "restore must name the snapshot's files and write no data file")
     // restoring the current head is a no-op
     val head = store.versions("t").max
     assert(store.restore("t", head))

@@ -78,30 +78,17 @@ class SchemaEvolutionSpec extends AnyFunSuite {
 
   // ---- metadata-only evolution (ALTER TABLE ADD/DROP COLUMN) ----
 
-  private def ino(p: java.nio.file.Path): Any =
-    java.nio.file.Files.getAttribute(p, "unix:ino")
-
-  private def dataFilesOf(wh: String, table: String): Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    val d = java.nio.file.Paths.get(wh, table)
-    val v = java.nio.file.Files.readString(d.resolve("_current")).trim
-    java.nio.file.Files.walk(d.resolve(v)).iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .filter { f =>
-        val n = f.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }.toSeq
-  }
-
   test("addColumn is metadata-only: files are hard-linked, reads null-fill") {
     import TestSpark.spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft_evo").toString
     val store = new TableStore(spark, wh)
     store.overwrite("t", Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
-    val before = dataFilesOf(wh, "t").map(ino).toSet
+    val named = StoreFiles.head(store, "t")
+    val onDisk = StoreFiles.onDisk(wh, "t")
     assert(store.addColumn("t", "score", "DOUBLE"))
-    val after = dataFilesOf(wh, "t").map(ino).toSet
-    assert(after == before, "evolution must hard-link, not rewrite")
+    assert(StoreFiles.head(store, "t") == named &&
+      StoreFiles.onDisk(wh, "t") == onDisk,
+      "evolution must name the same data files and write none")
     assert(store.read("t").columns.toSeq == Seq("id", "name", "score"))
     assert(store.read("t").filter("score IS NULL").count() == 2)
     // Post-evolution appends speak the widened schema...

@@ -557,8 +557,6 @@ class TotalsSinkSpec extends AnyFunSuite {
 
   test("a single-user batch rewrites ONE bucket; the rest hard-link through") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val wh = java.nio.file.Files.createTempDirectory("s18_bucket").toString
     val store = new graft.psn.TableStore(spark, wh)
     def agg(rows: (Long, Long, java.math.BigDecimal)*) =
@@ -568,29 +566,20 @@ class TotalsSinkSpec extends AnyFunSuite {
     // seed a population across many buckets, then a one-user batch
     Streams.applyTotalsBatch(store, "t", "s18",
       agg((0L until 64L).map(u => (u, 1L, dec(1.0))): _*), batchId = 0L)
-    def versionDir = {
-      val v = Files.readString(Paths.get(wh, "t", "_current")).trim
-      Paths.get(wh, "t", v)
-    }
-    def inodesByBucket(p: java.nio.file.Path) =
-      Files.walk(p).iterator().asScala
-        .filter(f => Files.isRegularFile(f) &&
-          !f.getFileName.toString.startsWith("_") &&
-          !f.getFileName.toString.startsWith("."))
-        .toSeq.groupBy(_.getParent.getFileName.toString)
-        .view.mapValues(_.map(Files.getAttribute(_, "unix:ino")).toSet)
-        .toMap
-    val before = inodesByBucket(versionDir)
+    // the data files the head names, by bucket directory
+    def filesByBucket = StoreFiles.head(store, "t")
+      .groupBy(_.getParent.getFileName.toString)
+    val before = filesByBucket
     assert(before.size == Streams.TotalsBuckets) // 64 users fill all 8
     Streams.applyTotalsBatch(store, "t", "s18",
       agg((7L, 1L, dec(1.0))), batchId = 1L)
-    val after = inodesByBucket(versionDir)
+    val after = filesByBucket
     val changed = after.keySet.filter(k => after(k) != before.getOrElse(k, Set.empty))
     assert(changed.size == 1,
       s"expected exactly one rewritten bucket, got $changed")
-    // every untouched bucket's files are the SAME inodes (hard links)
+    // every untouched bucket's files are the SAME files (inherited)
     (after.keySet - changed.head).foreach { k =>
-      assert(after(k) == before(k), s"bucket $k must ride through as links")
+      assert(after(k) == before(k), s"bucket $k must ride through by name")
     }
     // and the totals are correct
     assert(store.read("t").agg(sum(col("n_events"))).head.getLong(0) == 65L)

@@ -147,26 +147,12 @@ class VersionedStoreSpec extends AnyFunSuite {
         (5, "e", 30)).toDF("k", "v", "p"),
       "p")
 
-    // (partition dir -> data-file inode keys) for one version directory
-    def fileKeys(version: String): Map[String, Set[Object]] = {
-      val base = Paths.get(wh, "t", version)
-      import scala.jdk.CollectionConverters._
-      Files.list(base).iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("p="))
-        .map { p =>
-          p.getFileName.toString ->
-            Files.list(p).iterator().asScala
-              .filter(f => Files.isRegularFile(f) &&
-                !f.getFileName.toString.startsWith("_") &&
-                !f.getFileName.toString.startsWith("."))
-              .map(f => Files.readAttributes(f,
-                classOf[java.nio.file.attribute.BasicFileAttributes])
-                .fileKey())
-              .toSet
-        }.toMap
-    }
-    val v1Keys = fileKeys("v1")
+    // (partition dir -> data files) that one version names
+    def fileKeys(version: Int): Map[String, Set[java.nio.file.Path]] =
+      store.namedFiles("t", version)._1.toSet
+        .groupBy(_.getParent.getFileName.toString)
+    val v1Keys = fileKeys(1)
+    val onDisk = StoreFiles.onDisk(wh, "t")
 
     // Upsert touching only p=20: update k=3, insert k=6.
     val updates = Seq((3, "C", 20), (6, "f", 20)).toDF("k", "v", "p")
@@ -183,16 +169,18 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(got == Set((1, "a", 10), (2, "b", 10), (3, "C", 20),
       (4, "d", 20), (5, "e", 30), (6, "f", 20)))
 
-    // Untouched partitions (p=10, p=30) in v2 are the SAME inodes as in
-    // v1 — linked through, zero data I/O; the touched one (p=20) is a
-    // genuine rewrite sharing no inode with its predecessor.
-    val v2Keys = fileKeys("v2")
+    // Untouched partitions (p=10, p=30) in v2 are the SAME files as in
+    // v1 — inherited by name, zero data I/O; the touched one (p=20) is a
+    // genuine rewrite sharing no file with its predecessor, and the only
+    // data the commit wrote.
+    val v2Keys = fileKeys(2)
     assert(v2Keys("p=10") == v1Keys("p=10"))
     assert(v2Keys("p=30") == v1Keys("p=30"))
     assert(v2Keys("p=20").intersect(v1Keys("p=20")).isEmpty)
+    assert(StoreFiles.onDisk(wh, "t") -- onDisk == v2Keys("p=20"))
 
-    // A second pruned merge survives GC of v1: links keep shared bytes
-    // alive regardless of which version dirs age out.
+    // A second pruned merge survives GC of v1: GC keeps every file a
+    // retained version names, whichever version directory holds it.
     store.mergePartitionedWith("t", "p", Seq(30)) { cur =>
       cur.select(col("k"), concat(col("v"), lit("!")).as("v"), col("p"))
     }
