@@ -5,7 +5,10 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.psn._
@@ -149,15 +152,17 @@ class PsnPipelineSpec extends AnyFunSuite {
     assert(DailyRun.run(spark, day3, store) == ((0L, 0L)))
     assert(listing(wh, "game") == g && listing(wh, "time_play") == tp)
 
-    // a steady-state changed day: trophy append, the classification
-    // collect, the fact append and the game commit — at most 4 actions
-    // and 6 jobs
+    // a steady-state changed day: trophy append, the one collect that reads
+    // both sides of the classification, the fact append and the game
+    // commit — at most 4 actions and 4 jobs, and no broadcast in any plan
     val day4 = next(day3, Map("CUSA_00001" -> 50L))
     var got = (0L, 0L)
     val c = SparkCounts.of(spark) { got = DailyRun.run(spark, day4, store) }
     assert(got == ((0L, 1L)))
     assert(c.executions <= 4, s"steady-state day ran ${c.executions} actions")
-    assert(c.jobs <= 6, s"steady-state day ran ${c.jobs} jobs")
+    assert(c.jobs <= 4, s"steady-state day ran ${c.jobs} jobs")
+    assert(!c.operators.exists(_.contains("Broadcast")),
+      s"steady-state day planned a broadcast: ${c.operators}")
     assert(store.read("game").filter(col("title_id") === "CUSA00001")
       .head.getAs[Long]("play_count") == 50)
   }
@@ -202,6 +207,115 @@ class PsnPipelineSpec extends AnyFunSuite {
     val fresh = Ops.newGames(current, stored)
     val known = current.join(stored.select("id"), Seq("id"), "left_semi")
     assert(fresh.count() + known.count() == current.count())
+  }
+
+  /** The classification as a join, evaluated by Spark: `current` LEFT JOIN
+    * `stored` on id, with `is_new` and the two diffs. [[Ops.classify]]
+    * must give the same rows from ONE collect of both sides. */
+  private def classifyByJoin(current: DataFrame, stored: DataFrame): DataFrame =
+    current.join(stored.select(col("id"), lit(true).as("known"),
+      col("play_count").as("old_count"), col("play_duration").as("old_duration")),
+      Seq("id"), "left")
+      .select(current.columns.map(col).toSeq ++ Seq(col("known").isNull.as("is_new"),
+        (col("play_count") - col("old_count")).as("play_count_diff"),
+        (col("play_duration") - col("old_duration")).as("play_duration_diff")): _*)
+
+  private def classifyOnDriver(current: DataFrame, stored: DataFrame): Seq[Row] = {
+    val both = Ops.sides(current, stored)
+    Ops.classify(both.schema, both.collect().toSeq)
+  }
+
+  /** Rows as value lists, in id order (then by value text), for comparing
+    * two plans' results as multisets. */
+  private def canon(rows: Seq[Row]): Seq[Seq[Any]] =
+    rows.map(_.toSeq).sortBy(r => (String.valueOf(r.head), r.mkString("|")))
+
+  private def sample[A](g: Gen[A], n: Int): Seq[A] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(61L + i)))
+
+  private def raw(n: Int, count: Long, duration: String) = GameTitleRaw(
+    f"CUSA_$n%05d", s"title $n", s"http://img/$n", "ps5_native_game",
+    ts("2024-07-01 10:00:00"), ts("2024-08-02 10:00:00"), count, duration)
+
+  /** One generated day: the stored library and today's snapshot of it. A
+    * stored title is played (a positive, zero or negative play_count diff),
+    * unchanged, or missing from today's snapshot; today adds new titles;
+    * either side may carry a null ISO duration. */
+  private val genDay: Gen[(Seq[GameTitleRaw], Seq[GameTitleRaw])] = for {
+    stored <- Gen.choose(0, 8)
+    fresh <- Gen.choose(0, 3)
+    olds <- Gen.listOfN(stored, for {
+      count <- Gen.choose(0L, 50L)
+      hours <- Gen.option(Gen.choose(0, 99))
+      fate <- Gen.oneOf("unchanged", "played", "missing")
+      diff <- Gen.choose(-3L, 5L)
+      todayHours <- Gen.option(Gen.choose(0, 99))
+    } yield (count, hours, fate, diff, todayHours))
+  } yield {
+    def iso(h: Option[Int]) = h.map(x => s"PT${x}H").orNull
+    val before = olds.zipWithIndex.map { case ((count, h, _, _, _), i) => raw(i, count, iso(h)) }
+    val today = olds.zipWithIndex.flatMap {
+      case ((_, _, "missing", _, _), _) => None
+      case ((_, _, "unchanged", _, _), i) => Some(before(i))
+      case ((count, _, _, diff, h), i) => Some(raw(i, count + diff, iso(h)))
+    } ++ (0 until fresh).map(j => raw(100 + j, 1L + j, if (j == 1) null else "PT1H"))
+    (before, today)
+  }
+
+  test("driver classification equals current LEFT JOIN stored on generated days") {
+    val trophies = day1.profileTrophies()
+    val days = sample(genDay, 24)
+    assert(days.exists(_._2.exists(_.play_duration == null)), "a null duration")
+    assert(days.exists { case (b, t) => b.exists(g => !t.exists(_.title_id == g.title_id)) },
+      "a stored id missing from today")
+    var diffs = Set.empty[Long]
+    days.foreach { case (before, today) =>
+      val stored = Ingest.gameTitles(spark, new FakePsnClient(trophies, before))
+        .select("id", "play_count", "play_duration")
+      val current = Ingest.gameTitles(spark, new FakePsnClient(trophies, today))
+      val got = classifyOnDriver(current, stored)
+      val want = classifyByJoin(current, stored).collect().toSeq
+      assert(canon(got) == canon(want), (before, today))
+      assert(got.headOption.forall(_.schema.fieldNames.toSeq ==
+        classifyByJoin(current, stored).columns.toSeq))
+      diffs ++= got.flatMap(r => Option(r.getAs[java.lang.Long]("play_count_diff")).map(_.toLong))
+    }
+    assert(diffs.exists(_ > 0) && diffs(0L) && diffs.exists(_ < 0), diffs)
+
+    // a play_count diff that overflows a long fails on both sides (ANSI)
+    val big = Ingest.gameTitles(spark, new FakePsnClient(trophies, Seq(raw(1, Long.MaxValue, "PT1H"))))
+    val low = Ingest.gameTitles(spark, new FakePsnClient(trophies, Seq(raw(1, -1L, "PT1H"))))
+      .select("id", "play_count", "play_duration")
+    intercept[ArithmeticException](classifyOnDriver(big, low))
+    val e = intercept[Exception](classifyByJoin(big, low).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
+  }
+
+  test("the keyed upsert equals the join upsert for 0, 1 and many updates") {
+    val trophies = day1.profileTrophies()
+    val base = Ingest.gameTitles(spark, new FakePsnClient(trophies,
+      (0 until 30).map(i => raw(i, i.toLong, s"PT${i}H"))))
+    val schema = base.schema
+    def titles(gs: Seq[GameTitleRaw]): Seq[Row] =
+      Ingest.gameTitles(spark, new FakePsnClient(trophies, gs)).collect().toSeq
+    // played again; one with a null duration (the target keeps its own);
+    // one id the base lacks (ignored, as the left join ignores it)
+    val played = titles((0 until 12).map(i => raw(i * 2, 100L + i,
+      if (i == 3) null else s"PT${100 + i}H")) :+ raw(999, 7L, "PT7H"))
+    for (updates <- Seq(Seq.empty[Row], played.take(1), played)) {
+      val keyed = Ops.mergeKeyed(base, updates)
+      val joined = Ops.mergeUpdates(base, spark.createDataFrame(updates.asJava, schema))
+      assert(keyed.schema == joined.schema)
+      assert(canon(keyed.collect().toSeq) == canon(joined.collect().toSeq), updates.size)
+      val plan = keyed.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join") && !plan.contains("Broadcast"), plan)
+    }
+    val after = Ops.mergeKeyed(base, played).filter(col("title_id") === "CUSA00006").head
+    assert(after.getAs[Long]("play_count") == 103L)
+    assert(after.getAs[Double]("play_duration") == 6 * 3600.0)
+    // update ids are a key: a repeated one fails rather than repeat a row
+    intercept[Exception](Ops.mergeKeyed(base, played :+ played.head).collect())
   }
 
   test("typed Dataset surface + PlayStats Aggregator") {
