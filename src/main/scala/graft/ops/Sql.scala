@@ -115,10 +115,11 @@ object Sql {
     execute(s, store, None, sql)
 
   /** DELETE FROM <t> WHERE <any other predicate> as a DELETION-VECTOR
-    * commit ([[graft.psn.TableStore.deleteRows]]): one scan finds the
-    * condemned rows' (file, position) pairs, the commit inherits every
-    * data file by name — zero data rewritten, which is what a row-level
-    * DELETE must cost on a 100 TB table. Returns the deleted-row count; the
+    * commit ([[graft.psn.TableStore.deleteRows]]): one collect finds the
+    * condemned rows' (file, position) pairs, the driver writes them as
+    * one Roaring bitmap per data file, and the commit inherits every data
+    * file by name — zero data rewritten, which is what a row-level DELETE
+    * must cost on a 100 TB table. Returns the deleted-row count; the
     * count covers only this deletion-vector route, so a `k IN (SELECT …)`
     * condition, which takes [[runDelete]]'s tombstone rewrite, reports 0
     * whatever it removed. */

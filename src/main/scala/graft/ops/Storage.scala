@@ -448,16 +448,18 @@ object Storage {
 
   /** q78: row-level DELETE via DELETION VECTORS — the statement rewrites
     * NOTHING: the commit inherits every data file by name (the in-query
-    * require pins identical file counts) and publishes a (file,
-    * row-position) vector every read subtracts. Two successive DELETEs prove vector MERGING; the
-    * metadata-only COUNT is checked against the live read inside the
-    * query (footer rows minus vector rows); the oracle recomputes the
-    * survivor aggregate declaratively.
+    * require pins identical file counts) and publishes a vector of row
+    * positions, one Roaring bitmap per data file, written on the driver.
+    * Every read subtracts it with one predicate over each row's file
+    * path and row index — no join. Two successive DELETEs prove vector
+    * MERGING; the metadata-only COUNT is checked against the live read
+    * inside the query (footer rows minus bitmap cardinalities); the
+    * oracle recomputes the survivor aggregate declaratively.
     *
-    * Scale shape: DELETE on 100 TB costs one scan (to find positions) +
-    * O(1) file operations + O(deleted) vector bytes — not a table rewrite; the
-    * deletes materialize for free on the next natural rewrite (OPTIMIZE /
-    * merge), which also purges the vector. */
+    * Scale shape: DELETE on 100 TB costs one scan (one Spark job, to
+    * collect positions) + O(1) file operations + O(deleted) vector bytes
+    * — not a table rewrite; the deletes materialize for free on the next
+    * natural rewrite (OPTIMIZE / merge), which also purges the vector. */
   def q78DvDelete(s: SparkSession, dir: String): DataFrame = {
     val wh = java.nio.file.Files
       .createTempDirectory("graft_dv_wh").toString

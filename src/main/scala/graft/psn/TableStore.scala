@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, struct, sum, when}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.roaringbitmap.RoaringBitmap
 
 /** One aggregate of a materialized view: `out` = FUNC(`in`), FUNC ∈
   * COUNT(*) | SUM | MIN | MAX — exactly the incrementally-combinable
@@ -87,7 +88,13 @@ final case class MvAgg(out: String, func: String, in: String)
   * commit's memoized footer schema), its deletion vector and its stats
   * sidecar. Every row it reads goes through one scan of that marker
   * ([[scan]]), so a verb never mixes two versions and every reader
-  * subtracts deletes and null-fills evolved columns the same way.
+  * subtracts deletes and null-fills evolved columns the same way. A
+  * deletion vector is one Roaring bitmap of row positions per data file
+  * ([[DeletionVectors]]), read on the driver; the scan subtracts it with
+  * one predicate over `_metadata.file_path` and `_metadata.row_index`, so
+  * a read of a table with deletes plans no join. The verbs that only
+  * count or carry deletes (row counts, the partition catalog, inherit,
+  * clone) read and write the bitmaps on the driver with no Spark job.
   *
   * Appends to an existing table do not commit: they write new part-files
   * into the CURRENT version directory through Spark's job committer, so a
@@ -244,37 +251,43 @@ final class TableStore(private[graft] val spark: SparkSession,
     * of them when empty) under the version's schema ([[schemaOf]]) —
     * which makes metadata-only evolution sound: Spark null-fills missing
     * columns and projects away undeclared ones per file — minus its
-    * DELETION VECTOR when it has one ([[deleteRows]]). `positions` keeps
-    * each row's file path relative to the table root and in-file row
-    * index ([[DvRel]], [[DvPos]]): stable for immutable files, and the
-    * same in every version that inherits the file. `live = false` skips
-    * the DV subtraction: a bloom built over a file describes its bytes,
-    * which outlive any one version's vector. */
+    * DELETION VECTOR when it has one ([[deleteRows]]). The vector is
+    * subtracted by one predicate ([[KeepLive]]) over each row's
+    * `_metadata.file_path` and `_metadata.row_index`, holding the bitmaps
+    * of the scanned files only: no join, no exchange, no broadcast.
+    * `positions` keeps each row's file path as `_metadata.file_path`
+    * renders it ([[DvPath]], see [[relOfUri]]) and in-file row index
+    * ([[DvPos]]): stable for immutable files, and the same in every
+    * version that inherits the file. `live = false` skips the
+    * subtraction: a bloom built over a file describes its bytes, which
+    * outlive any one version's vector. */
   private def scan(table: String, m: Marker, paths: Seq[Path] = Nil,
       positions: Boolean = false, live: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.expr
+    import org.apache.spark.sql.GraftBridge.{column, expression}
     val schema = schemaOf(table, m) // a missing table fails here
     val vf = filesOf(table, m)
-    val files = parquetOf(table, schema, if (paths.isEmpty) vf.data else paths)
-    val dv = if (live) dvOf(table, vf) else None
-    if (!positions && dv.isEmpty) files
-    else {
-      // Hadoop's Path rendering ("file:/tmp/…"), because that is the
-      // format `_metadata.file_path` carries — java.nio's toUri
-      // ("file:///tmp/…") would silently mangle every stored relPath.
-      val prefix = new org.apache.hadoop.fs.Path(dir(table).toUri).toString
-        .stripSuffix("/") + "/"
-      val pos = files
-        .withColumn(DvRel,
-          expr(s"substring(_metadata.file_path, ${prefix.length + 1})"))
-        .withColumn(DvPos, expr("_metadata.row_index"))
-      val kept = dv.fold(pos) { d =>
-        val del = d.toDF("__del_rel", "__del_pos")
-        pos.join(del, pos(DvRel) === col("__del_rel") &&
-          pos(DvPos) === col("__del_pos"), "left_anti")
-      }
-      if (positions) kept else kept.drop(DvRel, DvPos)
-    }
+    val scanned = if (paths.isEmpty) vf.data else paths
+    val files = parquetOf(table, schema, scanned)
+    val vector = if (live) deletedOf(table, vf) else Map.empty[String, RoaringBitmap]
+    val deleted = scanned.flatMap(f => vector.get(dir(table).relativize(f).toString)
+      .map(f.toAbsolutePath.normalize.toString -> _)).toMap
+    val kept = if (deleted.isEmpty) files else files.filter(column(KeepLive(
+      new DeletedRows(deleted), expression(col("_metadata.file_path")),
+      expression(col("_metadata.row_index")))))
+    if (!positions) kept
+    else kept.withColumn(DvPath, col("_metadata.file_path"))
+      .withColumn(DvPos, col("_metadata.row_index"))
+  }
+
+  /** The root-relative path of the file `_metadata.file_path` renders as
+    * `uri` (a percent-encoded URI: a partition directory may hold a space
+    * or a `%`); loud for a file outside the table. */
+  private def relOfUri(table: String, uri: String): String = {
+    val root = dir(table).toAbsolutePath.normalize
+    val f = Paths.get(new java.net.URI(uri))
+    require(f.startsWith(root),
+      s"$table: scanned file '$uri' lies outside the table root $root")
+    root.relativize(f).toString
   }
 
   /** `files` of `table` as one parquet relation under `schema`, a hive
@@ -380,10 +393,11 @@ final class TableStore(private[graft] val spark: SparkSession,
   }
 
   /** THE inherit step: keep, by name, those of base marker `m`'s data
-    * files that `keep` selects, with the base's deletion-vector entries
+    * files that `keep` selects, with the base's deletion-vector bitmaps
     * for exactly those — its vector files when every file is kept, else
-    * the kept files' entries written into the claim's `_dv/` — and, when
-    * the first file stays first, the base's memoized schema. */
+    * the kept files' bitmaps, read and rewritten on the driver into the
+    * claim's `_dv/` — and, when the first file stays first, the base's
+    * memoized schema. */
   private def inherit(table: String, m: Marker, claimed: Path,
       keep: Path => Boolean = _ => true): Staged = {
     val base = filesOf(table, m)
@@ -392,13 +406,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     val dv =
       if (kept.length == base.data.length) base.dv.map(rel)
       else {
-        if (kept.nonEmpty) dvOf(table, base).foreach { d =>
-          import spark.implicits._
-          val carried = d.join(org.apache.spark.sql.functions.broadcast(
-            kept.map(rel).toDF("rel")), "rel").select(col("rel"), col("pos"))
-          if (!carried.isEmpty)
-            carried.write.mode(SaveMode.Append).parquet(dvDir(claimed).toString)
-        }
+        val keptRels = kept.map(rel).toSet
+        writeDv(claimed, deletedOf(table, base).filter(e => keptRels(e._1)))
         Nil
       }
     val seed = if (kept.nonEmpty && kept.head == base.data.head)
@@ -408,31 +417,38 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   // ----------------------------------------------- deletion vectors (_dv/)
 
-  /** A version's own deletion vector: parquet (rel, pos) pairs — a data
-    * file's path relative to the table root, a row index — naming rows
-    * every read subtracts. Bookkeeping, so [[dataFiles]] never sees it. */
+  /** A version's own deletion vector: one [[DeletionVectors]] file of
+    * Roaring bitmaps, keyed by a data file's path relative to the table
+    * root, naming rows every read subtracts. Bookkeeping, so
+    * [[dataFiles]] never sees it as data. */
   private def dvDir(versionDir: Path): Path = versionDir.resolve("_dv")
-  private val DvRel = "__dv_rel"
+  private val DvPath = "__dv_path"
   private val DvPos = "__dv_pos"
-  private val DvSchema = StructType(Seq(
-    StructField("rel", org.apache.spark.sql.types.StringType),
-    StructField("pos", org.apache.spark.sql.types.LongType)))
 
-  /** The deletion vector of files `vf` as (rel, pos) rows, if any. */
-  private def dvOf(table: String, vf: VersionFiles): Option[DataFrame] =
-    if (vf.dv.isEmpty) None else Some(parquetOf(table, DvSchema, vf.dv))
+  /** Write `vector` as claim `claimed`'s own vector file, if it names any
+    * row. The name has no `_` or `.` prefix, so the claim's listing of
+    * `_dv/` finds it. */
+  private def writeDv(claimed: Path, vector: Map[String, RoaringBitmap]): Unit =
+    if (vector.nonEmpty) DeletionVectors.write(dvDir(claimed).resolve("deleted.rbm"), vector)
 
-  /** Row-level DELETE WITHOUT rewriting data — deletion vectors. One scan
-    * finds the matching rows' (file, position) pairs; the commit inherits
-    * every data file and the base's vector, and writes the new pairs as
-    * one `_dv/` file: O(1) file operations + O(deleted) vector bytes.
+  /** The deletion vector of files `vf`, per data file (relative path). */
+  private def deletedOf(table: String, vf: VersionFiles): Map[String, RoaringBitmap] =
+    DeletionVectors.union(vf.dv.map(DeletionVectors.read))
+
+  /** Row-level DELETE WITHOUT rewriting data — deletion vectors. One
+    * collect finds the matching rows' (file, position) pairs — the one
+    * Spark job — and the driver writes them as one bitmap file in the
+    * claim's `_dv/`; the commit inherits every data file and the base's
+    * vector files: O(1) file operations + O(deleted) vector bytes.
     * Every read subtracts the vector; rewriting commits (merge,
     * overwrite, cluster) read through it, so they materialize the deletes
     * and carry no vector — the natural purge. Time travel keeps each
     * snapshot's own vector. Successive deletes union (the new scan runs
-    * on the already-filtered table, so entries never duplicate). A delete
-    * matching nothing commits nothing. Refused on change-feed tables: the
-    * feed streams raw appended files. Returns the number of rows deleted. */
+    * on the already-filtered table, so no position is named twice). A
+    * delete matching nothing commits nothing; a position past
+    * [[DeletionVectors.MaxPosition]] fails it. Refused on change-feed
+    * tables: the feed streams raw appended files. Returns the number of
+    * rows deleted. */
   def deleteRows(table: String, condition: org.apache.spark.sql.Column,
       txnTag: Option[String] = None): Long = {
     val pinned = head(table)
@@ -442,34 +458,20 @@ final class TableStore(private[graft] val spark: SparkSession,
     requireNoFeed(table, "deleteRows")
     checkTag(txnTag)
     val hits = scan(table, pinned, positions = true).filter(condition)
-      .select(col(DvRel).as("rel"), col(DvPos).as("pos"))
-      .persist()
-    try {
-      // ONE action for (count, relPath sample): a separate first() after
-      // the count re-planned and re-launched a job per delete — fixed
-      // cost the DDL family and the tombstone loops pay per statement.
-      val probe = hits.agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.min(col("rel"))).first
-      val n = probe.getLong(0)
-      if (n == 0) return 0L
-      // relPaths are join keys across every version that inherits the
-      // file: a scheme-mangled prefix must fail loudly
-      val sample = probe.getString(1)
-      require(!sample.contains(":") && !sample.startsWith("/"),
-        s"deleteRows($table): derived relPath '$sample' is not relative — " +
-          "file_path prefix mismatch")
-      val committed = transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
-        val staged = inherit(table, pinned, claimed)
-        // one file, however many partitions the scan had
-        hits.coalesce(1).write.mode(SaveMode.Append)
-          .parquet(dvDir(claimed).toString)
-        staged
-      }
-      if (committed.isEmpty) throw new IllegalStateException(
-        s"deleteRows($table): lost the commit race — rerun")
-      n
-    } finally hits.unpersist()
+      .select(col(DvPath), col(DvPos)).collect()
+    if (hits.isEmpty) return 0L
+    val vector = hits.groupMap(_.getString(0))(_.getLong(1)).map { case (uri, ps) =>
+      val rel = relOfUri(table, uri)
+      rel -> DeletionVectors.bitmapOf(rel, ps)
+    }
+    val committed = transact(table, pinned, txnTag, GiveUp) { (_, claimed) =>
+      val staged = inherit(table, pinned, claimed)
+      writeDv(claimed, vector)
+      staged
+    }
+    if (committed.isEmpty) throw new IllegalStateException(
+      s"deleteRows($table): lost the commit race — rerun")
+    hits.length.toLong
   }
 
   /** DESCRIBE HISTORY: the live commit log as a DataFrame — one row per
@@ -621,12 +623,13 @@ final class TableStore(private[graft] val spark: SparkSession,
     * SHALLOW CLONE): a retained snapshot of `source` (the head, or a pinned
     * earlier version) becomes a NEW table whose v1 hard-links the
     * snapshot's data files into its own directory and carries its
-    * sidecars — declared schema, deletion vector (keys rebased onto the
-    * clone's paths), CHECK constraints. The one cross-table way to keep
-    * files: a clone must outlive its source's GC, so it links where a
-    * commit inherits by name. O(files) link(2) calls, zero bytes copied;
-    * the tables then evolve independently (committed files are
-    * immutable), and the shared inodes live until the last referrer goes.
+    * sidecars — declared schema, deletion vector (its bitmaps read and
+    * rewritten on the driver, keys rebased onto the clone's paths), CHECK
+    * constraints. The one cross-table way to keep files: a clone must
+    * outlive its source's GC, so it links where a commit inherits by
+    * name. O(files) link(2) calls, zero bytes copied; the tables then
+    * evolve independently (committed files are immutable), and the
+    * shared inodes live until the last referrer goes.
     * `snapshot = true` marks the clone read-only for life (BigQuery's
     * CREATE SNAPSHOT TABLE). Returns the clone's version number (1). */
   def cloneTable(source: String, target: String,
@@ -649,11 +652,10 @@ final class TableStore(private[graft] val spark: SparkSession,
         Files.createDirectories(dst.getParent)
         Files.createLink(dst, f)
       }
-      // the entries name the source's paths: rebase each onto the claim
-      dvOf(source, vf).foreach(_.select(
-        org.apache.spark.sql.functions.regexp_replace(col("rel"), "^[^/]+",
-          claimed.getFileName.toString).as("rel"), col("pos"))
-        .write.mode(SaveMode.Append).parquet(dvDir(claimed).toString))
+      // the bitmaps name the source's paths: rebase each onto the claim
+      writeDv(claimed, deletedOf(source, vf).map { case (rel, bits) =>
+        claimed.getFileName.toString + rel.dropWhile(_ != '/') -> bits
+      })
       val cs = constraints(source)
       if (cs.nonEmpty) writeConstraints(target, cs)
       // The flag rides in the claimed dir and becomes visible WITH the
@@ -703,13 +705,13 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** INFORMATION_SCHEMA.PARTITIONS — BigQuery's partition-level catalog:
     * one row per hive partition of `table` with its metadata-only row
-    * count (parquet footers minus the partition's deletion-vector
-    * entries — zero data read) and data-file count. Unpartitioned
-    * tables yield one `__NULL__` row covering the whole table, matching
-    * BigQuery's null partition_id. The partition-management surface
-    * rests on this: retention sweeps, skew audits, and load balancing
-    * all start from "how big is each partition" answered without a
-    * scan. */
+    * count (parquet footers minus the cardinalities of the partition's
+    * deletion-vector bitmaps — zero data read, no Spark job) and
+    * data-file count. Unpartitioned tables yield one `__NULL__` row
+    * covering the whole table, matching BigQuery's null partition_id.
+    * The partition-management surface rests on this: retention sweeps,
+    * skew audits, and load balancing all start from "how big is each
+    * partition" answered without a scan. */
   def informationSchemaPartitions(table: String,
       parallelism: Int = 8): DataFrame = {
     import spark.implicits._
@@ -720,12 +722,10 @@ final class TableStore(private[graft] val spark: SparkSession,
       case d if d.contains("=") => d
       case _ => "__NULL__"
     }
-    // deletion-vector entries per partition, so partition counts subtract
-    // exactly their own deletes
-    val dvByDir: Map[String, Long] = dvOf(table, vf).fold(Map.empty[String, Long])(
-      _.groupBy(col("rel")).count().collect().toSeq
-        .groupMapReduce(r => partOf(dir(table).resolve(r.getString(0))))(
-          _.getLong(1))(_ + _))
+    // deleted rows per partition, so partition counts subtract exactly
+    // their own deletes
+    val dvByDir = deletedOf(table, vf).toSeq.groupMapReduce(
+      e => partOf(dir(table).resolve(e._1)))(_._2.getLongCardinality)(_ + _)
     val byPart = vf.data.groupBy(partOf)
     byPart.toSeq.map { case (part, files) =>
       val rows = pooled(files, parallelism)(
@@ -1496,7 +1496,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       enforced(table, next).write.mode(SaveMode.Append)
         .partitionBy(partitionCol).parquet(claimed.toString)
       // Untouched partitions are inherited with their deletion-vector
-      // entries; touched ones were rewritten through the DV-aware read,
+      // bitmaps; touched ones were rewritten through the DV-aware read,
       // which applied theirs.
       inherit(table, base, claimed, f =>
         partitionValue(table, f, partitionCol).exists(!touchedStr(_)))
@@ -2018,7 +2018,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       .lastOption
 
   /** Build missing per-file blooms in ONE job: group the files' rows by
-    * their relPath and aggregate every configured column's filter at once
+    * their path and aggregate every configured column's filter at once
     * ([[graft.functions.BloomOps.bloom_build_agg]]). The scan keeps
     * deleted rows: a filter describes its file's bytes, which later
     * versions share by relPath. An empty file yields no group → no filter
@@ -2035,11 +2035,11 @@ final class TableStore(private[graft] val spark: SparkSession,
     val aggs = specs.map(s => graft.functions.BloomOps.bloom_build_agg(
       xxhash64(col(s.column).cast("string")), s.items, s.fpp)
       .as(s"__b_${s.column}"))
-    val built = df.groupBy(col(DvRel))
+    val built = df.groupBy(col(DvPath))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map { r =>
-        r.getString(0) -> specs.zipWithIndex.flatMap { case (s, i) =>
+        relOfUri(table, r.getString(0)) -> specs.zipWithIndex.flatMap { case (s, i) =>
           Option(r.get(i + 1))
             .map(b => s.column -> b.asInstanceOf[Array[Byte]])
         }.toMap
@@ -2095,13 +2095,13 @@ final class TableStore(private[graft] val spark: SparkSession,
     rowCount(table, head(table), parallelism)
 
   /** [[countRows]] of pinned marker `m`'s version: footer row counts minus
-    * the rows its deletion vector names (DV footers). */
+    * the rows its deletion vector names (the bitmaps' cardinalities, read
+    * on the driver). */
   private def rowCount(table: String, m: Marker, parallelism: Int = 8): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    def rows(files: Seq[Path]) =
-      pooled(files, parallelism)(FileStats.rowCount(conf, _)).sum
     val vf = filesOf(table, m)
-    rows(vf.data) - rows(vf.dv)
+    pooled(vf.data, parallelism)(FileStats.rowCount(conf, _)).sum -
+      deletedOf(table, vf).values.map(_.getLongCardinality).sum
   }
 
   /** Metadata-only MIN/MAX of one column over the current version:

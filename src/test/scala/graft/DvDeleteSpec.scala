@@ -4,16 +4,20 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.psn.TableStore
+import graft.psn.{DeletionVectors, TableStore}
 
 /** Deletion vectors: row-level DELETE as a commit that inherits every
-  * data file plus a (file, row-position) vector every read subtracts.
-  * Asserts the contract: zero data files written (the head names the
-  * same files, and no data file appears on disk), successive deletes
-  * merge, time travel keeps pre-delete snapshots (diffVersions reports
-  * the rows as removed), rewriting commits materialize and PURGE the
-  * vector, compaction carries inherited files' entries while rewritten
-  * bins materialize theirs, and the metadata COUNT subtracts the vector.
+  * data file plus a vector of row positions, one bitmap per file, that
+  * every read subtracts. Asserts the contract: zero data files written
+  * (the head names the same files, and no data file appears on disk),
+  * successive deletes merge, time travel keeps pre-delete snapshots
+  * (diffVersions reports the rows as removed), rewriting commits
+  * materialize and PURGE the vector, compaction carries inherited files'
+  * entries while rewritten bins materialize theirs, and the metadata
+  * COUNT subtracts the vector. Then the plan shape (a DV'd read plans no
+  * join, exchange or broadcast; a delete is one Spark job plus its
+  * commit) and the vector file's robustness (a damaged file fails the
+  * read; a position no bitmap holds fails the delete).
   */
 class DvDeleteSpec extends AnyFunSuite {
   import TestSpark._
@@ -129,5 +133,70 @@ class DvDeleteSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException] {
       store3.deleteRows("f", col("k") === 1)
     }.getMessage.contains("feed"))
+  }
+
+  test("a DV'd read plans no join, exchange or broadcast") {
+    val store = new TableStore(spark,
+      Files.createTempDirectory("graft_dv7").toString)
+    store.overwrite("t",
+      (1L to 1000L).map(k => (k, k % 4)).toDF("k", "grp").repartition(4))
+    store.deleteRows("t", col("grp") === 0)
+    store.deleteRows("t", col("k") <= 100)
+    var n = 0L
+    val c = SparkCounts.of(spark) { n = store.read("t").collect().length.toLong }
+    assert(n == 675)
+    val planned = c.operators.filter(o =>
+      o.contains("Join") || o.contains("Exchange") || o.contains("Broadcast"))
+    assert(planned.isEmpty, s"a DV'd read planned $planned")
+  }
+
+  test("deleteRows on a DV'd table runs one Spark job plus its commit") {
+    val store = new TableStore(spark,
+      Files.createTempDirectory("graft_dv8").toString)
+    store.overwrite("t",
+      (1L to 1000L).map(k => (k, k % 4)).toDF("k", "grp").repartition(4))
+    store.deleteRows("t", col("grp") === 0)
+    var n = 0L
+    val c = SparkCounts.of(spark) { n = store.deleteRows("t", col("k") <= 100) }
+    assert(n == 75)
+    assert(c.jobs == 1, s"deleteRows ran ${c.jobs} Spark jobs")
+    assert(store.read("t").count() == 675)
+  }
+
+  test("vector files round-trip; a position no bitmap holds fails loudly") {
+    val dir = Files.createTempDirectory("graft_dv9")
+    val positions = Seq(0L, 65535L, 65536L, Int.MaxValue.toLong)
+    val vector = Map("v1/part-0.parquet" -> DeletionVectors.bitmapOf("f", positions),
+      "v1/k=a b/part-1.parquet" -> DeletionVectors.bitmapOf("g", Seq(7L)))
+    DeletionVectors.write(dir.resolve("full"), vector)
+    val back = DeletionVectors.read(dir.resolve("full"))
+    assert(back == vector)
+    assert(back("v1/part-0.parquet").toArray.map(_.toLong).toSeq == positions)
+    DeletionVectors.write(dir.resolve("empty"), Map.empty)
+    assert(DeletionVectors.read(dir.resolve("empty")).isEmpty)
+    Seq(-1L, DeletionVectors.MaxPosition + 1).foreach { p =>
+      assert(intercept[IllegalStateException] {
+        DeletionVectors.bitmapOf("f", Seq(3L, p))
+      }.getMessage.contains(s"row position $p"))
+    }
+  }
+
+  test("a truncated or corrupt vector file fails the read, never reads as nothing deleted") {
+    val wh = Files.createTempDirectory("graft_dv10").toString
+    val store = new TableStore(spark, wh)
+    store.overwrite("t", (1L to 100L).map(k => (k, k % 2)).toDF("k", "par"))
+    store.deleteRows("t", col("par") === 1)
+    val Seq(dv) = StoreFiles.headDv(store, "t").toSeq
+    val good = Files.readAllBytes(dv)
+    val truncated = good.take(good.length - 3)
+    val flipped = good.updated(good.length / 2, (good(good.length / 2) ^ 1).toByte)
+    Seq(truncated, flipped, Array.emptyByteArray).foreach { bytes =>
+      Files.write(dv, bytes)
+      val e = intercept[IllegalStateException](store.read("t").count())
+      assert(e.getMessage.contains("deletion vector"), e.getMessage)
+      intercept[IllegalStateException](store.countRows("t"))
+    }
+    Files.write(dv, good)
+    assert(store.read("t").count() == 50)
   }
 }
