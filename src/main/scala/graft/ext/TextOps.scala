@@ -1380,7 +1380,7 @@ object TextOps {
       .select(col("doc_id"), lit(null).cast("string").as("th"),
         col("band").cast("int").as("band"), col("bkt"),
         (bbktOf + buckets).cast("int").as("sbkt"))
-    store.appendCommitted("ingest_idx",
+    store.append("ingest_idx",
       exactRows(corpusDocs
           .select(col("doc_id"), graft_md5(col("text")).as("th")))
         .unionByName(bandRows(minhashSigOf(corpusDocs)))

@@ -464,7 +464,8 @@ object Sql {
 
   /** Execute REFRESH MATERIALIZED VIEW — re-materialize and re-pin
     * ([[TableStore.refreshMaterializedView]]): incremental when the base
-    * only grew in place, full recompute when it was rewritten. */
+    * only grew by appends, full recompute when it was rewritten or lost
+    * rows to a delete. */
   def runRefreshMv(store: TableStore, sql: String): Unit = sql match {
     case RefreshMvStmt(target) =>
       store.refreshMaterializedView(baseName(target))
@@ -1879,7 +1880,7 @@ object Sql {
     * format='PARQUET'|'CSV'|'JSON')` — BigQuery's file-ingestion
     * statement (the reference's pipeline is load-then-query:
     * load_data_first.py's load jobs and main.py:62's `to_gbq`). INTO
-    * appends through the store's schema-asserted in-place append;
+    * appends through the store's schema-asserted append (one commit);
     * OVERWRITE truncate-loads a new version. CSV reads with header +
     * schema inference (BigQuery's autodetect). Returns the row count
     * loaded — the statement's job statistics.
@@ -2521,7 +2522,9 @@ object Sql {
     * why this store cannot do it metadata-only). The INSERT after the
     * rename is the schema witness (it only succeeds if the head carries
     * the new name), and the in-line time-travel assert pins the q96
-    * discipline: the PRE-rename snapshot keeps its OWN column name. */
+    * discipline: the PRE-rename snapshot keeps its OWN column name. It
+    * runs between the rename and the INSERT, while retention (one
+    * version behind the head) still holds that snapshot. */
   def q99RenameColumn(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.Out._
     val wh = java.nio.file.Files
@@ -2533,9 +2536,6 @@ object Sql {
         |  WHERE o_orderkey % 2 = 0;
         |ALTER TABLE `graft-project.store.ord_rc`
         |  RENAME COLUMN o_totalprice TO price;
-        |INSERT INTO `graft-project.store.ord_rc` (o_orderkey, price)
-        |  SELECT o_orderkey, o_totalprice * 2 FROM orders
-        |  WHERE o_orderkey % 2 = 1;
         |""".stripMargin)
     // time travel composes: the pre-rename version still reads with its
     // own declared column name, never the renamed head's
@@ -2543,6 +2543,11 @@ object Sql {
     require(store.readVersion("ord_rc", v0)
         .columns.contains("o_totalprice"),
       "q99: the pre-rename snapshot must keep its own column name")
+    runScript(s, store, dir,
+      """INSERT INTO `graft-project.store.ord_rc` (o_orderkey, price)
+        |  SELECT o_orderkey, o_totalprice * 2 FROM orders
+        |  WHERE o_orderkey % 2 = 1;
+        |""".stripMargin)
     require(!store.read("ord_rc").columns.contains("o_totalprice"),
       "q99: the head must carry only the new name")
     store.read("ord_rc")

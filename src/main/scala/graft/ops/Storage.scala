@@ -86,9 +86,10 @@ object Storage {
     * FOOTERS of the committed snapshot ([[TableStore.countRows]]): zero
     * data read, zero Spark jobs, O(files) driver-side metadata I/O. Each
     * table is staged as overwrite + append so the count provably sums
-    * across files AND across an in-place append that no commit rewrote
-    * (the case a naive "read the manifest" count gets wrong). The oracle
-    * is DuckDB's COUNT(*) over the raw tables.
+    * across files AND across versions: the append's commit names the
+    * overwrite's files in its manifest and its own under its directory
+    * (the case a count over one version directory gets wrong). The
+    * oracle is DuckDB's COUNT(*) over the raw tables.
     *
     * Scale shape: this is how a 100 TB engine answers SELECT COUNT(*) —
     * BigQuery from table metadata, Spark's own parquet reader via
@@ -124,10 +125,10 @@ object Storage {
       |ORDER BY table_name""".stripMargin
 
   /** q71: metadata-only MIN/MAX — column extrema answered from footer
-    * stats ([[TableStore.minMax]]): sidecar entries where ANALYZE
-    * covered, live footer reads for the file appended AFTER the analyze
-    * (the in-query require proves that uncovered file exists, so the
-    * fallback arm is exercised, not just reachable). All three collected
+    * stats ([[TableStore.minMax]]): the ANALYZE opts the table in, so
+    * the append's commit re-derives the sidecar over a file the analyze
+    * never saw (the in-query require proves that file exists; the
+    * live-footer arm is StatsSkippingSpec's). All three collected
     * kind families gate here: long key, double price, string flag. The
     * oracle is DuckDB's scan-side MIN/MAX over the raw table.
     *
@@ -145,10 +146,10 @@ object Storage {
     store.overwrite("lineitem_m", li.filter(col("l_orderkey") % 3 =!= 0))
     val covered = store.analyze("lineitem_m")
     store.append("lineitem_m",
-      li.filter(col("l_orderkey") % 3 === 0)) // sidecar never saw this file
+      li.filter(col("l_orderkey") % 3 === 0)) // the first analyze never saw this file
     require(store.fileCount("lineitem_m") > covered,
-      "post-analyze append landed no new file — the live-footer arm of " +
-        "minMax would gate vacuously")
+      "post-analyze append landed no new file — minMax would gate over " +
+        "one version's files only")
     def mm(c: String) = store.minMax("lineitem_m", c).getOrElse(
       throw new IllegalStateException(s"no complete footer stats for $c"))
     val (_, kMin, kMax) = mm("l_orderkey")
@@ -216,7 +217,8 @@ object Storage {
     * aborts: the in-query require catches the failed job and checks the
     * table still reads back exactly the pre-violation content — the
     * commit protocol turned a mid-write constraint failure into a clean
-    * no-op instead of a half-written table. The oracle recomputes the
+    * no-op instead of a half-written table (an unpublished claim no
+    * reader sees, swept by GC or VACUUM). The oracle recomputes the
     * two valid writes' content declaratively.
     *
     * Scale shape: ADD CONSTRAINT pays one validation scan (like its
@@ -733,9 +735,10 @@ object Storage {
   /** q87: MATERIALIZED VIEW with query-time freshness — BigQuery's
     * aggregate MV end-to-end: CTAS stages half the orders, CREATE
     * MATERIALIZED VIEW aggregates them, INSERT appends the other half
-    * IN PLACE (no new base version), and the gated read combines the
-    * now-stale stored rows with a partial aggregate over ONLY the
-    * appended files ([[TableStore.readMaterialized]] — the in-query
+    * as a new base version that inherits the old one's files, and the
+    * gated read combines the now-stale stored rows with a partial
+    * aggregate over ONLY the appended files ([[TableStore.readMaterialized]]
+    * decides that by file algebra — the in-query
     * require proves a real delta existed, so the combine path cannot be
     * skipped). REFRESH then re-materializes incrementally and the
     * second read must serve the stored rows verbatim (delta count back
@@ -790,8 +793,8 @@ object Storage {
       |ORDER BY side, o_orderstatus""".stripMargin
 
   /** q88: INFORMATION_SCHEMA — the catalog itself as a gated query: a
-    * base table staged as overwrite + in-place append (so the metadata
-    * row count provably sums across files), a read-only SNAPSHOT clone,
+    * base table staged as one commit of two slices, so the metadata row
+    * count provably sums across files at version 1, a read-only SNAPSHOT clone,
     * and a MATERIALIZED VIEW, all listed by
     * [[TableStore.informationSchemaTables]] with BigQuery's table_type
     * vocabulary, the committed version, footer-only row counts, and
@@ -810,8 +813,11 @@ object Storage {
     val store = new TableStore(s, wh)
     val ord = s.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    store.overwrite("orders_is", ord.filter(col("o_orderkey") % 2 === 0))
-    store.append("orders_is", ord.filter(col("o_orderkey") % 2 =!= 0))
+    // a union of two scans writes at least one file per slice
+    store.overwrite("orders_is", ord.filter(col("o_orderkey") % 2 === 0)
+      .union(ord.filter(col("o_orderkey") % 2 =!= 0)))
+    require(store.fileCount("orders_is") >= 2,
+      "the staged base landed one file — the footer count sums nothing")
     store.cloneTable("orders_is", "orders_snap", snapshot = true)
     store.createMaterializedView("status_mv", "orders_is",
       Seq("o_orderstatus"), Seq(graft.psn.MvAgg("n", "COUNT", "*")))
@@ -848,7 +854,8 @@ object Storage {
 
   /** q94: INFORMATION_SCHEMA.PARTITIONS — the partition-level catalog as
     * a gated query: a hive-partitioned fact table is staged in two
-    * in-place appends (per-partition counts must SUM across files), then
+    * committed appends, the second inheriting the first's files
+    * (per-partition counts must SUM across files and versions), then
     * a row-level DELETE tombstones every seventh order (deletion
     * vectors), and the catalog must report each partition's LIVE row
     * count — footer sums minus exactly that partition's vector entries,
@@ -866,10 +873,10 @@ object Storage {
     val store = new TableStore(s, wh)
     val ord = s.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    store.appendPartitioned("orders_pc",
-      ord.filter(col("o_orderkey") % 2 === 0), "o_orderstatus")
-    store.appendPartitioned("orders_pc",
-      ord.filter(col("o_orderkey") % 2 =!= 0), "o_orderstatus")
+    store.append("orders_pc",
+      ord.filter(col("o_orderkey") % 2 === 0), Some("o_orderstatus"))
+    store.append("orders_pc",
+      ord.filter(col("o_orderkey") % 2 =!= 0), Some("o_orderstatus"))
     store.deleteRows("orders_pc", col("o_orderkey") % 7 === 0)
     store.informationSchemaPartitions("orders_pc")
       .select(col("partition_value"), col("n_rows"))

@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions.{col, lit}
   * `len>0` branch (main.py:350) and every write's input as a driver-local
   * partition. Then at most ONE `game` commit (merge-upsert plus new-game
   * insert as one version, the upsert a projection keyed by the day's
-  * update ids: [[Ops.mergeKeyed]]; an in-place append on a new-games-only
-  * day; nothing on an unchanged day). No step plans a join, so the day
+  * update ids: [[Ops.mergeKeyed]]; an append on a new-games-only day;
+  * nothing on an unchanged day). Every append is a commit of its own (one
+  * marker; the version it replaces keeps its files unchanged). No step
+  * plans a join, so the day
   * runs four Spark jobs and pins no broadcast page. Facts come before the
   * dimension: the `time_play` append is the `game` commit's publish gate,
   * so it runs beside the `game` staging write and must succeed before

@@ -25,13 +25,14 @@ final case class MvAgg(out: String, func: String, in: String)
   *
   * == Versions ==
   *
-  * Version N is a list of immutable files ([[filesOf]]): those under its
-  * own `v<N>/` directory — where its writer put them, and where later
-  * in-place appends add theirs — plus those its commit INHERITS, named in
-  * the claim's `_inherited` manifest by their path relative to the table
-  * root (the Delta Lake design: a version names files, it never copies or
-  * links them). A commit that keeps its base's files therefore costs O(1)
-  * file operations whatever the table's size. Everything that names a
+  * Version N is a list of immutable files ([[filesOf]]): those its writer
+  * put under its own `v<N>/` directory, plus those its commit INHERITS,
+  * named in the claim's `_inherited` manifest by their path relative to
+  * the table root (the Delta Lake design: a version names files, it never
+  * copies or links them). A commit that keeps its base's files therefore
+  * costs O(1) file operations whatever the table's size. Every write
+  * commits — an [[append]] too is a new version that inherits its base's
+  * files — so a published version never changes. Everything that names a
   * file — deletion-vector entries, stats and Bloom sidecar entries, a
   * materialized view's covered set — uses that same root-relative path,
   * valid in every version that inherits the file.
@@ -59,9 +60,9 @@ final case class MvAgg(out: String, func: String, in: String)
   *      and stats sidecars forward, seed the schema memo.
   *
   * Exactly one writer can own seq S+1. A loser follows its verb's
-  * [[LostRace]] policy: REBASE (overwrite, first write, clone,
-  * transactions) publishes the same claim at the next free seq; RE-APPLY
-  * (merges, committed appends) re-stages on the new head, so no update is
+  * [[LostRace]] policy: REBASE (overwrite, clone, transactions) publishes
+  * the same claim at the next free seq; RE-APPLY (merges, appends — a
+  * first write included) re-stages on the new head, so no update is
   * lost, and throws after repeated losses; GIVE UP (compact, cluster,
   * evolution, restore, row deletes) discards the claim — nothing changed.
   *
@@ -95,11 +96,6 @@ final case class MvAgg(out: String, func: String, in: String)
   * a read of a table with deletes plans no join. The verbs that only
   * count or carry deletes (row counts, the partition catalog, inherit,
   * clone) read and write the bitmaps on the driver with no Spark job.
-  *
-  * Appends to an existing table do not commit: they write new part-files
-  * into the CURRENT version directory through Spark's job committer, so a
-  * crashed append leaves no visible rows either; an empty append writes no
-  * row files (the reference's guard, main.py:184, is a no-op here).
   */
 final class TableStore(private[graft] val spark: SparkSession,
     warehouse: String) {
@@ -587,8 +583,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     m.version > 0 &&
       Files.exists(snapshotDir(table, m.version).resolve("_snapshot"))
 
-  /** Every mutating path funnels through here (committing rewrites via
-    * [[claimNext]]; in-place appends check explicitly): a SNAPSHOT table
+  /** Every mutating path funnels through here (every commit via
+    * [[claimNext]]; verbs that scan before they claim, and RENAME, check
+    * explicitly first): a SNAPSHOT table
     * refuses all writes for its whole life — the read-only half of the
     * BigQuery snapshot contract. DROP stays allowed (deleting a snapshot
     * is how BigQuery retires one; the data it shares with the source
@@ -741,21 +738,24 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   // ---------------------------------------------------- materialized views
 
+  /** A view's definition and what its stored rows cover: the base's data
+    * files and deletion-vector files, relative to the base's table root. */
   private final case class MvDef(base: String, keys: Seq[String],
-      aggs: Seq[MvAgg], baseVersion: Int, covered: Set[String])
+      aggs: Seq[MvAgg], dv: Set[String], covered: Set[String])
 
   private def mvDefPath(mv: String): Path = dir(mv).resolve("_mvdef")
 
   def isMaterializedView(mv: String): Boolean = Files.exists(mvDefPath(mv))
 
   /** Sidecar format (line-oriented like the marker log): base, keys,
-    * aggs (`out:func:in`), pinned base version, then one covered relPath
-    * per line. Rewritten atomically on refresh. */
+    * aggs (`out:func:in`), the pinned deletion-vector files (tab-separated,
+    * empty for none), then one covered relPath per line. Rewritten
+    * atomically on refresh. */
   private def writeMvDef(mv: String, d: MvDef): Unit =
     writeAtomically(mvDefPath(mv),
       (Seq(d.base, d.keys.mkString("\t"),
         d.aggs.map(a => s"${a.out}:${a.func}:${a.in}").mkString("\t"),
-        d.baseVersion.toString) ++ d.covered.toSeq.sorted)
+        d.dv.toSeq.sorted.mkString("\t")) ++ d.covered.toSeq.sorted)
         .mkString("", "\n", "\n"))
 
   private def readMvDef(mv: String): MvDef = {
@@ -766,7 +766,8 @@ final class TableStore(private[graft] val spark: SparkSession,
       lines(2).split("\t").toSeq.map { s =>
         val Array(o, f, i) = s.split(":", 3); MvAgg(o, f, i)
       },
-      lines(3).toInt, lines.drop(4).filter(_.nonEmpty).toSet)
+      lines(3).split("\t").filter(_.nonEmpty).toSet,
+      lines.drop(4).filter(_.nonEmpty).toSet)
   }
 
   private def mvAggExprs(aggs: Seq[MvAgg]) = aggs.map {
@@ -796,14 +797,27 @@ final class TableStore(private[graft] val spark: SparkSession,
       .agg(mvAggExprs(d.aggs).head, mvAggExprs(d.aggs).tail: _*)
   }
 
-  /** Pinned marker `m`'s data files, relative to the table root. */
-  private def relPaths(table: String, m: Marker): Set[String] =
-    filesOf(table, m).data.map(dir(table).relativize(_).toString).toSet
+  /** Pinned marker `m`'s (data files, deletion-vector files), relative to
+    * the table root. */
+  private def relPaths(table: String, m: Marker): (Set[String], Set[String]) = {
+    val vf = filesOf(table, m)
+    val rel = (f: Path) => dir(table).relativize(f).toString
+    (vf.data.map(rel).toSet, vf.dv.map(rel).toSet)
+  }
+
+  /** Whether a base version with data files `files` and deletion-vector
+    * files `dv` only GREW since `d` was pinned: it names every covered file
+    * and exactly the vector files the view pinned, so its rows are the
+    * covered rows plus those of `files -- d.covered`. Appends keep this;
+    * a merge, overwrite or compact drops covered files and a row delete
+    * adds a vector file, so each falls back to a full recompute. */
+  private def mvGrewOnly(d: MvDef, files: Set[String], dv: Set[String]): Boolean =
+    d.covered.subsetOf(files) && dv == d.dv
 
   /** CREATE MATERIALIZED VIEW — BigQuery's aggregate MV: a store table
     * holding `SELECT keys, aggs FROM base GROUP BY keys`, plus a sidecar
-    * pinning WHAT it covered (base version + data files, relative to the
-    * base's table root). The restriction to COUNT/SUM/MIN/MAX is the
+    * pinning WHAT it covered (the base's data and deletion-vector files,
+    * relative to the base's table root). The restriction to COUNT/SUM/MIN/MAX is the
     * point, not a shortcut: it
     * is the class whose partials merge associatively, so a read can
     * combine the stored rows with a partial aggregate over just the
@@ -817,34 +831,34 @@ final class TableStore(private[graft] val spark: SparkSession,
       s"CREATE MATERIALIZED VIEW $mv: name already exists in the store")
     require(keys.nonEmpty && aggs.nonEmpty,
       "a materialized view needs >= 1 GROUP BY key and >= 1 aggregate")
-    val d = MvDef(base, keys, aggs, 0, Set.empty)
     val m = head(base)
-    val files = relPaths(base, m)
+    val (files, dv) = relPaths(base, m)
+    val d = MvDef(base, keys, aggs, dv, files)
     overwrite(mv, mvAggOver(d, m, files))
-    writeMvDef(mv, d.copy(baseVersion = m.version, covered = files))
+    writeMvDef(mv, d)
   }
 
   /** Data files of the MV's base that the stored rows do NOT cover —
-    * in-place appends since the last (re)materialization. Freshness
-    * evidence for gates; empty right after REFRESH. Meaningful only
-    * while the base version is unchanged (a rewrite invalidates the
-    * file algebra wholesale — see [[readMaterialized]]). */
+    * appends since the last (re)materialization. Freshness evidence for
+    * gates; empty right after REFRESH. Meaningful only while the base
+    * only grew (a rewrite or a row delete invalidates the file algebra
+    * wholesale — see [[readMaterialized]]), else 0. */
   def mvDeltaFiles(mv: String): Int = {
     val d = readMvDef(mv)
-    val m = head(d.base)
-    if (m.version != d.baseVersion) 0
-    else (relPaths(d.base, m) -- d.covered).size
+    val (files, dv) = relPaths(d.base, head(d.base))
+    if (!mvGrewOnly(d, files, dv)) 0 else (files -- d.covered).size
   }
 
   /** Read the view AT FULL FRESHNESS without rewriting it — the
-    * BigQuery query-time combine:
-    *   - base version unchanged, no new files → the stored rows as-is;
-    *   - base version unchanged, files appended in place → stored rows
+    * BigQuery query-time combine, decided by file algebra
+    * ([[mvGrewOnly]]), not by version number:
+    *   - the base names exactly the covered files → the stored rows as-is;
+    *   - the base only grew (appends committed since) → stored rows
     *     ∪ a partial aggregate over ONLY the delta files, merged per
     *     key (counts/sums add, min/max fold) — cost scales with the
     *     APPEND, not the base;
-    *   - base version changed (merge / delete / overwrite / compact
-    *     rewrote files or changed the vector) → transparent full
+    *   - the base dropped a covered file or changed its deletion vector
+    *     (merge / overwrite / compact / row delete) → transparent full
     *     recompute from the base: append-only file algebra no longer
     *     applies, and a
     *     wrong-but-fast answer is worse than a slow-but-right one.
@@ -857,15 +871,16 @@ final class TableStore(private[graft] val spark: SparkSession,
   def readMaterialized(mv: String): DataFrame = {
     val d = readMvDef(mv)
     val m = head(d.base)
-    mvAnswer(d, m, relPaths(d.base, m), read(mv))
+    val (files, dv) = relPaths(d.base, m)
+    mvAnswer(d, m, files, dv, read(mv))
   }
 
   /** [[readMaterialized]]'s answer over base marker `m`, whose data files
-    * are `files`: it reads exactly those files, so a refresh that records
-    * them as covered records what it aggregated. */
+    * are `files` and vector files `dv`: it reads exactly those files, so a
+    * refresh that records them as covered records what it aggregated. */
   private def mvAnswer(d: MvDef, m: Marker, files: Set[String],
-      stored: DataFrame): DataFrame =
-    if (m.version != d.baseVersion) mvConform(mvAggOver(d, m, files), stored)
+      dv: Set[String], stored: DataFrame): DataFrame =
+    if (!mvGrewOnly(d, files, dv)) mvConform(mvAggOver(d, m, files), stored)
     else {
       val delta = files -- d.covered
       if (delta.isEmpty) stored
@@ -886,25 +901,26 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** REFRESH MATERIALIZED VIEW — materialize [[readMaterialized]]'s
     * answer and re-pin the sidecar: incremental (stored + delta merge)
-    * when the base only grew in place, full recompute when it was
-    * rewritten. No-op when already fresh. The base is pinned ONCE, before
-    * the answer is planned: the version and covered files the sidecar
-    * records are exactly what the answer aggregated, so an append that
-    * lands during the refresh stays uncovered (the next read's delta) and
-    * a rewrite that lands then leaves the view pinned to the version it
-    * read (the next read recomputes). */
+    * when the base only grew by appends, full recompute when it was
+    * rewritten or lost rows to a delete. No-op when already fresh. The
+    * base is pinned ONCE, before the answer is planned: the files and
+    * vector files the sidecar records are exactly what the answer
+    * aggregated, so an append that lands during the refresh stays
+    * uncovered (the next read's delta) and a rewrite that lands then
+    * leaves the view pinned to the files it read (the next read
+    * recomputes). */
   def refreshMaterializedView(mv: String): Unit = {
     val d = readMvDef(mv)
     val m = head(d.base)
-    val files = relPaths(d.base, m)
-    if (m.version == d.baseVersion && files.subsetOf(d.covered)) return
-    val next = mvAnswer(d, m, files, read(mv))
+    val (files, dv) = relPaths(d.base, m)
+    if (mvGrewOnly(d, files, dv) && files.subsetOf(d.covered)) return
+    val next = mvAnswer(d, m, files, dv, read(mv))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       next.count() // materialize BEFORE the overwrite drops the old rows
       // internal commit path: `overwrite` (the user verb) refuses MVs
       commitRewrite(mv, next)
-      writeMvDef(mv, d.copy(baseVersion = m.version, covered = files))
+      writeMvDef(mv, d.copy(dv = dv, covered = files))
     } finally next.unpersist()
   }
 
@@ -1133,15 +1149,15 @@ final class TableStore(private[graft] val spark: SparkSession,
       Staged(Replaced(df.schema), seed = Some(df.schema))
     }
 
-  /** Schema-on-write guard for in-place appends: a frame whose columns or
-    * types differ from the table's would land as mixed-schema files in
-    * the SAME version directory, and a plain parquet read samples one
-    * footer — the new column silently vanishes (or the read fails) far
-    * from the write that caused it. Appends therefore fail loudly on
-    * drift; widening is an explicit [[overwrite]]/[[mergeWith]] — a NEW
-    * version, so time travel keeps each snapshot's schema intact.
-    * Column order and nullability are not drift; names + types are. `m`
-    * is the head the append pinned. */
+  /** Schema-on-write guard for appends: a version's schema is that of its
+    * first file's footer (or its declared sidecar), so a frame whose
+    * columns or types differ from the table's would land mixed-schema
+    * files under one version — the new column silently vanishes (or the
+    * read fails) far from the write that caused it. Appends therefore
+    * fail loudly on drift; widening is an explicit
+    * [[overwrite]]/[[mergeWith]] or [[addColumn]], so time travel keeps
+    * each snapshot's schema intact. Column order and nullability are not
+    * drift; names + types are. `m` is the head the append stages over. */
   private def assertSchemaMatches(table: String, m: Marker, df: DataFrame,
       relaxed: Set[String] = Set.empty): Unit = {
     // `relaxed` columns compare by NAME only: hive-style partition values
@@ -1157,79 +1173,43 @@ final class TableStore(private[graft] val spark: SparkSession,
         s"${cur.map { case (n, t) => s"$n:$t" }.mkString("[", ", ", "]")}, " +
         s"frame has ${in.map { case (n, t) => s"$n:$t" }.mkString("[", ", ", "]")}. " +
         "Widen via overwrite/mergeWith (a new version), never by mixing " +
-        "file schemas in place.")
+        "file schemas in one version.")
   }
 
-  def append(table: String, df: DataFrame): Unit = {
-    val m = head(table)
-    if (m.version > 0) {
-      requireWritable(table, m) // in-place: no claim, so check here
-      requireNotMv(table, "append")
-      assertSchemaMatches(table, m, df)
-      val base = snapshotDir(table, m.version)
-      val before = dataFiles(base).map(_.getFileName.toString).toSet
-      enforced(table, df).write.mode(SaveMode.Append)
-        .parquet(base.toString)
-      feedNewFiles(table, base, before)
-    } else commitRewrite(table, df) // first write creates + commits v1
-  }
-
-  /** Append with hive-style partitioning — the 100 TB layout for fact
-    * tables (time_play partitioned by day): date-filtered scans prune whole
-    * partition directories instead of reading and filtering. */
-  def appendPartitioned(table: String, df: DataFrame,
-      partitionCol: String, txnTag: Option[String] = None): Unit = {
-    requireNotMv(table, "appendPartitioned")
-    val m = head(table)
-    if (m.version == 0) {
-      transact(table, m, checkTag(txnTag), Rebase) { (_, claimed) =>
-        enforced(table, df).write.mode(SaveMode.Append)
-          .partitionBy(partitionCol).parquet(claimed.toString)
-        Staged(Carried)
-      }
-    } else {
-      // In-place appends add files to the CURRENT version without a new
-      // commit marker, so there is nothing to tag — an idempotent writer
-      // needs the committing paths (overwrite/merge*With).
-      require(txnTag.isEmpty,
-        s"append to existing '$table' does not commit — txnTag unsupported")
-      require(!feedEnabled(table),
-        s"'$table' has the change feed enabled; hive-partitioned appends " +
-          "cannot feed (files lack the partition column)")
-      requireWritable(table, m) // in-place: no claim, so check here
-      assertSchemaMatches(table, m, df, relaxed = Set(partitionCol))
-      enforced(table, df).write.mode(SaveMode.Append)
-        .partitionBy(partitionCol)
-        .parquet(snapshotDir(table, m.version).toString)
-    }
-  }
-
-  /** Commit-protocol APPEND: a new version that inherits the current
-    * version's files and deletion vector (O(1) file operations) plus the
-    * frame's files written into its claim. Unlike the in-place [[append]]
-    * it carries a transaction tag — the exactly-once discipline streaming
-    * sinks need: a replayed micro-batch whose marker survived the crash is
-    * skipped through [[txnVersion]] — at O(increment) data I/O. With
-    * `partitionCol` the new files land hive-style, so [[readPartitions]]
-    * probes stay pruned as the table grows (s24's ingest loop). A lost
-    * race re-stages on the new head. */
-  def appendCommitted(table: String, df: DataFrame,
-      partitionCol: Option[String] = None,
+  /** APPEND (K1/K2) — the one append verb, a commit like every other
+    * write: the new version inherits its base's files and deletion vector
+    * by name (O(1) file operations) plus the frame's files in its claim; a
+    * first write inherits nothing. A lost race re-stages on the new head,
+    * so racing appends — first writes included — all land; a failed write
+    * publishes nothing (its claim is an orphan for GC or [[vacuum]]).
+    * `txnTag` makes a replayed micro-batch skippable through
+    * [[txnVersion]]; `partitionCol` lands the files hive-style, so
+    * [[readPartitions]] probes stay pruned (s24's ingest loop). A feed
+    * table gets the published version's own files once the commit has
+    * won, and refuses a partitioned append (feed files lack the column). */
+  def append(table: String, df: DataFrame, partitionCol: Option[String] = None,
       txnTag: Option[String] = None): Unit = {
-    requireNotMv(table, "appendCommitted")
-    requireNoFeed(table, "appendCommitted")
+    requireNotMv(table, "append")
     checkTag(txnTag)
+    require(partitionCol.isEmpty || !feedEnabled(table),
+      s"'$table' has the change feed enabled; hive-partitioned appends " +
+        "cannot feed (files lack the partition column)")
     val pinned = head(table)
-    val first = pinned.version == 0
-    if (!first)
-      assertSchemaMatches(table, pinned, df, relaxed = partitionCol.toSet)
-    transact(table, pinned, txnTag, if (first) Rebase else Reapply()) {
-      (base, claimed) =>
-        val staged = if (first) Staged(Carried) else inherit(table, base, claimed)
-        val w = enforced(table, df).write.mode(SaveMode.Append)
-        partitionCol.fold(w)(w.partitionBy(_)).parquet(claimed.toString)
-        staged
+    def fits(m: Marker): Unit =
+      if (m.version > 0) assertSchemaMatches(table, m, df, partitionCol.toSet)
+    fits(pinned) // loud before anything is claimed
+    val committed = transact(table, pinned, txnTag, Reapply()) { (base, claimed) =>
+      if (base != pinned) fits(base)
+      val staged =
+        if (base.version > 0) inherit(table, base, claimed)
+        // a flat first write seeds the schema memo, as a rewrite does
+        else Staged(Carried, seed = if (partitionCol.isEmpty) Some(df.schema) else None)
+      val w = enforced(table, df).write.mode(SaveMode.Append)
+      partitionCol.fold(w)(w.partitionBy(_)).parquet(claimed.toString)
+      staged
     }
+    if (feedEnabled(table)) committed.foreach(v =>
+      dataFiles(snapshotDir(table, v)).foreach(linkIntoFeed(table, _)))
   }
 
   /** (files selected, files total) of the most recent [[readPartitions]]
@@ -1474,8 +1454,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * every untouched partition: O(touched partitions) I/O, same CAS
     * commit, same snapshot isolation.
     *
-    * CONTRACT: the table has a hive layout on `partitionCol` (written via
-    * [[appendPartitioned]]), and the merge key determines its partition: a
+    * CONTRACT: the table has a hive layout on `partitionCol` (written by
+    * [[append]] with that `partitionCol`), and the merge key determines its partition: a
     * key whose update names another partition value than its existing row
     * would leave the old row in place — that shape needs [[mergeWith]].
     * `touched` values compare against directory names via
@@ -1580,8 +1560,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     feedDir(table).toString
   }
 
-  /** Turn on the APPEND CHANGE FEED: from now on, every appended data
-    * file is HARD-LINKED into `<table>/_feed/`, an append-only directory a
+  /** Turn on the APPEND CHANGE FEED: from now on, every data file an
+    * [[append]] commits is HARD-LINKED into `<table>/_feed/` once its commit
+    * has won (a re-staged loser feeds nothing), an append-only directory a
     * Structured Streaming file source consumes ("subscribe to a table's
     * appends"). Enabling bootstraps the feed with every file the head
     * names, so a new consumer sees the full table, then the appends.
@@ -1628,13 +1609,6 @@ final class TableStore(private[graft] val spark: SparkSession,
   private def linkIntoFeed(table: String, f: Path): Unit =
     try Files.createLink(feedDir(table).resolve(f.getFileName.toString), f)
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
-
-  /** Feed every data file in `base` that `before` did not contain. */
-  private def feedNewFiles(table: String, base: Path,
-      before: Set[String]): Unit =
-    if (feedEnabled(table))
-      dataFiles(base).filterNot(p => before(p.getFileName.toString))
-        .foreach(linkIntoFeed(table, _))
 
   private def requireNoFeed(table: String, op: String): Unit =
     require(!feedEnabled(table),
@@ -1918,8 +1892,8 @@ final class TableStore(private[graft] val spark: SparkSession,
     * AFTER gc, which sweeps only sidecars of versions strictly below the
     * replaced one, so the opt-in marker is still visible here. Cost is
     * O(files) footer reads per commit — noise next to the commit's own
-    * write. In-place appends skip this (no commit): their new files read
-    * unpruned until the next analyze/commit, which is conservative. */
+    * write — plus, once [[analyzeBloom]] opted columns in, one grouped job
+    * building the filters of the files the commit added. */
   private def maintainStats(table: String, prevV: Int, force: Boolean): Unit =
     if (force || (prevV > 0 && Files.exists(statsPath(table, prevV)))) {
       analyze(table)
@@ -1929,10 +1903,10 @@ final class TableStore(private[graft] val spark: SparkSession,
   /** ANALYZE: derive per-file min/max/null-count stats for the CURRENT
     * version from parquet FOOTERS — O(files) metadata reads, zero data
     * scanned — and publish them as the version-keyed sidecar
-    * [[readWhere]] prunes with. Explicit like its SQL namesake: appends
-    * after an analyze leave their new files uncovered, and uncovered
-    * files are always kept, so a stale sidecar costs speed, never
-    * correctness. Once [[analyzeBloom]] opted columns in, every analyze
+    * [[readWhere]] prunes with. Explicit like its SQL namesake; once run,
+    * every later commit re-derives the sidecar ([[maintainStats]]). A
+    * file a sidecar has no entry for is always kept, so a stale sidecar
+    * costs speed, never correctness. Once [[analyzeBloom]] opted columns in, every analyze
     * also maintains their per-file Bloom filters: carried forward by
     * relPath for files whose bytes survived the commit (inherited,
     * appended),
@@ -2052,7 +2026,7 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** Pinned marker `m`'s data files, and those of them whose stats
     * sidecar entry can match every pred — every file when the version
-    * has no sidecar or a file has no entry (post-analyze appends). */
+    * has no sidecar or a file has no entry. */
   private def skipping(table: String, m: Marker,
       preds: Seq[FileStats.Pred]): (Seq[Path], Seq[Path]) = {
     val stats = FileStats.load(statsPath(table, m.version))

@@ -380,7 +380,7 @@ object Streams {
     val zero = lit(0).cast(DecimalType(38, 2))
     val agg = batchAgg.withColumn("bucket",
       pmod(hash(col("user_id")), lit(TotalsBuckets)))
-    if (!store.exists(table)) store.appendPartitioned(table, agg, "bucket", tag)
+    if (!store.exists(table)) store.append(table, agg, Some("bucket"), tag)
     else {
       // bounded by construction: ≤ TotalsBuckets distinct values
       val touched = agg.select(col("bucket")).distinct()
@@ -574,9 +574,10 @@ object Streams {
 
   /** s20: STREAM FROM THE STORE — the table-as-a-source direction s18/s19
     * leave uncovered (there the store is the SINK). The event log lands
-    * in a store table through five in-place appends; the table's APPEND
-    * CHANGE FEED ([[graft.psn.TableStore.enableFeed]]: every appended
-    * file hard-links into an append-only `_feed/` directory) is consumed
+    * in a store table through five appends, each its own commit; the
+    * table's APPEND CHANGE FEED ([[graft.psn.TableStore.enableFeed]]: each
+    * committed append's files hard-link into an append-only `_feed/`
+    * directory) is consumed
     * by a plain Structured Streaming file source — exactly-once via the
     * source's checkpointed seen-file log, no custom Source needed — into
     * the same bucketed additive totals sink.
@@ -905,7 +906,7 @@ object Streams {
     * buckets), never O(corpus) — at the 100 TB daily-crawl scale the
     * ingest loop's cost tracks the increment, which is the entire point
     * of keeping an index. Growth is ONE COMPOSITE
-    * [[graft.psn.TableStore.appendCommitted]] per batch (round 14; r13
+    * [[graft.psn.TableStore.append]] per batch (round 14; r13
     * made three): the decision log and both index layouts are row
     * families of a single `sbkt`-partitioned table — exact hashes in
     * [0, B), band buckets in [B, 2B), decisions at 2B — so they land
@@ -989,7 +990,7 @@ object Streams {
     // shingle/minhash signature for the band probe — so the corpus pays
     // the (expensive) shingle pass exactly once.
     val corpusDocs = docs.filter(col("doc_id") % 4 =!= 0)
-    store.appendCommitted("ingest_idx",
+    store.append("ingest_idx",
       exactRows(corpusDocs
           .select(col("doc_id"), graft_md5(col("text")).as("th")))
         .unionByName(bandRows(TextOps.minhashSigOf(corpusDocs)))
@@ -1069,7 +1070,7 @@ object Streams {
                 // serially in one coalesce(1) task (round 15's shape —
                 // measured 0.30–0.50 s per batch, the largest single
                 // per-batch job of the suite's slowest family).
-                store.appendCommitted("ingest_idx",
+                store.append("ingest_idx",
                   decisionRows(d)
                     .unionByName(exactRows(
                       inc.join(acceptedIds, Seq("doc_id"), "left_semi")))
@@ -1126,10 +1127,11 @@ object Streams {
     * subsystems composed: the base table's APPEND CHANGE FEED (s20) is
     * the trigger transport, and each arriving micro-batch drives an
     * INCREMENTAL refresh of an aggregate materialized view (q87) over
-    * the base. Five rounds: append a chunk in place (no version bump —
-    * the in-query require pins it), wait for the feed batch, then
-    * require the view's delta is back to ZERO — i.e. the refresh
-    * consumed exactly the appended files through the stored-rows +
+    * the base. Five rounds: append a chunk (one commit that inherits the
+    * base's files, so the view's file algebra holds — the in-query
+    * require pins exactly ONE uncovered file), wait for the feed batch,
+    * then require the view's delta is back to ZERO — i.e. the refresh
+    * consumed exactly the appended file through the stored-rows +
     * delta-partials combine, never a base rescan. The gate emits the
     * view's content AFTER EVERY ROUND, so the oracle (a per-round
     * prefix aggregation) hash-pins the full maintenance trajectory,
@@ -1175,12 +1177,10 @@ object Streams {
       try {
         q.processAllAvailable() // drain the bootstrap chunk-0 feed file
         (1 to 4).foreach { c =>
-          store.append("ev_log", chunk(c)) // in place: version stays 1
-          require(store.versions("ev_log").max == 1,
-            "append bumped the base version — the incremental path is " +
-              "not being exercised")
-          require(store.mvDeltaFiles("totals_mv") >= 1,
-            s"round $c append left no view delta")
+          store.append("ev_log", chunk(c))
+          require(store.mvDeltaFiles("totals_mv") == 1,
+            s"round $c append did not leave exactly its one file as the " +
+              "view delta — the incremental path is not being exercised")
           q.processAllAvailable()
           require(store.mvDeltaFiles("totals_mv") == 0,
             s"round $c refresh did not consume the appended files")

@@ -54,8 +54,10 @@ object CommitGates {
   * head, and leaves the declared schema of an evolved table where the
   * verb's contract puts it (carried, replaced by the written frame, or the
   * restored snapshot's own). Then the three lost-race policies: merges
-  * re-apply their transform on the new head; a transaction keeps its
-  * staged content and publishes at the next free seq. */
+  * and appends re-apply on the new head — an append that lands during a
+  * merge's staging survives it, and two racing first writes both land; a
+  * transaction keeps its staged content and publishes at the next free
+  * seq. */
 class CommitProtocolSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -134,16 +136,19 @@ class CommitProtocolSpec extends AnyFunSuite {
       s.append("b", rows(4))
       s.refreshMaterializedView("t")
     },
-    Verb("appendPartitioned (first write)", Fresh, tagged = true,
+    Verb("append (first write, tagged)", Fresh, tagged = true,
         declared = _ => None) { (s, tag) =>
-      s.appendPartitioned("n", rows(1, 2), "grp", tag)
+      s.append("n", rows(1, 2), None, tag)
     },
-    Verb("appendCommitted", Flat, tagged = true) { (s, tag) =>
-      s.appendCommitted("t", withNote(rows(9)), None, tag)
-    },
-    Verb("appendCommitted (first write)", Fresh, tagged = true,
+    Verb("append (first write, partitioned)", Fresh, tagged = true,
         declared = _ => None) { (s, tag) =>
-      s.appendCommitted("n", rows(1, 2), Some("grp"), tag)
+      s.append("n", rows(1, 2), Some("grp"), tag)
+    },
+    Verb("append", Flat, tagged = true) { (s, tag) =>
+      s.append("t", withNote(rows(9)), None, tag)
+    },
+    Verb("append (partitioned)", Partitioned, tagged = true) { (s, tag) =>
+      s.append("t", withNote(rows(9)), Some("grp"), tag)
     },
     Verb("mergeWith", Flat, tagged = true,
         declared = _.map(_.add(StructField("y", IntegerType)))) { (s, tag) =>
@@ -176,7 +181,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     * a stats sidecar (the MV instead gets two refreshes and a sidecar). */
   private def setUp(store: TableStore, layout: Layout): Unit = layout match {
     case Partitioned =>
-      store.appendPartitioned("t", rows(1, 2, 3, 4), "grp")
+      store.append("t", rows(1, 2, 3, 4), Some("grp"))
       store.mergePartitionedWith("t", "grp", Seq(0))(identity)
       assert(store.addColumn("t", "note", "STRING"))
       store.analyze("t")
@@ -297,10 +302,56 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(markerSeqs(wh, "t").max == 3)
   }
 
+  test("an append made during a merge's staging is in the head afterwards; " +
+    "the merge re-applies once") {
+    val wh = Files.createTempDirectory("graft_commit_append_merge")
+    val store = new TableStore(spark, wh.toString)
+    store.overwrite("t", rows(1, 2))
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val calls = new AtomicInteger(0)
+    // the merge pins v1 and stays mid-staging…
+    val merge = CommitGates.thread(errors)(store.mergeWith("t") { cur =>
+      calls.incrementAndGet()
+      cur.unionByName(CommitGates.frame(100, "cp-append-merge"))
+    })
+    assert(CommitGates("cp-append-merge").reached.await(120, TimeUnit.SECONDS))
+    // …while an append commits over the same base
+    store.append("t", rows(3))
+    CommitGates("cp-append-merge").open.countDown()
+    merge.join()
+    assert(errors.isEmpty, errors.toString)
+
+    assert(ids(store, "t") == Set(1L, 2L, 3L, 100L), "the append survives the merge")
+    assert(calls.get == 2, "the merge lost one race and re-applied once")
+    assert(markerSeqs(wh, "t").max == 3)
+  }
+
+  test("two racing first appends both land") {
+    val wh = Files.createTempDirectory("graft_commit_first_race")
+    val store = new TableStore(spark, wh.toString)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // both appends find no table and stay mid-staging…
+    val a = CommitGates.thread(errors)(
+      store.append("n", CommitGates.frame(1, "cp-first-a")))
+    val b = CommitGates.thread(errors)(
+      store.append("n", CommitGates.frame(2, "cp-first-b")))
+    assert(CommitGates("cp-first-a").reached.await(120, TimeUnit.SECONDS))
+    assert(CommitGates("cp-first-b").reached.await(120, TimeUnit.SECONDS))
+    // …then one publishes the table, and only then does the other finish
+    CommitGates("cp-first-a").open.countDown()
+    a.join()
+    CommitGates("cp-first-b").open.countDown()
+    b.join()
+    assert(errors.isEmpty, errors.toString)
+
+    assert(ids(store, "n") == Set(1L, 2L), "the second first-write is not dropped")
+    assert(markerSeqs(wh, "n").max == 2)
+  }
+
   test("mergePartitionedWith re-applies its transform on the head that beat it") {
     val wh = Files.createTempDirectory("graft_commit_prace")
     val store = new TableStore(spark, wh.toString)
-    store.appendPartitioned("t", rows(1, 2, 3, 4), "grp")
+    store.append("t", rows(1, 2, 3, 4), Some("grp"))
     var calls = 0
     store.mergePartitionedWith("t", "grp", Seq(1), txnTag = Some("race:2")) {
       touched =>

@@ -39,12 +39,13 @@ class CompactSpec extends AnyFunSuite {
       store.append("t", Seq((i.toLong, s"row$i")).toDF("id", "s").coalesce(1))
     }
     val before = store.read("t").collect().map(_.toString).sorted.toSeq
-    val nBefore = dataFiles(versionDir(wh, "t")).size
-    assert(nBefore >= 6)
+    // each append commits a version that names its base's files
+    assert(StoreFiles.head(store, "t").size >= 6)
 
     assert(store.compact("t"))
     val after = store.read("t").collect().map(_.toString).sorted.toSeq
     assert(after == before)
+    assert(StoreFiles.head(store, "t") == dataFiles(versionDir(wh, "t")).toSet)
     assert(dataFiles(versionDir(wh, "t")).size == 1)
   }
 
@@ -61,7 +62,7 @@ class CompactSpec extends AnyFunSuite {
         .coalesce(1))
     }
     val vOld = versionDir(wh, "t")
-    val big = dataFiles(vOld).maxBy(Files.size)
+    val big = StoreFiles.head(store, "t").maxBy(Files.size)
     val bigSize = Files.size(big)
     val before = store.read("t").count()
 
@@ -83,12 +84,12 @@ class CompactSpec extends AnyFunSuite {
     // 4 partition dirs × 5 small appends each = 20 files in 4 bins (the
     // default 128 MB target packs each dir into one bin) → 4 rewrite jobs.
     (1 to 5).foreach { i =>
-      store.appendPartitioned("t",
+      store.append("t",
         (0 until 4).map(p => (i.toLong, s"p$p", s"r$i")).toDF("id", "part", "s")
-          .repartition(4, org.apache.spark.sql.functions.col("part")), "part")
+          .repartition(4, org.apache.spark.sql.functions.col("part")), Some("part"))
     }
     val before = store.read("t").collect().map(_.toString).sorted.toSeq
-    assert(dataFiles(versionDir(wh, "t")).size >= 20)
+    assert(StoreFiles.head(store, "t").size >= 20)
     assert(store.compact("t", parallelism = 4))
     // one output file per partition directory, content unchanged
     assert(dataFiles(versionDir(wh, "t"))
@@ -105,9 +106,9 @@ class CompactSpec extends AnyFunSuite {
     val wh = Files.createTempDirectory("compact_wh3").toString
     val store = new TableStore(spark, wh)
     (1 to 3).foreach { i =>
-      store.appendPartitioned("t",
+      store.append("t",
         Seq((i.toLong, "a", s"r$i"), (i.toLong, "b", s"r$i"))
-          .toDF("id", "part", "s").repartition(2), "part")
+          .toDF("id", "part", "s").repartition(2), Some("part"))
     }
     val before = store.read("t").collect().map(_.toString).sorted.toSeq
     assert(store.compact("t"))

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
@@ -35,7 +37,7 @@ class ConstraintsSpec extends AnyFunSuite {
     store.append("t", Seq((3L, 30.0)).toDF("k", "x")) // valid: passes
     val before = store.read("t").collect().map(_.toString).sorted.toSeq
     val v = store.versions("t").last
-    // in-place append aborts
+    // an append aborts
     intercept[Throwable](
       store.append("t", Seq((4L, -1.0)).toDF("k", "x")))
     // transactional rewrite aborts, commit never publishes
@@ -43,6 +45,41 @@ class ConstraintsSpec extends AnyFunSuite {
       store.mergeWith("t")(cur => cur.withColumn("x", -col("x"))))
     assert(store.versions("t").last == v)
     assert(store.read("t").collect().map(_.toString).sorted.toSeq == before)
+  }
+
+  test("a failed append leaves only an unpublished claim; vacuum sweeps it") {
+    val wh = Files.createTempDirectory("ck_wh_claim")
+    val store = new TableStore(spark, wh.toString)
+    store.overwrite("t", Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x"))
+    store.addConstraint("t", "pos", "x > 0")
+    store.append("t", Seq((3L, 30.0)).toDF("k", "x"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val (versions, before, head) =
+      (store.versions("t"), rows(store.read("t")), store.versions("t").max)
+    val history = rows(store.history("t"))
+    def claims(): Set[Int] = {
+      val s = Files.list(wh.resolve("t"))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("v\\d+")).map(_.drop(1).toInt).toSet
+      finally s.close()
+    }
+    val dirsBefore = claims()
+
+    intercept[Throwable](store.append("t", Seq((4L, -1.0)).toDF("k", "x")))
+    val orphans = claims() -- dirsBefore
+    assert(orphans.size == 1 && orphans.head > head, s"claims $orphans")
+    // no reader sees the claim: same versions, log, rows, counts and files
+    assert(store.versions("t") == versions)
+    assert(rows(store.history("t")) == history)
+    assert(rows(store.read("t")) == before)
+    assert(store.countRows("t") == before.length)
+    assert(store.fileCount("t") == store.namedFiles("t", head)._1.length)
+    versions.foreach(v => store.readVersion("t", v).collect())
+
+    assert(store.vacuum("t", 0L) == orphans.toSeq)
+    assert(claims() == dirsBefore)
+    assert(rows(store.read("t")) == before)
   }
 
   test("NULL passes CHECK (ANSI); IS NOT NULL spells NOT NULL") {

@@ -55,7 +55,7 @@ class DvEquivalenceSpec extends AnyFunSuite {
       batch(0, 900).filter(col("p") === "x").coalesce(1),
       batch(900, 1200).filter(col("p") =!= "x").coalesce(1),
       batch(900, 1200).filter(col("p") === "x").coalesce(1)).foreach { df =>
-      store.appendCommitted("t", df, Some("p"))
+      store.append("t", df, Some("p"))
       at(store.headVersion("t")) = deleted
     }
     store.analyze("t")

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +13,8 @@ import graft.psn.TableStore
 
 /** Append change feed: hard-linked append-only mirror of a table's
   * appended files, consumed by a plain file stream source. Invariants:
-  * each appended file feeds exactly once; enable bootstraps the current
+  * each committed appended file feeds exactly once, a re-staged loser of
+  * an append race never; enable bootstraps the current
   * snapshot; layout commits (compact) feed nothing while their GC cannot
   * take fed bytes away (hard links); rewriting commits and partitioned
   * appends on a feed-enabled table are loud; truncate reclaims backlog
@@ -50,6 +52,46 @@ class FeedSpec extends AnyFunSuite {
       Seq(1L, 2L, 3L, 4L))
   }
 
+  test("two racing appends feed each committed file exactly once") {
+    val (store, wh) = freshStore()
+    store.append("t", Seq((1L, 1, 1.5)).toDF("id", "grp", "x").coalesce(1))
+    store.enableFeed("t")
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // both appends pin the same head and stay mid-staging…
+    val a = CommitGates.thread(errors)(store.append("t", CommitGates.frame(2, "feed-a")))
+    val b = CommitGates.thread(errors)(store.append("t", CommitGates.frame(3, "feed-b")))
+    Seq("feed-a", "feed-b").foreach(g =>
+      assert(CommitGates(g).reached.await(120, TimeUnit.SECONDS)))
+    // …a commits first, so b loses its race and re-stages on a's head
+    CommitGates("feed-a").open.countDown()
+    a.join()
+    CommitGates("feed-b").open.countDown()
+    b.join()
+    assert(errors.isEmpty, errors.toString)
+
+    val head = store.versions("t").max
+    assert(feedFiles(wh, "t").sorted ==
+      store.namedFiles("t", head)._1.map(_.getFileName.toString).sorted,
+      "the feed holds exactly the committed data files")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(spark.read.parquet(Paths.get(wh, "t", "_feed").toString)
+      .select("id", "grp", "x")) == rows(store.read("t")))
+    assert(store.read("t").count() == 3)
+  }
+
+  test("s20's streamed totals equal the batch totals over every event") {
+    val dir = "/root/testdata/sf0.001"
+    val got = graft.streaming.Streams.s20StoreFeedStream(spark, dir)
+    val want = graft.tables.Tables.events(spark, dir).groupBy("user_id")
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(30,2)")).cast("double").as("total_value"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("user_id", "n_events", "total_value")
+      .collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want) && rows(got).nonEmpty)
+  }
+
   test("compaction feeds nothing and cannot unlink fed bytes") {
     val (store, wh) = freshStore()
     store.append("t", Seq((1L, "a")).toDF("k", "s").coalesce(1))
@@ -82,10 +124,10 @@ class FeedSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       store.mergeWith("t")(cur => cur))
     intercept[IllegalArgumentException](
-      store.appendPartitioned("t", Seq((2L, "b")).toDF("k", "s"), "s"))
+      store.append("t", Seq((2L, "b")).toDF("k", "s"), Some("s")))
     // a hive-partitioned table cannot enable the feed at all
     val (store2, _) = freshStore()
-    store2.appendPartitioned("p", Seq((1L, "x")).toDF("k", "s"), "s")
+    store2.append("p", Seq((1L, "x")).toDF("k", "s"), Some("s"))
     intercept[IllegalArgumentException](store2.enableFeed("p"))
   }
 

@@ -34,7 +34,7 @@ class IndexSpec extends AnyFunSuite {
       "CREATE INDEX di ON docs (id, body) USING HASH")
     assert(Indexes.probe(spark, store, "di").count() == 3)
 
-    // in-place append: version unchanged, file set moved -> stale
+    // append: a new version over more files -> stale
     store.append("docs", Seq((4L, "aa")).toDF("id", "body"))
     val e1 = intercept[IllegalArgumentException](
       Indexes.probe(spark, store, "di"))

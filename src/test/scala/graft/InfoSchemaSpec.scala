@@ -84,8 +84,8 @@ class ViewsAndPartitionsSpec extends AnyFunSuite {
     val store = new TableStore(spark,
       Files.createTempDirectory("pc_wh").toString)
     def part(ks: (Int, String)*) = ks.toSeq.toDF("k", "p")
-    store.appendPartitioned("t", part((1, "a"), (2, "b"), (3, "a")), "p")
-    store.appendPartitioned("t", part((4, "a"), (5, "c")), "p")
+    store.append("t", part((1, "a"), (2, "b"), (3, "a")), Some("p"))
+    store.append("t", part((4, "a"), (5, "c")), Some("p"))
     // tombstone one row of partition a: ITS count drops, others hold
     store.deleteRows("t", col("k") === 1)
     val got = store.informationSchemaPartitions("t")

@@ -56,9 +56,9 @@ class InheritSpec extends AnyFunSuite {
     val store = new TableStore(spark, wh)
     def batch(i: Int) = (i * 80 + 1 to i * 80 + 80).toDF("k")
       .select(col("k"), pmod(col("k"), lit(8)).as("b")).coalesce(1)
-    store.appendCommitted("t", batch(0), Some("b"))
+    store.append("t", batch(0), Some("b"))
     store.read("t").count() // the first version's footer schema
-    (1 to 8).foreach(i => store.appendCommitted("t", batch(i), Some("b")))
+    (1 to 8).foreach(i => store.append("t", batch(i), Some("b")))
     val head = store.headVersion("t")
     val (files, _) = store.namedFiles("t", head)
     val own = Paths.get(wh, "t", s"v$head")

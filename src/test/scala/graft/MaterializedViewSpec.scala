@@ -39,7 +39,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     assert(store.mvDeltaFiles("mv") == 0)
     assert(got(store) == Seq(("a", 2L, 4.0, 1, 2), ("b", 1L, 10.0, 7, 7)))
 
-    // in-place append: stored rows are now stale; the read must combine
+    // append: stored rows are now stale; the read must combine
     store.append("base", rows(store, ("a", 9, 0.5), ("c", 3, 3.0)))
     assert(store.mvDeltaFiles("mv") >= 1)
     assert(got(store) == Seq(("a", 3L, 4.5, 1, 9), ("b", 1L, 10.0, 7, 7),
@@ -59,9 +59,9 @@ class MaterializedViewSpec extends AnyFunSuite {
     store.overwrite("base", rows(store, ("a", 1, 1.0), ("a", 2, 2.0),
       ("b", 5, 5.0)))
     store.createMaterializedView("mv", "base", Seq("g"), aggs)
-    // a transactional rewrite bumps the base version: file algebra is out
+    // a transactional rewrite drops the covered files: file algebra is out
     store.mergeWith("base")(_.filter(col("k") =!= 2))
-    assert(store.mvDeltaFiles("mv") == 0) // delta undefined across versions
+    assert(store.mvDeltaFiles("mv") == 0) // no delta once a covered file is gone
     assert(got(store) == Seq(("a", 1L, 1.0, 1, 1), ("b", 1L, 5.0, 5, 5)))
     // refresh re-pins to the new version; cheap path is back
     store.refreshMaterializedView("mv")
@@ -75,7 +75,14 @@ class MaterializedViewSpec extends AnyFunSuite {
     store.overwrite("base", rows(store, ("a", 1, 1.0), ("a", 2, 2.0)))
     store.createMaterializedView("mv", "base", Seq("g"), aggs)
     store.deleteRows("base", col("k") === 1)
+    assert(store.mvDeltaFiles("mv") == 0) // a new vector file: no delta
     assert(got(store) == Seq(("a", 1L, 2.0, 2, 2)))
+    // refreshed over the deleted-from base, the view grows incrementally
+    // again: an append keeps every covered file and the same vector files
+    store.refreshMaterializedView("mv")
+    store.append("base", rows(store, ("a", 5, 1.0)))
+    assert(store.mvDeltaFiles("mv") == 1)
+    assert(got(store) == Seq(("a", 2L, 3.0, 2, 5)))
   }
 
   test("SQL front-end: restricted select list enforced loudly") {
@@ -112,10 +119,10 @@ class MaterializedViewSpec extends AnyFunSuite {
     val store = freshStore()
     import spark.implicits._
     def part(ks: (String, Int)*) = ks.toSeq.toDF("g", "k")
-    store.appendPartitioned("pb", part(("a", 1), ("b", 2)), "g")
+    store.append("pb", part(("a", 1), ("b", 2)), Some("g"))
     store.createMaterializedView("pmv", "pb", Seq("g"),
       Seq(MvAgg("n", "COUNT", "*"), MvAgg("mx", "MAX", "k")))
-    store.appendPartitioned("pb", part(("a", 9)), "g")
+    store.append("pb", part(("a", 9)), Some("g"))
     assert(store.mvDeltaFiles("pmv") >= 1)
     val out = store.readMaterialized("pmv").orderBy("g").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq
@@ -135,9 +142,6 @@ class MaterializedViewSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { store.overwrite("mv", extra) }
     intercept[IllegalArgumentException] {
       store.mergeWith("mv")(cur => cur)
-    }
-    intercept[IllegalArgumentException] {
-      store.appendCommitted("mv", extra)
     }
     intercept[IllegalArgumentException] {
       store.deleteRows("mv", col("g") === "a")

@@ -101,7 +101,7 @@ class PsnPipelineSpec extends AnyFunSuite {
     ts("2024-08-02 10:00:00"), 1, "PT1H")
 
   /** Every file under `wh/table` with its size: a write of any kind —
-    * in-place append, new version, commit marker — changes it. */
+    * new version, commit marker — changes it. */
   private def listing(wh: String, table: String): Map[String, Long] = {
     val root = java.nio.file.Paths.get(wh, table)
     if (!Files.exists(root)) Map.empty
@@ -116,8 +116,8 @@ class PsnPipelineSpec extends AnyFunSuite {
   private def headDir(store: TableStore, table: String) =
     s"v${store.versions(table).max}/"
 
-  test("DailyRun write shape: one game commit on a changed day, in-place " +
-    "append on a new-games-only day, nothing on an unchanged day") {
+  test("DailyRun write shape: one game commit on a changed day, one " +
+    "append commit on a new-games-only day, nothing on an unchanged day") {
     val wh = Files.createTempDirectory("psn_shape").toString
     val store = new TableStore(spark, wh)
     Bootstrap.run(spark, day1, store)
@@ -135,16 +135,20 @@ class PsnPipelineSpec extends AnyFunSuite {
       "no in-place append into the previous game version")
     assert(store.read("game").count() == 4)
 
-    // new games only: appended in place, no new version
+    // new games only: the append is one commit too — exactly one new game
+    // marker, and the previous version's files are left as they were
     val day3 = next(day2, Map.empty, newTitle("CUSA_77777"))
     val v1 = headDir(store, "game")
     val before3 = listing(wh, "game")
     assert(DailyRun.run(spark, day3, store) == ((1L, 0L)))
     val after3 = listing(wh, "game")
-    assert(headDir(store, "game") == v1)
-    assert((after3.keySet -- before3.keySet).forall(_.startsWith(v1)))
-    assert(after3.keySet.count(_.startsWith(v1)) >
-      before3.keySet.count(_.startsWith(v1)))
+    val markers3 = (after3.keySet -- before3.keySet).filter(_.startsWith("_commit."))
+    assert(markers3.size == 1, markers3)
+    assert(headDir(store, "game") != v1)
+    assert(after3.filter(_._1.startsWith(v1)) == before3.filter(_._1.startsWith(v1)),
+      "the append left the previous game version's files as they were")
+    assert(store.readVersion("game", v1.stripPrefix("v").stripSuffix("/").toInt)
+      .count() == 4)
     assert(store.read("game").count() == 5)
 
     // unchanged: neither game nor time_play is written

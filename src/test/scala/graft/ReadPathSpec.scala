@@ -31,16 +31,16 @@ class ReadPathSpec extends AnyFunSuite {
     val store = new TableStore(spark,
       Files.createTempDirectory("graft_readpath").toString)
     // partition p holds keys [100p, 100p + 100), two files each
-    store.appendPartitioned("t", spark.range(0, 400).repartition(2)
+    store.append("t", spark.range(0, 400).repartition(2)
       .select(col("id").as("k"), (col("id") * 3).as("v"),
-        (col("id") / 100).cast("int").as("p")), "p")
+        (col("id") / 100).cast("int").as("p")), Some("p"))
     store.analyze("t")
     store.analyzeBloom("t", Seq("k"), expectedItemsPerFile = 256L)
     assert(store.addColumn("t", "note", "STRING"))
     // in place, into the existing partition directories, with the column
-    store.appendPartitioned("t", spark.range(500, 540).select(col("id").as("k"),
+    store.append("t", spark.range(500, 540).select(col("id").as("k"),
       (col("id") * 3).as("v"), concat(lit("n"), col("id")).as("note"),
-      (col("id") % 4).cast("int").as("p")), "p")
+      (col("id") % 4).cast("int").as("p")), Some("p"))
     // 58 of the first 400 keys, 6 of the appended 40
     assert(store.deleteRows("t", col("k") % 7 === 0) == 64)
 

@@ -98,7 +98,7 @@ class ScaleSpec extends AnyFunSuite {
     val facts = graft.tables.Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-    store.appendPartitioned("facts", facts, "month")
+    store.append("facts", facts, Some("month"))
     // hive-style layout on disk, inside the committed version directory
     assert(Files.readString(
       java.nio.file.Paths.get(wh, "facts", "_current")).trim == "v1")

@@ -46,8 +46,11 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     val widened = store.read("t")
       .withColumn("score", org.apache.spark.sql.functions.lit(0.5))
     store.overwrite("t", widened)
+    val v2 = store.versions("t").max
     assert(store.read("t").columns.toSeq ==
       Seq("id", "name", "score"))
+    // Time travel: the v1 snapshot still reads with its own schema.
+    assert(store.readVersion("t", v1).columns.toSeq == Seq("id", "name"))
     // The appended-to widened table accepts the new shape...
     store.append("t", Seq((2L, "b", 0.9)).toDF("id", "name", "score"))
     assert(store.read("t").count() == 2)
@@ -55,24 +58,27 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException] {
       store.append("t", Seq((3L, "c")).toDF("id", "name"))
     }.getMessage.contains("schema drift"))
-    // Time travel: the v1 snapshot still reads with its own schema.
-    assert(store.readVersion("t", v1).columns.toSeq == Seq("id", "name"))
+    // The append committed a version of its own (retention keeps the one
+    // behind the head): the widened snapshot reads as it was published.
+    assert(store.versions("t") == Seq(v2, v2 + 1))
+    val old = store.readVersion("t", v2)
+    assert(old.columns.toSeq == Seq("id", "name", "score") && old.count() == 1)
   }
 
   test("partitioned append: partition-column type inference is not drift") {
     import TestSpark.spark.implicits._
     val store = freshStore()
-    store.appendPartitioned("p",
-      Seq((1L, 20240101L, "x")).toDF("id", "day", "v"), "day")
+    store.append("p",
+      Seq((1L, 20240101L, "x")).toDF("id", "day", "v"), Some("day"))
     // day was written BIGINT but reads back via partition inference —
     // appending the same frame shape must still pass.
-    store.appendPartitioned("p",
-      Seq((2L, 20240102L, "y")).toDF("id", "day", "v"), "day")
+    store.append("p",
+      Seq((2L, 20240102L, "y")).toDF("id", "day", "v"), Some("day"))
     assert(store.read("p").count() == 2)
     // A genuinely drifted non-partition column still fails.
     assert(intercept[IllegalArgumentException] {
-      store.appendPartitioned("p",
-        Seq((3L, 20240103L, 9)).toDF("id", "day", "v"), "day")
+      store.append("p",
+        Seq((3L, 20240103L, 9)).toDF("id", "day", "v"), Some("day"))
     }.getMessage.contains("schema drift"))
   }
 

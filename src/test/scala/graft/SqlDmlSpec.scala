@@ -764,17 +764,20 @@ class SqlDmlSpec extends AnyFunSuite {
     store.addConstraint("t", "v_pos", "v > 0")
     Sql.runTruncate(store, "TRUNCATE TABLE `graft-project.store.t`")
     assert(store.read("t").count() == 0)
-    // schema survived the empty commit: a matching append lands…
-    store.append("t", Seq((3L, 30L)).toDF("k", "v"))
-    assert(store.read("t").collect().map(_.getLong(0)).toSeq == Seq(3L))
-    // …and the CHECK constraint still enforces
-    intercept[Exception] {
-      store.append("t", Seq((4L, -1L)).toDF("k", "v"))
-    }
     // pre-truncate version still time-travels (WRITE_TRUNCATE commits a
     // version, it does not erase history)
     val v1 = store.versions("t").min
     assert(store.readVersion("t", v1).count() == 2)
+    val truncated = store.versions("t").max
+    // schema survived the empty commit: a matching append lands…
+    store.append("t", Seq((3L, 30L)).toDF("k", "v"))
+    assert(store.read("t").collect().map(_.getLong(0)).toSeq == Seq(3L))
+    // …as a commit of its own: the truncated version stays empty
+    assert(store.readVersion("t", truncated).count() == 0)
+    // …and the CHECK constraint still enforces
+    intercept[Exception] {
+      store.append("t", Seq((4L, -1L)).toDF("k", "v"))
+    }
     // loud on junk and on missing tables
     intercept[IllegalArgumentException](Sql.runTruncate(store, "TRUNCATE t"))
     intercept[IllegalArgumentException](

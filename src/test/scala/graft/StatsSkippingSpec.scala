@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,6 +22,23 @@ class StatsSkippingSpec extends AnyFunSuite {
   private def freshStore(): (TableStore, String) = {
     val wh = Files.createTempDirectory("stats_wh").toString
     (new TableStore(spark, wh), wh)
+  }
+
+  /** Rewrite the head's stats sidecar without entries for the files the
+    * head commit added — a sidecar that predates them. Every commit of an
+    * analyzed table re-derives its sidecar, so no store verb leaves such
+    * a file; readers must still keep what it does not cover. */
+  private def uncoverLastCommit(store: TableStore, wh: String, t: String): Unit = {
+    val vs = store.versions(t)
+    val root = Paths.get(wh, t)
+    val added = (store.namedFiles(t, vs.last)._1.toSet --
+      store.namedFiles(t, vs.init.last)._1).map(root.relativize(_).toString)
+    val sidecar = root.resolve(s"_stats.v${vs.last}")
+    assert(added.nonEmpty && FileStats.load(sidecar).keySet.intersect(added) == added,
+      "the commit's own files start out covered")
+    FileStats.write(sidecar,
+      FileStats.load(sidecar).values.filterNot(fs => added(fs.relPath)).toSeq,
+      FileStats.loadBloomSpecs(sidecar))
   }
 
   test("analyze derives footer min/max for long, double, string, date") {
@@ -66,11 +83,13 @@ class StatsSkippingSpec extends AnyFunSuite {
   }
 
   test("files outside the sidecar are kept: post-analyze append is safe") {
-    val (store, _) = freshStore()
+    val (store, wh) = freshStore()
     store.overwrite("t", Seq((1L, "a")).toDF("k", "s").coalesce(1))
     store.analyze("t")
-    // in-place append lands a file the sidecar has never seen
+    // the append's commit covers its file; strip that entry, so the
+    // sidecar has never seen the file
     store.append("t", Seq((100L, "b")).toDF("k", "s").coalesce(1))
+    uncoverLastCommit(store, wh, "t")
     val rows = store.readWhere("t",
       Seq(FileStats.ge("k", LLong(50)))).collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(100L))
@@ -146,11 +165,12 @@ class StatsSkippingSpec extends AnyFunSuite {
   }
 
   test("minMax merges sidecar and live footers; incomplete stats => None") {
-    val (store, _) = freshStore()
+    val (store, wh) = freshStore()
     store.overwrite("t", Seq((5L, "m"), (9L, "c")).toDF("k", "s").coalesce(1))
     store.analyze("t")
-    // file appended after analyze: minMax must footer-read it live
+    // a file the sidecar does not cover: minMax must footer-read it live
     store.append("t", Seq((1L, "z")).toDF("k", "s").coalesce(1))
+    uncoverLastCommit(store, wh, "t")
     assert(store.minMax("t", "k").map { case (_, mn, mx) =>
       (mn.toLong, mx.toLong) } == Some((1L, 9L)))
     assert(store.minMax("t", "s").map { case (_, mn, mx) =>

@@ -129,6 +129,25 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(store.read("t").collect().map(_.getString(1)).toSeq == Seq("c"))
   }
 
+  test("a published version is unchanged by a later flat or partitioned append") {
+    val (store, _) = freshStore()
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def kvp(ks: Int*) = ks.map(k => (k, s"v$k", k % 2)).toDF("k", "v", "g")
+    store.overwrite("t", kv(1 -> "a", 2 -> "b"))
+    store.append("p", kvp(1, 2), Some("g"))
+    Seq("t" -> kv(3 -> "c"), "p" -> kvp(3)).foreach { case (t, more) =>
+      val v = store.versions(t).max
+      val (seen, named) = (rows(store.readVersion(t, v)), store.namedFiles(t, v))
+      if (t == "p") store.append(t, more, Some("g")) else store.append(t, more)
+      assert(rows(store.readVersion(t, v)) == seen,
+        s"$t: published v$v changed its rows")
+      assert(store.namedFiles(t, v) == named, s"$t: published v$v changed its files")
+      assert(store.read(t).count() == seen.length + 1)
+    }
+  }
+
   test("overwrite (K3) goes through the same commit protocol") {
     val (store, wh) = freshStore()
     store.append("t", kv(1 -> "a", 2 -> "b"))
@@ -142,10 +161,9 @@ class VersionedStoreSpec extends AnyFunSuite {
       "matches a full merge") {
     val (store, wh) = freshStore()
     import spark.implicits._
-    store.appendPartitioned("t",
+    store.append("t",
       Seq((1, "a", 10), (2, "b", 10), (3, "c", 20), (4, "d", 20),
-        (5, "e", 30)).toDF("k", "v", "p"),
-      "p")
+        (5, "e", 30)).toDF("k", "v", "p"), Some("p"))
 
     // (partition dir -> data files) that one version names
     def fileKeys(version: Int): Map[String, Set[java.nio.file.Path]] =
@@ -338,25 +356,25 @@ class CasCommitSpec extends AnyFunSuite {
 }
 
 /** The append-as-commit path + partition-pruned probe that back s24's
-  * ingest loop: appendCommitted must link prior bytes (no rewrite),
+  * ingest loop: an append must inherit prior files (no rewrite),
   * carry transaction tags for exactly-once replay, and readPartitions
   * must list only the requested buckets' files — witnessed. */
 class AppendCommittedSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  test("appendCommitted links prior files, adds the increment, tags txn") {
+  test("append inherits prior files, adds the increment, tags txn") {
     val wh = Files.createTempDirectory("vstore_ac").toString
     val store = new TableStore(spark, wh)
     def bkt = pmod(hash(col("k")), lit(4)).as("b")
-    store.appendCommitted("t",
+    store.append("t",
       (1 to 40).toDF("k").select(col("k"), bkt), Some("b"))
     val filesV1 = store.fileCount("t")
-    store.appendCommitted("t",
+    store.append("t",
       Seq(1000).toDF("k").select(col("k"), bkt), Some("b"),
       txnTag = Some("app:7"))
-    // content = union; bytes not rewritten: new version holds every v1
-    // file (same names, hard-linked) plus the increment's
+    // content = union; bytes not rewritten: new version names every v1
+    // file (inherited by name) plus the increment's
     assert(store.read("t").count() == 41)
     assert(store.fileCount("t") > filesV1)
     assert(store.txnVersion("t", "app").contains(7L))
@@ -370,7 +388,7 @@ class AppendCommittedSpec extends AnyFunSuite {
       "unpruned filter") {
     val wh = Files.createTempDirectory("vstore_rp").toString
     val store = new TableStore(spark, wh)
-    store.appendCommitted("t",
+    store.append("t",
       (1 to 400).toDF("k")
         .select(col("k"), pmod(hash(col("k")), lit(8)).as("b")),
       Some("b"))
